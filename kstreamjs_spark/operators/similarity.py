@@ -58,7 +58,9 @@ def lit_longs(values) -> Column:
     bigint), so it is emitted as ``(-9223372036854775807L - 1L)`` and
     constant-folded by Catalyst into the same literal."""
     vs = [int(x) for x in values]
-    assert all(-(1 << 63) <= v < (1 << 63) for v in vs), "bigint overflow"
+    bad = [v for v in vs if not -(1 << 63) <= v < (1 << 63)]
+    if bad:
+        raise ValueError(f"lit_longs: {bad[:3]} overflow bigint")
     if not vs:
         return F.array().cast("array<bigint>")
 

@@ -297,7 +297,7 @@ def wordpiece_vocab(
     on a single space, keep words with ``length(word) >= 1``, count
     rows per word as bigint ``c``. Anything else (different
     tokenization, pre-filtering, weighting) silently diverges from the
-    DuckDB oracle as a hash mismatch. The column contract is asserted
+    DuckDB oracle as a hash mismatch. The column contract is checked
     on entry. The ``pieces`` aggregate is checkpointed before the two
     bounded collects below for the same reason: the chars filter and
     the top-K each trigger a job, and without the cut both replay the
@@ -306,11 +306,12 @@ def wordpiece_vocab(
 
     if word_counts is not None:
         missing = {"word", "c"} - set(word_counts.columns)
-        assert not missing, (
-            f"word_counts frame is missing column(s) {sorted(missing)}; "
-            "expected the (word, c) per-word count table described in "
-            "the wordpiece_vocab docstring"
-        )
+        if missing:
+            raise ValueError(
+                f"word_counts frame is missing column(s) {sorted(missing)}; "
+                "expected the (word, c) per-word count table described in "
+                "the wordpiece_vocab docstring"
+            )
     if word_counts is None:
         word_counts = (
             documents.select(

@@ -11,6 +11,11 @@ Scale notes (100 TB target):
   in any hot path.
 - Session timezone pinned to UTC so event-time semantics (window alignment,
   epoch math) are deterministic and match the DuckDB oracle.
+- Local sessions checkpoint streams through Spark's FileSystem-based
+  checkpoint manager. pip-installed PySpark ships no ``libhadoop``, so the
+  default FileContext manager's rename check runs ``readlink`` as a child
+  process for every checkpoint file it commits: hundreds per trigger of a
+  stateful query.
 """
 
 from __future__ import annotations
@@ -52,6 +57,18 @@ def get_spark(
         # store. Startup-only conf — cluster submitters must set it too.
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.ui.enabled", "false")
+        # Offset/commit logs, state-store deltas and _spark_metadata are
+        # written via create-temp-then-rename. The default FileContext
+        # manager checks the rename target with getFileLinkStatus, which
+        # forks `readlink` when Hadoop's native library is missing; the
+        # FileSystem manager checks with exists() and ends in the same
+        # rename(2). External sessions (configure_runtime) keep Spark's
+        # default, which HDFS needs for its atomic overwrite-rename.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

