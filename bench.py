@@ -1,12 +1,12 @@
-"""Bench harness: runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+"""Bench harness: runs the headline queries at $SPARK_GRAFT_SF_DIR (default:
+the sf0.1 test data) on local[$SPARK_GRAFT_CPUS] (default: the CPUs this
+process may run on) and prints ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
 
-Since round 9 the line IS the same-host paired protocol the r8 verdict
-asked for (its #7): every headline query is measured on BOTH sides —
-engine (Spark, warm, min-of-N) AND oracle (DuckDB 32-thread, warm,
-min-of-N) — in one process on one host back to back, so cross-round
-deltas never again need prose adjudication of host drift. The original
+The line is a same-host paired protocol: every headline query is
+measured on BOTH sides — engine (Spark, warm, min-of-N) AND oracle
+(DuckDB 32-thread, warm, min-of-N) — in one process on one host back to
+back, so deltas between runs need no adjudication of host drift. The
 schema keys (metric/value/unit/queries/sf) are unchanged and still carry
 the engine numbers; the oracle column and the protocol stamp ride
 alongside. Set SPARK_GRAFT_BENCH_ORACLE=0 to skip the oracle side.
@@ -29,7 +29,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from kstreamjs_spark.queries import all_queries  # noqa: E402
-from kstreamjs_spark.session import get_spark  # noqa: E402
+from kstreamjs_spark.session import default_cpus, get_spark  # noqa: E402
 
 
 def _min_of(fn, runs: int) -> float:
@@ -43,7 +43,7 @@ def _min_of(fn, runs: int) -> float:
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     with_oracle = os.environ.get("SPARK_GRAFT_BENCH_ORACLE", "1") != "0"
     try:
@@ -61,31 +61,16 @@ def main() -> int:
     # other oracle-less bench query is recorded as no_oracle rather than
     # silently timed against an unrelated workload.
     _ORACLE_PROXY = {"q26b_minhash_neardup": "q26d_minhash_verify"}
-    # Closed-form-oracle queries (round 11): their DuckDB texts RESTATE
-    # the expected answer arithmetically (the doc_id//3 group join) —
-    # DuckDB performs none of the work the engine does (JPEG/PNG
-    # encode + full pixel decode + pHash; there is no DuckDB media
-    # decoder to compare against). An engine/oracle ratio there
-    # measures "real multimodal pipeline vs a 5 ms join" — meaningless
-    # in both directions — so these rows keep their engine AND oracle
-    # seconds in the record but are EXCLUDED from the like-with-like
-    # ratio sums, exactly as rows-only queries are excluded for the
-    # opposite reason. The judge sees the exclusion, not a silent
-    # blend.
-    _CLOSED_FORM_ORACLE = {
-        "q158c_phash_cross_codec",
-        "q174_video_mjpeg_phash_dedup",
-        # round 14: the WRITE-path row — the engine writes the 256-cell
-        # z-ordered layout and re-reads the manifest from the files;
-        # DuckDB's oracle restates the manifest arithmetic from the
-        # source table without writing anything, so the ratio would
-        # compare a real write pipeline to a rollup query.
-        "q211_lakehouse_zorder_write",
-        # round 15: same category — the engine streams 4 micro-batch
-        # appends + inline OPTIMIZE passes; the oracle restates the
-        # final manifest arithmetic without writing a file.
-        "q215b_stream_ingest_compacted",
-    }
+    # Queries tagged "closed_form_oracle": their DuckDB texts RESTATE the
+    # expected answer arithmetically (the doc_id//3 group join, or the
+    # manifest of a written layout) and perform none of the engine's work
+    # (media encode/decode + pHash, file writes and compaction). An
+    # engine/oracle ratio there is meaningless in both directions, so
+    # these rows keep their engine AND oracle seconds in the record but
+    # are EXCLUDED from the like-with-like ratio sums, exactly as
+    # rows-only queries are excluded for the opposite reason. The
+    # exclusion is reported, not silently blended.
+    closed_form = {n for n, s in specs.items() if "closed_form_oracle" in s.tags}
     oracle: dict[str, float] = {}
     no_oracle: list[str] = []
     if with_oracle:
@@ -121,11 +106,10 @@ def main() -> int:
     load_after = round(os.getloadavg()[0], 2)
 
     total = round(sum(timings.values()), 3)
-    # Round-12 load gate (r11 verdict #4): BENCH_r11 started at loadavg
-    # 16.26 on this 32-CPU box and its wall numbers were contention, not
+    # Load gate: wall numbers from a loaded host measure contention, not
     # plans. A bench that starts above the threshold is stamped
-    # contaminated so downstream readers (and the judge) discount the
-    # wall column instead of adjudicating host drift from prose.
+    # contaminated so downstream readers discount the wall column
+    # instead of adjudicating host drift from prose.
     # Gate on load at PROCESS START only: load_before is stamped right
     # after the bench's own 32-thread DuckDB loop, so it reflects the
     # bench's work, not external drift (per the note above).
@@ -155,8 +139,8 @@ def main() -> int:
         # the ratio compares like with like: engine seconds summed over
         # exactly the queries whose oracle performs equivalent WORK —
         # closed-form-oracle rows are recorded but excluded (see
-        # _CLOSED_FORM_ORACLE above)
-        ratio_names = [n for n in oracle if n not in _CLOSED_FORM_ORACLE]
+        # closed_form above)
+        ratio_names = [n for n in oracle if n not in closed_form]
         ot = round(sum(oracle[n] for n in ratio_names), 3)
         et = round(sum(timings[n] for n in ratio_names), 3)
         doc.update(
@@ -166,19 +150,13 @@ def main() -> int:
                 "oracle_total_s": ot,
                 "no_oracle_queries": no_oracle,
                 "closed_form_oracle_queries": sorted(
-                    n for n in oracle if n in _CLOSED_FORM_ORACLE
+                    n for n in oracle if n in closed_form
                 ),
-                # closed-form rows reported as absolute engine wall (the
-                # r11 verdict's "second ratio" ask): these rows measure
-                # decode work DuckDB cannot perform, so their honest
-                # record is seconds, not a ratio
+                # closed-form rows reported as absolute engine wall:
+                # they measure work DuckDB does not perform, so their
+                # honest record is seconds, not a ratio
                 "closed_form_engine_total_s": round(
-                    sum(
-                        timings[n]
-                        for n in oracle
-                        if n in _CLOSED_FORM_ORACLE
-                    ),
-                    3,
+                    sum(timings[n] for n in oracle if n in closed_form), 3
                 ),
                 "duckdb_threads": 32,
                 "engine_vs_oracle_ratio": round(et / ot, 3) if ot else None,
@@ -186,9 +164,8 @@ def main() -> int:
         )
     line = json.dumps(doc)
     print(line)
-    # Round 17 (r16 verdict #2): the printed one-line JSON stays the
-    # driver contract, but BENCH_r15's capture truncated the line and
-    # voided a whole round's perf comparison — so when the caller sets
+    # The printed one-line JSON stays the driver contract, but a captured
+    # stdout can truncate the line — so when the caller sets
     # SPARK_GRAFT_BENCH_OUT the same doc is ALSO written to that file
     # (additive; nothing reads it back, it only survives a truncated
     # stdout capture).

@@ -141,8 +141,7 @@ def window_collect_stateful(
     checkpoint survives pandas/pickle version upgrades. Honest limit:
     GroupState is a single-value store, so the state-store WRITE per
     trigger still copies all accumulated chunk bytes — a raw memcpy,
-    no re-encode; true O(new) appends need the state-v2 ListState
-    (`streaming/stateful_v2.py`, execution env-gated here).
+    no re-encode; true O(new) appends need a list-valued state store.
 
     CHECKPOINT BREAK (round 12 -> 13): the state schema changed from
     ``buf binary`` (one pickled frame) to ``bufs array<binary>``

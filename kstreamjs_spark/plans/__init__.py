@@ -8,10 +8,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-# Partition-count memo for widen_partitions (round 17, r16 verdict #8):
-# df.rdd.getNumPartitions() runs the FULL driver-side pipeline per call
-# (analyze -> optimize -> physical plan -> RDD DAG -> Python RDD wrapper)
-# — the same per-query driver-work category round 16 spent eliminating.
+# Partition-count memo for widen_partitions: df.rdd.getNumPartitions()
+# runs the FULL driver-side pipeline on every call (analyze -> optimize
+# -> physical plan -> RDD DAG -> Python RDD wrapper).
 # The count only depends on the (canonicalized) plan, so it is memoized
 # by (applicationId, semanticHash): repeat invocations of the same query
 # (bench warm + min-of-N = 4x per row) pay one semanticHash instead of a
@@ -102,10 +101,9 @@ def materialize_once(df: DataFrame, eager: bool = True) -> DataFrame:
     count aggregate over the same input are different subtrees and both
     rescan).
 
-    Cluster policy (r8 verdict watch item): ``localCheckpoint`` stores
-    the blocks on executors — fast, but the frame is lost if an executor
-    dies, which on a real cluster means failing the job instead of
-    recomputing. So: if the application has a RELIABLE checkpoint dir
+    Cluster policy: ``localCheckpoint`` stores the blocks on executors —
+    fast, but the frame is lost if an executor dies, which on a real
+    cluster means failing the job instead of recomputing. So: if the application has a RELIABLE checkpoint dir
     configured (``spark.sparkContext.setCheckpointDir(...)`` — HDFS/S3
     on a cluster), use ``checkpoint()`` and survive executor loss;
     otherwise fall back to ``localCheckpoint()``, which is exactly right
@@ -124,7 +122,7 @@ def materialize_once(df: DataFrame, eager: bool = True) -> DataFrame:
     except Exception:  # pragma: no cover - py4j accessor unavailable
         has_dir = False
     if has_dir:
-        # ADVICE r16: ``checkpoint()`` writes its files in a SEPARATE job
+        # ``checkpoint()`` writes its files in a SEPARATE job
         # that RECOMPUTES the full lineage unless the frame is persisted
         # first (RDD.checkpoint's own recommendation) — without the
         # persist, the "computed once" guarantee silently becomes two
@@ -152,7 +150,7 @@ def broadcast_if_small(
     join degrades to a shuffle join (with AQE still free to broadcast a
     small runtime side). An UNCONDITIONAL ``F.broadcast`` on a
     full-table side hard-codes the small-scale shape: past the 8 GB
-    broadcast limit it fails outright instead of degrading (ADVICE r5).
+    broadcast limit it fails outright instead of degrading.
     The default ceiling is deliberately far under the hard limit —
     executors hold one copy per core.
 

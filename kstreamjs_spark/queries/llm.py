@@ -1072,7 +1072,7 @@ def _synth_group_images_multicodec(df: DataFrame) -> DataFrame:
         FROM documents a JOIN documents b
           ON a.doc_id // 3 = b.doc_id // 3 AND a.doc_id < b.doc_id
     """,
-    tags=("multimodal", "dedup", "llm"),
+    tags=("multimodal", "dedup", "llm", "closed_form_oracle"),
     bench=True,
 )
 def q158c(spark: SparkSession, sf: str) -> DataFrame:
@@ -1400,7 +1400,7 @@ def q160b(spark: SparkSession, sf: str) -> DataFrame:
         FROM documents a JOIN documents b
           ON a.doc_id // 3 = b.doc_id // 3 AND a.doc_id < b.doc_id
     """,
-    tags=("multimodal", "dedup", "llm"),
+    tags=("multimodal", "dedup", "llm", "closed_form_oracle"),
     bench=True,
 )
 def q174(spark: SparkSession, sf: str) -> DataFrame:

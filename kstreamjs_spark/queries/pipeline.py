@@ -969,10 +969,8 @@ def _q211_oracle() -> str:
 @query(
     "q211_lakehouse_zorder_write",
     oracle=_q211_oracle(),
-    tags=("pipeline", "layout", "write"),
-    bench=True,  # round 14 (r13 verdict #8): the write path gets bench
-                 # coverage; closed-form-oracle row in bench.py (DuckDB
-                 # restates the manifest arithmetic, it does not write)
+    tags=("pipeline", "layout", "write", "closed_form_oracle"),
+    bench=True,  # DuckDB restates the manifest arithmetic, it does not write
 )
 def q211(spark: SparkSession, sf: str) -> DataFrame:
     """Lakehouse WRITE path (round 13) — q173 computed the z-order

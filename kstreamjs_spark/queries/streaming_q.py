@@ -2709,10 +2709,9 @@ REGISTRY["q211b_stream_lakehouse_ingest"] = _dc_replace_q211b(
 @query(
     "q215b_stream_ingest_compacted",
     oracle=None,  # bound below (shares q211's closed-form manifest SQL)
-    bench=True,  # round 15 (r14 verdict #7): the ingest+OPTIMIZE loop
-                 # gets bench coverage; closed-form oracle, so the row
-                 # is excluded from the like-with-like ratio like q211
-    tags=("streaming", "pipeline", "layout", "write", "maintenance"),
+    bench=True,
+    tags=("streaming", "pipeline", "layout", "write", "maintenance",
+          "closed_form_oracle"),
 )
 def q215b(spark: SparkSession, sf: str) -> DataFrame:
     """STREAMING ingest with INLINE compaction (round 14) — q211b's

@@ -27,6 +27,11 @@ from pyspark.sql import SparkSession
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def default_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "kstreamjs-spark",
     cpus: int | None = None,
@@ -35,7 +40,7 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a local SparkSession tuned for the bench harness."""
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = default_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * cpus, 8)
     builder = (

@@ -36,14 +36,13 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/scripts")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyspark.sql.functions as F  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
 
 from kstreamjs_spark.session import configure_runtime  # noqa: E402
-from profile_q26_century import stage_report  # noqa: E402
+from perfbench.layers import read_event_log, spark_layers  # noqa: E402
 
 EVDIR = "/tmp/spark-events-streamtp"
 
@@ -60,6 +59,9 @@ def build_session() -> SparkSession:
         .config("spark.ui.enabled", "false")
         .config("spark.eventLog.enabled", "true")
         .config("spark.eventLog.dir", EVDIR)
+        # one plain JSON file, the form read_event_log parses
+        .config("spark.eventLog.compress", "false")
+        .config("spark.eventLog.rolling.enabled", "false")
         # recentProgress keeps only the newest N updates (default 100);
         # busy_ms sums over it, so a run with more batches than the
         # retention would silently undercount busy time and inflate
@@ -79,7 +81,6 @@ def main() -> int:
     runs = int(sys.argv[5]) if len(sys.argv) > 5 else 3
     shutil.rmtree(EVDIR, ignore_errors=True)
     spark = build_session()
-    app_id = spark.sparkContext.applicationId
     from kstreamjs_spark.tables import load
 
     (events,) = load(spark, sf, "events")
@@ -96,7 +97,7 @@ def main() -> int:
     n_rows = spark.read.parquet(data_dir).count()
     schema = spark.read.parquet(data_dir).schema
 
-    results = []
+    results, run_ids = [], set()
     for run in range(runs):
         ckpt = f"{workdir}/ckpt{run}"
         sdf = (
@@ -119,6 +120,7 @@ def main() -> int:
         )
         q.awaitTermination()
         wall = time.perf_counter() - t0
+        run_ids.add(str(q.runId))
         if len(q.recentProgress) >= 100000:
             raise RuntimeError(
                 "recentProgress saturated its retention buffer — busy_ms "
@@ -142,17 +144,11 @@ def main() -> int:
     spark.stop()
     time.sleep(2)
 
-    # Event-log task-seconds across the whole app (all runs share one
-    # session; per-run attribution isn't needed for the work measure —
-    # divide by runs for the per-replay figure).
-    import glob
-
-    logs = glob.glob(f"{EVDIR}/*{app_id}*") + glob.glob(f"{EVDIR}/{app_id}")
-    task_s = gc_s = 0.0
-    for lg in set(logs):
-        for st in stage_report(lg):
-            task_s += st.get("task_s", 0) or 0
-            gc_s += st.get("gc_s", 0) or 0
+    # Event-log task-seconds of the replays' jobs (a streaming query runs
+    # its micro-batches under its run id as job group) — divide by runs
+    # for the per-replay figure.
+    lay = spark_layers(read_event_log(EVDIR), run_ids, 1, 0)
+    task_s, gc_s = lay["spark.task_run_s"], lay["spark.gc_s"]
     per_run_task_s = task_s / runs if runs else 0.0
 
     walls = sorted(r["wall_rate"] for r in results)

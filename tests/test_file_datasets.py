@@ -127,47 +127,6 @@ def test_docgen_plants_exact_duplicates(spark):
     assert dedup.exact_dedup(df, ["text"]).count() == n_distinct
 
 
-def test_stateful_v2_gated_on_protobuf(spark):
-    """State API v2 (transformWithStateInPandas): executes where protobuf
-    exists; here the availability gate must answer honestly and the
-    pipeline must at least BUILD (analysis-time check) — execution is
-    covered by q44's applyInPandasWithState twin."""
-    import pytest
-
-    from kstreamjs_spark.streaming import stateful_v2
-    from kstreamjs_spark.streaming.replay import stream_table
-
-    from .conftest import SF_SMOKE
-
-    sdf = stream_table(spark, SF_SMOKE, "events").select("user_id", "value")
-    out = stateful_v2.running_totals_v2(sdf)  # must analyze cleanly
-    assert out.schema.simpleString() == (
-        "struct<user_id:bigint,running_cnt:bigint,running_total:double>"
-    )
-    if not stateful_v2.available():
-        pytest.skip("google.protobuf absent in this container; "
-                    "state-v2 worker cannot start (documented gate)")
-    from kstreamjs_spark.streaming.replay import run_to_memory
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        sink = run_to_memory(out, "tws_v2", output_mode="update")
-        assert sink.count() > 0
-    finally:
-        # the session fixture is shared; leaking a different state store
-        # provider would silently change every later streaming test
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
 def test_docgen_stream_equals_batch(spark, tmp_path):
     """The docgen streaming reader (Spark 4 Python streaming DataSource):
     N micro-batches of rows_per_batch rows, offsets as {"batch": k}

@@ -1,0 +1,43 @@
+"""scripts/profile_query.py end to end: a subprocess over the shipped
+sf0.01 copy in perfbench/data, so no parquet fixtures are needed."""
+
+from __future__ import annotations
+
+import json
+import os
+import subprocess
+import sys
+
+from perfbench.layers import spark_layers
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+QUERIES = ["q01_scan_count", "q56_dup_clusters", "q56_dup_clusters"]
+
+
+def test_profile_query_reports_every_layer():
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    env["SPARK_GRAFT_SF_DIR"] = os.path.join(REPO, "perfbench", "data", "sf0.01")
+    res = subprocess.run(
+        [sys.executable, "scripts/profile_query.py", *QUERIES],
+        cwd=REPO,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    rows = [json.loads(line) for line in res.stdout.splitlines()]
+    assert [r["query"] for r in rows] == QUERIES
+
+    layer_keys = set(spark_layers([], set(), 1, 0.0))
+    for r in rows:
+        assert layer_keys <= set(r), layer_keys - set(r)
+        assert r["spark.failed_tasks"] == 0
+        # with SPARK_GRAFT_CPUS unset, the session uses every CPU it may
+        assert r["cpus"] == len(os.sched_getaffinity(0))
+
+    q56a, q56b = rows[1], rows[2]
+    # q56's iterative loop checkpoints eagerly: jobs run while building
+    assert 1 <= q56a["build_jobs"] <= q56a["spark.jobs"]
+    for key in ("spark.jobs", "spark.stages", "spark.tasks"):
+        assert q56a[key] == q56b[key], key
