@@ -138,16 +138,14 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     arithmetic.
 
     Duplicate (src, dst) input rows are allowed and collapse to ONE
-    edge (set semantics — callers need no pre-distinct pass).
-    CHANGELOG round 12: this is a deliberate semantic change from the
-    round-11 edge-list implementation, which weighted duplicate edges
-    into out-degree (multiset semantics). Callers that want duplicate-
-    edge weighting must pre-aggregate an explicit weight column — an
-    error is impossible to raise here because a deduped input is
+    edge (set semantics — callers need no pre-distinct pass); duplicate
+    edges do not weight out-degree. Callers that want duplicate-edge
+    weighting must pre-aggregate an explicit weight column — an error
+    is impossible to raise here because a deduped input is
     indistinguishable from a multiset one after collect_set.
 
-    Scale shape (round-12 Pregel rewrite; the GraphX/Pregel vertex
-    layout, Malewicz et al. 2010, public): edges fold ONCE into an
+    Scale shape (the GraphX/Pregel vertex layout, Malewicz et al.
+    2010, public): edges fold ONCE into an
     adjacency-list frame — groupBy(src) + collect_set(dst), so the edge
     dedup rides the same partial aggregation and out-degree is
     size(dsts) for free — materialized per the cluster policy
@@ -158,7 +156,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     frame (co-partitioned on the same hash — no second exchange). The
     left join keeps in-degree-0 source nodes alive at base rank so
     their outgoing contributions survive every step (asymmetric
-    graphs). Vs the round-11 edge-list plan this removes the
+    graphs). Against an edge-list plan this removes the
     per-iteration O(edges) join AND the O(edges) checkpoint: measured
     14.3 s -> 2.9 s warm at sf0.1/local[8]. Hot-vertex ceiling: one
     adjacency row holds one node's distinct neighbors; a graph with
@@ -167,7 +165,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     not needed for co-purchase graphs whose degree is bounded by
     catalog co-occurrence.
 
-    Round 16 (guide §1.2 per-query work): the iteration plan is built
+    The iteration plan is built
     as ONE unrolled SQL text (the oracle's own CTE-chain shape) and
     analyzed once, instead of 4 eagerly-analyzed DataFrame transforms
     per iteration — measured ~70 ms of driver-side analyzer + py4j per

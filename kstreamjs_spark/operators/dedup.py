@@ -115,12 +115,11 @@ def _shingle_pair_counts(
         *[F.col(c) for c in pcols],
         shingles(text_col, n).alias("sh"),
     ).withColumn("n_sh", F.size("sh").cast("long"))
-    # Round 16 NOTE (audit follow-up): the static plan prints the
-    # shingle projection under both self-join sides, but both sides
-    # shuffle by the same canonical (shingle, partition) key, so the
-    # runtime plan collapses them into ONE exchange + ReusedExchange —
-    # a materialize_once here was A/B-measured ~0.2 s SLOWER at sf0.1
-    # (the checkpoint barrier buys nothing the reuse doesn't already).
+    # No materialize_once here: the static plan prints the shingle
+    # projection under both self-join sides, but both sides shuffle by
+    # the same canonical (shingle, partition) key, so the runtime plan
+    # collapses them into ONE exchange + ReusedExchange. A checkpoint
+    # measured ~0.2 s slower at sf0.1.
     ex = sh.select(
         F.col(id_col),
         *[F.col(c) for c in pcols],
@@ -140,11 +139,10 @@ def _shingle_pair_counts(
             .filter(F.col("df") > max_df)
             .select(*pcols, "s")
         )
-        # Round 16 NOTE (audit follow-up): a materialize_once on ``hot``
-        # was A/B-measured BOTH ways — 2x faster at max_df=50 (hot set
-        # tiny) but ~0.1-0.2 s slower at the deployed max_df=2 (most
-        # repeated shingles are hot, so the checkpoint write outweighs
-        # the dedup). Left uncut: the deployed ceilings are all small.
+        # No materialize_once on ``hot``: it is 2x faster at max_df=50
+        # (hot set tiny) but ~0.1-0.2 s slower at the deployed max_df=2
+        # (most repeated shingles are hot, so the checkpoint write
+        # outweighs the dedup), and the deployed ceilings are all small.
         ex = ex.join(hot, on=[*pcols, "s"], how="left_anti")
         # Per-doc counts must reflect the filtered sets; one shuffle on the
         # doc id. (The scan-side n_sh is stale once shingles are dropped.)
@@ -318,7 +316,7 @@ def minhash_signature_frame(
     seed: int = 42,
 ) -> DataFrame:
     """(id, sig) MinHash-signature frame — same bits as
-    :func:`minhash_signature`, computed the fast way (round 16).
+    :func:`minhash_signature`, computed the fast way.
 
     Why not SQL: the expression fold (`aggregate` + `zip_with`) is a
     higher-order function, and HOFs evaluate INTERPRETED — no
@@ -565,9 +563,9 @@ def simhash64(text: Column | str) -> Column:
     token occurrences, sign -> bit. Expression-only (aggregate over a
     64-slot vote array); packed into one BIGINT."""
     toks = tokens(text)
-    # One-parse literal arrays (round 17, r16 verdict #6): the
-    # per-element F.lit loops cost 128 py4j round trips per query
-    # construction; lit_longs parses each 64-slot array in one call.
+    # One-parse literal arrays: per-element F.lit loops cost 128 py4j
+    # round trips per query construction; lit_longs parses each 64-slot
+    # array in one call.
     # Same bigint values bit-for-bit (integer literals are exact).
     from .similarity import lit_longs
 
@@ -611,7 +609,7 @@ def hamming_neardup_pairs(
 
     - k <= 3: 4 chunks of 16 bits, single-chunk keys — a pair within
       distance 3 must agree on >= 1 chunk (4 exploded rows per input).
-    - 4 <= k <= 6 (round 11, the q26c recall fix): 8 chunks of 8 bits,
+    - 4 <= k <= 6 (q26c's recall needs it): 8 chunks of 8 bits,
       TWO-CHUNK COMBINATION keys — within distance 6 at most 6 chunks
       are dirty, so >= 2 are clean and some PAIR of chunks matches
       exactly; candidates come from the equi-join on
@@ -772,8 +770,8 @@ def fuzzy_prefix_pairs(
     # Derive the 40-char prefix BEFORE the fan-out shuffle: the spread
     # exchange then carries (id, partition, 40 chars) instead of full
     # document text — at any scale, never shuffle payload bytes you are
-    # about to truncate (round-8 A/B at sf0.1: 0.999 s -> 0.681 s,
-    # identical result set). At 100 TB the scan has thousands of splits
+    # about to truncate (sf0.1: 0.999 s -> 0.681 s, identical result
+    # set). At 100 TB the scan has thousands of splits
     # so the normalize parallelizes in the scan stage itself.
     p = _spread(
         documents.select(

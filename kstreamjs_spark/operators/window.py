@@ -104,7 +104,7 @@ def window_collect_stateful(
     origin_ms: int = 0,
 ) -> DataFrame:
     """Fire-once streaming tumbling window for arbitrary Python reducers
-    (round 12; closes the last §2A semantic delta vs the reference).
+    (the reference's window semantics on streaming input, §2A).
 
     The reference's window buffers rows and invokes ``collect`` exactly
     once per window when event time passes the window end plus the
@@ -132,7 +132,7 @@ def window_collect_stateful(
     ``origin_ms`` aligns windows to ``from_ms % interval`` exactly as
     the batch path's ``startTime`` does (non-negative event times).
 
-    State encoding (round 13): the buffer is an ``array<binary>`` of
+    State encoding: the buffer is an ``array<binary>`` of
     Arrow IPC stream chunks, ONE chunk appended per trigger — each
     trigger ENCODES only its own new rows (the pandas->bytes
     serialization cost drops from O(buffered) per trigger / O(B^2)
@@ -143,17 +143,14 @@ def window_collect_stateful(
     trigger still copies all accumulated chunk bytes — a raw memcpy,
     no re-encode; true O(new) appends need a list-valued state store.
 
-    CHECKPOINT BREAK (round 12 -> 13): the state schema changed from
-    ``buf binary`` (one pickled frame) to ``bufs array<binary>``
-    (Arrow IPC chunks). A restart against a checkpoint written by the
-    round-12 operator fails Spark's state-schema compatibility check
-    at query start — this is NOT probeable from Python (the check runs
-    JVM-side before ``update`` is ever invoked), so there is no
-    dual-encoding fallback; restarting an old checkpoint requires a
-    state reset (new checkpointLocation, replay from the source). The
-    Arrow encoding is what buys long-lived checkpoints FORWARD from
-    round 13: chunks survive pandas/pickle version upgrades, so this
-    one-time break is the last encoding-driven reset.
+    Checkpoint compatibility: a checkpoint written with the older
+    ``buf binary`` state schema (one pickled frame) fails Spark's
+    state-schema compatibility check at query start. That check runs
+    JVM-side before ``update`` is ever invoked, so it is NOT probeable
+    from Python and there is no dual-encoding fallback; restarting such
+    a checkpoint requires a state reset (new checkpointLocation, replay
+    from the source). Arrow chunks survive pandas/pickle version
+    upgrades, so the encoding itself forces no further resets.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 

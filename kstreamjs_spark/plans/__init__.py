@@ -17,7 +17,10 @@ from pyspark.sql import DataFrame
 # plan->RDD conversion. Staleness is IMPOSSIBLE to turn into wrongness:
 # the count only gates a widen-only repartition decision, never results
 # (worst case a table overwritten in-place mid-session widens when it no
-# longer needs to). Bounded: one int per distinct widened plan.
+# longer needs to). Bounded: at most _NPART_MEMO_MAX entries, oldest
+# evicted first, so a long-lived app that widens ever-new plans keeps a
+# fixed-size memo.
+_NPART_MEMO_MAX = 256
 _NPART_MEMO: dict[tuple[str, int], int] = {}
 
 
@@ -30,6 +33,8 @@ def _scan_partitions(df: DataFrame) -> int:
     n = _NPART_MEMO.get(key)
     if n is None:
         n = int(df._jdf.queryExecution().toRdd().getNumPartitions())
+        while len(_NPART_MEMO) >= _NPART_MEMO_MAX:
+            del _NPART_MEMO[next(iter(_NPART_MEMO))]
         _NPART_MEMO[key] = n
     return n
 

@@ -16,6 +16,13 @@ Scale notes (100 TB target):
   default FileContext manager's rename check runs ``readlink`` as a child
   process for every checkpoint file it commits: hundreds per trigger of a
   stateful query.
+- Local sessions start Python workers through ``worker_daemon``. PySpark's
+  worker calls ``importlib.invalidate_caches()`` before every task, and
+  before Python 3.13 that makes each ``zipimporter`` re-read all of
+  ``pyspark.zip``'s directory: most of a short Arrow kernel task's CPU.
+  The daemon re-reads an archive only when it changed. The package's
+  parent directory leads the executors' ``PYTHONPATH`` so the daemon (and
+  every UDF pickled by reference) imports from any driver cwd.
 """
 
 from __future__ import annotations
@@ -23,6 +30,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Directory holding the kstreamjs_spark package, for worker PYTHONPATH.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -74,8 +84,17 @@ def get_spark(
             "org.apache.spark.sql.execution.streaming.checkpointing."
             "FileSystemBasedCheckpointFileManager",
         )
+        # Startup-only: external sessions keep pyspark.daemon.
+        .config("spark.python.daemon.module", "kstreamjs_spark.worker_daemon")
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = dict(extra_conf or {})
+    # The daemon and UDFs pickled by reference import kstreamjs_spark in
+    # the worker; workers run in the driver's cwd, so without this a
+    # driver started outside the repo fails every Python UDF.
+    extra_conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        filter(None, [_PACKAGE_PARENT, extra_conf.get("spark.executorEnv.PYTHONPATH")])
+    )
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     configure_runtime(spark)

@@ -1262,3 +1262,19 @@ def test_domain_mixture_single_corpus_pass(spark):
     assert plan.count("documents.parquet") <= 1 or (
         plan.lower().count("filescan") <= 1
     ), plan
+
+
+def test_npart_memo_is_bounded(spark, monkeypatch):
+    """widen_partitions' partition-count memo keeps at most
+    _NPART_MEMO_MAX plans, evicting the oldest first."""
+    from kstreamjs_spark import plans
+
+    monkeypatch.setattr(plans, "_NPART_MEMO_MAX", 4)
+    monkeypatch.setattr(plans, "_NPART_MEMO", {})
+    frames = [spark.range(10 + i) for i in range(6)]
+    for df in frames:
+        plans.widen_partitions(df)
+    assert len(plans._NPART_MEMO) <= 4
+    app = spark.sparkContext.applicationId
+    newest = [(app, df.semanticHash()) for df in frames[-4:]]
+    assert list(plans._NPART_MEMO) == newest
