@@ -52,161 +52,34 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = (),
 
 
 # The driver's correctness gate checks the FIRST 50 entries of queries() in
-# iteration order (empirically established in round 1: exactly the first 50
-# registered names got CORRECTNESS rows). With >50 queries we rotate which
-# ones sit inside that window each round so every query eventually earns a
-# driver-green row. The window is DERIVED, not hand-typed (a round-2
-# hand-maintained list silently promised a query that didn't exist):
-#   1. priority names (this round's fixed/new queries + sentinels over
-#      changed code paths) — validated against the registry, a typo raises;
-#   2. everything else ordered by how stale its last driver CORRECTNESS row
-#      is (read from the CORRECTNESS_r*.json artifacts), oldest first.
+# iteration order. With more than 50 queries, which ones sit inside that
+# window rotates so every query eventually earns a driver-green row. The
+# window is DERIVED, not hand-typed (a hand-kept list once promised a
+# query that did not exist):
+#   1. priority names (_WINDOW_PRIORITY), validated against the registry —
+#      a typo raises;
+#   2. everything else by how stale its last driver CORRECTNESS row is
+#      (read from the CORRECTNESS_r*.json artifacts): never-checked
+#      queries first, then oldest first. New queries are never hand-listed
+#      or hand-counted; the sort places them.
 # Everything NOT in the window still runs under scripts/selfcheck.py (same
 # compare, local DuckDB) — the rotation changes which subset gets the
 # driver's independent confirmation, not what is tested.
 _WINDOW_SIZE = 50
 
-# Round 8: the r7 streaming pins are retired — all four re-earned driver
-# rows on the quantize-before-sum arithmetic in CORRECTNESS_r07. No query
-# changed behavior after its latest driver row (the round-8 engine edits
-# are guards, measurement tooling, and new queries) EXCEPT q31 (pinned
-# below); the staleness sort fills the rest of the window: the six
-# never-checked round-8 queries (q40d PNG, q40e MP4 metadata, q40f JPEG,
-# q40g MP4 frame sample, q77b bloom decontamination, q157 BM25) enter
-# first
-# (hist 0), then the 23 r4-vintage rows (q39, q40b, q41, q43, q46-q49,
-# q51, q52, q54-q56, q63, q72, q73, q75, q77, q78, q80, q82-q84), then
-# the oldest r5 rows — after this round no query's newest driver row is
-# older than r5.
-# Round 9: CORRECTNESS_r08 came back 50/50 full-hash green, including
-# the q31 oracle-boundary pin and all six round-8 queries — the pin is
-# cleared. Every never-driver-checked round-9 query (q157b through
-# q169 — the hist-0 set is DERIVED by the sort below, not hand-counted;
-# a round-9 hand count here went stale twice within the round, the
-# exact failure mode the round-2 postmortem above describes) enters the
-# window first, then ALL 29 r5-vintage rows (verified at 14 new + 29 r5
-# + 7 r6 = 50: no r5 row falls outside), then the oldest r6 rows —
-# after this round no driver row is older than r6.
-# Round-9 edits that touch ALREADY-ATTESTED queries: q157's tf+dl
-# single-pass rework (selfcheck-green at sf0.01 AND sf0.1, but its r8
-# driver row attests the old plan — it re-earns via its natural r8
-# staleness slot, no pin needed since the oracle text is unchanged and
-# the compare semantics identical), and q77/q77b routing through
-# member_semijoin with regimes pinned (plan-identical by construction,
-# both selfcheck-green at both SFs).
-# ROUND-10 NOTE: if CORRECTNESS_r09 is green, keep the list empty and
-# let the sort finish the r6 tail; pin only if an oracle TEXT changes.
-# Round 10: CORRECTNESS_r09 came back 50/50 green (48 hash + 2
-# rows-only by design) — list stays empty. The never-checked
-# round-10 queries (q158c cross-codec pHash, q40h 4:2:0 JPEG, q40i
-# progressive JPEG, q165b update-mode pHash dedup, q166b update-mode
-# inverted index, q167b update-mode decontamination, q169b batch
-# hybrid RRF, q170 SemDeDup, q171 media quarantine, q172 distributed
-# Gram, q172b power-iteration PCA, q173 z-order layout, q174 MJPEG
-# video frame-pixel dedup, q175 exact-substring dedup,
-# q175b substring scrub, q176 PageRank, q177 DSIR selection,
-# q177b streaming DSIR, q178
-# Gopher rules, q178b streaming Gopher filter, q179 BPE training,
-# q179b streaming BPE tokenize, q180 Misra-Gries heavy hitters —
-# all hist-0, the COUNT
-# deliberately not hand-
-# written here, DERIVED by the sort) enter first,
-# then the staleness sort
-# drains the remaining r6 tail and the oldest r7 rows. Round-10 edits
-# touching ALREADY-ATTESTED queries: q158/q160/q165 now flow through
-# the dispatching phash_blobs/afp_blobs (same BMP/WAV kernels
-# underneath — byte-identical on their fixtures, selfcheck-green at
-# both SFs) and q77b through the executor-packed bloom build
-# (bit-identical bitset, pinned by
-# test_bloom_build_chunk_packing_matches_reference) — no pins needed,
-# they re-earn on natural staleness.
-# ROUND-11 NOTE: if CORRECTNESS_r10 is green, keep the list empty —
-# the sort finishes the r7 tail; pin only if an oracle TEXT changes.
-# Round 11: CORRECTNESS_r10 came back 50/50 green (49 hash + 1
-# rows-only by design) — the never-checked round-11 queries enter as
-# hist-0 via the sort (NOT hand-listed, the standing rule), then the
-# 16 r6-vintage rows (q143-q156, q26b, q26d — the r10 verdict's
-# attestation-debt item) and the oldest r7 rows fill the window.
-# ONE pin: q171's oracle TEXT changed this round (the quarantine
-# reason string now names GIF alongside BMP/PNG/JPEG — the round-11
-# fourth codec), so its r10 driver row attests a stale text.
-# Round-11 edits touching ALREADY-ATTESTED queries (no pins needed —
-# oracle texts unchanged, selfcheck-green at both SFs on final HEAD):
-# q170 re-plans through similarity.semdedup_cell_stats (fused numpy
-# kernel, one exchange — same values), q26c moved to the radius-6
-# combination pigeonhole (rows-only anyway), q180 pins traversal with
-# (doc_id, pos), and every pHash-family query flows through the
-# GIF-extended decode_image_pixels dispatch (byte-identical on
-# non-GIF blobs by magic-byte construction).
-# Round-11 continuation: more queries landed after the first
-# attestation (q186-q190 TPC-H Q3/Q4/Q6/Q7/Q10, q191/q191b PQ ANN
-# batch+streaming-encode, q194 IVFADC, q192/q192b KMV batch+streaming,
-# q195 KMV set relations, q193/q193b C4 rules, q51c/q51d full-outer
-# and left-semi stream joins, q196/q196b/q197 Kneser-Ney LM
-# scoring batch+streaming + CCNet bands, q198 exact heavy hitters) —
-# twenty total — all hist-0, they enter the window via the
-# sort ahead of the staleness drain, which is correct: never-checked
-# first.
-# ROUND-12 WINDOW: CORRECTNESS_r11 came back fully green (q171
-# included), so the r11 pin is dropped. Three queries changed BEHAVIOR
-# this round under an unchanged oracle — q197 (NTILE -> histogram band
-# cuts), q176 (Pregel adjacency rewrite), q198 (runtime precondition +
-# null-bucket recount) — and are pinned so the driver re-attests the
-# new plans rather than trusting selfcheck alone. Final round-12
-# arithmetic: 3 pins + 15 new hist-0 queries (q33b, q84b, q160b,
-# q160c, q199-q208, q203b) + 32 r7-vintage rows = 50. The r11
-# verdict's "drain all 44 r7 rows" predates the 15 additions —
-# never-checked outranks staleness, so 12 r7 rows carry to r13.
-# ROUND-13 NOTE: if CORRECTNESS_r12 is green, EMPTY this list again;
-# pin only oracle-text changes or behavior changes under an unchanged
-# oracle.
-# Round 14: CORRECTNESS_r13 came back 50/50 green — the r12 pins are
-# dropped. Four queries changed BEHAVIOR this round under unchanged
-# oracles and are pinned so the driver re-attests the new plans:
-# q213 (whole-snapshot rewrite -> bucket-granular partition-pruned
-# MERGE with manifest + retention), q212b (UNK-floor Viterbi fallback
-# in the ingest tokenizer kernel), q214/q214b (the shared
-# srp_banded_buckets home re-planned: posexplode_outer + window-count
-# hot-bucket ceiling — one Arrow UDF evaluation per branch instead of
-# three). All four selfcheck-green at sf0.01 on the new code. The
-# staleness sort then drains the 25 r8-vintage rows (the r13 verdict's
-# rotation ask) and the oldest r9 rows — min vintage r9 after this
-# window if no new hist-0 additions outrank them (never-checked
-# round-14 queries enter first via the sort, the standing rule).
-# ROUND-15 NOTE: if CORRECTNESS_r14 is green, EMPTY this list again;
-# pin only oracle-text changes or behavior changes under an unchanged
-# oracle.
-# Round 15: CORRECTNESS_r14 came back 50/50 green — the r14 pins are
-# dropped. Pins this round, all behavior changes under unchanged
-# contracts (plus one oracle-text change):
-# - q205/q205b/q214b: the stateful bucket emitter re-planned onto the
-#   BOUNDED state-key space (pmod(xxhash64(band,bsig), 4096) slots with
-#   per-slot bucket dicts — the r14 verdict's perf fix; emitted pair
-#   sets identical, schedule-invariance pytests green, q205b 9.5 ->
-#   6.5 s at sf0.1);
-# - q216c: oracle TEXT changed (the argmax score moved to DECIMAL /
-#   HUGEINT arithmetic, exact past the old n_ab ~9.2e6 int64 wrap);
-# - q213/q213b/q213c: scd1_upsert_stream's bucket reads and read-back
-#   now go through mergeSchema (the q213d schema-evolution read path;
-#   values identical when no evolution is configured, selfcheck-green).
-# The never-checked round-15 queries (q213d, q218 — hist-0, DERIVED by
-# the sort as always) enter first, then the staleness sort drains the
-# 39 r9-vintage rows (the r14 verdict's rotation ask) and the oldest
-# r10 rows — min vintage r10 after this window.
-# Round-15 continuation: the q213 pins below ALSO re-attest the
-# session's manifest-shape changes (q220 deletion vectors: manifests
-# carry `delete_files`; q225 spec evolution: manifests carry
-# `n_buckets`, publish validates writer specs) — the q213 family's
-# oracles are unchanged, the commit protocol underneath them is not.
-# The session's new queries (q219/q219b/q219c, q220-q232 incl. q223b)
-# are hist-0 and enter via the sort. NOTE the window is 50 and the
-# hist-0 set is now 20 (3 from the round-15 close + 17 continuation):
-# all of them fit, the staleness drain continues behind them.
+# Pin a query only when its oracle TEXT changed, or its behavior changed
+# under an unchanged oracle, after its latest driver row. Empty the list
+# once the driver's CORRECTNESS rows come back green for the pins.
 _WINDOW_PRIORITY: list[str] = [
+    # stateful bucket emitter re-planned onto a bounded state-key space
+    # (pmod(xxhash64(band, bsig), 4096) slots, per-slot bucket dicts)
     "q205_stream_minhash_candidates",
     "q205b_stream_minhash_verify",
     "q214b_stream_embedding_neardup",
+    # oracle text changed: argmax score in DECIMAL/HUGEINT arithmetic
     "q216c_wordpiece_likelihood_train",
+    # bucket reads go through mergeSchema, and manifests carry
+    # delete_files/n_buckets: the commit protocol under the same oracles
     "q213_stream_scd1_upsert",
     "q213b_scd1_changelog",
     "q213c_scd1_time_travel",

@@ -23,6 +23,14 @@ Scale notes (100 TB target):
   The daemon re-reads an archive only when it changed. The package's
   parent directory leads the executors' ``PYTHONPATH`` so the daemon (and
   every UDF pickled by reference) imports from any driver cwd.
+- Local sessions put ``jvm/NioLocalFileSystem.jar`` on the driver class
+  path and serve ``file:`` with its class: Hadoop's ``LocalFileSystem``
+  whose ``setPermission`` calls ``chmod(2)`` through ``java.nio``. Without
+  ``libhadoop`` the stock one runs ``chmod`` as a child process for every
+  file and directory it creates: offset and commit logs, state-store
+  deltas, sink files and their ``.crc`` files, 258 per perfbench
+  ``stream_window`` drain. Rebuild the jar with
+  ``scripts/build_localfs_jar.py``.
 """
 
 from __future__ import annotations
@@ -33,6 +41,8 @@ from pyspark.sql import SparkSession
 
 # Directory holding the kstreamjs_spark package, for worker PYTHONPATH.
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# Built from jvm/NioLocalFileSystem.java by scripts/build_localfs_jar.py.
+_LOCALFS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "NioLocalFileSystem.jar")
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -86,8 +96,16 @@ def get_spark(
         )
         # Startup-only: external sessions keep pyspark.daemon.
         .config("spark.python.daemon.module", "kstreamjs_spark.worker_daemon")
+        # Same chmod(2) per created file, without forking `chmod`. Its
+        # jar leads the driver class path below (local mode runs the
+        # executors in the driver JVM); external sessions keep Hadoop's
+        # default because the class path is startup-only.
+        .config("spark.hadoop.fs.file.impl", "kstreamjs_spark.jvm.NioLocalFileSystem")
     )
     extra_conf = dict(extra_conf or {})
+    extra_conf["spark.driver.extraClassPath"] = os.pathsep.join(
+        filter(None, [_LOCALFS_JAR, extra_conf.get("spark.driver.extraClassPath")])
+    )
     # The daemon and UDFs pickled by reference import kstreamjs_spark in
     # the worker; workers run in the driver's cwd, so without this a
     # driver started outside the repo fails every Python UDF.

@@ -13,7 +13,7 @@ SF_CORRECT = "/root/testdata/sf0.01"
 # The full suite is ~740 tests and takes 1,700-3,600 s, longer than a
 # verify window allows, so the default `pytest tests/` run skips the
 # tests below: every test whose call took >= 5 s in a full-suite run
-# (129 tests carrying ~2,600 s of the wall, mostly streaming end-to-end,
+# (128 tests carrying ~2,600 s of the wall, mostly streaming end-to-end,
 # media-codec oracle compares and iterative-graph rows). They are not
 # dead weight: KSTREAMJS_FULL_TESTS=1 runs them, and the skipped oracle
 # compares duplicate the coverage of scripts/selfcheck.py, which runs
@@ -97,7 +97,6 @@ _SLOW_TESTS = frozenset({
     "test_queries_oracle.py::test_query_matches_oracle[q205_stream_minhash_candidates]",
     "test_queries_oracle.py::test_query_matches_oracle[q205b_stream_minhash_verify]",
     "test_queries_oracle.py::test_query_matches_oracle[q216c_wordpiece_likelihood_train]",
-    "test_queries_oracle.py::test_query_matches_oracle[q218_nn_descent_knn_graph]",
     "test_queries_oracle.py::test_query_matches_oracle[q218b_knn_graph_dedup_clusters]",
     "test_queries_oracle.py::test_query_matches_oracle[q219_graph_ann_beam_search]",
     "test_queries_oracle.py::test_query_matches_oracle[q219b_stream_knn_graph_insert]",
