@@ -54,7 +54,7 @@ def main() -> int:
     specs = {n: s for n, s in qs.items() if s.bench}
     load_start = round(os.getloadavg()[0], 2)
 
-    # ---- oracle side first (same order as scripts/oracle_bench.py):
+    # ---- oracle side first, then the engine on the same host:
     # DuckDB 32 threads, warm, min-of-N. Rows-only bench queries get an
     # oracle column ONLY through an EXPLICIT proxy (q26b has always been
     # compared against the exact near-dup SQL it approximates); any

@@ -29,6 +29,7 @@ from __future__ import annotations
 import math
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
@@ -60,20 +61,7 @@ def misra_gries(
     def summarize(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         counters: dict = {}
         for pdf in it:
-            for item in pdf[col]:
-                if item in counters:
-                    counters[item] += 1
-                elif len(counters) < k:
-                    counters[item] = 1
-                else:
-                    # decrement-all; drop zeros (the classic MG step)
-                    dead = []
-                    for key in counters:
-                        counters[key] -= 1
-                        if counters[key] == 0:
-                            dead.append(key)
-                    for key in dead:
-                        del counters[key]
+            _mg_update(counters, pdf[col], k)
         if counters:
             yield pd.DataFrame(
                 {"item": list(counters), "est": list(counters.values())}
@@ -83,6 +71,28 @@ def misra_gries(
     return partials.groupBy("item").agg(
         F.sum("est").cast("long").alias("est_count")
     )
+
+
+def _mg_update(counters: dict, items, k: int) -> dict:
+    """Fold ``items`` into Misra-Gries(k) ``counters`` in place and return
+    them (the step shared by the batch per-partition summary and the
+    streaming per-key state of q180b): increment a held item, insert a
+    new one while fewer than k are held, else decrement all and drop
+    zeros."""
+    for item in items:
+        if item in counters:
+            counters[item] += 1
+        elif len(counters) < k:
+            counters[item] = 1
+        else:
+            dead = []
+            for key in counters:
+                counters[key] -= 1
+                if counters[key] == 0:
+                    dead.append(key)
+            for key in dead:
+                del counters[key]
+    return counters
 
 
 def _kll_update(levels, toggles, err, n, values, k: int):
@@ -231,33 +241,38 @@ def kmv_summary(
     mergeability, not bound-addition.
 
     The hash rides the scan projection JVM-side (F.xxhash64); the
-    Arrow kernel only maintains the bounded k-min set (heap + member
-    set, O(k) memory), so the per-partition exchange is <= k longs —
-    constant in data size.
+    Arrow kernel only maintains the bounded k-min set (`_kmv_update`),
+    so the per-partition exchange is <= k longs — constant in data
+    size.
 
     NULL semantics: xxhash64(NULL) is the seed constant, so NULLs in
     ``col`` count as ONE distinct value — unlike countDistinct, which
     EXCLUDES them. Filter nulls first when the SQL semantics are
     wanted (q192's scopes are null-free by schema); pinned by test."""
-    import numpy as np
-
     hashed = df.select(F.xxhash64(F.col(col)).alias("h"))
 
     def summarize(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # vectorized k-min fold: the fold is associative and monotone
-        # (cur always holds the k smallest distinct seen), so each Arrow
-        # batch folds in one np.unique (sort + dedup in C) — no per-value
-        # Python. A first cut looped a heap per element; vectorizing cut
-        # the kernel from interpreter-bound to Arrow-bound (measured in
-        # SCALE.md's decade sweep).
         cur = np.empty(0, dtype=np.int64)
         for pdf in it:
-            arr = pdf["h"].to_numpy(dtype=np.int64, copy=False)
-            cur = np.unique(np.concatenate([cur, arr]))[:k]
+            cur = _kmv_update(cur, pdf["h"], k)
         if len(cur):
             yield pd.DataFrame({"h": cur})
 
     return hashed.mapInPandas(summarize, "h long")
+
+
+def _kmv_update(cur, hashes, k: int) -> np.ndarray:
+    """The k smallest distinct values of ``cur`` and ``hashes`` as a
+    sorted int64 array: the k-min fold shared by `kmv_summary` and the
+    streaming per-key state of q192b. The fold is associative and
+    monotone, so each chunk folds in one np.unique (sort + dedup in C)
+    with no per-value Python; a per-element heap was interpreter-bound
+    (SCALE.md's decade sweep). Trimming to k per chunk keeps the working
+    set at O(k + chunk)."""
+    return np.unique(np.concatenate([
+        np.asarray(cur, dtype=np.int64),
+        np.asarray(hashes, dtype=np.int64),
+    ]))[:k]
 
 
 def kmv_distinct(

@@ -113,8 +113,8 @@ def window_collect_stateful(
     STREAMING input runs per micro-batch, emitting one partial row per
     batch for a window that spans batches. This operator is the exact
     streaming equivalent: keyed GroupState buffers the window's rows
-    across micro-batches (``applyInPandasWithState``, the proven
-    q180b/q181b/q192b fold shape) and an EVENT-TIME TIMEOUT at the
+    across micro-batches (``applyInPandasWithState``, the fold shape
+    of ``streaming.replay.keyed_fold``) and an EVENT-TIME TIMEOUT at the
     window end fires the reducer ONCE when the watermark (the facade's
     ``buffer_interval_ms``) passes it. Rows arriving for an
     already-due window are late by the stream's own watermark and are

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..operators.window import window_collect
 from ..operators.sampling import hash_bucket_sql
-from ..streaming.replay import run_to_memory, stream_table
+from ..streaming.replay import keyed_fold, run_to_memory, stream_table
 from ..tables import load
 from . import query
 
@@ -312,49 +312,30 @@ def q41(spark: SparkSession, sf: str) -> DataFrame:
     tags=("streaming", "stateful", "udf"),
 )
 def q44(spark: SparkSession, sf: str) -> DataFrame:
-    """Custom stateful streaming operator via applyInPandasWithState (the
-    reference's only state is the window buffer, src/stream.ts:137; this is
-    the general keyed-state surface): per-user running totals maintained in
-    GroupState across micro-batches, one row emitted per (user, batch).
-    The returned frame projects each user's FINAL state (the row with the
-    largest running_cnt — strictly increasing per batch), which must equal
-    the batch SUM/COUNT per user however the replay happens to be
-    micro-batched — so the query is oracle-checkable (hash-match) without
-    assuming a batch layout. State is int64 1e-4 QUANTA, not a double:
-    each value quantizes to floor(v*1e4+0.5) per ROW before any
+    """Custom stateful streaming operator (the reference's only state is
+    the window buffer, src/stream.ts:137; this is the general keyed-state
+    surface): per-user running totals folded across micro-batches by
+    `keyed_fold`. The returned frame is each user's FINAL state, which
+    must equal the batch SUM/COUNT per user however the replay happens
+    to be micro-batched — so the query is oracle-checkable (hash-match)
+    without assuming a batch layout. State is int64 1e-4 QUANTA, not a
+    double: each value quantizes to floor(v*1e4+0.5) per ROW before any
     accumulation (the repo's standard cross-engine idiom, cf. q81b/q96),
     so the total is order-free integer arithmetic — a double accumulator
     summed in micro-batch order could flip a 4-dp rounding boundary
-    against DuckDB's differently-ordered SUM (ADVICE r5). Per-batch
-    semantics are covered by the batch-equivalence test in
-    tests/test_streaming.py."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
+    against DuckDB's differently-ordered SUM. Per-batch semantics are
+    covered by the batch-equivalence test in tests/test_streaming.py."""
     sdf = stream_table(spark, sf, "events").select("user_id", "value")
 
-    def update(key, pdfs, state: GroupState):
-        total_q, cnt = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            q = np.floor(pdf["value"].to_numpy() * 1e4 + 0.5).astype("int64")
-            total_q += int(q.sum())
-            cnt += len(pdf)
-        state.update((total_q, cnt))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "running_total": [total_q / 10000.0],
-             "running_cnt": [cnt]}
-        )
+    def step(total_q, pdf):
+        q = np.floor(pdf["value"].to_numpy() * 1e4 + 0.5).astype("int64")
+        return total_q + int(q.sum())
 
-    out = sdf.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType="user_id bigint, running_total double, running_cnt bigint",
-        stateStructType="total_q bigint, cnt bigint",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    sink = run_to_memory(out, "q44", output_mode="append")
-    return sink.groupBy("user_id").agg(
-        F.max_by("running_total", "running_cnt").alias("running_total"),
-        F.max("running_cnt").cast("long").alias("running_cnt"),
+    finals = keyed_fold(sdf, "user_id", 0, step, "q44")
+    return finals.select(
+        "user_id",
+        (F.col("state").cast("long") / 10000.0).alias("running_total"),
+        F.col("n").alias("running_cnt"),
     )
 
 
@@ -1306,21 +1287,20 @@ _Q181B_BUCKETS = 8
 @query("q181b_stream_quantile_sketch", oracle=None,
        tags=("streaming", "sketch", "approx", "stateful"))
 def q181b(spark: SparkSession, sf: str) -> DataFrame:
-    """STREAMING quantile sketch (round 11): q181's mergeable KLL
-    compactor maintained as KEYED STREAMING STATE — the deployment
-    shape for percentile monitoring over an unbounded stream, and the
-    demonstration q180/q181 still lacked: a sketch that FOLDS ACROSS
-    MICRO-BATCHES via `applyInPandasWithState` instead of being
-    rebuilt per batch. The lineitem replay hashes into 8 buckets
+    """STREAMING quantile sketch: q181's mergeable KLL compactor
+    maintained as KEYED STREAMING STATE — the deployment shape for
+    percentile monitoring over an unbounded stream: a sketch that FOLDS
+    ACROSS MICRO-BATCHES (`keyed_fold`) instead of being rebuilt per
+    batch. The lineitem replay hashes into 8 buckets
     (`pmod(xxhash64(l_orderkey), 8)` — a deterministic key, so state
-    parallelism is data-independent); each bucket's GroupState carries
-    the full compactor (levels + alternation toggles JSON-serialized,
-    err, n — bounded: <= k*log2(n/k) floats) and each trigger folds
-    that batch's values through the SAME `_kll_update` core the batch
-    operator uses (one arithmetic home). After the replay the 8 final
-    summaries merge by union — mergeability is the whole point
-    (Agarwal et al. 2012) — and p50/p90/p99 come off the merged items
-    with the summed bound, exactly `kll_quantiles`' final step.
+    parallelism is data-independent); each bucket's state carries the
+    full compactor (levels, alternation toggles, err — bounded: <=
+    k*log2(n/k) floats) and each trigger folds that batch's values
+    through the SAME `_kll_update` core the batch operator uses (one
+    arithmetic home). After the replay the 8 final summaries merge by
+    union — mergeability is the whole point (Agarwal et al. 2012) — and
+    p50/p90/p99 come off the merged items with the summed bound, exactly
+    `kll_quantiles`' final step.
 
     Rows-only by design (the q180/q181 category — and the streaming
     estimates legitimately differ from batch q181's: the sketch's
@@ -1330,8 +1310,6 @@ def q181b(spark: SparkSession, sf: str) -> DataFrame:
     and bound non-vacuousness."""
     import json
 
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     from ..operators.sketch import _kll_estimate, _kll_update
 
     sdf = stream_table(spark, sf, "lineitem").select(
@@ -1340,57 +1318,22 @@ def q181b(spark: SparkSession, sf: str) -> DataFrame:
         F.col("l_extendedprice").alias("x"),
     )
 
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            levels_js, toggles_js, err, n = state.get
-            levels = json.loads(levels_js)
-            toggles = json.loads(toggles_js)
-        else:
-            levels, toggles, err, n = [[]], [0], 0, 0
-        for pdf in pdfs:
-            levels, toggles, err, n = _kll_update(
-                levels, toggles, err, n, pdf["x"], _Q181B_K
-            )
-        state.update((json.dumps(levels), json.dumps(toggles), err, n))
-        yield pd.DataFrame({
-            "bucket": [key[0]],
-            "levels": [json.dumps(levels)],
-            "err": [err],
-            "n": [n],
-        })
+    def step(acc, pdf):
+        levels, toggles, err, _ = _kll_update(*acc, 0, pdf["x"], _Q181B_K)
+        return [levels, toggles, err]
 
-    out = sdf.groupBy("bucket").applyInPandasWithState(
-        update,
-        outputStructType=(
-            "bucket bigint, levels string, err bigint, n bigint"
-        ),
-        stateStructType=(
-            "levels string, toggles string, err bigint, n bigint"
-        ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    sink = run_to_memory(out, "q181b", output_mode="append")
-    # final state per bucket = the row with the largest n (strictly
-    # increasing per trigger — q44's compaction rule), then the bounded
-    # merge + estimate (8 summaries, kilobytes)
-    finals = (
-        sink.groupBy("bucket")
-        .agg(
-            F.max_by("levels", "n").alias("levels"),
-            F.max_by("err", "n").alias("err"),
-            F.max("n").alias("n"),
-        )
-        .collect()
-    )
+    # the 8 final summaries are bounded, so the merge + estimate runs
+    # on the driver
+    finals = keyed_fold(sdf, "bucket", [[[]], [0], 0], step, "q181b").collect()
+    states = [(json.loads(r["state"]), r["n"]) for r in finals]
     items = sorted(
         (float(v), 1 << h)
-        for r in finals
-        for h, buf in enumerate(json.loads(r["levels"]))
+        for (levels, _, _), _ in states
+        for h, buf in enumerate(levels)
         for v in buf
     )
-    err_total = sum(r["err"] for r in finals)
-    n_total = sum(r["n"] for r in finals)
+    err_total = sum(err for (_, _, err), _ in states)
+    n_total = sum(n for _, n in states)
     rows = _kll_estimate(items, err_total, n_total, _Q181B_QS)
     return spark.createDataFrame(
         rows, "q double, est double, n long, err_bound long"
@@ -1406,20 +1349,19 @@ _Q180B_BUCKETS = 8
 @query("q180b_stream_heavy_hitters", oracle=None,
        tags=("streaming", "sketch", "approx", "stateful", "text"))
 def q180b(spark: SparkSession, sf: str) -> DataFrame:
-    """STREAMING heavy hitters (round 11): q180's Misra-Gries summary
-    maintained as KEYED STREAMING STATE — with q181b this completes
-    the sketch matrix (frequencies x quantiles, batch x streaming).
-    Tokens hash into 8 buckets by pmod(xxhash64(token), 8), so EVERY
-    occurrence of a token lands in one bucket and the final answer is
-    a plain UNION of the per-bucket counter sets (disjoint token
-    spaces — no cross-summary merge at all, which even SHARPENS the
-    batch bound: each bucket under-counts by at most N_bucket/(k+1)
-    <= N/(k+1), and a globally-heavy token is a fortiori heavy in its
-    own bucket, so heavy-completeness carries over). Each bucket's
-    GroupState holds its <= k counters (JSON — bounded) folded across
-    micro-batches by the classic increment / insert / decrement-all
-    step. Output: top-10 tokens by estimated count (est DESC, token
-    ASC), the q180 shape.
+    """STREAMING heavy hitters: q180's Misra-Gries summary maintained as
+    KEYED STREAMING STATE — with q181b this completes the sketch matrix
+    (frequencies x quantiles, batch x streaming). Tokens hash into 8
+    buckets by pmod(xxhash64(token), 8), so EVERY occurrence of a token
+    lands in one bucket and the final answer is a plain UNION of the
+    per-bucket counter sets (disjoint token spaces — no cross-summary
+    merge at all, which even SHARPENS the batch bound: each bucket
+    under-counts by at most N_bucket/(k+1) <= N/(k+1), and a
+    globally-heavy token is a fortiori heavy in its own bucket, so
+    heavy-completeness carries over). Each bucket's state holds its
+    <= k counters folded across micro-batches (`keyed_fold`) by the
+    same `_mg_update` step batch `misra_gries` uses. Output: top-10
+    tokens by estimated count (est DESC, token ASC), the q180 shape.
 
     Rows-only by design (the q180/q181 category); the pytest contract
     and APPROX_EVIDENCE pin never-over-counts, the per-bucket bound,
@@ -1427,7 +1369,7 @@ def q180b(spark: SparkSession, sf: str) -> DataFrame:
     exact token count)."""
     import json
 
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from ..operators.sketch import _mg_update
 
     sdf = stream_table(spark, sf, "documents").select(
         F.posexplode(F.split("text", " ")).alias("pos", "token")
@@ -1435,54 +1377,16 @@ def q180b(spark: SparkSession, sf: str) -> DataFrame:
         F.pmod(F.xxhash64("token"), F.lit(_Q180B_BUCKETS)).alias("bucket"),
         "token",
     )
-
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            cj, n = state.get
-            counters = json.loads(cj)
-        else:
-            counters, n = {}, 0
-        for pdf in pdfs:
-            for tok in pdf["token"]:
-                n += 1
-                if tok in counters:
-                    counters[tok] += 1
-                elif len(counters) < _Q180B_K:
-                    counters[tok] = 1
-                else:
-                    dead = []
-                    for t in counters:
-                        counters[t] -= 1
-                        if counters[t] == 0:
-                            dead.append(t)
-                    for t in dead:
-                        del counters[t]
-        state.update((json.dumps(counters), n))
-        yield pd.DataFrame({
-            "bucket": [key[0]],
-            "counters": [json.dumps(counters)],
-            "n": [n],
-        })
-
-    out = sdf.groupBy("bucket").applyInPandasWithState(
-        update,
-        outputStructType="bucket bigint, counters string, n bigint",
-        stateStructType="counters string, n bigint",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    sink = run_to_memory(out, "q180b", output_mode="append")
-    finals = (
-        sink.groupBy("bucket")
-        .agg(F.max_by("counters", "n").alias("counters"),
-             F.max("n").alias("n"))
-        .collect()
-    )
+    finals = keyed_fold(
+        sdf, "bucket", {},
+        lambda counters, pdf: _mg_update(counters, pdf["token"], _Q180B_K),
+        "q180b",
+    ).collect()
     rows = sorted(
         (
             (tok, est)
             for r in finals
-            for tok, est in json.loads(r["counters"]).items()
+            for tok, est in json.loads(r["state"]).items()
         ),
         key=lambda te: (-te[1], te[0]),
     )[:_Q180B_TOP]
@@ -1632,80 +1536,42 @@ _Q192B_BUCKETS = 8
 @query("q192b_stream_kmv_distinct", oracle=None,
        tags=("streaming", "sketch", "approx"))
 def q192b(spark: SparkSession, sf: str) -> DataFrame:
-    """STREAMING KMV (round 11): q192's k-minimum-values summary
-    maintained as KEYED STREAMING STATE — completing the sketch matrix
-    for cardinality (with q180b frequencies and q181b quantiles every
-    mergeable summary now runs batch AND streaming). Hashes bucket by
-    pmod(xxhash64, 8); each bucket's GroupState holds ITS OWN k
-    smallest distinct hashes (per-bucket k = full k: in the worst case
-    every global minimum lands in one bucket, so nothing smaller
-    guarantees containment of the global k-min), folded monotonically
-    across micro-batches (set-union then trim — the k-min fold
-    commutes, so arrival grouping CANNOT change the result). The final
-    answer unions the bucket sets, takes the global k smallest, and
-    applies the SAME `kmv_estimate` arithmetic as batch — which is why
-    the streaming estimate must EQUAL batch q192's order_keys estimate
-    exactly, the equality the pytest contract pins (MG/KLL can only
-    pin bounds; KMV's set-purity makes streaming == batch a hard
-    equality).
+    """STREAMING KMV: q192's k-minimum-values summary maintained as
+    KEYED STREAMING STATE — completing the sketch matrix for cardinality
+    (with q180b frequencies and q181b quantiles every mergeable summary
+    runs batch AND streaming). Hashes bucket by pmod(xxhash64, 8); each
+    bucket's state holds ITS OWN k smallest distinct hashes (per-bucket
+    k = full k: in the worst case every global minimum lands in one
+    bucket, so nothing smaller guarantees containment of the global
+    k-min), folded monotonically across micro-batches (`keyed_fold`) by
+    the same `_kmv_update` step `kmv_summary` uses, trimmed to k per
+    Arrow chunk. The k-min fold commutes, so arrival grouping CANNOT
+    change the result. The final answer unions the bucket sets, takes
+    the global k smallest, and applies the SAME `kmv_estimate`
+    arithmetic as batch — which is why the streaming estimate must
+    EQUAL batch q192's order_keys estimate exactly, the equality the
+    pytest contract pins (MG/KLL can only pin bounds; KMV's set-purity
+    makes streaming == batch a hard equality).
 
     Scale shape: state bounded at 8k longs total regardless of stream
     length; emission is per-bucket per-trigger (append mode), the
     union/estimate a bounded driver fold (the centroid-collect
     policy). Rows-only by design (the q180/q181 category);
     APPROX_EVIDENCE records the equality at both SFs."""
-    import json as _json
+    import json
 
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from ..operators.sketch import kmv_estimate
+    from ..operators.sketch import _kmv_update, kmv_estimate
 
     sdf = stream_table(spark, sf, "lineitem").select(
         F.xxhash64("l_orderkey").alias("h")
     ).select(F.pmod("h", F.lit(_Q192B_BUCKETS)).alias("bucket"), "h")
-
-    def update(key, pdfs, state: GroupState):
-        import numpy as np
-
-        if state.exists:
-            sj, n_rows = state.get
-            cur = np.array(_json.loads(sj), dtype=np.int64)
-        else:
-            cur, n_rows = np.empty(0, dtype=np.int64), 0
-        # fold per Arrow batch and trim to k EACH time (round-12
-        # advisor fix): the working set stays O(k + batch_chunk), not
-        # O(batch distinct) — the same vectorized np.unique k-min fold
-        # kmv_summary uses (one arithmetic home)
-        for pdf in pdfs:
-            n_rows += len(pdf)
-            cur = np.unique(
-                np.concatenate([cur, pdf["h"].to_numpy(dtype=np.int64)])
-            )[:_Q192B_K]
-        mins = [int(v) for v in cur]
-        state.update((_json.dumps(mins), n_rows))
-        yield pd.DataFrame({
-            "bucket": [key[0]],
-            "mins": [_json.dumps(mins)],
-            "n_rows": [n_rows],
-        })
-
-    out = sdf.groupBy("bucket").applyInPandasWithState(
-        update,
-        outputStructType="bucket bigint, mins string, n_rows bigint",
-        stateStructType="mins string, n_rows bigint",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    sink = run_to_memory(out, "q192b", output_mode="append")
-    # final state per bucket = the emission with the largest n_rows
-    # (strictly increasing per bucket, so max_by is the last trigger)
-    finals = (
-        sink.groupBy("bucket")
-        .agg(F.max_by("mins", "n_rows").alias("mins"))
-        .collect()
-    )
+    finals = keyed_fold(
+        sdf, "bucket", [],
+        lambda cur, pdf: _kmv_update(cur, pdf["h"], _Q192B_K).tolist(),
+        "q192b",
+    ).collect()
     merged = sorted(
-        {h for r in finals for h in _json.loads(r["mins"])}
+        {h for r in finals for h in json.loads(r["state"])}
     )[:_Q192B_K]
     est, n_kept = kmv_estimate(merged, _Q192B_K)
     return spark.createDataFrame(
@@ -4442,6 +4308,15 @@ _Q224_K = 5
 _Q224_SEED = 7
 
 
+def _bottomk_update(kept, pdf, k: int = _Q224_K) -> list:
+    """Fold one chunk of ``(priority, doc_id)`` rows into ``kept``, the
+    ``k`` smallest ``(priority, doc_id)`` pairs seen so far, ascending:
+    q224's per-key step (a `keyed_fold` step)."""
+    pairs = [tuple(pair) for pair in kept]
+    pairs.extend(zip(map(int, pdf["priority"]), map(int, pdf["doc_id"])))
+    return sorted(pairs)[:k]
+
+
 @query(
     "q224_stream_bottomk_sample",
     oracle=f"""
@@ -4462,8 +4337,8 @@ _Q224_SEED = 7
 )
 def q224(spark: SparkSession, sf: str) -> DataFrame:
     """STREAMING RESERVOIR SAMPLING per stratum — bottom-k by
-    deterministic hash priority, maintained as keyed GroupState
-    (round 15): every language keeps the k=5 documents with the
+    deterministic hash priority, folded per key across micro-batches
+    (`keyed_fold`): every language keeps the k=5 documents with the
     smallest LCG priority (`sampling.hash_bucket`, the q52/q53 hash
     family) across ALL micro-batches — the streaming twin of the
     batch sampling rows, and the shape an ingest pipeline uses to
@@ -4478,16 +4353,12 @@ def q224(spark: SparkSession, sf: str) -> DataFrame:
     HASH-matched, not rows-only (the same property that makes
     bottom-k sketches mergeable across partitions; Cohen & Kaplan
     2007). State per key is k (priority, id) pairs — bytes; each
-    trigger folds its batch through one bounded sort.
+    trigger folds its batch through one bounded sort
+    (`_bottomk_update`).
 
     At 100 TB: state is langs x k pairs regardless of stream length;
     the per-trigger bill is one groupBy(lang) over the batch."""
     import json
-
-    from pyspark.sql.streaming.state import (
-        GroupState,
-        GroupStateTimeout,
-    )
 
     from ..operators.sampling import hash_bucket
 
@@ -4496,49 +4367,12 @@ def q224(spark: SparkSession, sf: str) -> DataFrame:
         "doc_id",
         hash_bucket("doc_id", seed=_Q224_SEED).alias("priority"),
     )
-
-    def update(key, pdfs, state: GroupState):
-        kept: list = (
-            json.loads(state.get[0]) if state.exists else []
-        )
-        n = state.get[1] if state.exists else 0
-        for pdf in pdfs:
-            n += len(pdf)
-            kept.extend(
-                [int(p), int(d)]
-                for p, d in zip(pdf["priority"], pdf["doc_id"])
-            )
-            kept = sorted(map(tuple, kept))[: _Q224_K]
-        state.update((json.dumps(kept), n))
-        yield pd.DataFrame(
-            {
-                "lang": [key[0]],
-                "kept": [json.dumps(kept)],
-                "n": [n],
-            }
-        )
-
-    out = sdf.groupBy("lang").applyInPandasWithState(
-        update,
-        outputStructType="lang string, kept string, n bigint",
-        stateStructType="kept string, n bigint",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    sink = run_to_memory(out, "q224", output_mode="append")
-    # final state per lang = the row with the largest seen-count (the
-    # q181b/q44 rule); langs x k pairs — a bounded driver artifact
-    finals = (
-        sink.groupBy("lang")
-        .agg(F.max_by("kept", "n").alias("kept"))
-        .collect()
-    )
-    import json as _json
-
+    # langs x k pairs — a bounded driver artifact
+    finals = keyed_fold(sdf, "lang", [], _bottomk_update, "q224").collect()
     rows = [
         (r["lang"], int(d), int(p), rn + 1)
         for r in finals
-        for rn, (p, d) in enumerate(_json.loads(r["kept"]))
+        for rn, (p, d) in enumerate(json.loads(r["state"]))
     ]
     return spark.createDataFrame(
         rows, "lang string, doc_id long, priority long, rn long"

@@ -13,8 +13,11 @@ execution path (state store, watermarks, incremental planning).
 
 from __future__ import annotations
 
+import json
 import uuid
 
+import pandas as pd
+import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..session import configure_runtime
@@ -75,6 +78,58 @@ def run_to_memory(
             f"streaming query {qname!r} did not finish within {timeout_s}s"
         )
     return spark.table(qname)
+
+
+def keyed_fold(sdf: DataFrame, key: str, init, step, name: str) -> DataFrame:
+    """Fold a streaming DataFrame's rows into one state per ``key`` value
+    across micro-batches; returns each key's final state as a batch
+    DataFrame ``(key, state string, n long)``.
+
+    ``step(state, pdf) -> state`` folds one pandas chunk of a key's rows
+    into its state, starting from a fresh copy of ``init``; a step may
+    mutate and return its input. States must be JSON-serializable and
+    survive the round trip (tuples come back as lists, dict keys as
+    strings): between triggers a key's state lives in GroupState as one
+    JSON string plus ``n``, the number of rows folded into it.
+
+    Every trigger emits a ``(key, state, n)`` snapshot per key with rows
+    in that trigger into a memory sink (:func:`run_to_memory`). With
+    ``NoTimeout`` a key is only invoked with rows, so ``n`` strictly
+    increases per key and the final state is the snapshot with the
+    largest ``n``. Memory stays bounded by what ``step`` keeps.
+
+    The GroupState schema is ``(state string, n bigint)``. A checkpoint
+    written under another state schema, such as a hand-written fold's
+    ``(total_q bigint, cnt bigint)``, needs a state reset."""
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    init_js = json.dumps(init)  # a fresh copy per key, never shared
+    key_type = dict(sdf.dtypes)[key]
+
+    def update(k, pdfs, state: GroupState):
+        if state.exists:
+            js, n = state.get
+            acc = json.loads(js)
+        else:
+            acc, n = json.loads(init_js), 0
+        for pdf in pdfs:
+            acc = step(acc, pdf)
+            n += len(pdf)
+        js = json.dumps(acc)
+        state.update((js, n))
+        yield pd.DataFrame({key: [k[0]], "state": [js], "n": [n]})
+
+    out = sdf.groupBy(key).applyInPandasWithState(
+        update,
+        outputStructType=f"{key} {key_type}, state string, n bigint",
+        stateStructType="state string, n bigint",
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+    sink = run_to_memory(out, name, output_mode="append")
+    return sink.groupBy(key).agg(
+        F.max_by("state", "n").alias("state"), F.max("n").alias("n")
+    )
 
 
 def run_foreach_batch(

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import time
 
 import pytest
 
@@ -13,7 +14,7 @@ SF_CORRECT = "/root/testdata/sf0.01"
 # The full suite is ~740 tests and takes 1,700-3,600 s, longer than a
 # verify window allows, so the default `pytest tests/` run skips the
 # tests below: every test whose call took >= 5 s in a full-suite run
-# (128 tests carrying ~2,600 s of the wall, mostly streaming end-to-end,
+# (124 tests carrying ~2,600 s of the wall, mostly streaming end-to-end,
 # media-codec oracle compares and iterative-graph rows). They are not
 # dead weight: KSTREAMJS_FULL_TESTS=1 runs them, and the skipped oracle
 # compares duplicate the coverage of scripts/selfcheck.py, which runs
@@ -116,7 +117,6 @@ _SLOW_TESTS = frozenset({
     "test_streaming.py::test_scd1_delete_concurrent_overlap_conflicts",
     "test_streaming.py::test_scd1_delete_then_writer_applies_and_resurrects",
     "test_streaming.py::test_scd1_delete_vectors_merge_on_read",
-    "test_streaming.py::test_stream_bottomk_sample_schedule_invariant",
     "test_streaming.py::test_stream_cdc_lww_tombstone_semantics",
     "test_streaming.py::test_stream_chunk_dedup_schedule_invariance",
     "test_streaming.py::test_stream_decontaminate_invariant_to_micro_batching",
@@ -127,14 +127,11 @@ _SLOW_TESTS = frozenset({
     "test_streaming.py::test_stream_gopher_filter_matches_batch_funnel",
     "test_streaming.py::test_stream_graph_ann_serve_equals_batch",
     "test_streaming.py::test_stream_ingest_compacted_bounds_files_and_loses_nothing",
-    "test_streaming.py::test_stream_kll_sketch_folds_state_and_respects_bound",
-    "test_streaming.py::test_stream_kmv_folds_state_and_equals_batch",
     "test_streaming.py::test_stream_knn_graph_insert_persists_index",
     "test_streaming.py::test_stream_knn_graph_insert_planted_manifold",
     "test_streaming.py::test_stream_left_outer_join_null_emission_is_watermark_gated",
     "test_streaming.py::test_stream_minhash_candidates_equal_batch_any_schedule",
     "test_streaming.py::test_stream_minhash_verified_equal_batch_any_schedule",
-    "test_streaming.py::test_stream_misra_gries_folds_state_and_respects_bound",
     "test_streaming.py::test_stream_phash_dedup_update_folds_across_triggers",
     "test_streaming.py::test_stream_scd1_changelog_ledger_across_commits",
     "test_streaming.py::test_stream_scd1_merge_prunes_untouched_buckets",
@@ -162,6 +159,30 @@ def pytest_collection_modifyitems(config, items):
         if item.nodeid.split("/")[-1] in _SLOW_TESTS:
             item.add_marker(skip)
 
+
+def stage_stream(df, path, by, parts=6):
+    """Stage ``df`` as a multi-trigger file-stream source: ``parts``
+    parquet part files under ``path``, range-partitioned by ``by``, with
+    mtimes ascending in range order so the file source (oldest first)
+    replays them in ``by`` order. Returns ``read(max_files=1)``, a
+    streaming reader over them taking ``max_files`` files per trigger
+    (``None``: the whole backlog in one trigger)."""
+    df.repartitionByRange(parts, by).write.mode("overwrite").parquet(path)
+    names = sorted(f for f in os.listdir(path) if f.startswith("part-"))
+    assert len(names) == parts, names
+    mtime = time.time() - 3600
+    for i, name in enumerate(names):
+        os.utime(os.path.join(path, name), (mtime + i * 10, mtime + i * 10))
+    spark = df.sparkSession
+    schema = spark.read.parquet(path).schema
+
+    def read(max_files=1):
+        reader = spark.readStream.schema(schema)
+        if max_files:
+            reader = reader.option("maxFilesPerTrigger", str(max_files))
+        return reader.parquet(path)
+
+    return read
 
 
 @pytest.fixture(scope="session")

@@ -14,7 +14,7 @@ from kstreamjs_spark.stream import Stream
 from kstreamjs_spark.streaming.replay import run_to_memory, stream_table
 from kstreamjs_spark.streaming.stats import StatisticsListener
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, stage_stream
 
 
 def test_stream_replay_equals_batch(spark):
@@ -394,18 +394,11 @@ def test_stream_decontaminate_update_mode_evicts_state(spark, tmp_path):
         for i in range(600)
     ]
     docs = spark.createDataFrame(rows, "doc_id long, lang string, text string")
-    src = str(tmp_path / "src")
-    # 6 ascending doc_id ranges = ascending event-time ranges; mtimes
-    # staggered so the file source (oldest-first) replays them in event
-    # order — arrival never falls behind the watermark, so nothing is
-    # dropped as late and the batch answer must be reproduced exactly
-    docs.repartitionByRange(6, "doc_id").write.mode("overwrite").parquet(src)
-    parts = sorted(f for f in os.listdir(src) if f.startswith("part-"))
-    assert len(parts) == 6
-    base = time.time() - 3600
-    for i, f in enumerate(parts):
-        os.utime(os.path.join(src, f), (base + i * 10, base + i * 10))
-    schema = spark.read.parquet(src).schema
+    # 6 ascending doc_id ranges = ascending event-time ranges, replayed
+    # in event order — arrival never falls behind the watermark, so
+    # nothing is dropped as late and the batch answer must be reproduced
+    # exactly
+    read = stage_stream(docs, str(tmp_path / "src"), "doc_id")
     is_eval = (F.col("doc_id") % 10) == 0  # covers all 7 shingle keys
     eval_shingles = (
         docs.filter(is_eval)
@@ -425,11 +418,8 @@ def test_stream_decontaminate_update_mode_evicts_state(spark, tmp_path):
         )
 
     def run(max_files):
-        reader = spark.readStream.schema(schema)
-        if max_files:
-            reader = reader.option("maxFilesPerTrigger", str(max_files))
         train = (
-            reader.parquet(src).filter(~is_eval)
+            read(max_files).filter(~is_eval)
             .withColumn("ts", arrival)
             .withWatermark("ts", _Q167B_DELAY)
         )
@@ -735,28 +725,16 @@ def test_stream_left_outer_join_null_emission_is_watermark_gated(
         "event_id", "user_id", "event_type",
         F.timestamp_seconds(F.lit(base) + F.col("off")).alias("ts"),
     )
-    src = str(tmp_path / "events")
-    df.repartitionByRange(6, "ts").write.mode("overwrite").parquet(src)
-    parts = sorted(f for f in os.listdir(src) if f.startswith("part-"))
-    mt = time.time() - 3600
-    for i, f in enumerate(parts):
-        os.utime(os.path.join(src, f), (mt + i * 10, mt + i * 10))
-    schema = spark.read.parquet(src).schema
+    read = stage_stream(df, str(tmp_path / "events"), "ts")
 
     def run(max_files):
-        def reader():
-            r = spark.readStream.schema(schema)
-            if max_files:
-                r = r.option("maxFilesPerTrigger", str(max_files))
-            return r.parquet(src)
-
         p = (
-            reader().filter(F.col("event_type") == "purchase")
+            read(max_files).filter(F.col("event_type") == "purchase")
             .select("event_id", "user_id", "ts")
             .withWatermark("ts", "1 minute")
         )
         c = (
-            reader().filter(F.col("event_type") == "click")
+            read(max_files).filter(F.col("event_type") == "click")
             .select(F.col("user_id").alias("c_user"),
                     F.col("ts").alias("click_ts"))
             .withWatermark("click_ts", "1 minute")
@@ -798,217 +776,6 @@ def test_stream_left_outer_join_null_emission_is_watermark_gated(
     assert split_removed > 0  # state really evicted under the split replay
 
 
-def test_stream_kll_sketch_folds_state_and_respects_bound(spark, tmp_path):
-    """q181b's contracts on a crafted multi-trigger replay: the keyed
-    KLL state FOLDS across micro-batches (n == exact row count — state
-    is updated, never rebuilt per batch), the merged bound holds vs
-    numpy-exact ranks, and it stays non-vacuous."""
-    import json
-
-    import numpy as np
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from kstreamjs_spark.operators.sketch import _kll_estimate, _kll_update
-
-    rng = np.random.RandomState(19)
-    n = 30_000
-    vals = rng.pareto(1.3, n) * 100
-    df = spark.createDataFrame(
-        [(i, float(v)) for i, v in enumerate(vals)], "rid long, x double"
-    )
-    src = str(tmp_path / "src")
-    df.repartitionByRange(6, "rid").write.mode("overwrite").parquet(src)
-    parts = sorted(f for f in os.listdir(src) if f.startswith("part-"))
-    assert len(parts) == 6
-    mt = time.time() - 3600
-    for i, f in enumerate(parts):
-        os.utime(os.path.join(src, f), (mt + i * 10, mt + i * 10))
-    schema = spark.read.parquet(src).schema
-    k = 128
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-        .select(
-            F.pmod(F.xxhash64("rid"), F.lit(4)).alias("bucket"), "x"
-        )
-    )
-
-    def update(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        if state.exists:
-            lj, tj, err, cnt = state.get
-            levels, toggles = json.loads(lj), json.loads(tj)
-        else:
-            levels, toggles, err, cnt = [[]], [0], 0, 0
-        for pdf in pdfs:
-            levels, toggles, err, cnt = _kll_update(
-                levels, toggles, err, cnt, pdf["x"], k
-            )
-        state.update((json.dumps(levels), json.dumps(toggles), err, cnt))
-        yield pd.DataFrame({
-            "bucket": [key[0]], "levels": [json.dumps(levels)],
-            "err": [err], "n": [cnt],
-        })
-
-    out = sdf.groupBy("bucket").applyInPandasWithState(
-        update,
-        outputStructType="bucket bigint, levels string, err bigint, n bigint",
-        stateStructType=(
-            "levels string, toggles string, err bigint, n bigint"
-        ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    sink = run_to_memory(out, "q181b_adv", output_mode="append")
-    finals = (
-        sink.groupBy("bucket")
-        .agg(
-            F.max_by("levels", "n").alias("levels"),
-            F.max_by("err", "n").alias("err"),
-            F.max("n").alias("n"),
-        )
-        .collect()
-    )
-    # each bucket emitted once per trigger it saw rows in: state FOLDED
-    assert sink.count() > len(finals)
-    items = sorted(
-        (float(v), 1 << h)
-        for r in finals
-        for h, buf in enumerate(json.loads(r["levels"]))
-        for v in buf
-    )
-    n_total = sum(r["n"] for r in finals)
-    assert n_total == n  # exactly-once folding across all triggers
-    err_total = sum(r["err"] for r in finals)
-    xs = np.sort(vals)
-    for q, est, n_out, bound in _kll_estimate(
-        items, err_total, n_total, (0.1, 0.5, 0.9, 0.99)
-    ):
-        lo = int(np.searchsorted(xs, est, side="left"))
-        hi = int(np.searchsorted(xs, est, side="right"))
-        target = max(1, int(np.ceil(q * n)))
-        dev = max(lo - target, target - hi, 0)
-        assert dev <= bound, (q, dev, bound)
-        assert bound <= n // 8
-
-
-def test_stream_misra_gries_folds_state_and_respects_bound(spark, tmp_path):
-    """q180b's contracts on a multi-trigger replay over a skewed vocab:
-    token-bucketed MG state folds across micro-batches (total n ==
-    exact token count), never over-counts, under-counts within the
-    PER-BUCKET bound N_b/(k+1), and every globally-heavy token
-    survives in its bucket's counter set."""
-    import json
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    k, buckets = 16, 4
-    # skewed corpus: 3 heavy tokens + long tail, 6 files
-    rows = []
-    rid = 0
-    for i in range(1200):
-        toks = ["alpha"] if i % 2 else ["beta"]
-        if i % 3 == 0:
-            toks.append("gamma")
-        toks.append(f"tail{i % 97}")
-        for t in toks:
-            rows.append((rid, t))
-            rid += 1
-    df = spark.createDataFrame(rows, "rid long, token string")
-    src = str(tmp_path / "src")
-    df.repartitionByRange(6, "rid").write.mode("overwrite").parquet(src)
-    parts = sorted(f for f in os.listdir(src) if f.startswith("part-"))
-    mt = time.time() - 3600
-    for i, f in enumerate(parts):
-        os.utime(os.path.join(src, f), (mt + i * 10, mt + i * 10))
-    schema = spark.read.parquet(src).schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-        .select(
-            F.pmod(F.xxhash64("token"), F.lit(buckets)).alias("bucket"),
-            "token",
-        )
-    )
-
-    def update(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        if state.exists:
-            cj, n = state.get
-            counters = json.loads(cj)
-        else:
-            counters, n = {}, 0
-        for pdf in pdfs:
-            for tok in pdf["token"]:
-                n += 1
-                if tok in counters:
-                    counters[tok] += 1
-                elif len(counters) < k:
-                    counters[tok] = 1
-                else:
-                    dead = []
-                    for t in counters:
-                        counters[t] -= 1
-                        if counters[t] == 0:
-                            dead.append(t)
-                    for t in dead:
-                        del counters[t]
-        state.update((json.dumps(counters), n))
-        yield pd.DataFrame({
-            "bucket": [key[0]], "counters": [json.dumps(counters)],
-            "n": [n],
-        })
-
-    out = sdf.groupBy("bucket").applyInPandasWithState(
-        update,
-        outputStructType="bucket bigint, counters string, n bigint",
-        stateStructType="counters string, n bigint",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    sink = run_to_memory(out, "q180b_adv", output_mode="append")
-    finals = (
-        sink.groupBy("bucket")
-        .agg(F.max_by("counters", "n").alias("counters"),
-             F.max("n").alias("n"))
-        .collect()
-    )
-    assert sink.count() > len(finals)  # state folded across triggers
-    exact: dict = {}
-    for _, t in rows:
-        exact[t] = exact.get(t, 0) + 1
-    n_total = sum(r["n"] for r in finals)
-    assert n_total == len(rows)  # exactly-once
-    # per-bucket bounds + heavy completeness
-    import numpy as np  # noqa: F401
-
-    got: dict = {}
-    bucket_n = {r["bucket"]: r["n"] for r in finals}
-    bucket_of = {}
-    for r in (
-        spark.createDataFrame([(t,) for t in exact], "token string")
-        .select("token", F.pmod(F.xxhash64("token"), F.lit(buckets))
-                .alias("b"))
-        .collect()
-    ):
-        bucket_of[r["token"]] = r["b"]
-    for r in finals:
-        for tok, est in json.loads(r["counters"]).items():
-            got[tok] = est
-            assert est <= exact[tok], (tok, est, exact[tok])  # never over
-            assert exact[tok] - est <= bucket_n[r["bucket"]] // (k + 1) + 1
-    heavy = [
-        t for t, c in exact.items()
-        if c > bucket_n[bucket_of[t]] // (k + 1)
-    ]
-    missing = [t for t in heavy if t not in got]
-    assert not missing, missing
-    for t in ("alpha", "beta", "gamma"):
-        assert t in got
-
-
 def test_stream_full_outer_join_gates_nulls_on_both_sides(spark, tmp_path):
     """q51c's production claims: (a) a closed unmatched purchase emits
     its null-click row; (b) a closed unmatched click (watermark past
@@ -1037,28 +804,16 @@ def test_stream_full_outer_join_gates_nulls_on_both_sides(spark, tmp_path):
         "event_id", "user_id", "event_type",
         F.timestamp_seconds(F.lit(base) + F.col("off")).alias("ts"),
     )
-    src = str(tmp_path / "events")
-    df.repartitionByRange(6, "ts").write.mode("overwrite").parquet(src)
-    parts = sorted(f for f in os.listdir(src) if f.startswith("part-"))
-    mt = time.time() - 3600
-    for i, f in enumerate(parts):
-        os.utime(os.path.join(src, f), (mt + i * 10, mt + i * 10))
-    schema = spark.read.parquet(src).schema
+    read = stage_stream(df, str(tmp_path / "events"), "ts")
 
     def run(max_files):
-        def reader():
-            r = spark.readStream.schema(schema)
-            if max_files:
-                r = r.option("maxFilesPerTrigger", str(max_files))
-            return r.parquet(src)
-
         p = (
-            reader().filter(F.col("event_type") == "purchase")
+            read(max_files).filter(F.col("event_type") == "purchase")
             .select("event_id", F.col("user_id").alias("p_user"), "ts")
             .withWatermark("ts", "1 minute")
         )
         c = (
-            reader().filter(F.col("event_type") == "click")
+            read(max_files).filter(F.col("event_type") == "click")
             .select(F.col("user_id").alias("c_user"),
                     F.col("ts").alias("click_ts"))
             .withWatermark("click_ts", "1 minute")
@@ -1117,90 +872,6 @@ def test_stream_full_outer_join_gates_nulls_on_both_sides(spark, tmp_path):
     assert split_removed > 0
 
 
-def test_stream_kmv_folds_state_and_equals_batch(spark, tmp_path):
-    """q192b's contract: the keyed k-min state folds across
-    micro-batches and — because the k-min fold is a pure function of
-    the input SET — the streamed estimate EQUALS the batch
-    kmv_distinct on the same data exactly (a hard equality, unlike the
-    MG/KLL bound pins), including under a duplicate-heavy split
-    replay."""
-    import json as _json
-    import uuid
-
-    import pyspark.sql.functions as F
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from kstreamjs_spark.operators.sketch import kmv_distinct, kmv_estimate
-
-    k, buckets = 256, 4
-    # 5000 distinct keys, each row value repeated in later files too
-    df = spark.createDataFrame(
-        [(i % 5000,) for i in range(12_000)], "v long"
-    ).withColumn("rid", F.monotonically_increasing_id())
-    src = str(tmp_path / "kmv_src")
-    df.repartitionByRange(6, "rid").write.mode("overwrite").parquet(src)
-    parts = sorted(f for f in os.listdir(src) if f.startswith("part-"))
-    mt = time.time() - 3600
-    for i, f in enumerate(parts):
-        os.utime(os.path.join(src, f), (mt + i * 10, mt + i * 10))
-    schema = spark.read.parquet(src).schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src)
-        .select(F.xxhash64("v").alias("h"))
-        .select(F.pmod("h", F.lit(buckets)).alias("bucket"), "h")
-    )
-
-    def update(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        if state.exists:
-            sj, n_rows = state.get
-            vals = set(_json.loads(sj))
-        else:
-            vals, n_rows = set(), 0
-        for pdf in pdfs:
-            n_rows += len(pdf)
-            for h in pdf["h"]:
-                vals.add(int(h))
-        if len(vals) > k:
-            vals = set(sorted(vals)[:k])
-        state.update((_json.dumps(sorted(vals)), n_rows))
-        yield pd.DataFrame({
-            "bucket": [key[0]],
-            "mins": [_json.dumps(sorted(vals))],
-            "n_rows": [n_rows],
-        })
-
-    out = sdf.groupBy("bucket").applyInPandasWithState(
-        update,
-        outputStructType="bucket bigint, mins string, n_rows bigint",
-        stateStructType="mins string, n_rows bigint",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    qname = f"kmv_adv_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory").queryName(qname)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    assert q.awaitTermination(600)
-    finals = (
-        spark.table(qname).groupBy("bucket")
-        .agg(F.max_by("mins", "n_rows").alias("mins"),
-             F.max("n_rows").alias("n_rows"))
-        .collect()
-    )
-    # state folded: total rows seen across buckets == stream length
-    assert sum(r["n_rows"] for r in finals) == 12_000
-    merged = sorted({h for r in finals for h in _json.loads(r["mins"])})[:k]
-    got = kmv_estimate(merged, k)
-    expected = kmv_distinct(df.select("v"), "v", k=k)
-    assert got == expected
-    # and the estimator regime really engaged (5000 distinct >> k)
-    assert got[1] == k and abs(got[0] - 5000) / 5000 < 5.0 / (k - 2) ** 0.5
-
-
 def test_stream_pq_encode_equals_batch(spark):
     """q191b's hard equality: streaming PQ encoding is a pure per-row
     function of the shipped codebooks, so the replayed codes must
@@ -1247,28 +918,16 @@ def test_stream_semi_join_emits_once_and_only_matched(spark, tmp_path):
         "event_id", "user_id", "event_type",
         F.timestamp_seconds(F.lit(base) + F.col("off")).alias("ts"),
     )
-    src = str(tmp_path / "events")
-    df.repartitionByRange(6, "ts").write.mode("overwrite").parquet(src)
-    parts = sorted(f for f in os.listdir(src) if f.startswith("part-"))
-    mt = time.time() - 3600
-    for i, f in enumerate(parts):
-        os.utime(os.path.join(src, f), (mt + i * 10, mt + i * 10))
-    schema = spark.read.parquet(src).schema
+    read = stage_stream(df, str(tmp_path / "events"), "ts")
 
     def run(max_files):
-        def reader():
-            r = spark.readStream.schema(schema)
-            if max_files:
-                r = r.option("maxFilesPerTrigger", str(max_files))
-            return r.parquet(src)
-
         p = (
-            reader().filter(F.col("event_type") == "purchase")
+            read(max_files).filter(F.col("event_type") == "purchase")
             .select("event_id", "user_id", "ts")
             .withWatermark("ts", "1 minute")
         )
         c = (
-            reader().filter(F.col("event_type") == "click")
+            read(max_files).filter(F.col("event_type") == "click")
             .select(F.col("user_id").alias("c_user"),
                     F.col("ts").alias("click_ts"))
             .withWatermark("click_ts", "1 minute")
@@ -2958,109 +2617,6 @@ def test_stream_knn_graph_insert_planted_manifold(spark, tmp_path):
     exh = {(a, b) for a, b in ex if a >= 24}
     aph = {(r["src"], r["dst"]) for r in rows if r["src"] >= 24}
     assert len(exh & aph) / len(exh) >= 0.9         # (d)
-
-
-def test_stream_bottomk_sample_schedule_invariant(spark, tmp_path):
-    """q224's order-invariance claim, pinned: the SAME documents split
-    into 2 triggers (and into 2 triggers in reversed halves) produce
-    the IDENTICAL per-lang bottom-k as the batch window rank — the
-    kept set is a pure function of the ids seen, not of arrival order
-    (hash-priority bottom-k, not Vitter reservoir)."""
-    import os
-
-    from pyspark.sql import Window
-
-    from kstreamjs_spark.operators.sampling import hash_bucket
-    from kstreamjs_spark.queries.streaming_q import _Q224_K, _Q224_SEED
-
-    docs = [
-        (i, f"t{i}", ["en", "de"][i % 2], "s", 0) for i in range(40)
-    ]
-    df = spark.createDataFrame(
-        docs, "doc_id long, text string, lang string, source string, "
-              "n_chars long",
-    )
-    want = sorted(
-        (r["lang"], r["doc_id"], r["priority"], r["rn"])
-        for r in df.select(
-            "lang", "doc_id",
-            hash_bucket("doc_id", seed=_Q224_SEED).alias("priority"),
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("lang").orderBy("priority", "doc_id")
-            ).cast("long"),
-        )
-        .filter(F.col("rn") <= _Q224_K)
-        .collect()
-    )
-
-    def run_schedule(first_half):
-        src = str(tmp_path / f"q224src_{first_half}")
-        os.makedirs(src, exist_ok=True)
-        lo = df.filter(F.col("doc_id") < 20)
-        hi = df.filter(F.col("doc_id") >= 20)
-        a, b = (lo, hi) if first_half else (hi, lo)
-        a.coalesce(1).write.parquet(f"{src}/f0.parquet")
-        b.coalesce(1).write.parquet(f"{src}/f1.parquet")
-        import json
-
-        from pyspark.sql.streaming.state import (
-            GroupState,
-            GroupStateTimeout,
-        )
-        from kstreamjs_spark.streaming.replay import run_to_memory
-
-        sdf = (
-            spark.readStream.schema(df.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src + "/*")
-            .select(
-                "lang", "doc_id",
-                hash_bucket("doc_id", seed=_Q224_SEED).alias("priority"),
-            )
-        )
-
-        def update(key, pdfs, state: GroupState):
-            kept = json.loads(state.get[0]) if state.exists else []
-            n = state.get[1] if state.exists else 0
-            for pdf in pdfs:
-                n += len(pdf)
-                kept.extend(
-                    [int(p), int(d)]
-                    for p, d in zip(pdf["priority"], pdf["doc_id"])
-                )
-                kept = sorted(map(tuple, kept))[:_Q224_K]
-            state.update((json.dumps(kept), n))
-            import pandas as _pd
-
-            yield _pd.DataFrame(
-                {"lang": [key[0]], "kept": [json.dumps(kept)],
-                 "n": [n]}
-            )
-
-        out = sdf.groupBy("lang").applyInPandasWithState(
-            update,
-            outputStructType="lang string, kept string, n bigint",
-            stateStructType="kept string, n bigint",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        sink = run_to_memory(out, "q224t", output_mode="append")
-        finals = (
-            sink.groupBy("lang")
-            .agg(F.max_by("kept", "n").alias("kept"))
-            .collect()
-        )
-        return sorted(
-            (r["lang"], int(d), int(p), rn + 1)
-            for r in finals
-            for rn, (p, d) in enumerate(json.loads(r["kept"]))
-        )
-
-    assert run_schedule(True) == want
-    assert run_schedule(False) == want
 
 
 def test_scd1_rebucket_moves_every_key_once(spark, tmp_path):
