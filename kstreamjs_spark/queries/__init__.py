@@ -19,7 +19,7 @@ Determinism rules used throughout (SURVEY.md §7 "hard parts"):
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -28,8 +28,10 @@ from pyspark.sql import DataFrame, SparkSession
 class QuerySpec:
     name: str
     fn: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None  # DuckDB SQL over the registered views, or None
-    tags: tuple[str, ...] = ()
+    # DuckDB SQL over the registered views, or None; a function until
+    # all_queries() calls it (see query())
+    oracle: str | Callable[[], str] | None
+    tags: tuple[str, ...] = ()  # "slow": oracle test only in full profile
     bench: bool = False  # part of the headline bench set
     doc: str = ""
 
@@ -37,9 +39,12 @@ class QuerySpec:
 REGISTRY: dict[str, QuerySpec] = {}
 
 
-def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = (),
-          bench: bool = False):
-    """Decorator registering a query implementation."""
+def query(name: str, oracle: str | Callable[[], str] | None = None,
+          tags: tuple[str, ...] = (), bench: bool = False):
+    """Decorator registering a query implementation. ``oracle`` may be a
+    zero-argument function, for SQL built from other queries' oracles or
+    from constants defined later: ``all_queries()`` calls it once, after
+    every query module has been imported."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         REGISTRY[name] = QuerySpec(
@@ -118,6 +123,9 @@ def all_queries() -> dict[str, QuerySpec]:
     from . import corpus  # noqa: F401
     from . import curation  # noqa: F401
 
+    for name, spec in REGISTRY.items():
+        if callable(spec.oracle):
+            REGISTRY[name] = replace(spec, oracle=spec.oracle())
     missing = [n for n in _WINDOW_PRIORITY if n not in REGISTRY]
     if missing:
         raise KeyError(

@@ -1264,7 +1264,7 @@ def q100(spark: SparkSession, sf: str) -> DataFrame:
         SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_neardup_leaked
         FROM leaked GROUP BY lang ORDER BY lang
     """,
-    tags=("dedup", "llm", "evaluation"),
+    tags=("dedup", "llm", "evaluation", "slow"),
 )
 def q106(spark: SparkSession, sf: str) -> DataFrame:
     """NEAR-duplicate leakage across q79's source-atomic split: validation
@@ -1349,7 +1349,7 @@ def q106(spark: SparkSession, sf: str) -> DataFrame:
         SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_neardup_leaked
         FROM leaked GROUP BY lang ORDER BY lang
     """,
-    tags=("dedup", "llm", "evaluation", "skew"),
+    tags=("dedup", "llm", "evaluation", "skew", "slow"),
 )
 def q106b(spark: SparkSession, sf: str) -> DataFrame:
     """q106 with the document-frequency ceiling ACTIVE (max_df=2, global —
@@ -1574,7 +1574,7 @@ def _power_iteration_oracle(iters: int = _PCA_ITERS) -> str:
 @query(
     "q172_embedding_gram",
     oracle=_GRAM_SQL + " ORDER BY 1, 2",
-    tags=("similarity", "llm"),
+    tags=("similarity", "llm", "slow"),
 )
 def q172(spark: SparkSession, sf: str) -> DataFrame:
     """Distributed Gram (uncentered second-moment) matrix of the
@@ -1597,7 +1597,7 @@ def q172(spark: SparkSession, sf: str) -> DataFrame:
 @query(
     "q172b_pca_power_iteration",
     oracle=_power_iteration_oracle(),
-    tags=("similarity", "llm"),
+    tags=("similarity", "llm", "slow"),
 )
 def q172b(spark: SparkSession, sf: str) -> DataFrame:
     """Leading-principal-direction projection of every embedding — PCA

@@ -454,7 +454,7 @@ _BAND_UNIQ_BP = 8000
                ROUND(COUNT(*) * 1.0 / SUM(COUNT(*)) OVER (), 6) AS doc_share
         FROM b GROUP BY band
     """,
-    tags=("text", "llm", "quality"),
+    tags=("text", "llm", "quality", "slow"),
 )
 def q117(spark: SparkSession, sf: str) -> DataFrame:
     """Quality-band yield table: every document scores 0–3 integer
@@ -519,7 +519,7 @@ def q117(spark: SparkSession, sf: str) -> DataFrame:
                ROUND(SUM(n_chars) * 1.0 / COUNT(*), 6) AS avg_chars
         FROM documents GROUP BY source
     """,
-    tags=("text", "llm", "monitoring", "provenance"),
+    tags=("text", "llm", "monitoring", "provenance", "slow"),
 )
 def q118(spark: SparkSession, sf: str) -> DataFrame:
     """Per-source crawl scorecard: document/token volume, language
@@ -710,7 +710,7 @@ _PPL_T = (-3_450_000, -3_400_000, -3_350_000)
                ROUND(COUNT(*) * 1.0 / SUM(COUNT(*)) OVER (), 6) AS doc_share
         FROM b2 GROUP BY band
     """,
-    tags=("text", "llm", "quality"),
+    tags=("text", "llm", "quality", "slow"),
 )
 def q120(spark: SparkSession, sf: str) -> DataFrame:
     """Perplexity-band filtering (the CCNet recipe on q86's statistical
@@ -890,7 +890,7 @@ _COV_CONTAMINATED_BP = 8000
                     AS BIGINT) AS n_contaminated
         FROM c GROUP BY lang
     """,
-    tags=("dedup", "llm", "evaluation"),
+    tags=("dedup", "llm", "evaluation", "slow"),
     bench=True,
 )
 def q122(spark: SparkSession, sf: str) -> DataFrame:
@@ -1001,7 +1001,7 @@ _NDCHUNK_UID = 1_000_000_000
                CAST(COUNT(*) AS BIGINT) AS n_neardup_chunks
         FROM nd WHERE da <> db GROUP BY 1, 2
     """,
-    tags=("dedup", "text", "llm"),
+    tags=("dedup", "text", "llm", "slow"),
 )
 def q123(spark: SparkSession, sf: str) -> DataFrame:
     """Cross-document NEAR-duplicate chunk detection — q112 finds chunks
@@ -1083,7 +1083,7 @@ _SHARE_NATION = "CHINA"
         WHERE r_name = '{_SHARE_REGION}'
         GROUP BY 1
     """,
-    tags=("join", "agg"),
+    tags=("join", "agg", "slow"),
 )
 def q124(spark: SparkSession, sf: str) -> DataFrame:
     """TPC-H Q8 shape — per order year, one nation's revenue share within
@@ -1163,7 +1163,7 @@ def q124(spark: SparkSession, sf: str) -> DataFrame:
         JOIN c cb ON p.type_b = cb.event_type
         CROSS JOIN tot
     """,
-    tags=("agg", "behavioral"),
+    tags=("agg", "behavioral", "slow"),
 )
 def q125(spark: SparkSession, sf: str) -> DataFrame:
     """Event-type co-occurrence lift across users — lift(a,b) =
@@ -1306,7 +1306,7 @@ def q126(spark: SparkSession, sf: str) -> DataFrame:
                      6) AS centroid_cos
         FROM c JOIN n ON c.label = n.label
     """,
-    tags=("similarity", "llm", "monitoring"),
+    tags=("similarity", "llm", "monitoring", "slow"),
 )
 def q127(spark: SparkSession, sf: str) -> DataFrame:
     """Embedding centroid drift per label between the older and newer
@@ -1512,7 +1512,7 @@ def q129(spark: SparkSession, sf: str) -> DataFrame:
         FROM c GROUP BY lang
         HAVING any_value(n1) > 0 AND any_value(n2) > 0
     """,
-    tags=("text", "llm", "monitoring"),
+    tags=("text", "llm", "monitoring", "slow"),
 )
 def q130(spark: SparkSession, sf: str) -> DataFrame:
     """Exact two-sample Kolmogorov–Smirnov statistic on the document-
@@ -1972,7 +1972,7 @@ def q136(spark: SparkSession, sf: str) -> DataFrame:
                         * 100.0), 6) AS price_per_size_unit
         FROM s WHERE n >= 2 AND n * sxx > CAST(sx AS HUGEINT) * sx
     """,
-    tags=("agg", "statistics"),
+    tags=("agg", "statistics", "slow"),
 )
 def q137(spark: SparkSession, sf: str) -> DataFrame:
     """Exact least-squares price-vs-size slope per part brand (currency
@@ -2229,7 +2229,7 @@ def q140(spark: SparkSession, sf: str) -> DataFrame:
         " string_split(text,' ')[i+1] || ' ' ||"
         " string_split(text,' ')[i+2])",
     ),
-    tags=("text", "llm", "statistics", "quality"),
+    tags=("text", "llm", "statistics", "quality", "slow"),
 )
 def q142(spark: SparkSession, sf: str) -> DataFrame:
     """Exact Pearson correlation between document length and trigram
@@ -2488,7 +2488,7 @@ _MIX_TARGET_BP = {"en": 4000, "de": 1500, "es": 1500, "fr": 1500, "zh": 1500}
                    AS surplus_bp
         FROM j WHERE total > 0
     """,
-    tags=("agg", "llm", "monitoring"),
+    tags=("agg", "llm", "monitoring", "slow"),
 )
 def q146(spark: SparkSession, sf: str) -> DataFrame:
     """Training-mix deficit audit: actual token share per language vs the
@@ -2551,7 +2551,7 @@ def q146(spark: SparkSession, sf: str) -> DataFrame:
                p90c / 100.0 AS p90_ltv
         FROM n JOIN p50 USING (segment) JOIN p90 USING (segment)
     """,
-    tags=("join", "statistics", "behavioral"),
+    tags=("join", "statistics", "behavioral", "slow"),
 )
 def q147(spark: SparkSession, sf: str) -> DataFrame:
     """Exact customer-lifetime-value percentiles per market segment —
@@ -4411,19 +4411,4 @@ def q230(spark: SparkSession, sf: str) -> DataFrame:
         ).alias("heaps_beta"),
         F.max("v_vocab").cast("long").alias("vocab_full"),
         F.max("t_tok").cast("long").alias("tokens_full"),
-    )
-
-
-# ----- q221b oracle binding (round 16): the streaming chunk-dedup twin
-# lives in streaming_q (imported BEFORE this module) and carries q221's
-# hash oracle VERBATIM — arrival order is doc order, so the at-ingest
-# first-occurrence rule IS q221's (doc_id, st) rank; see its docstring.
-from dataclasses import replace as _dc_replace_q221b  # noqa: E402
-
-from . import REGISTRY as _REG_Q221B  # noqa: E402
-
-if "q221b_stream_chunk_dedup" in _REG_Q221B:
-    _REG_Q221B["q221b_stream_chunk_dedup"] = _dc_replace_q221b(
-        _REG_Q221B["q221b_stream_chunk_dedup"],
-        oracle=_REG_Q221B["q221_chunk_dedup_rebuild"].oracle,
     )

@@ -519,7 +519,7 @@ _BM25B_K = 10
               FROM s)
         WHERE rnk <= {_BM25B_K}
     """,
-    tags=("text", "retrieval", "llm"),
+    tags=("text", "retrieval", "llm", "slow"),
     # bench: the batched-retrieval perf point (q158 is NOT bench — its
     # oracle restates synthesis arithmetic, not an honest perf baseline)
     bench=True,
@@ -726,7 +726,7 @@ _SEMDEDUP_THETA = 0.4  # 6-dp-rounded cosine at/above which a pair is a dup
             USING (cid)
         ORDER BY cid
     """,
-    tags=("similarity", "dedup", "llm", "clustering"),
+    tags=("similarity", "dedup", "llm", "clustering", "slow"),
     bench=True,
 )
 def q170(spark: SparkSession, sf: str) -> DataFrame:
@@ -856,7 +856,7 @@ _RRF_BATCH_K = 10
               FROM f)
         WHERE rnk <= {_RRF_BATCH_K}
     """,
-    tags=("retrieval", "similarity", "text", "llm"),
+    tags=("retrieval", "similarity", "text", "llm", "slow"),
 )
 def q169b(spark: SparkSession, sf: str) -> DataFrame:
     """BATCH hybrid retrieval — the production fusion q169 demonstrates
@@ -953,7 +953,7 @@ def _synth_group_bmps(df: DataFrame) -> DataFrame:
         FROM documents a JOIN documents b
           ON a.doc_id // 3 = b.doc_id // 3 AND a.doc_id < b.doc_id
     """,
-    tags=("multimodal", "dedup", "llm"),
+    tags=("multimodal", "dedup", "llm", "slow"),
 )
 def q158(spark: SparkSession, sf: str) -> DataFrame:
     """Perceptual image near-dup (pHash) — the canonical image-dedup
@@ -997,7 +997,7 @@ def q158(spark: SparkSession, sf: str) -> DataFrame:
                         AND b.doc_id <> a.doc_id)
         ORDER BY node
     """,
-    tags=("multimodal", "dedup", "llm", "iterative"),
+    tags=("multimodal", "dedup", "llm", "iterative", "slow"),
 )
 def q158b(spark: SparkSession, sf: str) -> DataFrame:
     """Image duplicate-CLUSTER resolution: q158's pHash near-dup pairs
@@ -1204,7 +1204,7 @@ _Q171_REASON = (
         FROM st s LEFT JOIN good gd USING (g)
         ORDER BY s.doc_id
     """,
-    tags=("multimodal", "dedup", "llm", "robustness"),
+    tags=("multimodal", "dedup", "llm", "robustness", "slow"),
 )
 def q171(spark: SparkSession, sf: str) -> DataFrame:
     """ROBUST-INGEST media dedup — the quarantine-not-kill deployment
@@ -1400,7 +1400,7 @@ def q160b(spark: SparkSession, sf: str) -> DataFrame:
         FROM documents a JOIN documents b
           ON a.doc_id // 3 = b.doc_id // 3 AND a.doc_id < b.doc_id
     """,
-    tags=("multimodal", "dedup", "llm", "closed_form_oracle"),
+    tags=("multimodal", "dedup", "llm", "closed_form_oracle", "slow"),
     bench=True,
 )
 def q174(spark: SparkSession, sf: str) -> DataFrame:
@@ -3136,7 +3136,7 @@ def _dsir_lam(fb: DataFrame) -> DataFrame:
                CAST(score AS BIGINT) AS dsir_score
         FROM r WHERE rn <= {_DSIR_K}
     """,
-    tags=("sampling", "llm", "quality"),
+    tags=("sampling", "llm", "quality", "slow"),
 )
 def q177(spark: SparkSession, sf: str) -> DataFrame:
     """DSIR — Data Selection via Importance Resampling (Xie et al. 2023,
@@ -3555,7 +3555,7 @@ def _bpe_oracle(k: int = _BPE_MERGES, chain_only: bool = False) -> str:
 @query(
     "q179_bpe_train",
     oracle=_bpe_oracle(),
-    tags=("text", "llm", "tokenizer"),
+    tags=("text", "llm", "tokenizer", "slow"),
     bench=True,
 )
 def q179(spark: SparkSession, sf: str) -> DataFrame:
@@ -3660,7 +3660,7 @@ _MG_TOP = 10      # report size
 
 
 @query("q180_heavy_hitters", oracle=None,
-       tags=("sketch", "approx", "text", "llm"))
+       tags=("sketch", "approx", "text", "llm", "slow"))
 def q180(spark: SparkSession, sf: str) -> DataFrame:
     """HEAVY HITTERS via Misra-Gries — the mergeable-summary pattern
     (Misra & Gries 1982; Agarwal et al. 2012 "Mergeable Summaries",
@@ -3771,7 +3771,7 @@ def _synth_gif_anim_blobs(df: DataFrame) -> DataFrame:
         FROM documents a JOIN documents b
           ON a.doc_id // 3 = b.doc_id // 3 AND a.doc_id < b.doc_id
     """,
-    tags=("multimodal", "dedup", "llm", "video"),
+    tags=("multimodal", "dedup", "llm", "video", "slow"),
 )
 def q182(spark: SparkSession, sf: str) -> DataFrame:
     """ANIMATED-GIF perceptual dedup over real frame-pixel decode
@@ -3840,7 +3840,7 @@ def _synth_apng_anim_blobs(df: DataFrame) -> DataFrame:
         FROM documents a JOIN documents b
           ON a.doc_id // 3 = b.doc_id // 3 AND a.doc_id < b.doc_id
     """,
-    tags=("multimodal", "dedup", "llm", "video"),
+    tags=("multimodal", "dedup", "llm", "video", "slow"),
 )
 def q183(spark: SparkSession, sf: str) -> DataFrame:
     """APNG animation perceptual dedup over real frame decode
@@ -4354,7 +4354,7 @@ def _q197_oracle() -> str:
 
 @query(
     "q197_ccnet_bands",
-    oracle=None,  # bound at import end (builds on q196's text)
+    oracle=_q197_oracle,
     tags=("text", "llm", "quality"),
 )
 def q197(spark: SparkSession, sf: str) -> DataFrame:
@@ -4432,13 +4432,6 @@ def q197(spark: SparkSession, sf: str) -> DataFrame:
         )
         .orderBy("band")
     )
-
-
-from dataclasses import replace as _dc_replace_q197  # noqa: E402
-
-REGISTRY["q197_ccnet_bands"] = _dc_replace_q197(
-    REGISTRY["q197_ccnet_bands"], oracle=_q197_oracle()
-)
 
 
 # --------- Q198 exact heavy hitters — the two-pass MG + recount pattern
@@ -4694,7 +4687,7 @@ def _q203_oracle() -> str:
 
 
 @query("q203_gopher_repetition", oracle=_q203_oracle(),
-       tags=("text", "llm", "quality"), bench=True)
+       tags=("text", "llm", "quality", "slow"), bench=True)
 def q203(spark: SparkSession, sf: str) -> DataFrame:
     """Gopher's FULL repetition-signal family (Rae et al. 2021 A1,
     public; round 12) — the eight n-gram rules q178 sampled one of:
@@ -5225,7 +5218,7 @@ def _q208_oracle() -> str:
 
 @query(
     "q208_retrieval_eval",
-    oracle=None,  # bound at import end (builds on q157b's text)
+    oracle=_q208_oracle,
     tags=("retrieval", "llm", "eval"),
 )
 def q208(spark: SparkSession, sf: str) -> DataFrame:
@@ -5299,13 +5292,6 @@ def q208(spark: SparkSession, sf: str) -> DataFrame:
         F.round(F.sum("hit") * 1.0 / F.count(F.lit(1)), 6)
         .alias("hit_rate"),
     )
-
-
-from dataclasses import replace as _dc_replace_q208  # noqa: E402
-
-REGISTRY["q208_retrieval_eval"] = _dc_replace_q208(
-    REGISTRY["q208_retrieval_eval"], oracle=_q208_oracle()
-)
 
 
 # --------- Q212 unigram-LM (SentencePiece-style) tokenizer training
@@ -5785,7 +5771,7 @@ def _wpt_oracle(k: int = _WPT_MERGES) -> str:
 @query(
     "q216c_wordpiece_likelihood_train",
     oracle=_wpt_oracle(),
-    tags=("text", "llm", "tokenizer"),
+    tags=("text", "llm", "tokenizer", "slow"),
 )
 def q216c(spark: SparkSession, sf: str) -> DataFrame:
     """WordPiece LIKELIHOOD-scored tokenizer TRAINING (round 14;

@@ -322,7 +322,8 @@ def q58(spark: SparkSession, sf: str) -> DataFrame:
     return similarity.knn_join(embeddings, queries, k=5).orderBy("qid", "rn")
 
 
-@query("q159_knn_join_lsh", oracle=None, tags=("similarity", "llm", "approx"))
+@query("q159_knn_join_lsh", oracle=None,
+       tags=("similarity", "llm", "approx", "slow"))
 def q159(spark: SparkSession, sf: str) -> DataFrame:
     """Batch k-NN join through BANDED LSH — q58's semantics when the
     query batch is too large to broadcast (similarity.knn_join_lsh_banded):
@@ -756,7 +757,7 @@ def _q110_oracle() -> str:
 @query(
     "q110_dedup_keepers",
     oracle=_q110_oracle(),
-    tags=("dedup", "llm", "clustering"),
+    tags=("dedup", "llm", "clustering", "slow"),
 )
 def q110(spark: SparkSession, sf: str) -> DataFrame:
     """The step that actually DELETES: per near-dup cluster (q56's
@@ -902,7 +903,7 @@ def _pagerank_oracle() -> str:
 @query(
     "q176_copurchase_pagerank",
     oracle=_pagerank_oracle(),
-    tags=("graph", "iterative"),
+    tags=("graph", "iterative", "slow"),
     bench=True,
 )
 def q176(spark: SparkSession, sf: str) -> DataFrame:
@@ -1313,7 +1314,7 @@ def _q218b_oracle() -> str:
 @query(
     "q218b_knn_graph_dedup_clusters",
     oracle=_q218b_oracle(),
-    tags=("similarity", "dedup", "graph", "iterative", "llm"),
+    tags=("similarity", "dedup", "graph", "iterative", "llm", "slow"),
 )
 def q218b(spark: SparkSession, sf: str) -> DataFrame:
     """CORPUS-WIDE embedding dedup THROUGH the k-NN graph (round 15) —
@@ -1426,7 +1427,7 @@ def _q219_oracle() -> str:
 @query(
     "q219_graph_ann_beam_search",
     oracle=_q219_oracle(),
-    tags=("similarity", "llm", "graph", "ann", "approx"),
+    tags=("similarity", "llm", "graph", "ann", "approx", "slow"),
 )
 def q219(spark: SparkSession, sf: str) -> DataFrame:
     """Graph-ANN TOP-K SEARCH — the query-time half of the graph family
@@ -1668,7 +1669,7 @@ def _q219c_oracle() -> str:
 @query(
     "q219c_graph_ann_filtered_search",
     oracle=_q219c_oracle(),
-    tags=("similarity", "llm", "graph", "ann", "approx"),
+    tags=("similarity", "llm", "graph", "ann", "approx", "slow"),
 )
 def q219c(spark: SparkSession, sf: str) -> DataFrame:
     """FILTERED graph-ANN search (round 15): cosine top-10 among the
@@ -1838,7 +1839,7 @@ def _q228_oracle() -> str:
 @query(
     "q228_cluster_safe_split",
     oracle=_q228_oracle(),
-    tags=("sampling", "dedup", "graph", "llm"),
+    tags=("sampling", "dedup", "graph", "llm", "slow"),
 )
 def q228(spark: SparkSession, sf: str) -> DataFrame:
     """NEAR-DUP-CLUSTER-SAFE train/eval split (round 15) — closing the

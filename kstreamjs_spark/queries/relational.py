@@ -435,7 +435,7 @@ def q15b(spark: SparkSession, sf: str) -> DataFrame:
         JOIN nation ON c_nationkey = n_nationkey
         GROUP BY ROLLUP(n_name, o_orderpriority)
     """,
-    tags=("agg",),
+    tags=("agg", "slow"),
 )
 def q16(spark: SparkSession, sf: str) -> DataFrame:
     """ROLLUP grouping sets: Spark expands to a union of grouping sets in a
@@ -1427,7 +1427,7 @@ def q101(spark: SparkSession, sf: str) -> DataFrame:
         FROM n JOIN p50 USING (event_type) JOIN p90 USING (event_type)
         ORDER BY event_type
     """,
-    tags=("window-fn", "statistics"),
+    tags=("window-fn", "statistics", "slow"),
 )
 def q103(spark: SparkSession, sf: str) -> DataFrame:
     """Exact p50/p90 of per-user inter-event gaps (second resolution) per

@@ -23,7 +23,8 @@ from ..operators.window import window_collect
 from ..operators.sampling import hash_bucket_sql
 from ..streaming.replay import keyed_fold, run_to_memory, stream_table
 from ..tables import load
-from . import query
+from . import REGISTRY, query
+from .pipeline import _q211_oracle, _q219_oracle
 
 
 # ------------------------------------------ Q29 streaming tumbling window
@@ -234,7 +235,7 @@ def q33(spark: SparkSession, sf: str) -> DataFrame:
               (SELECT MAX(ts) - INTERVAL 1 MILLISECOND FROM events)
         GROUP BY 1
     """,
-    tags=("streaming", "udf", "window-agg", "stateful"),
+    tags=("streaming", "udf", "window-agg", "stateful", "slow"),
 )
 def q33b(spark: SparkSession, sf: str) -> DataFrame:
     """q33's arbitrary-Python window reducer on a REAL micro-batched
@@ -283,7 +284,7 @@ def q33b(spark: SparkSession, sf: str) -> DataFrame:
         UNION ALL
         SELECT event_id FROM events WHERE event_type = 'view'
     """,
-    tags=("streaming", "union"),
+    tags=("streaming", "union", "slow"),
 )
 def q41(spark: SparkSession, sf: str) -> DataFrame:
     """Reference `union` parity (src/stream.ts:201-230) on real streams: two
@@ -340,13 +341,53 @@ def q44(spark: SparkSession, sf: str) -> DataFrame:
 
 
 # ------------------------------------------ Q51 stream-stream interval join
-@query(
-    "q51_stream_stream_join",
-    oracle="""
-        WITH p AS (SELECT event_id, user_id, ts FROM events
+# The q51 family's oracle CTEs: purchases p, clicks c and, for the
+# outer and semi joins, wm, the cutoff of the watermark-closed region
+# (the scalar _events_cutoff computes on the Spark side).
+_Q51_CTES = """p AS (SELECT event_id, user_id, ts FROM events
                    WHERE event_type = 'purchase'),
              c AS (SELECT user_id, ts AS click_ts FROM events
-                   WHERE event_type = 'click')
+                   WHERE event_type = 'click')"""
+_Q51_WM_CTE = """wm AS (SELECT least(
+                        MAX(CASE WHEN event_type = 'purchase' THEN ts END),
+                        MAX(CASE WHEN event_type = 'click' THEN ts END))
+                        - INTERVAL '1 minute' - INTERVAL '1 second'
+                        AS cutoff
+                    FROM events)"""
+
+
+def _interval_join(purchases: DataFrame, clicks: DataFrame,
+                   how: str) -> DataFrame:
+    """The q51 family's stream-stream join: purchase events of
+    ``purchases`` joined, per user, to the click events of ``clicks``
+    in the 10 minutes up to the purchase, ``how`` in Spark's join types.
+    Both sides carry a 1-minute watermark, so the join state is
+    bounded: a click's state is evicted once the purchase watermark
+    passes click_ts + 10 min. Columns: event_id, user_id, ts (the
+    purchase's) and c_user, click_ts (the click's; none for semi)."""
+    p = (
+        purchases.filter(F.col("event_type") == "purchase")
+        .select("event_id", "user_id", "ts")
+        .withWatermark("ts", "1 minute")
+    )
+    c = (
+        clicks.filter(F.col("event_type") == "click")
+        .select(F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts"))
+        .withWatermark("click_ts", "1 minute")
+    )
+    return p.join(
+        c,
+        (F.col("user_id") == F.col("c_user"))
+        & (F.col("click_ts") > F.col("ts") - F.expr("INTERVAL 10 MINUTES"))
+        & (F.col("click_ts") <= F.col("ts")),
+        how,
+    )
+
+
+@query(
+    "q51_stream_stream_join",
+    oracle=f"""
+        WITH {_Q51_CTES}
         SELECT p.event_id, p.user_id, c.click_ts
         FROM p JOIN c
           ON p.user_id = c.user_id
@@ -363,35 +404,21 @@ def q51(spark: SparkSession, sf: str) -> DataFrame:
     time bound a stream-stream join would buffer forever. The batch oracle
     is the same inequality join; result equality is the strongest
     batch<->stream check (same rows, real state store)."""
-    p = (
-        stream_table(spark, sf, "events")
-        .filter(F.col("event_type") == "purchase")
-        .select("event_id", "user_id", "ts")
-        .withWatermark("ts", "1 minute")
-    )
-    c = (
-        stream_table(spark, sf, "events")
-        .filter(F.col("event_type") == "click")
-        .select(F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts"))
-        .withWatermark("click_ts", "1 minute")
-    )
-    j = p.join(
-        c,
-        (F.col("user_id") == F.col("c_user"))
-        & (F.col("click_ts") > F.col("ts") - F.expr("INTERVAL 10 MINUTES"))
-        & (F.col("click_ts") <= F.col("ts")),
+    j = _interval_join(
+        stream_table(spark, sf, "events"), stream_table(spark, sf, "events"),
         "inner",
-    ).select("event_id", "user_id", "click_ts")
-    return run_to_memory(j, "q51", output_mode="append")
+    )
+    return run_to_memory(
+        j.select("event_id", "user_id", "click_ts"), "q51",
+        output_mode="append",
+    )
 
 
 def _events_cutoff(spark: SparkSession, sf: str):
     """The q51b/q51c/q51d watermark-closed cutoff, computed from the
-    batch events table with the SAME expression each oracle's wm CTE
-    states (min of both sides' max event time - the 1-minute delay -
-    a 1-second eviction-boundary margin); 1-row collect — bounded.
-    One home for the scalar so the three outer/semi join replays and
-    their oracles can never desynchronize on the delay or margin."""
+    batch events table with the SAME expression as the oracles' wm CTE
+    (min of both sides' max event time - the 1-minute delay -
+    a 1-second eviction-boundary margin); 1-row collect — bounded."""
     ev = load(spark, sf, "events")[0]
     return (
         ev.groupBy()
@@ -412,17 +439,9 @@ def _events_cutoff(spark: SparkSession, sf: str):
 # ----------------------------- Q51b stream-stream LEFT OUTER interval join
 @query(
     "q51b_stream_stream_left_join",
-    oracle="""
-        WITH p AS (SELECT event_id, user_id, ts FROM events
-                   WHERE event_type = 'purchase'),
-             c AS (SELECT user_id, ts AS click_ts FROM events
-                   WHERE event_type = 'click'),
-             wm AS (SELECT least(
-                        MAX(CASE WHEN event_type = 'purchase' THEN ts END),
-                        MAX(CASE WHEN event_type = 'click' THEN ts END))
-                        - INTERVAL '1 minute' - INTERVAL '1 second'
-                        AS cutoff
-                    FROM events)
+    oracle=f"""
+        WITH {_Q51_CTES},
+             {_Q51_WM_CTE}
         SELECT p.event_id, p.user_id, c.click_ts
         FROM p CROSS JOIN wm
         LEFT JOIN c
@@ -434,10 +453,10 @@ def _events_cutoff(spark: SparkSession, sf: str):
     tags=("streaming", "join"),
 )
 def q51b(spark: SparkSession, sf: str) -> DataFrame:
-    """Stream-stream LEFT OUTER interval join (round 11, the r10
-    verdict's north-star gap #4): q51's enrichment shape when the
-    business question is "every purchase, WITH its prior clicks if any"
-    — the unmatched purchase must still come out, as a NULL-click row.
+    """Stream-stream LEFT OUTER interval join: q51's enrichment shape
+    when the business question is "every purchase, WITH its prior
+    clicks if any" — the unmatched purchase must still come out, as a
+    NULL-click row.
     Spark emits the NULL row only when the join state for that purchase
     EXPIRES (the watermark passes its eviction bound — until then a
     matching click could still arrive), so outer results are inherently
@@ -447,7 +466,7 @@ def q51b(spark: SparkSession, sf: str) -> DataFrame:
     (min of both sides' max event time − the 1-minute delay, − 1 s so
     no row sits exactly on the eviction boundary, where emit-vs-hold is
     an engine-internal strictness choice) — the same cutoff the oracle
-    restates as a scalar subquery. Within that region the streaming
+    restates as its wm CTE. Within that region the streaming
     result must equal the batch LEFT JOIN exactly: every matched pair
     AND every null row, the latter proving state eviction really emits
     (numRowsRemoved > 0 is pinned by the adversarial multi-trigger test
@@ -457,26 +476,14 @@ def q51b(spark: SparkSession, sf: str) -> DataFrame:
     Scale shape: identical to q51 — both sides keyed on user_id, state
     bounded by the 10-minute interval + 1-minute delay; the outer
     variant adds no state, only the deferred null emission."""
-    p = (
-        stream_table(spark, sf, "events")
-        .filter(F.col("event_type") == "purchase")
-        .select("event_id", "user_id", "ts")
-        .withWatermark("ts", "1 minute")
-    )
-    c = (
-        stream_table(spark, sf, "events")
-        .filter(F.col("event_type") == "click")
-        .select(F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts"))
-        .withWatermark("click_ts", "1 minute")
-    )
-    j = p.join(
-        c,
-        (F.col("user_id") == F.col("c_user"))
-        & (F.col("click_ts") > F.col("ts") - F.expr("INTERVAL 10 MINUTES"))
-        & (F.col("click_ts") <= F.col("ts")),
+    j = _interval_join(
+        stream_table(spark, sf, "events"), stream_table(spark, sf, "events"),
         "left_outer",
-    ).select("event_id", "user_id", "ts", "click_ts")
-    sink = run_to_memory(j, "q51b", output_mode="append")
+    )
+    sink = run_to_memory(
+        j.select("event_id", "user_id", "ts", "click_ts"), "q51b",
+        output_mode="append",
+    )
     cut = _events_cutoff(spark, sf)
     return sink.filter(F.col("ts") <= F.lit(cut)).select(
         "event_id", "user_id", "click_ts"
@@ -535,7 +542,7 @@ def q63(spark: SparkSession, sf: str) -> DataFrame:
         FROM events WHERE event_type = 'purchase'
         GROUP BY 1
     """,
-    tags=("streaming",),
+    tags=("streaming", "slow"),
 )
 def q141(spark: SparkSession, sf: str) -> DataFrame:
     """Streaming daily revenue with INTEGER state: purchases quantize to
@@ -838,7 +845,7 @@ def _q167b_oracle() -> str:
 @query(
     "q167b_stream_decontaminate_update",
     oracle=_q167b_oracle(),
-    tags=("streaming", "decontamination", "dedup", "watermark"),
+    tags=("streaming", "decontamination", "dedup", "watermark", "slow"),
 )
 def q167b(spark: SparkSession, sf: str) -> DataFrame:
     """q167's chained stateful pipeline in its PRODUCTION deployment
@@ -925,9 +932,7 @@ def q167b(spark: SparkSession, sf: str) -> DataFrame:
 def _q168_oracle() -> str:
     # q57's oracle verbatim (one source of truth for the novel-batch
     # semantics — the streaming twin must answer the identical question)
-    from .pipeline import REGISTRY as _REG  # registered by the import
-
-    return _REG["q57_incremental_ingest_dedup"].oracle
+    return REGISTRY["q57_incremental_ingest_dedup"].oracle
 
 
 @query(
@@ -984,8 +989,8 @@ def _q177b_oracle() -> str:
 
 @query(
     "q177b_stream_dsir_score",
-    oracle=None,  # bound at import end — needs llm registered first
-    tags=("streaming", "sampling", "llm", "quality"),
+    oracle=_q177b_oracle,
+    tags=("streaming", "sampling", "llm", "quality", "slow"),
 )
 def q177b(spark: SparkSession, sf: str) -> DataFrame:
     """STREAMING DSIR — q177's importance scoring deployed the way an
@@ -1056,18 +1061,6 @@ def q177b(spark: SparkSession, sf: str) -> DataFrame:
     return run_to_memory(scored, "q177b", output_mode="append")
 
 
-# Bind q177b's oracle now that the builder and llm's constants exist
-# (one arithmetic home — the SQL is generated from the same constants
-# the Spark side reads).
-from dataclasses import replace as _dc_replace  # noqa: E402
-
-from . import REGISTRY  # noqa: E402
-
-REGISTRY["q177b_stream_dsir_score"] = _dc_replace(
-    REGISTRY["q177b_stream_dsir_score"], oracle=_q177b_oracle()
-)
-
-
 # ----------- Q178b STREAMING Gopher rules — quality filtering at ingest
 def _q178b_oracle() -> str:
     """Per-document Gopher verdicts (no funnel — the funnel is a batch
@@ -1108,7 +1101,7 @@ def _q178b_oracle() -> str:
 
 @query(
     "q178b_stream_gopher_filter",
-    oracle=None,  # bound at import end, like q177b
+    oracle=_q178b_oracle,
     tags=("streaming", "text", "llm", "quality"),
 )
 def q178b(spark: SparkSession, sf: str) -> DataFrame:
@@ -1164,11 +1157,6 @@ def q178b(spark: SparkSession, sf: str) -> DataFrame:
     return run_to_memory(out, "q178b", output_mode="append")
 
 
-REGISTRY["q178b_stream_gopher_filter"] = _dc_replace(
-    REGISTRY["q178b_stream_gopher_filter"], oracle=_q178b_oracle()
-)
-
-
 # ------------- Q179b STREAMING BPE application — tokenize at ingest
 def _q179b_oracle() -> str:
     """Batch mirror: q179's 6-level training chain (same generated CTEs)
@@ -1192,8 +1180,8 @@ def _q179b_oracle() -> str:
 
 @query(
     "q179b_stream_bpe_tokenize",
-    oracle=None,  # bound at import end, like q177b/q178b
-    tags=("streaming", "text", "llm", "tokenizer"),
+    oracle=_q179b_oracle,
+    tags=("streaming", "text", "llm", "tokenizer", "slow"),
 )
 def q179b(spark: SparkSession, sf: str) -> DataFrame:
     """STREAMING BPE application — tokenize at ingest with a vocabulary
@@ -1273,11 +1261,6 @@ def q179b(spark: SparkSession, sf: str) -> DataFrame:
     return run_to_memory(out, "q179b", output_mode="append")
 
 
-REGISTRY["q179b_stream_bpe_tokenize"] = _dc_replace(
-    REGISTRY["q179b_stream_bpe_tokenize"], oracle=_q179b_oracle()
-)
-
-
 # ------------------- Q181b STREAMING quantile sketch (keyed KLL state)
 _Q181B_K = 200
 _Q181B_QS = (0.5, 0.9, 0.99)
@@ -1347,7 +1330,7 @@ _Q180B_BUCKETS = 8
 
 
 @query("q180b_stream_heavy_hitters", oracle=None,
-       tags=("streaming", "sketch", "approx", "stateful", "text"))
+       tags=("streaming", "sketch", "approx", "stateful", "text", "slow"))
 def q180b(spark: SparkSession, sf: str) -> DataFrame:
     """STREAMING heavy hitters: q180's Misra-Gries summary maintained as
     KEYED STREAMING STATE — with q181b this completes the sketch matrix
@@ -1412,7 +1395,7 @@ def _q193b_oracle() -> str:
 
 @query(
     "q193b_stream_c4_filter",
-    oracle=None,  # bound at import end, like q177b/q178b
+    oracle=_q193b_oracle,
     tags=("streaming", "text", "llm", "quality"),
 )
 def q193b(spark: SparkSession, sf: str) -> DataFrame:
@@ -1438,25 +1421,12 @@ def q193b(spark: SparkSession, sf: str) -> DataFrame:
     return run_to_memory(out, "q193b", output_mode="append")
 
 
-REGISTRY["q193b_stream_c4_filter"] = _dc_replace(
-    REGISTRY["q193b_stream_c4_filter"], oracle=_q193b_oracle()
-)
-
-
 # ----------------------------- Q51c stream-stream FULL OUTER interval join
 @query(
     "q51c_stream_stream_full_join",
-    oracle="""
-        WITH p AS (SELECT event_id, user_id, ts FROM events
-                   WHERE event_type = 'purchase'),
-             c AS (SELECT user_id, ts AS click_ts FROM events
-                   WHERE event_type = 'click'),
-             wm AS (SELECT least(
-                        MAX(CASE WHEN event_type = 'purchase' THEN ts END),
-                        MAX(CASE WHEN event_type = 'click' THEN ts END))
-                        - INTERVAL '1 minute' - INTERVAL '1 second'
-                        AS cutoff
-                    FROM events)
+    oracle=f"""
+        WITH {_Q51_CTES},
+             {_Q51_WM_CTE}
         SELECT p.event_id, p.user_id AS p_user, c.user_id AS c_user,
                c.click_ts
         FROM p FULL JOIN c
@@ -1471,8 +1441,8 @@ REGISTRY["q193b_stream_c4_filter"] = _dc_replace(
     tags=("streaming", "join"),
 )
 def q51c(spark: SparkSession, sf: str) -> DataFrame:
-    """Stream-stream FULL OUTER interval join (round 11) — completing
-    the stream-join matrix (q51 inner, q51b left outer): every
+    """Stream-stream FULL OUTER interval join, completing the
+    stream-join matrix (q51 inner, q51b left outer): every
     purchase WITH its prior clicks if any, AND every click that
     attributed to no purchase — the two-sided audit shape (unattributed
     clicks are the marketing-waste signal, unmatched purchases the
@@ -1495,25 +1465,13 @@ def q51c(spark: SparkSession, sf: str) -> DataFrame:
     Scale shape: q51's — keyed on user_id, state bounded by interval +
     delay; the full-outer variant adds only the second deferred null
     path, no extra state."""
-    p = (
-        stream_table(spark, sf, "events")
-        .filter(F.col("event_type") == "purchase")
-        .select("event_id", F.col("user_id").alias("p_user"), "ts")
-        .withWatermark("ts", "1 minute")
-    )
-    c = (
-        stream_table(spark, sf, "events")
-        .filter(F.col("event_type") == "click")
-        .select(F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts"))
-        .withWatermark("click_ts", "1 minute")
-    )
-    j = p.join(
-        c,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("click_ts") > F.col("ts") - F.expr("INTERVAL 10 MINUTES"))
-        & (F.col("click_ts") <= F.col("ts")),
+    j = _interval_join(
+        stream_table(spark, sf, "events"), stream_table(spark, sf, "events"),
         "full_outer",
-    ).select("event_id", "p_user", "ts", "c_user", "click_ts")
+    ).select(
+        "event_id", F.col("user_id").alias("p_user"), "ts", "c_user",
+        "click_ts",
+    )
     sink = run_to_memory(j, "q51c", output_mode="append")
     cut = _events_cutoff(spark, sf)
     return sink.filter(
@@ -1623,17 +1581,9 @@ def q191b(spark: SparkSession, sf: str) -> DataFrame:
 # ------------------------------ Q51d stream-stream LEFT SEMI interval join
 @query(
     "q51d_stream_stream_semi_join",
-    oracle="""
-        WITH p AS (SELECT event_id, user_id, ts FROM events
-                   WHERE event_type = 'purchase'),
-             c AS (SELECT user_id, ts AS click_ts FROM events
-                   WHERE event_type = 'click'),
-             wm AS (SELECT least(
-                        MAX(CASE WHEN event_type = 'purchase' THEN ts END),
-                        MAX(CASE WHEN event_type = 'click' THEN ts END))
-                        - INTERVAL '1 minute' - INTERVAL '1 second'
-                        AS cutoff
-                    FROM events)
+    oracle=f"""
+        WITH {_Q51_CTES},
+             {_Q51_WM_CTE}
         SELECT p.event_id, p.user_id
         FROM p CROSS JOIN wm
         WHERE p.ts <= wm.cutoff
@@ -1643,11 +1593,11 @@ def q191b(spark: SparkSession, sf: str) -> DataFrame:
               AND c.click_ts > p.ts - INTERVAL '10 minutes'
               AND c.click_ts <= p.ts)
     """,
-    tags=("streaming", "join"),
+    tags=("streaming", "join", "slow"),
 )
 def q51d(spark: SparkSession, sf: str) -> DataFrame:
-    """Stream-stream LEFT SEMI interval join (round 11) — with q51/q51b/
-    q51c this covers every stream-stream interval-join type Spark
+    """Stream-stream LEFT SEMI interval join — with q51/q51b/q51c this
+    covers every stream-stream interval-join type Spark
     supports (inner, left outer, full outer, left semi; left anti is
     not a supported stream-stream type): purchases that HAD at least
     one prior click — the attribution FILTER shape, emitting each
@@ -1662,25 +1612,10 @@ def q51d(spark: SparkSession, sf: str) -> DataFrame:
     oracle restates around its EXISTS. State bounds are q51's; the
     semi form HALVES the output side (no click columns cross the
     sink)."""
-    p = (
-        stream_table(spark, sf, "events")
-        .filter(F.col("event_type") == "purchase")
-        .select("event_id", "user_id", "ts")
-        .withWatermark("ts", "1 minute")
-    )
-    c = (
-        stream_table(spark, sf, "events")
-        .filter(F.col("event_type") == "click")
-        .select(F.col("user_id").alias("c_user"), F.col("ts").alias("click_ts"))
-        .withWatermark("click_ts", "1 minute")
-    )
-    j = p.join(
-        c,
-        (F.col("user_id") == F.col("c_user"))
-        & (F.col("click_ts") > F.col("ts") - F.expr("INTERVAL 10 MINUTES"))
-        & (F.col("click_ts") <= F.col("ts")),
+    j = _interval_join(
+        stream_table(spark, sf, "events"), stream_table(spark, sf, "events"),
         "left_semi",
-    ).select("event_id", "user_id", "ts")
+    )
     sink = run_to_memory(j, "q51d", output_mode="append")
     cut = _events_cutoff(spark, sf)
     return sink.filter(F.col("ts") <= F.lit(cut)).select(
@@ -1693,14 +1628,12 @@ def _q196b_oracle() -> str:
     """Batch mirror: q196's oracle verbatim — the stream emits exactly
     the batch per-document rows (the model is fit on the SAME static
     corpus the batch query trains on)."""
-    from . import REGISTRY as _REG
-
-    return _REG["q196_kneser_ney_score"].oracle
+    return REGISTRY["q196_kneser_ney_score"].oracle
 
 
 @query(
     "q196b_stream_kneser_ney_score",
-    oracle=None,  # bound at import end, like q177b/q178b/q193b
+    oracle=_q196b_oracle,
     tags=("streaming", "text", "llm", "quality"),
 )
 def q196b(spark: SparkSession, sf: str) -> DataFrame:
@@ -1795,11 +1728,6 @@ def q196b(spark: SparkSession, sf: str) -> DataFrame:
     return run_to_memory(out, "q196b", output_mode="append")
 
 
-REGISTRY["q196b_stream_kneser_ney_score"] = _dc_replace(
-    REGISTRY["q196b_stream_kneser_ney_score"], oracle=_q196b_oracle()
-)
-
-
 # ----------------- Q160c streaming audio fingerprint dedup (at ingest)
 @query(
     "q160c_stream_afp_dedup",
@@ -1808,7 +1736,7 @@ REGISTRY["q196b_stream_kneser_ney_score"] = _dc_replace(
                CAST(COUNT(*) AS BIGINT) AS n_members
         FROM documents GROUP BY 1
     """,
-    tags=("streaming", "multimodal", "dedup"),
+    tags=("streaming", "multimodal", "dedup", "slow"),
 )
 def q160c(spark: SparkSession, sf: str) -> DataFrame:
     """Streaming AUDIO dedup at ingest (round 12) — q165's shape for
@@ -2126,7 +2054,7 @@ def bucket_pair_stream(
     oracle=None,  # the banded index is Spark-hash-based (q26b's category);
                   # the contract is HARD equality with the batch candidate
                   # set, pinned in pytest + APPROX_EVIDENCE
-    tags=("streaming", "dedup", "llm", "approx", "stateful"),
+    tags=("streaming", "dedup", "llm", "approx", "stateful", "slow"),
 )
 def q205(spark: SparkSession, sf: str) -> DataFrame:
     """STREAMING near-dup candidate detection at ingest (round 12) —
@@ -2244,7 +2172,7 @@ def minhash_verified_stream(
         WHERE ROUND(common * 1.0 / (n1 + n2 - common), 6) >= 0.5
         ORDER BY d1, d2
     """,
-    tags=("streaming", "dedup", "llm", "stateful"),
+    tags=("streaming", "dedup", "llm", "stateful", "slow"),
 )
 def q205b(spark: SparkSession, sf: str) -> DataFrame:
     """STREAMING near-dup dedup END-TO-END (round 13) — the last
@@ -2329,8 +2257,8 @@ def _q203b_oracle() -> str:
 
 @query(
     "q203b_stream_repetition_filter",
-    oracle=None,  # bound at import end (constants shared with q203)
-    tags=("streaming", "text", "llm", "quality"),
+    oracle=_q203b_oracle,
+    tags=("streaming", "text", "llm", "quality", "slow"),
 )
 def q203b(spark: SparkSession, sf: str) -> DataFrame:
     """STREAMING Gopher repetition filtering — q203's nine n-gram
@@ -2431,13 +2359,6 @@ def q203b(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-from dataclasses import replace as _dc_replace_q203b  # noqa: E402
-
-REGISTRY["q203b_stream_repetition_filter"] = _dc_replace_q203b(
-    REGISTRY["q203b_stream_repetition_filter"], oracle=_q203b_oracle()
-)
-
-
 # --------- Q212b STREAMING unigram-LM application — tokenize at ingest
 @query(
     "q212b_stream_unigram_tokenize",
@@ -2503,7 +2424,7 @@ def q212b(spark: SparkSession, sf: str) -> DataFrame:
 # ------- Q211b STREAMING lakehouse ingest — z-ordered writes at ingest
 @query(
     "q211b_stream_lakehouse_ingest",
-    oracle=None,  # bound at import end (shares q211's closed-form SQL)
+    oracle=_q211_oracle,
     tags=("streaming", "pipeline", "layout", "write"),
 )
 def q211b(spark: SparkSession, sf: str) -> DataFrame:
@@ -2561,20 +2482,10 @@ def q211b(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-from dataclasses import replace as _dc_replace_q211b  # noqa: E402
-
-from .pipeline import _q211_oracle as _q211_oracle_import  # noqa: E402
-
-REGISTRY["q211b_stream_lakehouse_ingest"] = _dc_replace_q211b(
-    REGISTRY["q211b_stream_lakehouse_ingest"],
-    oracle=_q211_oracle_import(),
-)
-
-
 # --- Q215b STREAMING ingest with INLINE compaction — the OPTIMIZE loop
 @query(
     "q215b_stream_ingest_compacted",
-    oracle=None,  # bound below (shares q211's closed-form manifest SQL)
+    oracle=_q211_oracle,
     bench=True,
     tags=("streaming", "pipeline", "layout", "write", "maintenance",
           "closed_form_oracle"),
@@ -2651,12 +2562,6 @@ def stream_ingest_compacted(
         )
         .orderBy("zfile")
     )
-
-
-REGISTRY["q215b_stream_ingest_compacted"] = _dc_replace_q211b(
-    REGISTRY["q215b_stream_ingest_compacted"],
-    oracle=_q211_oracle_import(),
-)
 
 
 # --------- Q213 STREAMING SCD1 upsert — CDC apply via versioned merges
@@ -4275,7 +4180,7 @@ def knn_graph_insert_stream(
 @query(
     "q219b_stream_knn_graph_insert",
     oracle=None,
-    tags=("streaming", "similarity", "graph", "ann", "approx"),
+    tags=("streaming", "similarity", "graph", "ann", "approx", "slow"),
 )
 def q219b(spark: SparkSession, sf: str) -> DataFrame:
     """STREAMING kNN-graph insert (round 15) — q218 builds the index
@@ -4524,8 +4429,8 @@ def q226(spark: SparkSession, sf: str) -> DataFrame:
 # ----- Q229 streaming graph-ANN query SERVING (stateless apply-online)
 @query(
     "q229_stream_graph_ann_serve",
-    oracle=None,  # bound below — q219's oracle text verbatim
-    tags=("streaming", "similarity", "graph", "ann"),
+    oracle=_q219_oracle,
+    tags=("streaming", "similarity", "graph", "ann", "slow"),
 )
 def q229(spark: SparkSession, sf: str) -> DataFrame:
     """STREAMING graph-ANN query serving (round 15) — q219's search
@@ -4599,18 +4504,11 @@ def q229(spark: SparkSession, sf: str) -> DataFrame:
     return acc["df"].orderBy("qid", "rn")
 
 
-from .pipeline import _q219_oracle as _q219_oracle_text  # noqa: E402
-
-REGISTRY["q229_stream_graph_ann_serve"] = _dc_replace(
-    REGISTRY["q229_stream_graph_ann_serve"], oracle=_q219_oracle_text()
-)
-
-
 # ---- Q232b streaming weighted-MinHash dedup at ingest (CWS + verify)
 @query(
     "q232b_stream_weighted_minhash",
     oracle=None,
-    tags=("streaming", "dedup", "text", "approx", "stateful"),
+    tags=("streaming", "dedup", "text", "approx", "stateful", "slow"),
 )
 def q232b(spark: SparkSession, sf: str) -> DataFrame:
     """STREAMING weighted near-dup detection AT INGEST (round 15) —
@@ -4667,7 +4565,7 @@ def q232b(spark: SparkSession, sf: str) -> DataFrame:
 # deployment shape per the r15 verdict)
 @query(
     "q221b_stream_chunk_dedup",
-    oracle=None,  # bound at curation import end — q221's oracle VERBATIM
+    oracle=lambda: REGISTRY["q221_chunk_dedup_rebuild"].oracle,
     tags=("streaming", "dedup", "text", "llm", "stateful"),
 )
 def q221b(spark: SparkSession, sf: str) -> DataFrame:
@@ -4932,8 +4830,8 @@ def ann_index_read(
 # ---- Q229b streaming graph-ANN serving FROM THE PERSISTED INDEX
 @query(
     "q229b_stream_ann_serve_persisted",
-    oracle=None,  # bound below — q219's oracle text VERBATIM (q229 idiom)
-    tags=("streaming", "similarity", "graph", "ann", "write"),
+    oracle=_q219_oracle,
+    tags=("streaming", "similarity", "graph", "ann", "write", "slow"),
 )
 def q229b(spark: SparkSession, sf: str) -> DataFrame:
     """STREAMING graph-ANN serving from the ON-DISK index (round 16,
@@ -5011,8 +4909,3 @@ def q229b(spark: SparkSession, sf: str) -> DataFrame:
         )
     return acc["df"].orderBy("qid", "rn")
 
-
-REGISTRY["q229b_stream_ann_serve_persisted"] = _dc_replace(
-    REGISTRY["q229b_stream_ann_serve_persisted"],
-    oracle=_q219_oracle_text(),
-)

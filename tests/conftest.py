@@ -8,145 +8,24 @@ import pytest
 from kstreamjs_spark.session import get_spark
 
 SF_SMOKE = "/root/testdata/sf0.001"
-SF_CORRECT = "/root/testdata/sf0.01"
+
+
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "slow: runs only with KSTREAMJS_FULL_TESTS=1"
+    )
+
 
 # ---- Fast default test profile --------------------------------------
-# The full suite is ~740 tests and takes 1,700-3,600 s, longer than a
-# verify window allows, so the default `pytest tests/` run skips the
-# tests below: every test whose call took >= 5 s in a full-suite run
-# (124 tests carrying ~2,600 s of the wall, mostly streaming end-to-end,
-# media-codec oracle compares and iterative-graph rows). They are not
-# dead weight: KSTREAMJS_FULL_TESTS=1 runs them, and the skipped oracle
-# compares duplicate the coverage of scripts/selfcheck.py, which runs
-# the same compare over all 299 queries.
-_SLOW_TESTS = frozenset({
-    "test_asof.py::test_asof_basic",
-    "test_examples.py::test_example_main_runs[curation_pipeline]",
-    "test_examples.py::test_example_main_runs[graph_ann_pipeline]",
-    "test_examples.py::test_example_main_runs[lakehouse_maintenance]",
-    "test_examples.py::test_example_main_runs[multimodal_retrieval]",
-    "test_examples.py::test_quickstart_runs_as_subprocess",
-    "test_file_datasets.py::test_docgen_datasource_reads_and_is_deterministic",
-    "test_llm_ops.py::test_cluster_safe_split_no_neardup_leakage",
-    "test_llm_ops.py::test_compact_partitions_prunes_and_preserves",
-    "test_llm_ops.py::test_compact_partitions_recovers_crash_between_swap_renames",
-    "test_llm_ops.py::test_gram_upper_matches_numpy_and_is_partition_invariant",
-    "test_llm_ops.py::test_graph_ann_filtered_search_gate",
-    "test_llm_ops.py::test_graph_ann_search_on_planted_manifold",
-    "test_llm_ops.py::test_graph_ann_shipped_config_recall_gate",
-    "test_llm_ops.py::test_ivfpq_recall_and_all_probe_identity",
-    "test_llm_ops.py::test_kll_quantiles_bound_mergeability_determinism",
-    "test_llm_ops.py::test_kmv_null_semantics_documented",
-    "test_llm_ops.py::test_kmv_set_relations_exact_and_estimator",
-    "test_llm_ops.py::test_knn_lsh_band_widening_on_clustered_corpus",
-    "test_llm_ops.py::test_lakehouse_zorder_write_skips_files_on_y_band",
-    "test_llm_ops.py::test_nn_descent_converges_on_planted_manifold",
-    "test_llm_ops.py::test_nn_descent_shipped_config_recall_gate",
-    "test_llm_ops.py::test_q94_manifest_matches_written_shard_files",
-    "test_llm_ops.py::test_unigram_lm_train_equals_pure_python_mirror",
-    "test_property.py::test_asof_matches_bruteforce",
-    "test_property.py::test_bloom_never_false_negative",
-    "test_property.py::test_connected_components_match_union_find",
-    "test_property.py::test_containment_matches_python_reference",
-    "test_property.py::test_greedy_pieces_matches_reference_on_random_vocab",
-    "test_property.py::test_histogram_percentiles_match_reference",
-    "test_property.py::test_sequence_pack_matches_python_reference",
-    "test_property.py::test_token_entropy_bounds_and_reference",
-    "test_property.py::test_with_sessions_matches_python_reference",
-    "test_queries_oracle.py::test_query_matches_oracle[q103_gap_percentiles]",
-    "test_queries_oracle.py::test_query_matches_oracle[q106_split_leakage_neardup]",
-    "test_queries_oracle.py::test_query_matches_oracle[q106b_split_leakage_maxdf]",
-    "test_queries_oracle.py::test_query_matches_oracle[q110_dedup_keepers]",
-    "test_queries_oracle.py::test_query_matches_oracle[q117_quality_bands]",
-    "test_queries_oracle.py::test_query_matches_oracle[q118_source_scorecard]",
-    "test_queries_oracle.py::test_query_matches_oracle[q120_perplexity_bands]",
-    "test_queries_oracle.py::test_query_matches_oracle[q122_contamination_coverage]",
-    "test_queries_oracle.py::test_query_matches_oracle[q123_chunk_neardup_pairs]",
-    "test_queries_oracle.py::test_query_matches_oracle[q124_market_share]",
-    "test_queries_oracle.py::test_query_matches_oracle[q125_event_cooccurrence]",
-    "test_queries_oracle.py::test_query_matches_oracle[q127_centroid_drift]",
-    "test_queries_oracle.py::test_query_matches_oracle[q130_length_ks_drift]",
-    "test_queries_oracle.py::test_query_matches_oracle[q137_price_size_slope]",
-    "test_queries_oracle.py::test_query_matches_oracle[q141_stream_daily_revenue]",
-    "test_queries_oracle.py::test_query_matches_oracle[q142_len_rep_corr]",
-    "test_queries_oracle.py::test_query_matches_oracle[q146_mix_deficit]",
-    "test_queries_oracle.py::test_query_matches_oracle[q147_ltv_percentiles]",
-    "test_queries_oracle.py::test_query_matches_oracle[q157b_bm25_batch_topk]",
-    "test_queries_oracle.py::test_query_matches_oracle[q158_phash_image_neardup]",
-    "test_queries_oracle.py::test_query_matches_oracle[q158b_image_dup_clusters]",
-    "test_queries_oracle.py::test_query_matches_oracle[q159_knn_join_lsh]",
-    "test_queries_oracle.py::test_query_matches_oracle[q160c_stream_afp_dedup]",
-    "test_queries_oracle.py::test_query_matches_oracle[q167b_stream_decontaminate_update]",
-    "test_queries_oracle.py::test_query_matches_oracle[q169b_hybrid_rrf_batch]",
-    "test_queries_oracle.py::test_query_matches_oracle[q16_rollup]",
-    "test_queries_oracle.py::test_query_matches_oracle[q170_semdedup]",
-    "test_queries_oracle.py::test_query_matches_oracle[q171_media_quarantine]",
-    "test_queries_oracle.py::test_query_matches_oracle[q172_embedding_gram]",
-    "test_queries_oracle.py::test_query_matches_oracle[q172b_pca_power_iteration]",
-    "test_queries_oracle.py::test_query_matches_oracle[q174_video_mjpeg_phash_dedup]",
-    "test_queries_oracle.py::test_query_matches_oracle[q176_copurchase_pagerank]",
-    "test_queries_oracle.py::test_query_matches_oracle[q177_dsir_select]",
-    "test_queries_oracle.py::test_query_matches_oracle[q177b_stream_dsir_score]",
-    "test_queries_oracle.py::test_query_matches_oracle[q179_bpe_train]",
-    "test_queries_oracle.py::test_query_matches_oracle[q179b_stream_bpe_tokenize]",
-    "test_queries_oracle.py::test_query_matches_oracle[q180_heavy_hitters]",
-    "test_queries_oracle.py::test_query_matches_oracle[q180b_stream_heavy_hitters]",
-    "test_queries_oracle.py::test_query_matches_oracle[q182_gif_anim_phash_dedup]",
-    "test_queries_oracle.py::test_query_matches_oracle[q183_apng_anim_phash_dedup]",
-    "test_queries_oracle.py::test_query_matches_oracle[q203_gopher_repetition]",
-    "test_queries_oracle.py::test_query_matches_oracle[q203b_stream_repetition_filter]",
-    "test_queries_oracle.py::test_query_matches_oracle[q205_stream_minhash_candidates]",
-    "test_queries_oracle.py::test_query_matches_oracle[q205b_stream_minhash_verify]",
-    "test_queries_oracle.py::test_query_matches_oracle[q216c_wordpiece_likelihood_train]",
-    "test_queries_oracle.py::test_query_matches_oracle[q218b_knn_graph_dedup_clusters]",
-    "test_queries_oracle.py::test_query_matches_oracle[q219_graph_ann_beam_search]",
-    "test_queries_oracle.py::test_query_matches_oracle[q219b_stream_knn_graph_insert]",
-    "test_queries_oracle.py::test_query_matches_oracle[q219c_graph_ann_filtered_search]",
-    "test_queries_oracle.py::test_query_matches_oracle[q228_cluster_safe_split]",
-    "test_queries_oracle.py::test_query_matches_oracle[q229_stream_graph_ann_serve]",
-    "test_queries_oracle.py::test_query_matches_oracle[q229b_stream_ann_serve_persisted]",
-    "test_queries_oracle.py::test_query_matches_oracle[q232b_stream_weighted_minhash]",
-    "test_queries_oracle.py::test_query_matches_oracle[q33b_stream_window_collect]",
-    "test_queries_oracle.py::test_query_matches_oracle[q41_stream_union]",
-    "test_queries_oracle.py::test_query_matches_oracle[q51d_stream_stream_semi_join]",
-    "test_stream_facade.py::test_curation_pipeline_example_runs",
-    "test_streaming.py::test_bucket_pair_stream_bounded_keys_collision_semantics",
-    "test_streaming.py::test_bucket_pair_stream_ttl_evicts_and_loses_late_pairs",
-    "test_streaming.py::test_scd1_concurrent_committer_refuses_evolved_tables",
-    "test_streaming.py::test_scd1_concurrent_writers_optimistic_commit",
-    "test_streaming.py::test_scd1_delete_concurrent_overlap_conflicts",
-    "test_streaming.py::test_scd1_delete_then_writer_applies_and_resurrects",
-    "test_streaming.py::test_scd1_delete_vectors_merge_on_read",
-    "test_streaming.py::test_stream_cdc_lww_tombstone_semantics",
-    "test_streaming.py::test_stream_chunk_dedup_schedule_invariance",
-    "test_streaming.py::test_stream_decontaminate_invariant_to_micro_batching",
-    "test_streaming.py::test_stream_decontaminate_update_mode_evicts_state",
-    "test_streaming.py::test_stream_dsir_scoring_stateless_per_trigger",
-    "test_streaming.py::test_stream_embedding_neardup_equals_batch_any_schedule",
-    "test_streaming.py::test_stream_full_outer_join_gates_nulls_on_both_sides",
-    "test_streaming.py::test_stream_gopher_filter_matches_batch_funnel",
-    "test_streaming.py::test_stream_graph_ann_serve_equals_batch",
-    "test_streaming.py::test_stream_ingest_compacted_bounds_files_and_loses_nothing",
-    "test_streaming.py::test_stream_knn_graph_insert_persists_index",
-    "test_streaming.py::test_stream_knn_graph_insert_planted_manifold",
-    "test_streaming.py::test_stream_left_outer_join_null_emission_is_watermark_gated",
-    "test_streaming.py::test_stream_minhash_candidates_equal_batch_any_schedule",
-    "test_streaming.py::test_stream_minhash_verified_equal_batch_any_schedule",
-    "test_streaming.py::test_stream_phash_dedup_update_folds_across_triggers",
-    "test_streaming.py::test_stream_scd1_changelog_ledger_across_commits",
-    "test_streaming.py::test_stream_scd1_merge_prunes_untouched_buckets",
-    "test_streaming.py::test_stream_scd1_schema_evolution_mixed_manifest",
-    "test_streaming.py::test_stream_scd1_time_travel_within_vacuum_horizon",
-    "test_streaming.py::test_stream_semi_join_emits_once_and_only_matched",
-    "test_streaming.py::test_stream_weighted_minhash_equals_batch",
-    "test_streaming.py::test_watermark_drops_late_rows",
-    "test_streaming.py::test_window_collect_fires_once_across_microbatches",
-    "test_streaming.py::test_window_collect_stateful_from_origin_alignment",
-    "test_streaming.py::test_window_collect_stateful_keyed",
-    "test_streaming.py::test_window_collect_stateful_strict_watermark_boundary",
-})
-
-
+# The full suite takes 1,700-3,600 s, longer than a verify window allows,
+# so the default `pytest tests/` run skips tests marked `slow`: tests
+# whose call took >= 5 s in a full-suite run and whose code other tests
+# already exercise, mostly streaming end-to-end, media-codec oracle
+# compares and iterative-graph rows. A query's oracle compare is slow
+# when its QuerySpec carries the "slow" tag. They are not dead weight:
+# KSTREAMJS_FULL_TESTS=1 runs them, and the skipped oracle compares
+# duplicate the coverage of scripts/selfcheck.py, which runs the same
+# compare over every query.
 def pytest_collection_modifyitems(config, items):
     if os.environ.get("KSTREAMJS_FULL_TESTS"):
         return
@@ -154,10 +33,17 @@ def pytest_collection_modifyitems(config, items):
         reason="slow profile: set KSTREAMJS_FULL_TESTS=1 to run"
     )
     for item in items:
-        # nodeid is "tests/test_x.py::name" from the repo root or
-        # "test_x.py::name" from inside tests/ — match on the basename
-        if item.nodeid.split("/")[-1] in _SLOW_TESTS:
+        if item.get_closest_marker("slow"):
             item.add_marker(skip)
+
+
+@pytest.fixture(scope="session")
+def sf_smoke():
+    """The sf0.001 parquet fixtures (TESTDATA.md). Tests that read them
+    request this fixture, so they skip where the fixtures are absent."""
+    if not os.path.isdir(SF_SMOKE):
+        pytest.skip(f"parquet fixtures not found at {SF_SMOKE}")
+    return SF_SMOKE
 
 
 def stage_stream(df, path, by, parts=6):
@@ -187,6 +73,8 @@ def stage_stream(df, path, by, parts=6):
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("kstreamjs-tests", cpus=8, shuffle_partitions=8)
+    # shuffle_partitions is pinned so plan assertions do not depend on
+    # the host's core count; cpus follows get_spark's default.
+    s = get_spark("kstreamjs-tests", shuffle_partitions=8)
     yield s
     s.stop()

@@ -5,6 +5,7 @@ from __future__ import annotations
 import datetime as dt
 
 import pyspark.sql.functions as F
+import pytest
 
 from kstreamjs_spark.operators.asof import asof_join
 
@@ -26,6 +27,7 @@ def frames(spark):
     return left, right
 
 
+@pytest.mark.slow
 def test_asof_basic(spark):
     left, right = frames(spark)
     out = {

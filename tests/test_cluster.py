@@ -5,8 +5,6 @@ from __future__ import annotations
 from kstreamjs_spark.operators import cluster
 from kstreamjs_spark.tables import load
 
-from .conftest import SF_SMOKE
-
 
 def _labels(df):
     return {r["node"]: r["label"] for r in df.collect()}
@@ -30,8 +28,8 @@ def test_duplicate_and_reversed_edges(spark):
     assert got == {5: 5, 6: 5, 7: 7}
 
 
-def test_keep_canonical(spark):
-    (docs,) = load(spark, SF_SMOKE, "documents")
+def test_keep_canonical(spark, sf_smoke):
+    (docs,) = load(spark, sf_smoke, "documents")
     ids = sorted(r[0] for r in docs.select("doc_id").limit(4).collect())
     a, b, c, d = ids
     edges = spark.createDataFrame([(a, b), (b, c)], ["src", "dst"])

@@ -5,18 +5,19 @@ shape for the per-row metrics."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from kstreamjs_spark.operators import dedup, kmeans, text
 from kstreamjs_spark.plans import assert_in_plan, assert_not_in_plan
 from kstreamjs_spark.queries import all_queries
 
-from .conftest import SF_SMOKE
-
 SPECS = all_queries()
 
 
-def q(name, spark):
-    return SPECS[name].fn(spark, SF_SMOKE)
+@pytest.fixture
+def q(spark, sf_smoke):
+    """Builds a registered query's frame over the sf0.001 fixtures."""
+    return lambda name: SPECS[name].fn(spark, sf_smoke)
 
 
 # ------------------------------------------------------------ normalization
@@ -58,13 +59,13 @@ def test_shingle_list_short_doc_empty(spark):
 
 
 # ------------------------------------------------------------- group split
-def test_group_split_is_source_atomic(spark):
+def test_group_split_is_source_atomic(spark, sf_smoke):
     """Every source must land in exactly one split — the leakage guarantee
     a grouped split exists for."""
     from kstreamjs_spark.operators import sampling
     from kstreamjs_spark.tables import load
 
-    (docs,) = load(spark, SF_SMOKE, "documents")
+    (docs,) = load(spark, sf_smoke, "documents")
     split = F.when(
         sampling.hash_bucket(text.portable_string_hash("source"), seed=29)
         < F.lit(int(0.9 * 4294967296)),
@@ -130,12 +131,12 @@ def test_kmeans_assign_picks_nearest(spark):
     assert out == {0: 0, 1: 1, 2: 0}
 
 
-def test_kmeans_lloyd_objective_not_worse(spark):
+def test_kmeans_lloyd_objective_not_worse(spark, sf_smoke):
     """The mean best-similarity (spherical k-means objective) must not
     decrease across Lloyd iterations (small numeric slack)."""
     from kstreamjs_spark.tables import load
 
-    (emb,) = load(spark, SF_SMOKE, "embeddings")
+    (emb,) = load(spark, sf_smoke, "embeddings")
     cents0 = kmeans.initial_centroids(emb, 4)
 
     def objective(cents):
@@ -215,46 +216,46 @@ def test_quantize_golden(spark):
     assert out == [127, -127, 64, 0]  # floor(-126.5) = -127
 
 
-def test_quantize_saturation_counts(spark):
+def test_quantize_saturation_counts(q):
     # every real vector saturates at least once: its absmax element maps
     # to +/-127 by construction
-    sat = q("q85_quantize_embeddings", spark).agg(F.min("n_sat").alias("m")).collect()
+    sat = q("q85_quantize_embeddings").agg(F.min("n_sat").alias("m")).collect()
     assert sat[0]["m"] >= 1
 
 
 # ------------------------------------------------------------- plan shape
-def test_per_doc_metrics_have_no_exchange(spark):
+def test_per_doc_metrics_have_no_exchange(spark, sf_smoke):
     """q78/q84/q85 are per-row metrics: their plans must contain no
     Exchange (shuffle) at all — at 100 TB these are map-only passes.
     (The trailing orderBy exists for the oracle's total order; assert on
     the plan up to that sort's exchange by dropping it.)"""
     for name in ("q78_repetition_ratio", "q84_normalize_text",
                  "q85_quantize_embeddings"):
-        df = SPECS[name].fn(spark, SF_SMOKE)
+        df = SPECS[name].fn(spark, sf_smoke)
         plan = df._jdf.queryExecution().executedPlan().toString()
         # rangepartitioning exchange for the final ORDER BY is expected;
         # any hashpartitioning exchange would mean a real shuffle
         assert "hashpartitioning" not in plan, name
 
 
-def test_kmeans_assign_query_single_exchange(spark):
+def test_kmeans_assign_query_single_exchange(q):
     """q81: the assignment itself is scan-side; the only hash exchange is
     the final groupBy(cid) on k rows worth of partials."""
-    df = q("q81_kmeans_assign", spark)
+    df = q("q81_kmeans_assign")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("hashpartitioning") <= 1
 
 
-def test_vocab_coverage_values(spark):
-    rows = q("q80_vocab_coverage", spark).collect()
+def test_vocab_coverage_values(q):
+    rows = q("q80_vocab_coverage").collect()
     assert rows, "top tokens must be non-empty"
     shares = [r["cum_share"] for r in rows]
     assert all(b >= a for a, b in zip(shares, shares[1:]))
     assert 0 < shares[-1] <= 1.0
 
 
-def test_upsample_exact_budget(spark):
-    rows = q("q82_upsample_replicate", spark).collect()
+def test_upsample_exact_budget(q):
+    rows = q("q82_upsample_replicate").collect()
     assert rows and all(r["n_rows"] == 200 for r in rows)
 
 
@@ -302,8 +303,6 @@ def test_unicode_normalize_fingerprint_stability(spark):
     Unnormalized, the variants fingerprint differently (the bug being
     prevented); normalized, NFC(x) == NFC(NFD(x)) byte-for-byte and
     idempotence holds. Also pins NULL propagation and form validation."""
-    import pytest
-
     import unicodedata
 
     nfc_text = unicodedata.normalize("NFC", "caf\u00e9 jalape\u00f1o \u00c5ngstr\u00f6m")

@@ -12,8 +12,6 @@ import pytest
 
 from kstreamjs_spark.queries import all_queries
 
-from .conftest import SF_SMOKE
-
 SPECS = all_queries()
 
 # Statistic-bearing queries whose docstrings claim order-free exactness:
@@ -37,14 +35,14 @@ def _canon(df):
 
 
 @pytest.mark.parametrize("name", CLAIMANTS)
-def test_result_invariant_under_parallelism(spark, name):
+def test_result_invariant_under_parallelism(spark, sf_smoke, name):
     fn = SPECS[name].fn
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "2")
-        narrow = _canon(fn(spark, SF_SMOKE))
+        narrow = _canon(fn(spark, sf_smoke))
         spark.conf.set("spark.sql.shuffle.partitions", "17")
-        wide = _canon(fn(spark, SF_SMOKE))
+        wide = _canon(fn(spark, sf_smoke))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert narrow == wide, (

@@ -5,15 +5,12 @@ string. Catches contract regressions in pytest rather than at round time."""
 
 from __future__ import annotations
 
-import sys
+import pytest
 
-sys.path.insert(0, "/root/repo")
-
-import __spark_entry__ as entrymod  # noqa: E402
-
-from .conftest import SF_SMOKE  # noqa: E402
+import __spark_entry__ as entrymod
 
 
+@pytest.mark.usefixtures("sf_smoke")  # entry() reads the sf0.001 events
 def test_entry_runs_with_stable_schema(spark):
     df = entrymod.entry(spark)
     rows = df.collect()
@@ -30,18 +27,16 @@ def test_every_oracle_key_is_a_query_key():
     assert all(isinstance(s, str) and s.strip() for s in osql.values())
 
 
-def test_query_callables_accept_spark_and_sfdir(spark):
+def test_query_callables_accept_spark_and_sfdir(spark, sf_smoke):
     # spot-run one cheap query through the contract signature
-    df = entrymod.queries()["q01_scan_count"](spark, SF_SMOKE)
+    df = entrymod.queries()["q01_scan_count"](spark, sf_smoke)
     assert df.collect()[0][0] > 0
 
 
 def test_window_priority_names_validated():
     """The driver-window priority list is validated against the registry: a
     typo or an unimplemented promise raises instead of silently dropping a
-    window slot (the round-2 q26d failure mode)."""
-    import pytest
-
+    window slot."""
     from kstreamjs_spark import queries as qmod
 
     qmod.all_queries()  # current list must be clean

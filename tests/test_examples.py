@@ -1,7 +1,7 @@
-"""Smoke coverage for examples/ (r13 verdict ask #7): a user's first
-touchpoint must not silently rot. quickstart runs as a REAL subprocess
+"""Smoke coverage for examples/: a user's first touchpoint must not
+silently rot. quickstart runs as a REAL subprocess
 (`python examples/quickstart.py` — the exact command the README shows);
-the other four run in-process against the shared test session (same
+the others run in-process against the shared test session (same
 code path through main(), one JVM instead of five) and must return 0
 and print non-empty output."""
 
@@ -15,13 +15,13 @@ import sys
 import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SF = "/root/testdata/sf0.001"
 
 
-def test_quickstart_runs_as_subprocess():
+@pytest.mark.slow
+def test_quickstart_runs_as_subprocess(sf_smoke):
     """The literal command a new user types, end to end."""
     res = subprocess.run(
-        [sys.executable, "examples/quickstart.py", SF],
+        [sys.executable, "examples/quickstart.py", sf_smoke],
         cwd=REPO,
         capture_output=True,
         text=True,
@@ -37,14 +37,14 @@ def test_quickstart_runs_as_subprocess():
     "mod_name",
     [
         "ann_serving",
-        "curation_pipeline",
-        "graph_ann_pipeline",
-        "lakehouse_maintenance",
-        "multimodal_retrieval",
+        pytest.param("curation_pipeline", marks=pytest.mark.slow),
+        pytest.param("graph_ann_pipeline", marks=pytest.mark.slow),
+        pytest.param("lakehouse_maintenance", marks=pytest.mark.slow),
+        pytest.param("multimodal_retrieval", marks=pytest.mark.slow),
         "warehouse_analytics",
     ],
 )
-def test_example_main_runs(spark, mod_name, capsys, monkeypatch):
+def test_example_main_runs(spark, sf_smoke, mod_name, capsys, monkeypatch):
     """Each example's main() completes against sf0.001 and prints
     something (get_spark -> getOrCreate reuses the test session, so
     these share one JVM; the subprocess test above covers the real
@@ -59,7 +59,7 @@ def test_example_main_runs(spark, mod_name, capsys, monkeypatch):
     sys.path.insert(0, os.path.join(REPO, "examples"))
     try:
         mod = importlib.import_module(mod_name)
-        assert mod.main(SF) == 0
+        assert mod.main(sf_smoke) == 0
     finally:
         sys.path.pop(0)
     out = capsys.readouterr().out

@@ -6,11 +6,10 @@ import glob
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from kstreamjs_spark.sources import files
 from kstreamjs_spark.tables import load
-
-from .conftest import SF_SMOKE
 
 
 def _data_files(root: str, pattern: str) -> list[str]:
@@ -20,8 +19,8 @@ def _data_files(root: str, pattern: str) -> list[str]:
     ]
 
 
-def test_write_sharded_layout_and_roundtrip(spark, tmp_path):
-    (docs,) = load(spark, SF_SMOKE, "documents")
+def test_write_sharded_layout_and_roundtrip(spark, sf_smoke, tmp_path):
+    (docs,) = load(spark, sf_smoke, "documents")
     out = str(tmp_path / "corpus")
     files.write_sharded(docs, out, partition_by=["lang"], shards=3,
                         key="doc_id")
@@ -41,9 +40,9 @@ def test_write_sharded_layout_and_roundtrip(spark, tmp_path):
     assert a == b
 
 
-def test_partition_pruning_on_sharded_output(spark, tmp_path):
+def test_partition_pruning_on_sharded_output(spark, sf_smoke, tmp_path):
     """The point of partitionBy: a per-lang read lists only that directory."""
-    (docs,) = load(spark, SF_SMOKE, "documents")
+    (docs,) = load(spark, sf_smoke, "documents")
     out = str(tmp_path / "pruned")
     files.write_sharded(docs, out, partition_by=["lang"], shards=2,
                         key="doc_id")
@@ -54,8 +53,8 @@ def test_partition_pruning_on_sharded_output(spark, tmp_path):
     assert "PartitionFilters: [isnotnull(lang" in plan
 
 
-def test_jsonl_roundtrip(spark, tmp_path):
-    (docs,) = load(spark, SF_SMOKE, "documents")
+def test_jsonl_roundtrip(spark, sf_smoke, tmp_path):
+    (docs,) = load(spark, sf_smoke, "documents")
     out = str(tmp_path / "docs_jsonl")
     files.write_jsonl(docs, out, shards=2, compression="gzip")
     assert _data_files(out, "*.json.gz")
@@ -63,8 +62,8 @@ def test_jsonl_roundtrip(spark, tmp_path):
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, docs.collect()))
 
 
-def test_csv_roundtrip_with_schema(spark, tmp_path):
-    (nation,) = load(spark, SF_SMOKE, "nation")
+def test_csv_roundtrip_with_schema(spark, sf_smoke, tmp_path):
+    (nation,) = load(spark, sf_smoke, "nation")
     out = str(tmp_path / "nation_csv")
     nation.coalesce(1).write.mode("overwrite").option("header", True).csv(out)
     back = files.read_csv(spark, out, nation.schema)
@@ -73,6 +72,7 @@ def test_csv_roundtrip_with_schema(spark, tmp_path):
 
 
 # ---------------------------------------- custom Python Data Source
+@pytest.mark.slow
 def test_docgen_datasource_reads_and_is_deterministic(spark):
     """The docgen custom DataSource (Spark 4 Python DataSource API):
     schema-stable, partition-parallel, and bit-reproducible for a fixed

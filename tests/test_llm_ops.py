@@ -8,22 +8,20 @@ import pytest
 
 from kstreamjs_spark.operators import dedup, multimodal, similarity, text
 
-from .conftest import SF_SMOKE
+
+def docs(spark, sf):
+    return spark.read.parquet(f"{sf}/documents.parquet")
 
 
-def docs(spark):
-    return spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+def emb(spark, sf):
+    return spark.read.parquet(f"{sf}/embeddings.parquet")
 
 
-def emb(spark):
-    return spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-
-
-def test_minhash_candidates_cover_exact_neardups(spark):
+def test_minhash_candidates_cover_exact_neardups(spark, sf_smoke):
     """Every exact-Jaccard>=0.7 pair must be recalled by the MinHash LSH
     candidate generation (banding theory: P(candidate) ~ 1 at j=0.7 with
     16 bands x 4 rows)."""
-    d = docs(spark)
+    d = docs(spark, sf_smoke)
     exact = {
         (r["d1"], r["d2"])
         for r in dedup.jaccard_pairs(d, threshold=0.7, partition_col=None).collect()
@@ -35,14 +33,14 @@ def test_minhash_candidates_cover_exact_neardups(spark):
     assert exact <= approx, f"missed: {exact - approx}"
 
 
-def test_minhash_signature_frame_bit_identical(spark):
+def test_minhash_signature_frame_bit_identical(spark, sf_smoke):
     """Round-16 kernel swap: minhash_signature_frame (Arrow-batched
     numpy permutation fold) must be BIT-IDENTICAL to the
     minhash_signature expression fold for every document — the
     equality the kernel's int64 overflow-safety argument promises.
     Covers the empty-shingle edge (docs shorter than n tokens keep the
     fold's init row) by not pre-filtering."""
-    d = docs(spark).select("doc_id", "text")
+    d = docs(spark, sf_smoke).select("doc_id", "text")
     expr = {
         r["doc_id"]: r["sig"]
         for r in d.select(
@@ -132,12 +130,12 @@ def test_wordpiece_vocab_rejects_bad_word_counts_with_value_error(spark):
         text.wordpiece_vocab(None, word_counts=wc)
 
 
-def test_minhash_verified_equals_exact_neardups(spark):
+def test_minhash_verified_equals_exact_neardups(spark, sf_smoke):
     """Exact-verify of LSH candidates: no false positives by construction,
     and at this operating point the bands recall every true >=0.5 pair, so
     the verified set equals the full exact near-dup set — including the
     true (not estimated) jaccard values."""
-    d = docs(spark)
+    d = docs(spark, sf_smoke)
     exact = {
         (r["d1"], r["d2"], r["jaccard"])
         for r in dedup.jaccard_pairs(d, threshold=0.5, partition_col=None).collect()
@@ -182,10 +180,10 @@ def test_max_df_bounds_universal_shingle_bucket(spark):
     assert abs(r["jaccard"] - round(common / (n1 + n2 - common), 6)) < 1e-9
 
 
-def test_simhash_identical_docs_collide(spark):
+def test_simhash_identical_docs_collide(spark, sf_smoke):
     """Identical text must give identical SimHash (hamming 0) regardless of
     doc id."""
-    d = docs(spark).limit(20)
+    d = docs(spark, sf_smoke).limit(20)
     clone = d.withColumn("doc_id", F.col("doc_id") + 1_000_000)
     both = d.unionByName(clone)
     pairs = dedup.simhash_neardup_pairs(both, max_hamming=0).collect()
@@ -194,21 +192,21 @@ def test_simhash_identical_docs_collide(spark):
     assert expected <= found
 
 
-def test_exact_dedup_by_fingerprint(spark):
+def test_exact_dedup_by_fingerprint(spark, sf_smoke):
     """Duplicated corpus -> fingerprint dedup halves it."""
-    d = docs(spark)
+    d = docs(spark, sf_smoke)
     clone = d.withColumn("doc_id", F.col("doc_id") + 1_000_000)
     both = d.unionByName(clone).withColumn("fp", text.fingerprint("text"))
     assert dedup.exact_dedup(both, ["fp"]).count() == d.count()
 
 
-def test_ann_lsh_recall(spark):
+def test_ann_lsh_recall(spark, sf_smoke):
     """LSH ANN must contain the exact top-1 (the query vector itself) and
     achieve reasonable overlap with the exact top-10. The banded path
     (q27b's, r9) carries the strong bar — >=8/10 on this near-uniform
     corpus whose neighbors sit at ~70deg; the single-table Hamming path
     stays available with its weaker documented recall."""
-    e = emb(spark)
+    e = emb(spark, sf_smoke)
     qv = e.filter(F.col("vec_id") == 0).select(
         similarity.as_double(F.col("embedding")).alias("qv")
     )
@@ -224,15 +222,15 @@ def test_ann_lsh_recall(spark):
     assert len(set(exact) & set(approx)) >= 2
 
 
-def test_cosine_matches_numpy(spark):
+def test_cosine_matches_numpy(spark, sf_smoke):
     import numpy as np
 
-    e = emb(spark).limit(2).collect()
+    e = emb(spark, sf_smoke).limit(2).collect()
     a, b = np.array(e[0]["embedding"], dtype=float), np.array(
         e[1]["embedding"], dtype=float
     )
     expected = float(a @ b / (np.linalg.norm(a) * np.linalg.norm(b)))
-    df = emb(spark).limit(2).agg(
+    df = emb(spark, sf_smoke).limit(2).agg(
         F.collect_list(similarity.as_double(F.col("embedding"))).alias("vs")
     ).select(
         similarity.cosine(
@@ -243,14 +241,14 @@ def test_cosine_matches_numpy(spark):
     assert abs(got - expected) < 1e-9
 
 
-def test_langid_deterministic_and_covers(spark):
-    out = docs(spark).select(text.lang_id(text.tokens("text")).alias("l"))
+def test_langid_deterministic_and_covers(spark, sf_smoke):
+    out = docs(spark, sf_smoke).select(text.lang_id(text.tokens("text")).alias("l"))
     vals = {r["l"] for r in out.collect()}
     assert vals <= {"en", "es", "de", "fr", "unknown"}
 
 
-def test_multimodal_decode_stub(spark):
-    d = docs(spark).limit(10)
+def test_multimodal_decode_stub(spark, sf_smoke):
+    d = docs(spark, sf_smoke).limit(10)
     meta = multimodal.decode_blobs(multimodal.with_blob(d)).collect()
     src = {r["doc_id"]: r["text"] for r in d.collect()}
     for r in meta:
@@ -263,10 +261,10 @@ def test_multimodal_decode_stub(spark):
         )
 
 
-def test_ivf_recall(spark):
+def test_ivf_recall(spark, sf_smoke):
     """IVF ANN must contain the exact top-1 (self-match) and overlap the
     exact top-10; probing all cells must reproduce the exact result."""
-    e = emb(spark)
+    e = emb(spark, sf_smoke)
     qv = e.filter(F.col("vec_id") == 0).select(
         similarity.as_double(F.col("embedding")).alias("qv")
     )
@@ -283,11 +281,11 @@ def test_ivf_recall(spark):
     assert full == exact  # probing every cell == brute force
 
 
-def test_binary_file_ingestion_roundtrip(spark, tmp_path):
+def test_binary_file_ingestion_roundtrip(spark, sf_smoke, tmp_path):
     """The real multimodal entry point: blobs written as files, read back
     through spark.read.format('binaryFile'), doc ids parsed from file
     names, content bytes identical to the source text."""
-    d = docs(spark).limit(25)
+    d = docs(spark, sf_smoke).limit(25)
     path = str(tmp_path / "blobs")
     multimodal.write_blob_fixture(d, path)
     back = multimodal.read_blob_files(spark, path)
@@ -298,8 +296,8 @@ def test_binary_file_ingestion_roundtrip(spark, tmp_path):
     assert multimodal.write_blob_fixture(d, path) == path
 
 
-def test_multimodal_resize_stub(spark):
-    d = docs(spark).limit(5)
+def test_multimodal_resize_stub(spark, sf_smoke):
+    d = docs(spark, sf_smoke).limit(5)
     out = multimodal.resize_blobs(multimodal.with_blob(d), 64, 32).collect()
     src = {r["doc_id"]: r["text"].encode() for r in d.collect()}
     for r in out:
@@ -307,8 +305,8 @@ def test_multimodal_resize_stub(spark):
         assert bytes(r["out_bytes"]).rstrip(b"\0") == src[r["doc_id"]][:2048].rstrip(b"\0")
 
 
-def test_multimodal_frame_sample(spark):
-    d = docs(spark).limit(5)
+def test_multimodal_frame_sample(spark, sf_smoke):
+    d = docs(spark, sf_smoke).limit(5)
     rows = multimodal.sample_frames(multimodal.with_blob(d), n_frames=4).collect()
     by_doc = {}
     for r in rows:
@@ -318,16 +316,14 @@ def test_multimodal_frame_sample(spark):
         assert all(f["frame_bytes"] > 0 for f in frames)
 
 
-def test_sketch_rollup_estimate_close_to_exact(spark):
+def test_sketch_rollup_estimate_close_to_exact(spark, sf_smoke):
     """q50: the monthly distinct estimate from unioned daily HLL sketches
     must sit within 5% of the exact distinct count."""
     from kstreamjs_spark.queries import all_queries
-    from .conftest import SF_SMOKE
-
     from kstreamjs_spark.tables import load
 
-    rows = all_queries()["q50_sketch_rollup"].fn(spark, SF_SMOKE).collect()
-    (ev,) = load(spark, SF_SMOKE, "events")
+    rows = all_queries()["q50_sketch_rollup"].fn(spark, sf_smoke).collect()
+    (ev,) = load(spark, sf_smoke, "events")
     exact = {
         r["month"]: r["u"]
         for r in ev.groupBy(
@@ -433,13 +429,13 @@ def test_fuzzy_blocked_recall_substitution_noise(spark):
     assert (0, 99) not in got, got
 
 
-def test_fuzzy_blocked_matches_exact_on_corpus(spark):
+def test_fuzzy_blocked_matches_exact_on_corpus(spark, sf_smoke):
     """On the benchmark corpus the blocked variant (q104b's operator) must
     find exactly the same pair set as the all-pairs exact join at the same
     threshold — no false positives ever (exact verify), and no misses here
     because the planted near-dup noise is substitution-dominated. Also
     pins dist values (both are exact levenshtein over the same prefix)."""
-    d = docs(spark)
+    d = docs(spark, sf_smoke)
     p = d.select(
         "doc_id", "source",
         F.substring(text.normalize_text("text"), 1, 40).alias("pre"),
@@ -641,13 +637,13 @@ def test_fuzzy_pairs_short_prefixes_no_degenerate_bucket(spark):
     assert not others, sorted(others)[:10]
 
 
-def test_ann_lsh_dim_guard_per_row(spark):
+def test_ann_lsh_dim_guard_per_row(spark, sf_smoke):
     """The dim guard lives in the expression path: a wrong-length vector
     ANYWHERE in the table fails loudly (not just row 1, and with no eager
     driver-side probe job re-running the upstream plan)."""
     import pytest
 
-    good = emb(spark).limit(5)
+    good = emb(spark, sf_smoke).limit(5)
     bad = good.withColumn(
         "embedding",
         F.when(F.col("vec_id") == good.select(F.max("vec_id")).collect()[0][0],
@@ -775,13 +771,13 @@ def test_wav_odd_body_pad_byte_spec_compliant():
     assert multimodal.decode_wav(blob) == (len(blob), 1, 22050, 7)
 
 
-def test_ann_lsh_raises_on_wrong_query_dim(spark):
+def test_ann_lsh_raises_on_wrong_query_dim(spark, sf_smoke):
     """The query-side twin of the vectors-side dim guard: a wrong-length
     qv must fail loudly instead of zeroing the signature and returning
     NULL-scored garbage top-k."""
     import pytest
 
-    vecs = emb(spark).limit(5)
+    vecs = emb(spark, sf_smoke).limit(5)
     qv = vecs.limit(1).select(
         F.slice(similarity.as_double(F.col("embedding")), 1, 32).alias("qv")
     )
@@ -1303,13 +1299,13 @@ def test_afp_blobs_robust_ingest(spark):
         multimodal.afp_blobs(df.filter("doc_id = 3")).collect()
 
 
-def test_knn_join_lsh_banded_recall(spark):
+def test_knn_join_lsh_banded_recall(spark, sf_smoke):
     """The banded batch k-NN join must recover >=80% of the exact
     knn_join's (qid, neighbor) pairs on the same 20-query batch — the
     same corpus/operating point the q27b single-query bar uses (measured
     0.82-0.88 across sf0.001/0.01/0.1; APPROX_EVIDENCE records the
     per-sf numbers)."""
-    e = emb(spark)
+    e = emb(spark, sf_smoke)
     queries = e.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("qid"),
         similarity.as_double(F.col("embedding")).alias("qv"),
@@ -1327,6 +1323,7 @@ def test_knn_join_lsh_banded_recall(spark):
     )
 
 
+@pytest.mark.slow
 def test_knn_lsh_band_widening_on_clustered_corpus(spark):
     """The SCALE.md round-10 claim: on a clustered corpus (the geometry
     real embedding corpora have) AND-widening the bands to 8 bits
@@ -1535,14 +1532,15 @@ def test_band_signature_udf_matches_local_reference(spark):
 # --------------------------------- Gram matrix + power-iteration PCA (q172/b)
 
 
-def test_gram_upper_matches_numpy_and_is_partition_invariant(spark):
+@pytest.mark.slow
+def test_gram_upper_matches_numpy_and_is_partition_invariant(spark, sf_smoke):
     """gram_upper's quantize-before-sum cells equal a straight numpy
     reference exactly, and repartitioning the input (different Arrow
     batch boundaries, different partial split) changes NOTHING — the
     int64 quantization makes the sum order-free by construction."""
     import numpy as np
 
-    e = emb(spark)
+    e = emb(spark, sf_smoke)
     X = np.stack(
         e.orderBy("vec_id").toPandas()["embedding"].to_numpy()
     ).astype(np.float64)
@@ -1565,7 +1563,7 @@ def test_gram_upper_matches_numpy_and_is_partition_invariant(spark):
     assert again == got
 
 
-def test_power_iteration_converges_to_leading_eigenvector(spark):
+def test_power_iteration_converges_to_leading_eigenvector(spark, sf_smoke):
     """96 inf-norm power steps recover the true leading eigenvector of
     the real sf-smoke Gram matrix (cos >= 0.99 vs numpy eigh) — and this
     fixture's 1.0x spectral-gap ratio is the SLOW-convergence regime, so
@@ -1574,7 +1572,7 @@ def test_power_iteration_converges_to_leading_eigenvector(spark):
 
     cells = {
         (r["i"], r["j"]): r["cell_q"]
-        for r in similarity.gram_upper(emb(spark)).collect()
+        for r in similarity.gram_upper(emb(spark, sf_smoke)).collect()
     }
     M = np.zeros((64, 64))
     for (i, j), q in cells.items():
@@ -1586,12 +1584,12 @@ def test_power_iteration_converges_to_leading_eigenvector(spark):
     assert abs(float(v @ top)) >= 0.99
 
 
-def test_project_quantized_matches_python_mirror(spark):
+def test_project_quantized_matches_python_mirror(spark, sf_smoke):
     """The codegen quantized projection fold equals the per-row Python
     mirror exactly (same floor-per-term idiom the oracle uses)."""
     import math
 
-    e = emb(spark)
+    e = emb(spark, sf_smoke)
     d = [((k * 37) % 19 - 9) / 10.0 for k in range(64)]
     got = {
         r["vec_id"]: r["pc_q"]
@@ -1637,7 +1635,7 @@ def test_zvalue_matches_python_morton_mirror(spark):
         assert got[(x, y)] == morton(x, y), (x, y)
 
 
-def test_zorder_buckets_bound_both_dims(spark):
+def test_zorder_buckets_bound_both_dims(spark, sf_smoke):
     """The layout claim, measured: bucketing the Morton curve bounds
     BOTH quantized dimensions (small avg per-bucket range in x AND y),
     while bucketing an x-sort at the SAME bucket count bounds only x —
@@ -1646,7 +1644,7 @@ def test_zorder_buckets_bound_both_dims(spark):
     ZORDER."""
     from kstreamjs_spark.operators import layout
 
-    orders = spark.read.parquet(f"{SF_SMOKE}/orders.parquet")
+    orders = spark.read.parquet(f"{sf_smoke}/orders.parquet")
     x = layout.quantize16(F.col("o_custkey"))
     y = layout.quantize16(F.floor(F.col("o_totalprice")))
     proj = orders.select(
@@ -1711,11 +1709,11 @@ def test_mjpeg_frame_decode_equals_standalone_jpeg():
     assert multimodal.decode_mjpeg_frame(b"\x00garbage", 0) is None
 
 
-def test_mjpeg_phash_separates_groups(spark):
+def test_mjpeg_phash_separates_groups(spark, sf_smoke):
     """The q174 invariant, measured: same-group videos hash identically
     (hamming 0) and the minimum CROSS-group pHash distance stays far
     beyond the <=3 join cut."""
-    d = docs(spark).limit(60)
+    d = docs(spark, sf_smoke).limit(60)
     hashed = multimodal.mjpeg_phash_blobs(
         multimodal.synth_mjpeg_blobs(d)
     ).collect()
@@ -2197,6 +2195,7 @@ def test_gif_frame_composition_and_strictness():
     assert px2 is not None and (px2 == px).all()
 
 
+@pytest.mark.slow
 def test_kll_quantiles_bound_mergeability_determinism(spark):
     """q181's contracts, the q180 pattern transposed to ranks:
     (1) BOUND — for every reported quantile, the estimate's true rank
@@ -2303,7 +2302,7 @@ def test_hamming_pairs_combination_scheme_exact_vs_bruteforce(spark):
         dedup.hamming_neardup_pairs(df, max_hamming=7)
 
 
-def test_simhash_radius6_recalls_all_fixture_neardups(spark):
+def test_simhash_radius6_recalls_all_fixture_neardups(spark, sf_smoke):
     """q26c's recall floor, closed (the r9/r10 verdicts' 0.6-recall
     watch item): every exact-Jaccard>=0.5 pair whose SimHash distance
     is ACTUALLY within the radius must be recalled — the operator may
@@ -2313,7 +2312,7 @@ def test_simhash_radius6_recalls_all_fixture_neardups(spark):
     limit, unreachable at ANY blocking radius), and those must be the
     ONLY misses. On the evidence corpus (sf0.01, distances <= 5) this
     means recall 1.0 — APPROX_EVIDENCE.json."""
-    d = docs(spark)
+    d = docs(spark, sf_smoke)
     exact = {
         (r["d1"], r["d2"])
         for r in dedup.jaccard_pairs(
@@ -2598,12 +2597,12 @@ def test_apng_anim_phash_separates_groups_and_middle_frame_matters(spark):
     assert alt != h[0][1]
 
 
-def test_pq_topk_recall_and_rank1(spark):
+def test_pq_topk_recall_and_rank1(spark, sf_smoke):
     """PQ/ADC with exact rerank at q191's operating point (m=16,
     rerank=8) must contain the self-match at rank 1 and overlap the
     exact top-10 by >= 8 on the near-uniform worst-case corpus —
     the bar the banded-LSH and IVF paths carry."""
-    e = emb(spark)
+    e = emb(spark, sf_smoke)
     qv = e.filter(F.col("vec_id") == 0).select(
         similarity.as_double(F.col("embedding")).alias("qv")
     )
@@ -2616,11 +2615,11 @@ def test_pq_topk_recall_and_rank1(spark):
     assert len(set(exact) & set(approx)) >= 8
 
 
-def test_pq_encode_shape_and_determinism(spark):
+def test_pq_encode_shape_and_determinism(spark, sf_smoke):
     """Codes carry m entries in [0, n_cent); encoding the same table
     twice with the same codebooks is bit-identical (deterministic
     training + argmin tie-break toward the lower index)."""
-    e = emb(spark).limit(64)
+    e = emb(spark, sf_smoke).limit(64)
     books = similarity.pq_codebooks(e, m=8, n_cent=16)
     assert len(books) == 8 and all(len(b) == 16 for b in books)
     assert all(len(c) == 8 for b in books for c in b)
@@ -2634,14 +2633,14 @@ def test_pq_encode_shape_and_determinism(spark):
         assert all(0 <= c < 16 for c in r["codes"])
 
 
-def test_pq_adc_approximates_cosine(spark):
+def test_pq_adc_approximates_cosine(spark, sf_smoke):
     """The ADC score (sum of LUT lookups on the normalized query) must
     track true cosine: mean |adc - cosine| under 0.1 over the corpus —
     the quantization-error contract that makes the rerank window
     meaningful. Computed via the same codebooks/encoding pq_topk uses."""
     import numpy as np
 
-    e = emb(spark)
+    e = emb(spark, sf_smoke)
     rows = e.collect()
     X = np.array([r["embedding"] for r in rows], dtype=np.float64)
     q = X[0] / np.linalg.norm(X[0])
@@ -2665,12 +2664,12 @@ def test_pq_adc_approximates_cosine(spark):
     assert float(np.mean(errs)) < 0.1
 
 
-def test_pq_guards(spark):
+def test_pq_guards(spark, sf_smoke):
     """m must divide dim; wrong-length vectors fail loudly at encode;
     a multi-row query frame is rejected."""
     import pytest as _pytest
 
-    e = emb(spark)
+    e = emb(spark, sf_smoke)
     with _pytest.raises(ValueError, match="must divide"):
         similarity.pq_codebooks(e, m=7)
     books = similarity.pq_codebooks(e, m=8)
@@ -2726,12 +2725,13 @@ def test_kmv_guards(spark):
     assert kmv_distinct(df.filter("v < 0"), "v", k=64) == (0, 0)
 
 
-def test_ivfpq_recall_and_all_probe_identity(spark):
+@pytest.mark.slow
+def test_ivfpq_recall_and_all_probe_identity(spark, sf_smoke):
     """IVFADC at q194's operating point must contain the self-match at
     rank 1 and overlap the exact top-10 by >= 8; probing ALL cells must
     reproduce the PQ-only result exactly (the cell filter is the only
     difference by construction)."""
-    e = emb(spark)
+    e = emb(spark, sf_smoke)
     qv = e.filter(F.col("vec_id") == 0).select(
         similarity.as_double(F.col("embedding")).alias("qv")
     )
@@ -2750,6 +2750,7 @@ def test_ivfpq_recall_and_all_probe_identity(spark):
     assert full == pq
 
 
+@pytest.mark.slow
 def test_kmv_set_relations_exact_and_estimator(spark):
     """sketch.kmv_set_relations contracts: EXACT (every field) when the
     union fits in k; in the estimator regime each relation estimate
@@ -2781,6 +2782,7 @@ def test_kmv_set_relations_exact_and_estimator(spark):
     assert abs(rel["est_jaccard"] - 0.5) < tol
 
 
+@pytest.mark.slow
 def test_kmv_null_semantics_documented(spark):
     """KMV counts NULL as one distinct value (xxhash64(NULL) is the
     seed constant) — unlike countDistinct, which excludes NULLs. The
@@ -2984,7 +2986,10 @@ def test_gopher_repetition_short_docs_no_crash(spark):
     assert got == want, (got, want)
 
 
-def test_lakehouse_zorder_write_skips_files_on_y_band(spark, tmp_path):
+@pytest.mark.slow
+def test_lakehouse_zorder_write_skips_files_on_y_band(
+    spark, sf_smoke, tmp_path
+):
     """The WRITE path's data-skipping contract, measured on real
     parquet footers (round 13, q211): write the z-partitioned layout
     and an x-sorted layout at comparable file counts with the
@@ -2999,7 +3004,7 @@ def test_lakehouse_zorder_write_skips_files_on_y_band(spark, tmp_path):
 
     from kstreamjs_spark.operators import layout
 
-    orders = spark.read.parquet(f"{SF_SMOKE}/orders.parquet")
+    orders = spark.read.parquet(f"{sf_smoke}/orders.parquet")
     x = layout.quantize16(F.col("o_custkey"))
     y = layout.quantize16(F.floor(F.col("o_totalprice")))
     proj = orders.select("o_orderkey", x.alias("x16"), y.alias("y16"))
@@ -3062,7 +3067,8 @@ def test_lakehouse_zorder_write_skips_files_on_y_band(spark, tmp_path):
     assert band_from_hits == band_full > 0
 
 
-def test_q94_manifest_matches_written_shard_files(spark, tmp_path):
+@pytest.mark.slow
+def test_q94_manifest_matches_written_shard_files(spark, sf_smoke, tmp_path):
     """q94's manifest is the plan for `write.partitionBy(shard)`; round
     13 closes the loop: actually write the sharded layout, recompute
     the manifest FROM THE WRITTEN FILES (per-directory row/char totals
@@ -3071,7 +3077,7 @@ def test_q94_manifest_matches_written_shard_files(spark, tmp_path):
     from kstreamjs_spark.queries import all_queries
     from kstreamjs_spark.queries.pipeline import _SHARD_N, _SHARD_SEED
 
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_smoke}/documents.parquet")
     out = str(tmp_path / "shards")
     shard = (
         sampling.hash_bucket("doc_id", _SHARD_SEED) % F.lit(_SHARD_N)
@@ -3096,12 +3102,13 @@ def test_q94_manifest_matches_written_shard_files(spark, tmp_path):
     manifest = {
         tuple(r)
         for r in all_queries()["q94_shard_manifest"]
-        .fn(spark, SF_SMOKE).collect()
+        .fn(spark, sf_smoke).collect()
     }
     assert from_files == manifest
 
 
-def test_unigram_lm_train_equals_pure_python_mirror(spark):
+@pytest.mark.slow
+def test_unigram_lm_train_equals_pure_python_mirror(spark, sf_smoke):
     """q212's hard contract: the distributed Viterbi-EM (word-count
     table + broadcast vocab + Arrow E-step) reproduces the pure-Python
     single-process mirror EXACTLY — same final vocabulary, same
@@ -3121,7 +3128,7 @@ def test_unigram_lm_train_equals_pure_python_mirror(spark):
         for w, c in con.execute(
             f"""SELECT word, COUNT(*) FROM (
                   SELECT unnest(string_split(text, ' ')) AS word
-                  FROM '{SF_SMOKE}/documents.parquet')
+                  FROM '{sf_smoke}/documents.parquet')
                 WHERE len(word) BETWEEN 1 AND {_UNI_MAX_WORD}
                 GROUP BY word"""
         ).fetchall()
@@ -3133,14 +3140,14 @@ def test_unigram_lm_train_equals_pure_python_mirror(spark):
     got = {
         (r["word"], r["word_count"], r["n_pieces"], r["segmentation"])
         for r in all_queries()["q212_unigram_lm_train"]
-        .fn(spark, SF_SMOKE).collect()
+        .fn(spark, sf_smoke).collect()
     }
     assert got == expected
     # the vocabulary must be bounded (the broadcast-artifact policy)
     assert len(_vocab) <= 96
 
 
-def test_stream_unigram_tokenize_equals_mirror(spark):
+def test_stream_unigram_tokenize_equals_mirror(spark, sf_smoke):
     """q212b's hard contract: streamed per-doc piece counts under the
     batch-trained final vocabulary equal the pure-Python mirror (train
     with _unigram_mirror, score the final vocab, Viterbi every word)."""
@@ -3160,7 +3167,7 @@ def test_stream_unigram_tokenize_equals_mirror(spark):
         for w, c in con.execute(
             f"""SELECT word, COUNT(*) FROM (
                   SELECT unnest(string_split(text, ' ')) AS word
-                  FROM '{SF_SMOKE}/documents.parquet')
+                  FROM '{sf_smoke}/documents.parquet')
                 WHERE len(word) BETWEEN 1 AND {_UNI_MAX_WORD}
                 GROUP BY word"""
         ).fetchall()
@@ -3169,7 +3176,7 @@ def test_stream_unigram_tokenize_equals_mirror(spark):
     score = _unigram_scores(vocab)
     expected = {}
     for doc_id, text in con.execute(
-        f"SELECT doc_id, text FROM '{SF_SMOKE}/documents.parquet'"
+        f"SELECT doc_id, text FROM '{sf_smoke}/documents.parquet'"
     ).fetchall():
         ws = text.split(" ")
         expected[doc_id] = (
@@ -3179,7 +3186,7 @@ def test_stream_unigram_tokenize_equals_mirror(spark):
     got = {
         r["doc_id"]: (r["n_pieces"], r["n_words"])
         for r in all_queries()["q212b_stream_unigram_tokenize"]
-        .fn(spark, SF_SMOKE).collect()
+        .fn(spark, sf_smoke).collect()
     }
     assert got == expected
 
@@ -3305,7 +3312,7 @@ def _planted_neardup_fixture(
     return df, truth
 
 
-def test_cosine_neardup_lsh_production_regime_recall(spark):
+def test_cosine_neardup_lsh_production_regime_recall(spark, sf_smoke):
     """The r13 verdict's ask: the docstring's band_bits=16 /
     0.9-threshold operating point claimed ~0.99 recall ANALYTICALLY —
     measure it. Planted pairs at exact cosines 0.92-0.99 (the regime a
@@ -3317,7 +3324,7 @@ def test_cosine_neardup_lsh_production_regime_recall(spark):
         cosine_neardup_pairs_lsh,
     )
 
-    df, truth = _planted_neardup_fixture(spark, SF_SMOKE)
+    df, truth = _planted_neardup_fixture(spark, sf_smoke)
     got = {
         (r["v1"], r["v2"])
         for r in cosine_neardup_pairs_lsh(
@@ -3349,6 +3356,7 @@ def test_cosine_neardup_lsh_production_regime_recall(spark):
         )
 
 
+@pytest.mark.slow
 def test_compact_partitions_prunes_and_preserves(spark, tmp_path):
     """q215's compaction contract, pinned adversarially: a table with
     one MULTI-FILE partition and one SINGLE-FILE partition is
@@ -3395,6 +3403,7 @@ def test_compact_partitions_prunes_and_preserves(spark, tmp_path):
     assert compact_partitions(spark, root, "p", max_files=1) == []
 
 
+@pytest.mark.slow
 def test_compact_partitions_recovers_crash_between_swap_renames(
     spark, tmp_path
 ):
@@ -3599,7 +3608,7 @@ def test_nn_descent_rejects_sparse_ids(spark):
         similarity.nn_descent(dup, k=1, iters=1)
 
 
-def test_nn_descent_shipped_config_recall_gate(spark):
+def test_nn_descent_shipped_config_recall_gate(spark, sf_smoke):
     """The r14 verdict's q218 'Done' gate: graph recall vs the exact
     all-pairs k-NN graph >= 0.9 with the SHIPPED q218 configuration
     (k=20, iters=8 — k=5 measured 0.16, the starved regime the
@@ -3608,7 +3617,7 @@ def test_nn_descent_shipped_config_recall_gate(spark):
     APPROX_EVIDENCE records the same measurement at sf0.01 and sf0.1."""
     from kstreamjs_spark.queries.pipeline import _Q218_ITERS, _Q218_K
 
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    emb = spark.read.parquet(f"{sf_smoke}/embeddings.parquet")
     qall = emb.select(
         F.col("vec_id").alias("qid"),
         similarity.as_double(F.col("embedding")).alias("qv"),
@@ -3627,7 +3636,7 @@ def test_nn_descent_shipped_config_recall_gate(spark):
     assert recall >= 0.9, recall
 
 
-def _tie_aware_search_recall(emb, nq, k, beam, hops, n_entries):
+def _tie_aware_search_recall(emb, nq, k, beam, hops, n_entries, sf_smoke):
     """Search recall where a hit is a kept item whose rounded score >=
     the exact k-th rounded score (id-set recall double-counts rounding
     ties: in the clustered regime the 10th/11th items round identically
@@ -3652,6 +3661,7 @@ def _tie_aware_search_recall(emb, nq, k, beam, hops, n_entries):
     return hits / (nq * k)
 
 
+@pytest.mark.slow
 def test_graph_ann_search_on_planted_manifold(spark):
     """q219's beam walk on the q218 planted manifold: 4 orthogonal
     cluster centers, 12 members each. Pins (a) every kept neighbor is
@@ -3698,7 +3708,8 @@ def test_graph_ann_search_on_planted_manifold(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_graph_ann_shipped_config_recall_gate(spark):
+@pytest.mark.slow
+def test_graph_ann_shipped_config_recall_gate(spark, sf_smoke):
     """q219's 'Done' gate: tie-aware search recall >= 0.9 with the
     SHIPPED knobs (beam=16, hops=4, entries=4 — beam=12/hops=3
     measured 0.84 at sf0.1, the sweep APPROX_EVIDENCE documents) on
@@ -3712,7 +3723,7 @@ def test_graph_ann_shipped_config_recall_gate(spark):
         _Q219_NQ,
     )
 
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    emb = spark.read.parquet(f"{sf_smoke}/embeddings.parquet")
     recall = _tie_aware_search_recall(
         emb, _Q219_NQ, _Q219_K, _Q219_BEAM, _Q219_HOPS, _Q219_ENTRIES
     )
@@ -3858,9 +3869,7 @@ def test_perceptron_train_separates_planted_corpus(spark, tmp_path):
     assert m_en > 0 and m_de < 0, (m_en, m_de)
 
 
-def test_perceptron_nonseparable_corpus_oscillates_bounded(
-    spark, tmp_path
-):
+def test_perceptron_nonseparable_corpus_oscillates_bounded(spark, tmp_path):
     """q223 on a NON-separable corpus (round-16 verdict ask): every
     doc has IDENTICAL text, labels 3 'en' vs 2 'de' — no weight
     vector separates them, the classic perceptron-cycling regime.
@@ -3904,7 +3913,8 @@ def test_perceptron_nonseparable_corpus_oscillates_bounded(
     assert all(abs(v) <= 5 * total_tokens for v in w.values())
 
 
-def test_graph_ann_filtered_search_gate(spark):
+@pytest.mark.slow
+def test_graph_ann_filtered_search_gate(spark, sf_smoke):
     """q219c's 'Done' gate: tie-aware FILTERED recall >= 0.9 on the
     smoke corpus with the shipped oversearch knobs (beam=48 ~
     k/selectivity; q219's unfiltered beam=16 measures 0.71 at sf0.1 —
@@ -3921,7 +3931,7 @@ def test_graph_ann_filtered_search_gate(spark):
         _Q219_NQ,
     )
 
-    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    emb = spark.read.parquet(f"{sf_smoke}/embeddings.parquet")
     qs = emb.filter(F.col("vec_id") < _Q219_NQ).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )
@@ -4060,6 +4070,7 @@ def test_hilbert_beats_zorder_on_range_contiguity():
     assert total_h < total_z, (total_h, total_z)
 
 
+@pytest.mark.slow
 def test_cluster_safe_split_no_neardup_leakage(spark):
     """q228's contract on a planted duplicate-heavy manifold: 4
     orthogonal clusters of 12 near-identical members. Pins (a) ZERO
@@ -4230,7 +4241,7 @@ def test_weighted_jaccard_catches_what_set_jaccard_misses(spark, tmp_path):
     assert (0, 1) not in got, got
 
 
-def test_weighted_minhash_recall_gate(spark):
+def test_weighted_minhash_recall_gate(spark, sf_smoke):
     """q232's 'Done' gate on the smoke corpus: recall >= 0.9 vs the
     exact q231 pair set AND zero unverified extras (precision 1.0 by
     construction — every candidate is exact-verified; an extra would
@@ -4238,7 +4249,7 @@ def test_weighted_minhash_recall_gate(spark):
     from kstreamjs_spark.queries import all_queries
 
     q = all_queries()
-    sfd = SF_SMOKE
+    sfd = sf_smoke
     ex = {
         (r["d1"], r["d2"])
         for r in q["q231_weighted_jaccard_neardup"].fn(spark, sfd).collect()

@@ -6,54 +6,56 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
 from kstreamjs_spark.plans import assert_in_plan, assert_not_in_plan, pushed_filters
 from kstreamjs_spark.queries import all_queries
-
-from .conftest import SF_SMOKE
 
 SPECS = all_queries()
 
 
-def q(name, spark):
-    return SPECS[name].fn(spark, SF_SMOKE)
+@pytest.fixture
+def q(spark, sf_smoke):
+    """Builds a registered query's frame over the sf0.001 fixtures."""
+    return lambda name: SPECS[name].fn(spark, sf_smoke)
 
 
-def test_filter_pushdown_reaches_scan(spark):
-    pf = pushed_filters(q("q03_filter_purchases", spark))
+def test_filter_pushdown_reaches_scan(q):
+    pf = pushed_filters(q("q03_filter_purchases"))
     assert "event_type" in pf and "value" in pf
 
 
-def test_projection_prunes_columns(spark):
+def test_projection_prunes_columns(q):
     # q02 projects 4 of 11 lineitem columns; the scan must not read the rest
-    assert_not_in_plan(q("q02_project_revenue", spark), "l_shipdate", "l_comment")
+    assert_not_in_plan(q("q02_project_revenue"), "l_shipdate", "l_comment")
 
 
-def test_join_broadcasts_small_dim(spark):
-    assert_in_plan(q("q09_revenue_by_nation", spark), "BroadcastHashJoin")
+def test_join_broadcasts_small_dim(q):
+    assert_in_plan(q("q09_revenue_by_nation"), "BroadcastHashJoin")
 
 
-def test_topk_avoids_global_sort(spark):
-    assert_in_plan(q("q14_top10_orders", spark), "TakeOrderedAndProject")
+def test_topk_avoids_global_sort(q):
+    assert_in_plan(q("q14_top10_orders"), "TakeOrderedAndProject")
 
 
-def test_rank_pushdown(spark):
-    assert_in_plan(q("q12_top3_orders_per_customer", spark), "WindowGroupLimit")
+def test_rank_pushdown(q):
+    assert_in_plan(q("q12_top3_orders_per_customer"), "WindowGroupLimit")
 
 
-def test_agg_is_partial_then_final(spark):
-    assert_in_plan(q("q07_pricing_summary", spark), "HashAggregate")
+def test_agg_is_partial_then_final(q):
+    assert_in_plan(q("q07_pricing_summary"), "HashAggregate")
 
 
-def test_codegen_covers_scan_pipeline(spark):
+def test_codegen_covers_scan_pipeline(q):
     from kstreamjs_spark.plans import explain_str
 
-    plan = explain_str(q("q07_pricing_summary", spark), mode="codegen")
+    plan = explain_str(q("q07_pricing_summary"), mode="codegen")
     assert "WholeStageCodegen" in plan
 
 
-def test_asof_join_single_shuffle_no_range_explosion(spark):
+def test_asof_join_single_shuffle_no_range_explosion(q):
     plan = __import__("kstreamjs_spark.plans", fromlist=["explain_str"]).explain_str(
-        q("q39_asof_join", spark)
+        q("q39_asof_join")
     )
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -62,39 +64,39 @@ def test_asof_join_single_shuffle_no_range_explosion(spark):
     assert "Window" in plan
 
 
-def test_neardup_joins_are_equi_not_cross(spark):
+def test_neardup_joins_are_equi_not_cross(q):
     for name in ("q26_jaccard_neardup", "q26b_minhash_neardup",
                  "q26c_simhash_neardup"):
         plan = __import__("kstreamjs_spark.plans", fromlist=["explain_str"]).explain_str(
-            q(name, spark)
+            q(name)
         )
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
 
 
-def test_unpivot_plans_single_expand(spark):
+def test_unpivot_plans_single_expand(q):
     from kstreamjs_spark.plans import explain_str
 
-    plan = explain_str(q("q45_unpivot", spark), mode="simple")
+    plan = explain_str(q("q45_unpivot"), mode="simple")
     assert "Expand" in plan
     assert plan.count("FileScan parquet") == 1  # one scan, not one per measure
 
 
-def test_pivot_plans_single_aggregate_pass(spark):
+def test_pivot_plans_single_aggregate_pass(q):
     from kstreamjs_spark.plans import explain_str
 
-    plan = explain_str(q("q38_pivot", spark), mode="simple")
+    plan = explain_str(q("q38_pivot"), mode="simple")
     assert plan.count("FileScan parquet") == 1
 
 
-def test_bucketed_join_needs_no_exchange(spark, tmp_path):
+def test_bucketed_join_needs_no_exchange(spark, sf_smoke, tmp_path):
     """The SCALE.md claim for recurring fact-to-fact joins: bucketing both
     tables on the join key at write time removes the join shuffle entirely.
     (Broadcast disabled to force the sort-merge path a 100 TB join takes.)"""
     from kstreamjs_spark.plans import explain_str
     from kstreamjs_spark.tables import load
 
-    orders, lineitem = load(spark, SF_SMOKE, "orders", "lineitem")
+    orders, lineitem = load(spark, sf_smoke, "orders", "lineitem")
     spark.sql("DROP TABLE IF EXISTS b_orders")
     spark.sql("DROP TABLE IF EXISTS b_lineitem")
     (orders.write.bucketBy(4, "o_orderkey").sortBy("o_orderkey")
@@ -121,15 +123,17 @@ def test_bucketed_join_needs_no_exchange(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
-def test_range_join_is_equi_not_nested_loop(spark):
+def test_range_join_is_equi_not_nested_loop(q):
     from kstreamjs_spark.plans import explain_str
 
-    plan = explain_str(q("q43_range_join", spark), mode="simple")
+    plan = explain_str(q("q43_range_join"), mode="simple")
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
 
 
-def test_partitioned_ivf_layout_prunes_at_file_level(spark, tmp_path):
+def test_partitioned_ivf_layout_prunes_at_file_level(
+    spark, sf_smoke, tmp_path
+):
     """The SCALE.md IVF claim: materializing inverted lists as a table
     partitioned by cell id means an n_probe query reads only the probed
     cells' files — partition pruning, not a post-scan filter."""
@@ -138,7 +142,7 @@ def test_partitioned_ivf_layout_prunes_at_file_level(spark, tmp_path):
     from kstreamjs_spark.plans import explain_str
     from kstreamjs_spark.tables import load
 
-    (emb,) = load(spark, SF_SMOKE, "embeddings")
+    (emb,) = load(spark, sf_smoke, "embeddings")
     path = str(tmp_path / "ivf")
     # cheap stand-in cell assignment (real one: similarity.ivf_topk);
     # the layout property under test is identical
@@ -154,29 +158,29 @@ def test_partitioned_ivf_layout_prunes_at_file_level(spark, tmp_path):
     assert probed.count() == emb.filter((F.col("vec_id") % 8).isin(2, 5)).count()
 
 
-def test_hypertable_rollup_scans_raw_once(spark):
+def test_hypertable_rollup_scans_raw_once(q):
     """Three resolutions, ONE raw scan at execution: the static plan prints
     the minute subtree under every union branch, but AQE's exchange reuse
     dedupes them — the executed plan must carry ReusedExchange nodes for
     the hour and day branches (the oracle's UNION ALL really does scan
     three times; ours must not)."""
-    df = q("q49_hypertable_rollup", spark)
+    df = q("q49_hypertable_rollup")
     df.collect()
     executed = df._jdf.queryExecution().executedPlan().toString()
     assert executed.count("ReusedExchange") >= 2, executed
 
 
-def test_sessionize_single_data_shuffle(spark):
+def test_sessionize_single_data_shuffle(q):
     """q55: one user_id hash shuffle serves both window passes AND the
     session rollup (user_id clustering satisfies the (user_id,
     session_seq) distribution) — and since the round-5 removal of the
     presentation ORDER BY it is the ONLY exchange in the plan."""
-    plan = q("q55_sessionize", spark)._jdf.queryExecution().executedPlan().toString()
+    plan = q("q55_sessionize")._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert plan.count("Exchange") == 1, plan
 
 
-def test_runtime_bloom_filter_prunes_fact_scan(spark):
+def test_runtime_bloom_filter_prunes_fact_scan(spark, sf_smoke):
     """Runtime row-level filtering: a selective dim-side predicate injects
     a bloom filter (`might_contain`) onto the fact scan side of a
     shuffle join, so fact rows failing the dim filter die before the
@@ -201,7 +205,7 @@ def test_runtime_bloom_filter_prunes_fact_scan(spark):
             "0",
         )
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force SMJ
-        orders, customer = load(spark, SF_SMOKE, "orders", "customer")
+        orders, customer = load(spark, sf_smoke, "orders", "customer")
         sel = customer.filter(F.col("c_mktsegment") == "BUILDING")
         j = orders.join(sel, orders.o_custkey == sel.c_custkey).select("o_orderkey")
         plan = j._jdf.queryExecution().optimizedPlan().toString()
@@ -214,22 +218,22 @@ def test_runtime_bloom_filter_prunes_fact_scan(spark):
                 spark.conf.set(k, v)
 
 
-def test_knn_join_rank_pushdown_no_full_shuffle(spark):
+def test_knn_join_rank_pushdown_no_full_shuffle(q):
     """q58: the per-query top-k must plan WindowGroupLimit (partial limit
     before the shuffle) and the scored cross product must reach it via a
     broadcast, not a shuffle of the vector table."""
-    plan = q("q58_knn_join", spark)._jdf.queryExecution().executedPlan().toString()
+    plan = q("q58_knn_join")._jdf.queryExecution().executedPlan().toString()
     assert "WindowGroupLimit" in plan, plan
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan, plan
 
 
-def test_incremental_dedup_anti_join_broadcastable(spark):
+def test_incremental_dedup_anti_join_broadcastable(q):
     """q57: the corpus side must reduce to distinct fingerprints BEFORE the
     anti-join (aggregate below the join input) and the join must stay a
     left-anti hash join — at scale the fingerprint set, not the corpus,
     is what ships to the join."""
     plan = (
-        q("q57_incremental_ingest_dedup", spark)
+        q("q57_incremental_ingest_dedup")
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "LeftAnti" in plan, plan
@@ -278,84 +282,84 @@ def test_aqe_splits_skewed_join_partition(spark):
                 spark.conf.set(k, v)
 
 
-def test_quota_sample_rank_pushdown(spark):
+def test_quota_sample_rank_pushdown(q):
     """q67: the per-stratum quota must plan WindowGroupLimit — each task
     keeps only its top-K per stratum before the shuffle, so the corpus
     never fully sorts."""
-    plan = q("q67_quota_sample", spark)._jdf.queryExecution().executedPlan().toString()
+    plan = q("q67_quota_sample")._jdf.queryExecution().executedPlan().toString()
     assert "WindowGroupLimit" in plan, plan
 
 
-def test_bigram_pmi_topk_and_no_cross_join(spark):
+def test_bigram_pmi_topk_and_no_cross_join(q):
     """q68: top-20 via TakeOrderedAndProject (no global sort); the only
     nested-loop joins are the two broadcast 1-row scalar totals."""
     from kstreamjs_spark.plans import explain_str
 
-    plan = explain_str(q("q68_bigram_pmi", spark), mode="simple")
+    plan = explain_str(q("q68_bigram_pmi"), mode="simple")
     assert "TakeOrderedAndProject" in plan, plan
     assert "CartesianProduct" not in plan, plan
 
 
-def test_funnel_single_shuffle_no_joins(spark):
+def test_funnel_single_shuffle_no_joins(q):
     """q93: the whole funnel is one user_id aggregation — the min-chain is
     array expressions, so the plan must contain NO join of any kind and
     exactly one hash exchange (the second exchange is the global
     SinglePartition count rollup, which moves 4 longs)."""
-    plan = q("q93_event_funnel", spark)._jdf.queryExecution().executedPlan().toString()
+    plan = q("q93_event_funnel")._jdf.queryExecution().executedPlan().toString()
     for node in ("Join", "CartesianProduct"):
         assert node not in plan, plan
     assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
-def test_containment_join_is_equi_not_cross(spark):
+def test_containment_join_is_equi_not_cross(q):
     """q90 shares q26's candidate machinery, so it must inherit the same
     no-cross-join guarantee."""
     from kstreamjs_spark.plans import explain_str
 
-    plan = explain_str(q("q90_containment_pairs", spark))
+    plan = explain_str(q("q90_containment_pairs"))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_cluster_balance_rank_pushdown(spark):
+def test_cluster_balance_rank_pushdown(q):
     """q91: the per-cluster quota trim must plan WindowGroupLimit — each
     task keeps <=M rows per cid before the exchange."""
-    assert_in_plan(q("q91_cluster_balanced_sample", spark), "WindowGroupLimit")
+    assert_in_plan(q("q91_cluster_balanced_sample"), "WindowGroupLimit")
 
 
-def test_outlier_topk_avoids_global_sort(spark):
+def test_outlier_topk_avoids_global_sort(q):
     """q92: bottom-20 by centroid cosine is TakeOrderedAndProject (k-row
     per-partition heaps), never a global sort."""
-    assert_in_plan(q("q92_embedding_outliers", spark), "TakeOrderedAndProject")
-    assert_not_in_plan(q("q92_embedding_outliers", spark), "CartesianProduct")
+    assert_in_plan(q("q92_embedding_outliers"), "TakeOrderedAndProject")
+    assert_not_in_plan(q("q92_embedding_outliers"), "CartesianProduct")
 
 
-def test_length_trim_thresholds_broadcast(spark):
+def test_length_trim_thresholds_broadcast(q):
     """q88: the per-lang percentile thresholds join back to the document
     scan as broadcasts — the corpus side must not shuffle for them."""
     from kstreamjs_spark.plans import explain_str
 
-    plan = explain_str(q("q88_length_trim", spark))
+    plan = explain_str(q("q88_length_trim"))
     assert plan.count("BroadcastHashJoin") >= 2, plan
 
 
-def test_bigram_lm_no_cartesian(spark):
+def test_bigram_lm_no_cartesian(q):
     """q86: the V scalar joins as a 1-row broadcast; the count-table joins
     are equi-joins on the token key — nothing may plan cartesian."""
     from kstreamjs_spark.plans import explain_str
 
-    plan = explain_str(q("q86_bigram_lm_score", spark))
+    plan = explain_str(q("q86_bigram_lm_score"))
     assert "CartesianProduct" not in plan, plan
 
 
-def test_gap_percentiles_single_window_no_joins(spark):
+def test_gap_percentiles_single_window_no_joins(q):
     """q103 uses the histogram-percentile operator: cumulative count and
     group total come from ONE Window node over the (type, gap) histogram
     and every percentile extracts in one conditional aggregate — zero
     joins, and the gap stream is never reshuffled."""
     from kstreamjs_spark.plans import explain_str
 
-    plan = explain_str(q("q103_gap_percentiles", spark), mode="simple")
+    plan = explain_str(q("q103_gap_percentiles"), mode="simple")
     assert "Join" not in plan, plan
     # lag window + (cumulative, total) over the histogram — the latter
     # two share one event_type exchange
@@ -365,20 +369,20 @@ def test_gap_percentiles_single_window_no_joins(spark):
     assert plan.count("hashpartitioning(event_type") == 2, plan
 
 
-def test_fuzzy_pairs_no_cartesian(spark):
+def test_fuzzy_pairs_no_cartesian(q):
     """q104 (exact oracle variant): the all-pairs-within-source join is an
     equi-join on source, never a cartesian, and no longer forces a
     broadcast hint (ADVICE r5: a forced F.broadcast of the full corpus
     side OOMs past the 8 GB limit instead of degrading to shuffle)."""
     from kstreamjs_spark.plans import explain_str
 
-    df = q("q104_fuzzy_prefix_pairs", spark)
+    df = q("q104_fuzzy_prefix_pairs")
     plan = explain_str(df)
     assert "CartesianProduct" not in plan, plan
     assert "ResolvedHint" not in df._jdf.queryExecution().analyzed().toString()
 
 
-def test_fuzzy_blocked_pairs_shuffle_equi_join(spark):
+def test_fuzzy_blocked_pairs_shuffle_equi_join(q, spark):
     """q104b: the pigeonhole candidate join must be a pure shuffle
     EQUI-join on (source, chunk_id, chunk_text) — with size-based
     broadcast disabled it plans SortMergeJoin (proving no broadcast of
@@ -387,7 +391,7 @@ def test_fuzzy_blocked_pairs_shuffle_equi_join(spark):
     for the fuzzy-dedup family."""
     from kstreamjs_spark.plans import explain_str
 
-    df = q("q104b_fuzzy_blocked_pairs", spark)
+    df = q("q104b_fuzzy_blocked_pairs")
     plan = explain_str(df)
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
@@ -395,34 +399,34 @@ def test_fuzzy_blocked_pairs_shuffle_equi_join(spark):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        shuffled = explain_str(q("q104b_fuzzy_blocked_pairs", spark))
+        shuffled = explain_str(q("q104b_fuzzy_blocked_pairs"))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     assert "SortMergeJoin" in shuffled or "ShuffledHashJoin" in shuffled, shuffled
     assert "BroadcastExchange" not in shuffled, shuffled
 
 
-def test_session_funnel_single_data_shuffle(spark):
+def test_session_funnel_single_data_shuffle(q):
     """q108: sessionization window, composite-key funnel groupBy, and the
     final rollup all cluster on user_id — one data exchange plus the
     4-long global rollup."""
     plan = (
-        q("q108_session_funnel", spark)
+        q("q108_session_funnel")
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Join" not in plan, plan
     assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
-def test_cohort_sizes_broadcast(spark):
+def test_cohort_sizes_broadcast(q):
     """q107: per-cohort sizes join back as a broadcast."""
-    assert_in_plan(q("q107_cohort_retention", spark), "BroadcastHashJoin")
+    assert_in_plan(q("q107_cohort_retention"), "BroadcastHashJoin")
 
 
-def test_repeated_chunks_equi_join_no_cartesian(spark):
+def test_repeated_chunks_equi_join_no_cartesian(q):
     from kstreamjs_spark.plans import explain_str
 
-    plan = explain_str(q("q112_repeated_chunks", spark), mode="simple")
+    plan = explain_str(q("q112_repeated_chunks"), mode="simple")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     # text must not cross the shuffle: only (lang, cfp, doc_id) do
@@ -430,35 +434,35 @@ def test_repeated_chunks_equi_join_no_cartesian(spark):
     assert not re.search(r"Exchange hashpartitioning\([^)]*text", plan)
 
 
-def test_priority_sample_rank_pushdown(spark):
+def test_priority_sample_rank_pushdown(q):
     # per-stratum top-k must plan WindowGroupLimit, not a full sort
     from kstreamjs_spark.plans import assert_in_plan
 
-    assert_in_plan(q("q113_priority_sample", spark), "WindowGroupLimit")
+    assert_in_plan(q("q113_priority_sample"), "WindowGroupLimit")
 
 
-def test_vector_health_zero_shuffle_scan_agg(spark):
+def test_vector_health_zero_shuffle_scan_agg(q):
     # scan-side array math + one label aggregate: exactly one exchange
     from kstreamjs_spark.plans import explain_str
 
-    plan = explain_str(q("q115_vector_health", spark), mode="simple")
+    plan = explain_str(q("q115_vector_health"), mode="simple")
     assert plan.count("Exchange") == 1, plan
     assert "Join" not in plan
 
 
-def test_quant_error_zero_join_single_agg(spark):
+def test_quant_error_zero_join_single_agg(q):
     from kstreamjs_spark.plans import explain_str
 
-    plan = explain_str(q("q119_quant_error", spark), mode="simple")
+    plan = explain_str(q("q119_quant_error"), mode="simple")
     assert plan.count("Exchange") == 1, plan
     assert "Join" not in plan
     assert "PythonUDF" not in plan
 
 
-def test_scd2_single_user_shuffle(spark):
+def test_scd2_single_user_shuffle(q):
     from kstreamjs_spark.plans import explain_str
 
-    plan = explain_str(q("q121_scd2_intervals", spark))
+    plan = explain_str(q("q121_scd2_intervals"))
     # both window passes ride ONE hashpartitioning(user_id) exchange
     assert plan.count("hashpartitioning(user_id") >= 1
     assert "Join" not in plan
@@ -466,22 +470,22 @@ def test_scd2_single_user_shuffle(spark):
     assert n_exchanges == 1, plan
 
 
-def test_contamination_coverage_equi_join_distinct_probe(spark):
+def test_contamination_coverage_equi_join_distinct_probe(q):
     from kstreamjs_spark.plans import explain_str
 
-    plan = explain_str(q("q122_contamination_coverage", spark), mode="simple")
+    plan = explain_str(q("q122_contamination_coverage"), mode="simple")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     # the train side reduces to distinct shingles before the join
     assert "HashAggregate" in plan
 
 
-def test_ks_drift_histogram_not_per_doc_window(spark):
+def test_ks_drift_histogram_not_per_doc_window(q):
     # the cumulative window must run over the (lang, length) histogram
     # aggregate, not over per-document rows
     from kstreamjs_spark.plans import explain_str
 
-    plan = explain_str(q("q130_length_ks_drift", spark), mode="simple")
+    plan = explain_str(q("q130_length_ks_drift"), mode="simple")
     assert "CartesianProduct" not in plan
     # the histogram aggregate feeds the window (appears BELOW it in the
     # top-down plan text); the final per-lang max sits above — so the
@@ -489,38 +493,38 @@ def test_ks_drift_histogram_not_per_doc_window(spark):
     assert plan.rindex("HashAggregate") > plan.index("Window")
 
 
-def test_value_percentiles_histogram_window(spark):
+def test_value_percentiles_histogram_window(q):
     from kstreamjs_spark.plans import explain_str
 
-    plan = explain_str(q("q131_value_percentiles", spark), mode="simple")
+    plan = explain_str(q("q131_value_percentiles"), mode="simple")
     assert "CartesianProduct" not in plan
     assert "Window" in plan and "HashAggregate" in plan
 
 
-def test_growth_accounting_single_user_shuffle(spark):
+def test_growth_accounting_single_user_shuffle(q):
     from kstreamjs_spark.plans import explain_str
 
-    plan = explain_str(q("q135_growth_accounting", spark), mode="simple")
+    plan = explain_str(q("q135_growth_accounting"), mode="simple")
     # min-over-partition and lag share one hashpartitioning(user_id)
     assert plan.count("hashpartitioning(user_id") >= 1
     assert "Join" not in plan
 
 
-def test_revenue_trend_day_histogram_before_window(spark):
+def test_revenue_trend_day_histogram_before_window(q):
     from kstreamjs_spark.plans import explain_str
 
-    plan = explain_str(q("q134_revenue_trend", spark), mode="simple")
+    plan = explain_str(q("q134_revenue_trend"), mode="simple")
     # the RANGE window runs over the day aggregate, not raw events
     assert plan.index("Window") < plan.index("HashAggregate")
 
 
-def test_cheapest_supplier_groupwise_min_is_aggregate_not_window(spark):
+def test_cheapest_supplier_groupwise_min_is_aggregate_not_window(q):
     """q149: the Q2-style groupwise min must compile to a partial-
     aggregating min(struct) — no Window (sort-based, skew-sensitive) and
     no join-back of the winner (the name rides in the struct)."""
     from kstreamjs_spark.plans import explain_str
 
-    plan = explain_str(q("q149_cheapest_supplier", spark), mode="simple")
+    plan = explain_str(q("q149_cheapest_supplier"), mode="simple")
     assert "Window" not in plan, plan
     assert "CartesianProduct" not in plan, plan
     # min(struct(...)) partial-aggregates before the partkey exchange
@@ -533,56 +537,56 @@ def test_cheapest_supplier_groupwise_min_is_aggregate_not_window(spark):
     assert "lineitem" not in first_bcast.split("BroadcastHashJoin")[0], plan
 
 
-def test_sole_late_supplier_windows_share_orderkey_partitioning(spark):
+def test_sole_late_supplier_windows_share_orderkey_partitioning(q):
     """q150: both correlated-subquery replacements (supplier count, late
     count) must come from ONE Window node over orderkey — never a
     self-join of the fact."""
     from kstreamjs_spark.plans import explain_str
 
-    plan = explain_str(q("q150_sole_late_supplier", spark), mode="simple")
+    plan = explain_str(q("q150_sole_late_supplier"), mode="simple")
     assert plan.count("Window") == 1, plan
     assert "CartesianProduct" not in plan, plan
 
 
-def test_dormant_customers_anti_join_and_scalar_broadcast(spark):
+def test_dormant_customers_anti_join_and_scalar_broadcast(q):
     """q151: the NOT EXISTS must plan as a left-anti equi-join against
     the distinct recent custkeys, with the one-row scalar arriving via a
     broadcast."""
     from kstreamjs_spark.plans import explain_str
 
-    plan = explain_str(q("q151_dormant_rich_customers", spark), mode="simple")
+    plan = explain_str(q("q151_dormant_rich_customers"), mode="simple")
     assert "LeftAnti" in plan, plan
     assert "BroadcastExchange" in plan, plan
     assert "CartesianProduct" not in plan, plan
 
 
-def test_hotlist_reuses_partkey_exchange(spark):
+def test_hotlist_reuses_partkey_exchange(q):
     """q152: the per-part aggregate feeds BOTH the global scalar and the
     hotlist filter; at runtime AQE must reuse the partkey exchange
     instead of scanning lineitem twice."""
-    df = q("q152_part_revenue_hotlist", spark)
+    df = q("q152_part_revenue_hotlist")
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ReusedExchange" in plan, plan
 
 
-def test_small_qty_revenue_single_partkey_window_no_self_join(spark):
+def test_small_qty_revenue_single_partkey_window_no_self_join(q):
     """q153: the per-part average must be a window over the same scan —
     one partkey shuffle, no lineitem self-join."""
     from kstreamjs_spark.plans import explain_str
 
-    plan = explain_str(q("q153_small_qty_revenue", spark), mode="simple")
+    plan = explain_str(q("q153_small_qty_revenue"), mode="simple")
     assert plan.count("hashpartitioning(l_partkey") == 1, plan
     assert "CartesianProduct" not in plan, plan
 
 
-def test_large_volume_having_filters_before_join(spark):
+def test_large_volume_having_filters_before_join(q):
     """q154: the total-quantity HAVING filter must sit in the aggregate
     subtree (below the joins), so only survivors reach the orders fact."""
     from kstreamjs_spark.plans import explain_str
     import re
 
-    plan = explain_str(q("q154_large_volume_customers", spark), mode="simple")
+    plan = explain_str(q("q154_large_volume_customers"), mode="simple")
     assert "CartesianProduct" not in plan, plan
     # top-down text: joins print above their inputs; the tq threshold
     # filter must appear after (deeper than) the first join header
@@ -591,22 +595,22 @@ def test_large_volume_having_filters_before_join(spark):
     assert filt and filt.start() > join_pos, plan
 
 
-def test_hard_negatives_rank_pushdown_broadcast_queries(spark):
+def test_hard_negatives_rank_pushdown_broadcast_queries(q):
     """q155: same contract as q58 — WindowGroupLimit before the shuffle,
     query batch broadcast, vector table never shuffled whole."""
     plan = (
-        q("q155_hard_negatives", spark)
+        q("q155_hard_negatives")
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "WindowGroupLimit" in plan, plan
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan, plan
 
 
-def test_temperature_mix_reuses_lang_aggregate(spark):
+def test_temperature_mix_reuses_lang_aggregate(q):
     """q156: the lang-sized aggregate feeds both the per-lang rows and
     the scalar totals; AQE must reuse the exchange, not scan documents
     twice."""
-    df = q("q156_temperature_mix", spark)
+    df = q("q156_temperature_mix")
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ReusedExchange" in plan, plan
@@ -639,82 +643,82 @@ def _assert_no_blob_exchange(df):
     assert saw_exchange, "expected the widen exchange below the synth stage"
 
 
-def test_audio_decode_pipeline_no_blob_shuffle(spark):
+def test_audio_decode_pipeline_no_blob_shuffle(q):
     """q40c chains two Arrow mapInPandas stages (WAV synth -> header
     decode) off one scan: blobs must flow through the pipeline without
     ever crossing an exchange (see _assert_no_blob_exchange)."""
-    df = q("q40c_audio_decode", spark)
+    df = q("q40c_audio_decode")
     assert_in_plan(df, "MapInPandas")
     assert_not_in_plan(df, "text#", "lang#")
     _assert_no_blob_exchange(df)
 
 
-def test_fuzzy_blocked_prefix_derived_before_spread(spark):
+def test_fuzzy_blocked_prefix_derived_before_spread(q):
     """Round 8: fuzzy_prefix_pairs derives the normalized 40-char prefix
     BELOW the fan-out exchange, so the shuffle carries (id, source, 40
     chars) instead of full document text (A/B: 0.999 s -> 0.681 s at
     sf0.1). Pinned by node order: the normalize expression (lower(text))
     must appear under the doc_id repartition exchange, never above it."""
-    df = q("q104b_fuzzy_blocked_pairs", spark)
+    df = q("q104b_fuzzy_blocked_pairs")
     plan = df._jdf.queryExecution().executedPlan().toString()
     ex = plan.index("Exchange hashpartitioning(doc_id")
     norm = plan.index("lower(text")
     assert ex < norm, plan[:2000]
 
 
-def test_png_decode_pipeline_no_shuffle(spark):
+def test_png_decode_pipeline_no_shuffle(q):
     """q40d chains two Arrow mapInPandas stages (PNG synth -> full
     decode) off one scan: compressed blobs never cross an exchange
     (refined invariant: _assert_no_blob_exchange), only the two
     parameter-deriving source columns are read."""
-    df = q("q40d_image_png_decode", spark)
+    df = q("q40d_image_png_decode")
     assert_in_plan(df, "MapInPandas")
     assert_not_in_plan(df, "text#", "lang#")
     _assert_no_blob_exchange(df)
 
 
-def test_mp4_decode_pipeline_no_shuffle(spark):
+def test_mp4_decode_pipeline_no_shuffle(q):
     """q40e chains two Arrow mapInPandas stages (MP4 synth -> box-walk
     metadata decode) off one scan: blobs never cross an exchange
     (refined invariant: _assert_no_blob_exchange)."""
-    df = q("q40e_video_mp4_decode", spark)
+    df = q("q40e_video_mp4_decode")
     assert_in_plan(df, "MapInPandas")
     assert_not_in_plan(df, "text#", "lang#")
     _assert_no_blob_exchange(df)
 
 
-def test_jpeg_decode_pipeline_no_shuffle(spark):
+def test_jpeg_decode_pipeline_no_shuffle(q):
     """q40f chains two Arrow mapInPandas stages (JPEG synth -> full
     huffman+IDCT decode) off one scan: same blob-shuffle-free,
     column-pruned shape as the PNG pipeline."""
-    df = q("q40f_image_jpeg_decode", spark)
+    df = q("q40f_image_jpeg_decode")
     assert_in_plan(df, "MapInPandas")
     assert_not_in_plan(df, "text#", "lang#")
     _assert_no_blob_exchange(df)
 
 
-def test_mp4_frame_sample_pipeline_no_shuffle(spark):
+def test_mp4_frame_sample_pipeline_no_shuffle(q):
     """q40g's 1:N frame explode happens INSIDE the second mapInPandas
     stage (partitioned on the input blobs, per its scale note), so the
     exploded output still crosses no blob exchange."""
-    df = q("q40g_video_frame_sample", spark)
+    df = q("q40g_video_frame_sample")
     assert_in_plan(df, "MapInPandas")
     assert_not_in_plan(df, "text#", "lang#")
     _assert_no_blob_exchange(df)
 
 
-def test_cooccurrence_reuses_distinct_exchange_at_runtime(spark):
+def test_cooccurrence_reuses_distinct_exchange_at_runtime(q):
     """q125's docstring claims the raw-events distinct shuffle
     materializes once: the static plan prints four copies, but AQE's
     runtime exchange reuse must collapse them — asserted on the EXECUTED
     plan, where ReusedExchange only appears after stage materialization."""
-    df = q("q125_event_cooccurrence", spark)
+    df = q("q125_event_cooccurrence")
     df.collect()
     final = df._jdf.queryExecution().executedPlan().toString()
     assert "ReusedExchange" in final
 
 
-def test_bloom_decontaminate_probes_below_verify_join(spark):
+def test_bloom_decontaminate_probes_below_verify_join(q):
     """q77b's plan contract: hashing is JVM-side (xxhash64/pmod inside
     the probe's input expression), the Arrow bitset probe + its filter
     sit directly on the corpus scan's explode output BELOW the exact
@@ -725,7 +729,7 @@ def test_bloom_decontaminate_probes_below_verify_join(spark):
     bloom has no false negatives.)"""
     from kstreamjs_spark.plans import explain_str
 
-    plan = explain_str(q("q77b_decontaminate_bloom", spark))
+    plan = explain_str(q("q77b_decontaminate_bloom"))
     assert "ArrowEvalPython" in plan
     assert "xxhash64" in plan and "pmod" in plan
     assert "LeftSemi" in plan
@@ -737,7 +741,7 @@ def test_bloom_decontaminate_probes_below_verify_join(spark):
     # subtree — the lines under the join whose branch column carries the
     # left-child `:` rail — and require it exchange-free while containing
     # the scan, the shingle Generate, and the Arrow bitset probe.
-    tree = explain_str(q("q77b_decontaminate_bloom", spark), "simple")
+    tree = explain_str(q("q77b_decontaminate_bloom"), "simple")
     lines = tree.splitlines()
     ji = next(i for i, l in enumerate(lines) if "LeftSemi" in l)
     # Children print 3 columns right of the join's own `+- ` marker:
@@ -757,14 +761,14 @@ def test_bloom_decontaminate_probes_below_verify_join(spark):
     )
 
 
-def test_bm25_topk_avoids_global_sort_and_single_corpus_scan(spark):
+def test_bm25_topk_avoids_global_sort_and_single_corpus_scan(q):
     """q157's plan contract: top-k via TakeOrderedAndProject (never a
     global sort), df/stats broadcast, and — after the tf checkpoint —
     the term-filtered aggregate feeds both tf and df from ONE corpus
     scan (lineage replay would otherwise rescan the corpus for df's
     pruned distinct subtree, which AQE cannot dedupe against tf's count
     exchange)."""
-    df = q("q157_bm25_topk", spark)
+    df = q("q157_bm25_topk")
     df.collect()
     ex = df._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in ex
@@ -781,7 +785,7 @@ def test_bm25_topk_avoids_global_sort_and_single_corpus_scan(spark):
     assert "hashpartitioning(doc_id" in ex  # only the final score agg
 
 
-def test_bm25_batch_rank_pushdown_no_per_query_rescan(spark):
+def test_bm25_batch_rank_pushdown_no_per_query_rescan(q):
     """q157b's plan contract (the batched generalization): per-query
     top-k goes through WindowGroupLimit (the k=10 cut runs below the
     rank, partial+final, with only LOCAL sorts — no global sort of the
@@ -789,7 +793,7 @@ def test_bm25_batch_rank_pushdown_no_per_query_rescan(spark):
     joins, and the corpus scan count is a CONSTANT — adding queries to
     the batch must not add corpus rescans (24 queries share the same ≤4
     scans q157 uses for one)."""
-    df = q("q157b_bm25_batch_topk", spark)
+    df = q("q157b_bm25_batch_topk")
     df.collect()
     ex = df._jdf.queryExecution().executedPlan().toString()
     assert "WindowGroupLimit" in ex
@@ -813,7 +817,7 @@ def test_bm25_batch_rank_pushdown_no_per_query_rescan(spark):
         assert "], false, 0" in line, f"global sort leaked in: {line}"
 
 
-def test_hybrid_rrf_batch_plan_shape(spark):
+def test_hybrid_rrf_batch_plan_shape(q):
     """q169b's plan contract: both retrieval sides and the fusion rank
     run through WindowGroupLimit-guarded row_number filters with only
     LOCAL sorts (never a global sort of scores), the semantic side is
@@ -821,7 +825,7 @@ def test_hybrid_rrf_batch_plan_shape(spark):
     sides), and the corpus/vector scan count is constant in the batch
     size — the lexical side keeps q157b's <=2 corpus scans and the
     semantic side one vector scan + the 24-row broadcast query batch."""
-    df = q("q169b_hybrid_rrf_batch", spark)
+    df = q("q169b_hybrid_rrf_batch")
     df.collect()
     ex = df._jdf.queryExecution().executedPlan().toString()
     assert "WindowGroupLimit" in ex
@@ -875,7 +879,7 @@ def test_materialize_once_prefers_reliable_checkpoint(spark, tmp_path):
         )
 
 
-def test_semdedup_pairwise_is_cell_equi_join(spark):
+def test_semdedup_pairwise_is_cell_equi_join(q):
     """q170's plan contract (round-11 kernel rework): the SemDeDup
     pairwise search is ONE Arrow-batched grouped kernel on the k-means
     cell key (FlatMapGroupsInPandas over one hash exchange — pair work
@@ -885,14 +889,14 @@ def test_semdedup_pairwise_is_cell_equi_join(spark):
     literals)."""
     from kstreamjs_spark.plans import explain_str
 
-    plan = explain_str(q("q170_semdedup", spark), "simple")
+    plan = explain_str(q("q170_semdedup"), "simple")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "Join" not in plan, plan  # rollup fused into the kernel
     assert "FlatMapGroupsInPandas" in plan, plan
 
 
-def test_phash_neardup_bucket_join_is_equi_not_cross(spark):
+def test_phash_neardup_bucket_join_is_equi_not_cross(q):
     """q158's plan contract: candidates come from the (cid, cval)
     chunk-pigeonhole EQUI-join — the plan must show the chunk keys in a
     hash-join condition and contain no cross/nested-loop join, so the
@@ -905,7 +909,7 @@ def test_phash_neardup_bucket_join_is_equi_not_cross(spark):
         # q158d/q182 add the round-11 GIF legs; q26c runs the radius-6
         # 2-of-8-chunk COMBINATION keys — same contract: candidates from
         # the (cid, cval) equi-join, never a cross join
-        plan = explain_str(q(name, spark), "simple")
+        plan = explain_str(q(name), "simple")
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
         join_lines = [
@@ -956,7 +960,7 @@ def test_member_semijoin_auto_picks_regime_from_size(spark):
     assert sorted(r["doc_id"] for r in bl.collect()) == expected
 
 
-def test_knn_join_lsh_no_broadcast_of_batch_no_cross(spark):
+def test_knn_join_lsh_no_broadcast_of_batch_no_cross(q):
     """q159's plan contract: candidates come from the (b, bv) band
     equi-join — the query batch is never broadcast as a whole-vector
     cross join (knn_join's shape) and nothing plans a cartesian/nested
@@ -965,7 +969,7 @@ def test_knn_join_lsh_no_broadcast_of_batch_no_cross(spark):
     are 8-byte, not vectors."""
     from kstreamjs_spark.plans import explain_str
 
-    plan = explain_str(q("q159_knn_join_lsh", spark), "simple")
+    plan = explain_str(q("q159_knn_join_lsh"), "simple")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     join_lines = [
@@ -976,11 +980,11 @@ def test_knn_join_lsh_no_broadcast_of_batch_no_cross(spark):
     assert "WindowGroupLimit" in plan
 
 
-def test_scene_cuts_single_shuffle_window(spark):
+def test_scene_cuts_single_shuffle_window(q):
     """q161's plan contract: the keyframe pass is ONE doc_id window —
     exactly one hash exchange, a Window over the frame rows, no joins."""
     plan = (
-        q("q161_scene_cuts", spark)._jdf.queryExecution().executedPlan()
+        q("q161_scene_cuts")._jdf.queryExecution().executedPlan()
         .toString()
     )
     assert plan.count("Exchange hashpartitioning") == 1, plan
@@ -988,7 +992,7 @@ def test_scene_cuts_single_shuffle_window(spark):
     assert "Join" not in plan
 
 
-def test_disjunctive_predicates_push_to_both_scans(spark):
+def test_disjunctive_predicates_push_to_both_scans(q):
     """q162's plan contract (the TPC-H Q19 pitfall): Catalyst must
     extract the per-table components of the OR-of-conjuncts below the
     join — the lineitem scan carries the l_quantity union envelope and
@@ -997,7 +1001,7 @@ def test_disjunctive_predicates_push_to_both_scans(spark):
     that evaluates the whole OR above the join scans everything."""
     from kstreamjs_spark.plans import explain_str
 
-    plan = explain_str(q("q162_disjunctive_revenue", spark))
+    plan = explain_str(q("q162_disjunctive_revenue"))
     li = [l for l in plan.splitlines()
           if "PushedFilters" in l and "l_quantity" in l]
     pt = [l for l in plan.splitlines()
@@ -1007,57 +1011,57 @@ def test_disjunctive_predicates_push_to_both_scans(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_q172_gram_shuffles_partials_not_rows(spark):
+def test_q172_gram_shuffles_partials_not_rows(q):
     """The Gram pass must exchange only per-partition dim x dim partials
     (one MapInPandas feeding one hashpartitioning exchange on (i, j)) —
     never N rows; and nothing about the plan may depend on corpus size."""
     from kstreamjs_spark.plans import explain_str
 
-    plan = explain_str(q("q172_embedding_gram", spark), mode="simple")
+    plan = explain_str(q("q172_embedding_gram"), mode="simple")
     assert plan.count("MapInPandas") == 1, plan
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert "Join" not in plan, plan
 
 
-def test_q172b_projection_is_literal_zero_shuffle(spark):
+def test_q172b_projection_is_literal_zero_shuffle(q):
     """q172b's returned frame (the per-vector projection) must be one
     codegen projection over the scan with the direction as a plan
     literal: no exchange other than the final orderBy's range partition,
     no join, no Python in the row path."""
     from kstreamjs_spark.plans import explain_str
 
-    plan = explain_str(q("q172b_pca_power_iteration", spark), mode="simple")
+    plan = explain_str(q("q172b_pca_power_iteration"), mode="simple")
     assert "Join" not in plan, plan
     assert "MapInPandas" not in plan, plan  # iteration ran on the driver
     assert plan.count("Exchange") == plan.count("Exchange rangepartitioning"), plan
 
 
-def test_q173_zorder_is_codegen_single_exchange(spark):
+def test_q173_zorder_is_codegen_single_exchange(q):
     """The z-value must be a pure codegen expression (no Python, no
     join) and the stats aggregate must exchange once on the bucket id
     with map-side partials — 1024-row state per partition at any N."""
     from kstreamjs_spark.plans import explain_str
 
-    plan = explain_str(q("q173_zorder_layout", spark), mode="simple")
+    plan = explain_str(q("q173_zorder_layout"), mode="simple")
     assert "Join" not in plan and "InPandas" not in plan, plan
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert plan.count("HashAggregate") == 2, plan  # partial + final
 
 
-def test_q227_hilbert_is_codegen_single_exchange(spark):
+def test_q227_hilbert_is_codegen_single_exchange(q):
     """q227's packed-fold Hilbert index must stay a pure codegen
     expression (the F.aggregate lambda — no Python, no join) with the
     identical one-exchange stats shape as q173: a sequential 15-level
     state machine that still costs one projection."""
     from kstreamjs_spark.plans import explain_str
 
-    plan = explain_str(q("q227_hilbert_layout", spark), mode="simple")
+    plan = explain_str(q("q227_hilbert_layout"), mode="simple")
     assert "Join" not in plan and "InPandas" not in plan, plan
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert plan.count("HashAggregate") == 2, plan  # partial + final
 
 
-def test_ivfpq_partitioned_codes_serve_with_pruning(spark, tmp_path):
+def test_ivfpq_partitioned_codes_serve_with_pruning(spark, sf_smoke, tmp_path):
     """q194's deployment claim, end-to-end with the REAL operators: the
     (cell, id, codes) table persisted partitionBy(cell), a query served
     through pq_query_encoded over the partition-pruned read must (a)
@@ -1071,7 +1075,7 @@ def test_ivfpq_partitioned_codes_serve_with_pruning(spark, tmp_path):
     from kstreamjs_spark.plans import explain_str
     from kstreamjs_spark.tables import load
 
-    (emb,) = load(spark, SF_SMOKE, "embeddings")
+    (emb,) = load(spark, sf_smoke, "embeddings")
     qv = emb.filter(F.col("vec_id") == 0).select(
         similarity.as_double(F.col("embedding")).alias("qv")
     )
@@ -1114,14 +1118,14 @@ def test_ivfpq_partitioned_codes_serve_with_pruning(spark, tmp_path):
     ]
 
 
-def test_ccnet_bands_no_corpus_global_sort(spark):
+def test_ccnet_bands_no_corpus_global_sort(q):
     """q197 (round-12 fix): NTILE's single-task corpus sort is gone.
     Banding is histogram offsets + a score-partitioned tie window, so
     the only global sort left is the 3-row output ORDER BY band; the
     row_number tie-break sorts locally within hashpartitioning(score)."""
     from kstreamjs_spark.plans import explain_str
 
-    plan = explain_str(q("q197_ccnet_bands", spark), mode="simple")
+    plan = explain_str(q("q197_ccnet_bands"), mode="simple")
     assert "ntile" not in plan.lower()
     assert "row_number()" in plan
     # every GLOBAL sort (third arg `true`) may touch only the 3-row
@@ -1135,7 +1139,7 @@ def test_ccnet_bands_no_corpus_global_sort(spark):
     assert "avg_logprob_kn" in win_line.split("windowspecdefinition")[1]
 
 
-def test_round12_tpch_shapes_no_cartesian_and_broadcast_dims(spark):
+def test_round12_tpch_shapes_no_cartesian_and_broadcast_dims(q):
     """q199/q200/q201: star joins must stay equi (no cartesian, no
     nested-loop) with at least one broadcast dim in each plan."""
     from kstreamjs_spark.plans import explain_str
@@ -1145,38 +1149,38 @@ def test_round12_tpch_shapes_no_cartesian_and_broadcast_dims(spark):
         "q200_nation_market_share",
         "q201_product_profit",
     ):
-        plan = explain_str(q(name, spark), mode="simple")
+        plan = explain_str(q(name), mode="simple")
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
         assert "BroadcastHashJoin" in plan, name
 
 
-def test_round12_rule_queries_no_cartesian(spark):
+def test_round12_rule_queries_no_cartesian(q):
     """q202/q203: the rule funnels are scan projections + equi joins;
     the only allowed nested-loop is none (no 1-row scalar cross here)."""
     from kstreamjs_spark.plans import explain_str
 
     for name in ("q202_filter_ensemble", "q203_gopher_repetition"):
-        plan = explain_str(q(name, spark), mode="simple")
+        plan = explain_str(q(name), mode="simple")
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
 
 
-def test_round13_q209_q210_semi_anti_shapes(spark):
+def test_round13_q209_q210_semi_anti_shapes(q):
     """q209/q210 (TPC-H Q16/Q20 shapes): the NOT IN / nested EXISTS-IN
     chains must compile to broadcast anti/semi joins over
     pre-aggregates — never a correlated loop, cartesian, or
     nested-loop join."""
     from kstreamjs_spark.plans import explain_str
 
-    p209 = explain_str(q("q209_parts_supplier_relationship", spark),
+    p209 = explain_str(q("q209_parts_supplier_relationship"),
                        mode="simple")
     assert "CartesianProduct" not in p209
     assert "BroadcastNestedLoopJoin" not in p209
     # complaints NOT IN -> broadcast ANTI join on the supplier key
     assert re.search(r"BroadcastHashJoin \[l_suppkey.*LeftAnti", p209), p209
 
-    p210 = explain_str(q("q210_potential_part_promotion", spark),
+    p210 = explain_str(q("q210_potential_part_promotion"),
                        mode="simple")
     assert "CartesianProduct" not in p210
     assert "BroadcastNestedLoopJoin" not in p210
@@ -1187,7 +1191,7 @@ def test_round13_q209_q210_semi_anti_shapes(spark):
     assert len(re.findall(r"Scan parquet.*lineitem", p210)) == 1, p210
 
 
-def test_round14_q216_wordpiece_pure_codegen(spark):
+def test_round14_q216_wordpiece_pure_codegen(q):
     """q216's application half must stay a pure Catalyst expression:
     no Python evaluation nodes anywhere in the plan (the no-UDF claim
     that distinguishes this tokenizer family), and the vocabulary
@@ -1199,14 +1203,14 @@ def test_round14_q216_wordpiece_pure_codegen(spark):
     exchange happens once upstream of the checkpoint, not here."""
     from kstreamjs_spark.plans import explain_str
 
-    plan = explain_str(q("q216_wordpiece_tokenize", spark), mode="simple")
+    plan = explain_str(q("q216_wordpiece_tokenize"), mode="simple")
     assert "InPandas" not in plan and "EvalPython" not in plan, plan
     assert "Join" not in plan, plan
     assert "Scan ExistingRDD" in plan, plan
     assert plan.count("Exchange") == 1 and "rangepartitioning" in plan, plan
 
 
-def test_round14_minhash_banding_single_fold(spark):
+def test_round14_minhash_banding_single_fold(spark, sf_smoke):
     """Regression pin for the round-14 q205b finding: the banded
     projection must evaluate the minhash fold ONCE per document.
     Nesting the signature inside minhash_bands inlines the O(shingles
@@ -1218,7 +1222,7 @@ def test_round14_minhash_banding_single_fold(spark):
         minhash_banded_projection,
     )
 
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_smoke}/documents.parquet")
     plan = (
         minhash_banded_projection(docs)
         ._jdf.queryExecution().executedPlan().toString()
@@ -1226,39 +1230,39 @@ def test_round14_minhash_banding_single_fold(spark):
     assert 1 <= plan.count("xxhash64") <= 4, plan.count("xxhash64")
 
 
-def test_round14_q217_bucketed_join_no_join_exchange(spark):
+def test_round14_q217_bucketed_join_no_join_exchange(q):
     """q217's whole point: both sides bucketed by the join key at
     write time -> the SortMergeJoin consumes the bucketed scans
     DIRECTLY, zero exchanges feeding the join. The only hash exchange
     in the plan belongs to the post-join segment aggregate."""
     plan = (
-        q("q217_bucketed_colocated_join", spark)
+        q("q217_bucketed_colocated_join")
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "SortMergeJoin" in plan, plan
     assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
-def test_chunk_dedup_rebuild_text_stays_scan_side(spark):
+def test_chunk_dedup_rebuild_text_stays_scan_side(q):
     """q221: the dedup rank shuffle carries (doc_id, st, cfp) only —
     the token array must never enter a hashpartitioning exchange key,
     and no cartesian/broadcast-nested-loop anywhere; reconstruction is
     one equi-join back to the scan."""
     from kstreamjs_spark.plans import explain_str
 
-    plan = explain_str(q("q221_chunk_dedup_rebuild", spark), mode="simple")
+    plan = explain_str(q("q221_chunk_dedup_rebuild"), mode="simple")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert not re.search(r"Exchange hashpartitioning\([^)]*\bts\b", plan)
 
 
-def test_domain_mixture_single_corpus_pass(spark):
+def test_domain_mixture_single_corpus_pass(q):
     """q222: ONE scan of documents (the TTR aggregate) — the 10-round
     MW loop runs on the O(D) domain frame and must not rescan the
     corpus per round."""
     from kstreamjs_spark.plans import explain_str
 
-    plan = explain_str(q("q222_domain_mixture_mw", spark), mode="simple")
+    plan = explain_str(q("q222_domain_mixture_mw"), mode="simple")
     assert plan.count("documents.parquet") <= 1 or (
         plan.lower().count("filescan") <= 1
     ), plan

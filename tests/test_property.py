@@ -5,6 +5,7 @@ each example is a Spark round-trip."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -65,6 +66,7 @@ def py_asof(left, right):
     return out
 
 
+@pytest.mark.slow
 @given(
     left=st.lists(
         st.tuples(st.sampled_from("pq"), st.integers(0, 50)),
@@ -114,6 +116,7 @@ def py_components(edges: list[tuple[int, int]]) -> dict[int, int]:
     return {n: find(n) for n in parent}
 
 
+@pytest.mark.slow
 @given(
     edges=st.lists(
         st.tuples(st.integers(0, 30), st.integers(0, 30)),
@@ -137,6 +140,7 @@ def test_connected_components_match_union_find(spark, edges):
     assert got == py_components(edges)
 
 
+@pytest.mark.slow
 @given(
     toks=st.lists(st.integers(min_value=0, max_value=300), min_size=1,
                   max_size=30),
@@ -164,6 +168,7 @@ def test_sequence_pack_matches_python_reference(spark, toks, budget, parts):
         cum += t
 
 
+@pytest.mark.slow
 @given(texts=st.lists(sentence, min_size=2, max_size=6))
 @settings(**SETTINGS)
 def test_containment_matches_python_reference(spark, texts):
@@ -191,6 +196,7 @@ def test_containment_matches_python_reference(spark, texts):
     assert got == expect
 
 
+@pytest.mark.slow
 @given(texts=st.lists(sentence.filter(lambda s: s != ""), min_size=1,
                       max_size=5))
 @settings(**SETTINGS)
@@ -489,6 +495,7 @@ def py_percentile(values, num, den):
     return vs[-1]
 
 
+@pytest.mark.slow
 @given(
     groups=st.lists(
         st.lists(st.integers(min_value=-50, max_value=50), min_size=1,
@@ -543,6 +550,7 @@ def py_sessions(events):
     return out
 
 
+@pytest.mark.slow
 @given(users=st.lists(_deltas, min_size=1, max_size=5))
 @settings(**SETTINGS)
 def test_with_sessions_matches_python_reference(spark, users):
@@ -579,6 +587,7 @@ from kstreamjs_spark.operators import bloom as bloom_ops  # noqa: E402
 key = st.text(alphabet="abcdef0123456789", min_size=1, max_size=12)
 
 
+@pytest.mark.slow
 @given(
     members=st.lists(key, min_size=1, max_size=20, unique=True),
     others=st.lists(key, min_size=0, max_size=20, unique=True),
@@ -1047,6 +1056,7 @@ def py_greedy(w: str, vocab_by_len: dict) -> tuple[int, str]:
     return n, " ".join(seg)
 
 
+@pytest.mark.slow
 @given(
     words=st.lists(
         st.text(alphabet="abcdef", min_size=0, max_size=10),

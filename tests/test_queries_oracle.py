@@ -8,21 +8,22 @@ import pytest
 from kstreamjs_spark.queries import all_queries
 from kstreamjs_spark.testing import compare_query, duck_connection
 
-from .conftest import SF_SMOKE
-
 SPECS = all_queries()
 
 
 @pytest.fixture(scope="module")
-def duck():
-    con = duck_connection(SF_SMOKE)
+def duck(sf_smoke):
+    con = duck_connection(sf_smoke)
     yield con
     con.close()
 
 
-@pytest.mark.parametrize("name", sorted(SPECS))
-def test_query_matches_oracle(spark, duck, name):
-    problems = compare_query(spark, duck, SPECS[name], SF_SMOKE)
+@pytest.mark.parametrize("name", [
+    pytest.param(n, marks=pytest.mark.slow) if "slow" in SPECS[n].tags else n
+    for n in sorted(SPECS)
+])
+def test_query_matches_oracle(spark, sf_smoke, duck, name):
+    problems = compare_query(spark, duck, SPECS[name], sf_smoke)
     assert not problems, f"{name}: " + "; ".join(problems)
 
 

@@ -10,15 +10,13 @@ import pyspark.sql.functions as F
 from kstreamjs_spark.operators import sampling, skew
 from kstreamjs_spark.tables import load
 
-from .conftest import SF_SMOKE
-
 
 def _ids(df):
     return {r[0] for r in df.select("doc_id").collect()}
 
 
-def test_sample_fraction_and_determinism(spark):
-    (docs,) = load(spark, SF_SMOKE, "documents")
+def test_sample_fraction_and_determinism(spark, sf_smoke):
+    (docs,) = load(spark, sf_smoke, "documents")
     n = docs.count()
     s1 = _ids(sampling.sample_hash(docs, "doc_id", 0.2, seed=3))
     s2 = _ids(sampling.sample_hash(docs, "doc_id", 0.2, seed=3))
@@ -30,21 +28,21 @@ def test_sample_fraction_and_determinism(spark):
     assert s3 != s1
 
 
-def test_sample_nesting(spark):
+def test_sample_nesting(spark, sf_smoke):
     """sample(5%) ⊆ sample(10%) ⊆ sample(50%) under one seed — the property
     that lets a pipeline tune sample size without resampling."""
-    (docs,) = load(spark, SF_SMOKE, "documents")
+    (docs,) = load(spark, sf_smoke, "documents")
     small = _ids(sampling.sample_hash(docs, "doc_id", 0.05, seed=7))
     mid = _ids(sampling.sample_hash(docs, "doc_id", 0.10, seed=7))
     big = _ids(sampling.sample_hash(docs, "doc_id", 0.50, seed=7))
     assert small <= mid <= big
 
 
-def test_sample_predicate_pushed_to_scan(spark):
+def test_sample_predicate_pushed_to_scan(spark, sf_smoke):
     """The hash predicate reaches the parquet scan as a data filter (shown
     in the scan's PushedFilters would need a simple comparison; at minimum
     the plan contains no shuffle and a single scan)."""
-    (docs,) = load(spark, SF_SMOKE, "documents")
+    (docs,) = load(spark, sf_smoke, "documents")
     plan = (
         sampling.sample_hash(docs, "doc_id", 0.1)
         ._jdf.queryExecution().executedPlan().toString()
@@ -52,8 +50,8 @@ def test_sample_predicate_pushed_to_scan(spark):
     assert "Exchange" not in plan  # pure scan+filter, no shuffle
 
 
-def test_stratified_fractions(spark):
-    (docs,) = load(spark, SF_SMOKE, "documents")
+def test_stratified_fractions(spark, sf_smoke):
+    (docs,) = load(spark, sf_smoke, "documents")
     mix = {"en": 0.0, "fr": 1.0}
     kept = sampling.stratified_sample(docs, "lang", mix, "doc_id")
     langs = {r[0] for r in kept.select("lang").distinct().collect()}
@@ -63,8 +61,8 @@ def test_stratified_fractions(spark):
     assert kept.filter(~F.col("lang").isin("en", "fr")).count() == 0  # default 0
 
 
-def test_salted_agg_equals_plain(spark):
-    (events,) = load(spark, SF_SMOKE, "events")
+def test_salted_agg_equals_plain(spark, sf_smoke):
+    (events,) = load(spark, sf_smoke, "events")
     q = events.select(
         "user_id", F.floor(F.col("value") * 10000 + 0.5).cast("long").alias("qv")
     )
@@ -83,10 +81,10 @@ def test_salted_agg_equals_plain(spark):
     assert salted == plain
 
 
-def test_salted_agg_two_phase_plan(spark):
+def test_salted_agg_two_phase_plan(spark, sf_smoke):
     """The rewrite must show two aggregate rounds: (keys+salt) then (keys) —
     i.e. the hot-key reduce genuinely splits before the final merge."""
-    (events,) = load(spark, SF_SMOKE, "events")
+    (events,) = load(spark, sf_smoke, "events")
     plan = (
         skew.salted_agg(events, ["user_id"], [("count", "event_id", "c")], parts=8)
         ._jdf.queryExecution().optimizedPlan().toString()
@@ -96,8 +94,8 @@ def test_salted_agg_two_phase_plan(spark):
     assert plan.count("Aggregate") == 2
 
 
-def test_replicated_skew_join_equals_plain(spark):
-    (events,) = load(spark, SF_SMOKE, "events")
+def test_replicated_skew_join_equals_plain(spark, sf_smoke):
+    (events,) = load(spark, sf_smoke, "events")
     dim = spark.createDataFrame(
         [("click", 1.0), ("purchase", 10.0), ("view", 0.1)],
         ["event_type", "weight"],

@@ -6,11 +6,9 @@ from __future__ import annotations
 
 from kstreamjs_spark.tables import register_views
 
-from .conftest import SF_SMOKE
 
-
-def test_sql_equals_dataframe_join_agg(spark):
-    register_views(spark, SF_SMOKE)
+def test_sql_equals_dataframe_join_agg(spark, sf_smoke):
+    register_views(spark, sf_smoke)
     sql = spark.sql("""
         SELECT n_name, COUNT(*) AS cnt
         FROM customer JOIN nation ON c_nationkey = n_nationkey
@@ -20,7 +18,7 @@ def test_sql_equals_dataframe_join_agg(spark):
 
     from kstreamjs_spark.tables import load
 
-    customer, nation = load(spark, SF_SMOKE, "customer", "nation")
+    customer, nation = load(spark, sf_smoke, "customer", "nation")
     df = (
         customer.join(nation, F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("n_name")
@@ -29,8 +27,8 @@ def test_sql_equals_dataframe_join_agg(spark):
     assert sorted(map(tuple, sql.collect())) == sorted(map(tuple, df.collect()))
 
 
-def test_sql_window_function(spark):
-    register_views(spark, SF_SMOKE)
+def test_sql_window_function(spark, sf_smoke):
+    register_views(spark, sf_smoke)
     top = spark.sql("""
         SELECT * FROM (
             SELECT o_custkey, o_orderkey,

@@ -169,7 +169,7 @@ def test_write_to_parquet_roundtrip(spark, tmp_path):
     assert sorted(r["a"] for r in back.collect()) == [1, 2]
 
 
-def test_quickstart_example_runs(spark):
+def test_quickstart_example_runs(spark, sf_smoke):
     """examples/quickstart.py is the advertised on-ramp; it must keep
     running as the facade evolves. Executed in-process: get_spark's
     getOrCreate hands the example the suite's shared session, so its
@@ -178,14 +178,13 @@ def test_quickstart_example_runs(spark):
     import runpy
     from unittest import mock
 
-    from .conftest import SF_SMOKE
-
     mod = runpy.run_path("examples/quickstart.py", run_name="lib")
     with mock.patch.object(type(spark), "stop", lambda self: None):
-        assert mod["main"](SF_SMOKE) == 0
+        assert mod["main"](sf_smoke) == 0
 
 
-def test_curation_pipeline_example_runs(spark):
+@pytest.mark.slow
+def test_curation_pipeline_example_runs(spark, sf_smoke):
     """examples/curation_pipeline.py composes the curation operators
     end-to-end (dedup -> near-dup -> quality -> decontaminate -> sample
     -> pack); it must keep running as the operator APIs evolve. Same
@@ -193,14 +192,12 @@ def test_curation_pipeline_example_runs(spark):
     import runpy
     from unittest import mock
 
-    from .conftest import SF_SMOKE
-
     mod = runpy.run_path("examples/curation_pipeline.py", run_name="lib")
     with mock.patch.object(type(spark), "stop", lambda self: None):
-        assert mod["main"](SF_SMOKE) == 0
+        assert mod["main"](sf_smoke) == 0
 
 
-def test_multimodal_retrieval_example_runs(spark):
+def test_multimodal_retrieval_example_runs(spark, sf_smoke):
     """examples/multimodal_retrieval.py composes the round-9 operators
     (pHash dedup -> AFP dedup -> batched BM25 -> banded k-NN); it must
     keep running as those APIs evolve. Same shared-session guard as the
@@ -208,23 +205,19 @@ def test_multimodal_retrieval_example_runs(spark):
     import runpy
     from unittest import mock
 
-    from .conftest import SF_SMOKE
-
     mod = runpy.run_path("examples/multimodal_retrieval.py", run_name="lib")
     with mock.patch.object(type(spark), "stop", lambda self: None):
-        assert mod["main"](SF_SMOKE) == 0
+        assert mod["main"](sf_smoke) == 0
 
 
-def test_jsonl_roundtrip(spark, tmp_path):
+def test_jsonl_roundtrip(spark, sf_smoke, tmp_path):
     """write_to(fmt="json") -> from_jsonl reproduces the rows and restores
     the timestamp column's type (JSON serializes timestamps as strings —
     the reference's wire format, src/context.ts:122-143)."""
     import pyspark.sql.functions as F
 
-    from .conftest import SF_SMOKE
-
     src = (
-        Stream.from_parquet(spark, f"{SF_SMOKE}/events.parquet")
+        Stream.from_parquet(spark, f"{sf_smoke}/events.parquet")
         .filter(F.col("event_id") < 100)
     )
     out = str(tmp_path / "ev.jsonl")
@@ -237,7 +230,7 @@ def test_jsonl_roundtrip(spark, tmp_path):
     assert a == b
 
 
-def test_warehouse_analytics_example_runs(spark):
+def test_warehouse_analytics_example_runs(spark, sf_smoke):
     """examples/warehouse_analytics.py composes the star-schema shapes
     (dim-chain revenue rollup -> fulfilment audit -> bulk buyers ->
     segment LTV percentiles); it must keep running as the operator APIs
@@ -245,8 +238,6 @@ def test_warehouse_analytics_example_runs(spark):
     import runpy
     from unittest import mock
 
-    from .conftest import SF_SMOKE
-
     mod = runpy.run_path("examples/warehouse_analytics.py", run_name="lib")
     with mock.patch.object(type(spark), "stop", lambda self: None):
-        assert mod["main"](SF_SMOKE) == 0
+        assert mod["main"](sf_smoke) == 0

@@ -6,20 +6,23 @@ src/context.ts:218-222)."""
 from __future__ import annotations
 
 import os
+import threading
 import time
 
 import pyspark.sql.functions as F
+import pytest
+from pyspark.sql.streaming import StreamingQueryListener
 
 from kstreamjs_spark.stream import Stream
 from kstreamjs_spark.streaming.replay import run_to_memory, stream_table
 from kstreamjs_spark.streaming.stats import StatisticsListener
 
-from .conftest import SF_SMOKE, stage_stream
+from .conftest import stage_stream
 
 
-def test_stream_replay_equals_batch(spark):
+def test_stream_replay_equals_batch(spark, sf_smoke):
     """Hourly sums over the events replay == batch answer (Q29 shape)."""
-    sdf = stream_table(spark, SF_SMOKE, "events")
+    sdf = stream_table(spark, sf_smoke, "events")
     agg = (
         sdf.groupBy(F.window("ts", "1 hour"))
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -30,7 +33,7 @@ def test_stream_replay_equals_batch(spark):
     }
     from kstreamjs_spark.tables import load
 
-    (batch,) = load(spark, SF_SMOKE, "events")
+    (batch,) = load(spark, sf_smoke, "events")
     expected = {
         (r["h"], r["cnt"])
         for r in batch.groupBy(F.date_trunc("hour", "ts").alias("h"))
@@ -47,6 +50,7 @@ def _write_file(spark, rows, path):
     df.coalesce(1).write.mode("overwrite").parquet(path)
 
 
+@pytest.mark.slow
 def test_watermark_drops_late_rows(spark, tmp_path):
     """A row arriving after the watermark passed its window is dropped —
     the reference's drop-late policy (src/stream.ts:157-177), implemented
@@ -112,12 +116,12 @@ def test_stream_dedup_within_watermark(spark, tmp_path):
     assert out == [7, 8]
 
 
-def test_statistics_listener(spark):
+def test_statistics_listener(spark, sf_smoke):
     """recv/send totals via StreamingQueryListener — parity with the
     reference's Statistics counters (src/context.ts:39-52)."""
     listener = StatisticsListener().attach(spark)
     try:
-        sdf = stream_table(spark, SF_SMOKE, "events").select("event_id")
+        sdf = stream_table(spark, sf_smoke, "events").select("event_id")
         run_to_memory(sdf, "t_stats")
         deadline = time.time() + 10
         stats = listener.flush()
@@ -149,21 +153,21 @@ def test_statistics_event_timestamp_is_epoch_ms():
     assert a.merge(b).last_sent_event_timestamp == b.last_sent_event_timestamp
 
 
-def test_stream_facade_replay_window(spark):
+def test_stream_facade_replay_window(spark, sf_smoke):
     """Facade end-to-end on a real stream: replay -> filter -> window agg ->
     run_available (complete mode)."""
     s = (
-        Stream.replay(spark, SF_SMOKE, "events")
+        Stream.replay(spark, sf_smoke, "events")
         .filter(F.col("event_type") == "purchase")
         .window(interval_ms=3_600_000, aggs={"cnt": F.count(F.lit(1))})
     )
     out = s.run_available("t_facade", output_mode="complete")
     total = sum(r["cnt"] for r in out.collect())
-    batch = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
+    batch = spark.read.parquet(f"{sf_smoke}/events.parquet")
     assert total == batch.filter(F.col("event_type") == "purchase").count()
 
 
-def test_stateful_running_totals_converge_to_batch(spark):
+def test_stateful_running_totals_converge_to_batch(spark, sf_smoke):
     """q44: the max running total per user across micro-batches must equal
     the batch sum of the SAME per-row 1e-4 quanta (state accumulated
     correctly across batches; integer quanta make the comparison exact
@@ -171,9 +175,8 @@ def test_stateful_running_totals_converge_to_batch(spark):
     import pyspark.sql.functions as F
 
     from kstreamjs_spark.queries import all_queries
-    from .conftest import SF_SMOKE
 
-    out = all_queries()["q44_stateful_running_totals"].fn(spark, SF_SMOKE)
+    out = all_queries()["q44_stateful_running_totals"].fn(spark, sf_smoke)
     finals = {
         r["user_id"]: r["final_total"]
         for r in out.groupBy("user_id")
@@ -183,7 +186,7 @@ def test_stateful_running_totals_converge_to_batch(spark):
     quantum = F.floor(F.col("value") * 1e4 + 0.5).cast("long")
     batch = {
         r["user_id"]: r["sq"] / 10000.0
-        for r in spark.read.parquet(f"{SF_SMOKE}/events.parquet")
+        for r in spark.read.parquet(f"{sf_smoke}/events.parquet")
         .groupBy("user_id")
         .agg(F.sum(quantum).alias("sq"))
         .collect()
@@ -191,11 +194,11 @@ def test_stateful_running_totals_converge_to_batch(spark):
     assert finals == batch
 
 
-def test_stream_facade_write_to_parquet_sink(spark, tmp_path):
+def test_stream_facade_write_to_parquet_sink(spark, sf_smoke, tmp_path):
     """Facade streaming sink path (reference writeTo, src/stream.ts:240-247):
     replay -> filter -> file sink with checkpoint; rows land in parquet."""
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    s = Stream.replay(spark, SF_SMOKE, "events").filter(
+    s = Stream.replay(spark, sf_smoke, "events").filter(
         F.col("event_type") == "purchase"
     )
     handle = s.map(F.col("event_id")).df.writeStream.format("parquet").option(
@@ -204,14 +207,14 @@ def test_stream_facade_write_to_parquet_sink(spark, tmp_path):
     handle.awaitTermination()
     n = spark.read.parquet(out).count()
     expected = (
-        spark.read.parquet(f"{SF_SMOKE}/events.parquet")
+        spark.read.parquet(f"{sf_smoke}/events.parquet")
         .filter(F.col("event_type") == "purchase")
         .count()
     )
     assert n == expected
 
 
-def test_checkpoint_restart_is_exactly_once(spark, tmp_path):
+def test_checkpoint_restart_is_exactly_once(spark, sf_smoke, tmp_path):
     """`commit` parity, proven: the reference commits offsets every 60s and
     replays on crash (at-least-once, reference src/context.ts:111-113);
     checkpointed Structured Streaming restarts from the offset WAL with NO
@@ -225,7 +228,7 @@ def test_checkpoint_restart_is_exactly_once(spark, tmp_path):
     from kstreamjs_spark.tables import load
 
     src, ckpt, out = (str(tmp_path / d) for d in ("src", "ckpt", "out"))
-    (docs,) = load(spark, SF_SMOKE, "documents")
+    (docs,) = load(spark, sf_smoke, "documents")
     n_total = docs.count()
     docs.repartition(4).write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema
@@ -264,7 +267,10 @@ def test_checkpoint_restart_is_exactly_once(spark, tmp_path):
     assert spark.read.parquet(out).count() == n_total  # no loss, no dups
 
 
-def test_stream_decontaminate_invariant_to_micro_batching(spark, tmp_path):
+@pytest.mark.slow
+def test_stream_decontaminate_invariant_to_micro_batching(
+    spark, sf_smoke, tmp_path
+):
     """q167's claim — per-lang contaminated counts are independent of
     micro-batch boundaries — under ADVERSARIAL batching: the same
     documents replayed as 6 single-file micro-batches must produce the
@@ -281,7 +287,7 @@ def test_stream_decontaminate_invariant_to_micro_batching(spark, tmp_path):
     from kstreamjs_spark.tables import load
 
     src = str(tmp_path / "src")
-    (docs,) = load(spark, SF_SMOKE, "documents")
+    (docs,) = load(spark, sf_smoke, "documents")
     docs.repartition(6).write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema
     is_eval = sampling.sample_predicate(
@@ -315,7 +321,9 @@ def test_stream_decontaminate_invariant_to_micro_batching(spark, tmp_path):
     assert result(1) == result(None)
 
 
-def test_stream_inverted_index_update_emits_each_key_once(spark, tmp_path):
+def test_stream_inverted_index_update_emits_each_key_once(
+    spark, sf_smoke, tmp_path
+):
     """q166b's update-mode claim, pinned adversarially: replayed as 6
     single-file micro-batches, the update log must contain each
     (doc_id, token) posting EXACTLY once (update emits only changed
@@ -328,7 +336,7 @@ def test_stream_inverted_index_update_emits_each_key_once(spark, tmp_path):
     from kstreamjs_spark.tables import load
 
     src = str(tmp_path / "src")
-    (docs,) = load(spark, SF_SMOKE, "documents")
+    (docs,) = load(spark, sf_smoke, "documents")
     docs.repartition(6).write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema
 
@@ -368,6 +376,7 @@ def test_stream_inverted_index_update_emits_each_key_once(spark, tmp_path):
     assert got == expected
 
 
+@pytest.mark.slow
 def test_stream_decontaminate_update_mode_evicts_state(spark, tmp_path):
     """q167b's production-shape claims, pinned adversarially: the
     update-mode chain (semi-join -> dropDuplicatesWithinWatermark ->
@@ -468,7 +477,10 @@ def test_stream_decontaminate_update_mode_evicts_state(spark, tmp_path):
     assert split_removed > 0
 
 
-def test_stream_phash_dedup_update_folds_across_triggers(spark, tmp_path):
+@pytest.mark.slow
+def test_stream_phash_dedup_update_folds_across_triggers(
+    spark, sf_smoke, tmp_path
+):
     """q165b's update-mode claim, pinned adversarially: the documents
     replayed as 6 single-file micro-batches with group members SPREAD
     ACROSS triggers (repartition scatters doc_ids), so a perceptual
@@ -485,7 +497,7 @@ def test_stream_phash_dedup_update_folds_across_triggers(spark, tmp_path):
     from kstreamjs_spark.tables import load
 
     src = str(tmp_path / "src")
-    (docs,) = load(spark, SF_SMOKE, "documents")
+    (docs,) = load(spark, sf_smoke, "documents")
     docs.repartition(6).write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema
     sdf = (
@@ -535,7 +547,8 @@ def test_stream_phash_dedup_update_folds_across_triggers(spark, tmp_path):
     assert got == expected
 
 
-def test_stream_dsir_scoring_stateless_per_trigger(spark, tmp_path):
+@pytest.mark.slow
+def test_stream_dsir_scoring_stateless_per_trigger(spark, sf_smoke, tmp_path):
     """q177b's deployment claims, pinned adversarially: replayed as
     single-file micro-batches, every raw doc emits EXACTLY once (append
     mode, stateless scan projection — no dedup state needed to get this
@@ -551,7 +564,7 @@ def test_stream_dsir_scoring_stateless_per_trigger(spark, tmp_path):
     from kstreamjs_spark.tables import load
 
     src = str(tmp_path / "src")
-    (docs,) = load(spark, SF_SMOKE, "documents")
+    (docs,) = load(spark, sf_smoke, "documents")
     docs.repartition(6).write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema
 
@@ -568,7 +581,7 @@ def test_stream_dsir_scoring_stateless_per_trigger(spark, tmp_path):
     sq_mod.stream_table = patched_stream
     sq_mod.load = lambda spark_, sf_, *n: (spark.read.parquet(src),)
     try:
-        out = q177b(spark, SF_SMOKE)
+        out = q177b(spark, sf_smoke)
     finally:
         sq_mod.stream_table = orig_stream_table
         sq_mod.load = orig_load
@@ -588,7 +601,7 @@ def test_stream_dsir_scoring_stateless_per_trigger(spark, tmp_path):
     llm_mod.load = lambda spark_, sf_, *n: (spark.read.parquet(src),)
     try:
         batch = {r["doc_id"]: (r["n_bigrams"], r["dsir_score"])
-                 for r in q177(spark, SF_SMOKE).collect()}
+                 for r in q177(spark, sf_smoke).collect()}
     finally:
         llm_mod.load = orig_llm_load
     assert 0 < len(batch) <= _DSIR_K
@@ -596,7 +609,8 @@ def test_stream_dsir_scoring_stateless_per_trigger(spark, tmp_path):
         assert rows[did] == v
 
 
-def test_stream_gopher_filter_matches_batch_funnel(spark, tmp_path):
+@pytest.mark.slow
+def test_stream_gopher_filter_matches_batch_funnel(spark, sf_smoke, tmp_path):
     """q178b's row-local verdicts, aggregated per lang, must equal batch
     q178's funnel (which computes the top-2-gram rule via a groupBy —
     the two formulations are value-identical by construction, asserted
@@ -610,7 +624,7 @@ def test_stream_gopher_filter_matches_batch_funnel(spark, tmp_path):
     from kstreamjs_spark.tables import load
 
     src = str(tmp_path / "src")
-    (docs,) = load(spark, SF_SMOKE, "documents")
+    (docs,) = load(spark, sf_smoke, "documents")
     docs.repartition(6).write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema
 
@@ -620,7 +634,7 @@ def test_stream_gopher_filter_matches_batch_funnel(spark, tmp_path):
         .option("maxFilesPerTrigger", "1").parquet(src)
     )
     try:
-        out = q178b(spark, SF_SMOKE)
+        out = q178b(spark, sf_smoke)
     finally:
         sq_mod.stream_table = orig_stream
     rows = out.collect()
@@ -649,7 +663,7 @@ def test_stream_gopher_filter_matches_batch_funnel(spark, tmp_path):
         exp = {
             r["lang"]: (r["n_docs"], r["fail_wordcount"], r["fail_wordlen"],
                         r["fail_required"], r["fail_topngram"], r["pass_all"])
-            for r in q178(spark, SF_SMOKE).collect()
+            for r in q178(spark, sf_smoke).collect()
         }
     finally:
         llm_mod.load = orig_load
@@ -690,6 +704,68 @@ def test_stream_bpe_tokenize_counts_empty_words(spark, tmp_path):
     assert (r["n_bpe_tokens"], r["n_words"]) == (4, 4)
 
 
+class _JoinState(StreamingQueryListener):
+    """The state-operator progress of the one streaming query named
+    ``<name>_*``, over all its triggers. Listener events arrive
+    asynchronously, so ``ops()`` first waits for the query's
+    termination event."""
+
+    def __init__(self, name):
+        self.prefix, self.id, self._ops = name + "_", None, []
+        self._done = threading.Event()
+
+    def onQueryStarted(self, event):  # noqa: N802
+        if (event.name or "").startswith(self.prefix):
+            self.id = event.id
+
+    def onQueryProgress(self, event):  # noqa: N802
+        if event.progress.id == self.id:
+            self._ops.extend(event.progress.stateOperators)
+
+    def onQueryIdle(self, event):  # noqa: N802
+        pass
+
+    def onQueryTerminated(self, event):  # noqa: N802
+        if event.id == self.id:
+            self._done.set()
+
+    def ops(self):
+        assert self._done.wait(60)
+        return self._ops
+
+
+def _q51_replay(read, how, max_files, name):
+    """q51's interval join (``how``) over the staged events, taking
+    ``max_files`` files per trigger, drained through run_to_memory;
+    returns the sink rows and the join's state-operator progress."""
+    from kstreamjs_spark.queries.streaming_q import _interval_join
+
+    j = _interval_join(read(max_files), read(max_files), how)
+    state = _JoinState(name)
+    j.sparkSession.streams.addListener(state)
+    try:
+        rows = run_to_memory(j, name).collect()
+        return rows, state.ops()
+    finally:
+        j.sparkSession.streams.removeListener(state)
+
+
+_BASE = 1_700_000_000
+
+
+def _adversarial_events(spark, tmp_path, rows):
+    """``rows`` of (event_id, user_id, event_type, ts offset) staged as
+    a time-ordered multi-trigger file stream; returns its reader."""
+    df = spark.createDataFrame(
+        rows, "event_id long, user_id long, event_type string, off long",
+    ).select(
+        "event_id", "user_id", "event_type",
+        F.timestamp_seconds(F.lit(_BASE) + F.col("off")).alias("ts"),
+    )
+    return stage_stream(df, str(tmp_path / "events"), "ts")
+
+
+@pytest.mark.slow
 def test_stream_left_outer_join_null_emission_is_watermark_gated(
     spark, tmp_path
 ):
@@ -704,10 +780,8 @@ def test_stream_left_outer_join_null_emission_is_watermark_gated(
     (c) matched pairs stream out regardless of the watermark;
     (d) the 6-trigger split equals the one-batch replay — boundary
         independence with join state in play."""
-    import uuid
-
-    base = 1_700_000_000
-    rows = [
+    base = _BASE
+    read = _adversarial_events(spark, tmp_path, [
         # (event_id, user_id, event_type, ts_off)
         (101, 1, "purchase", 1000),  # no click in (400, 1000]: null row
         (102, 2, "purchase", 1200),  # click at 900 in (600, 1200]: pair
@@ -717,49 +791,15 @@ def test_stream_left_outer_join_null_emission_is_watermark_gated(
         (103, 4, "purchase", 4000),  # watermark never passes: NO row
         (4, 5, "click", 4020),       # sets click-side max ts
         (104, 6, "purchase", 3000),  # closed (wm 3940): null row
-    ]
-    df = spark.createDataFrame(
-        [(e, u, t, o) for e, u, t, o in rows],
-        "event_id long, user_id long, event_type string, off long",
-    ).select(
-        "event_id", "user_id", "event_type",
-        F.timestamp_seconds(F.lit(base) + F.col("off")).alias("ts"),
-    )
-    read = stage_stream(df, str(tmp_path / "events"), "ts")
+    ])
 
     def run(max_files):
-        p = (
-            read(max_files).filter(F.col("event_type") == "purchase")
-            .select("event_id", "user_id", "ts")
-            .withWatermark("ts", "1 minute")
-        )
-        c = (
-            read(max_files).filter(F.col("event_type") == "click")
-            .select(F.col("user_id").alias("c_user"),
-                    F.col("ts").alias("click_ts"))
-            .withWatermark("click_ts", "1 minute")
-        )
-        j = p.join(
-            c,
-            (F.col("user_id") == F.col("c_user"))
-            & (F.col("click_ts") > F.col("ts") - F.expr("INTERVAL 10 MINUTES"))
-            & (F.col("click_ts") <= F.col("ts")),
-            "left_outer",
-        ).select("event_id", "user_id", "click_ts")
-        qname = f"q51b_adv_{uuid.uuid4().hex[:8]}"
-        q = (
-            j.writeStream.format("memory").queryName(qname)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        assert q.awaitTermination(600)
-        removed = 0
-        for pr in q.recentProgress:
-            for op in pr.get("stateOperators", []):
-                removed += op.get("numRowsRemoved", 0) or 0
+        rows, ops = _q51_replay(read, "left_outer", max_files, "q51b_adv")
+        removed = sum(op.numRowsRemoved or 0 for op in ops)
         got = sorted(
             (r["event_id"], r["user_id"],
              None if r["click_ts"] is None else int(r["click_ts"].timestamp()))
-            for r in spark.table(qname).collect()
+            for r in rows
         )
         return got, removed
 
@@ -776,6 +816,7 @@ def test_stream_left_outer_join_null_emission_is_watermark_gated(
     assert split_removed > 0  # state really evicted under the split replay
 
 
+@pytest.mark.slow
 def test_stream_full_outer_join_gates_nulls_on_both_sides(spark, tmp_path):
     """q51c's production claims: (a) a closed unmatched purchase emits
     its null-click row; (b) a closed unmatched click (watermark past
@@ -784,10 +825,8 @@ def test_stream_full_outer_join_gates_nulls_on_both_sides(spark, tmp_path):
     future purchase could still match it); (d) matched pairs stream
     out; (e) the split replay equals the one-batch replay and state
     really evicts."""
-    import uuid
-
-    base = 1_700_000_000
-    rows = [
+    base = _BASE
+    read = _adversarial_events(spark, tmp_path, [
         # (event_id, user_id, event_type, ts_off)
         (101, 1, "purchase", 1000),  # no click in (400, 1000]: null-click
         (102, 2, "purchase", 1200),  # click at 900 matches: pair
@@ -796,62 +835,27 @@ def test_stream_full_outer_join_gates_nulls_on_both_sides(spark, tmp_path):
         (3, 4, "click", 3600),       # no purchase; 3600+600=4200 > wm 3940: ABSENT
         (103, 5, "purchase", 4000),  # open at wm: ABSENT
         (4, 6, "click", 4020),       # sets click-side max ts; open: ABSENT
-    ]
-    df = spark.createDataFrame(
-        [(e, u, t, o) for e, u, t, o in rows],
-        "event_id long, user_id long, event_type string, off long",
-    ).select(
-        "event_id", "user_id", "event_type",
-        F.timestamp_seconds(F.lit(base) + F.col("off")).alias("ts"),
-    )
-    read = stage_stream(df, str(tmp_path / "events"), "ts")
+    ])
 
     def run(max_files):
-        p = (
-            read(max_files).filter(F.col("event_type") == "purchase")
-            .select("event_id", F.col("user_id").alias("p_user"), "ts")
-            .withWatermark("ts", "1 minute")
-        )
-        c = (
-            read(max_files).filter(F.col("event_type") == "click")
-            .select(F.col("user_id").alias("c_user"),
-                    F.col("ts").alias("click_ts"))
-            .withWatermark("click_ts", "1 minute")
-        )
-        j = p.join(
-            c,
-            (F.col("p_user") == F.col("c_user"))
-            & (F.col("click_ts") > F.col("ts") - F.expr("INTERVAL 10 MINUTES"))
-            & (F.col("click_ts") <= F.col("ts")),
-            "full_outer",
-        ).select("event_id", "p_user", "c_user", "click_ts")
-        qname = f"q51c_adv_{uuid.uuid4().hex[:8]}"
-        q = (
-            j.writeStream.format("memory").queryName(qname)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        assert q.awaitTermination(600)
+        rows, ops = _q51_replay(read, "full_outer", max_files, "q51c_adv")
         # the full-outer symmetricHashJoin does not populate
         # numRowsRemoved (measured; the left-outer one does) — pin
         # eviction via the state-size trajectory instead: rows leave
         # the join state when the watermark passes them
-        totals = [
-            op.get("numRowsTotal", 0)
-            for pr in q.recentProgress
-            for op in pr.get("stateOperators", [])
-        ]
+        totals = [op.numRowsTotal or 0 for op in ops]
         removed = (max(totals) - totals[-1]) if totals else 0
         # the final watermark is min(maxP, maxC) - 1min = 3940; closed
         # region per q51c's two-sided rule
         wm = base + 3940
         got = sorted(
             [
-                (r["event_id"], r["p_user"], r["c_user"],
+                (r["event_id"], r["user_id"], r["c_user"],
                  None if r["click_ts"] is None
                  else int(r["click_ts"].timestamp()))
-                for r in spark.table(qname).collect()
+                for r in rows
                 if (r["event_id"] is not None
-                    and r["p_user"] is not None)  # purchase-bearing
+                    and r["user_id"] is not None)  # purchase-bearing
                 or (r["click_ts"] is not None
                     and int(r["click_ts"].timestamp()) + 600 <= wm)
             ],
@@ -872,7 +876,7 @@ def test_stream_full_outer_join_gates_nulls_on_both_sides(spark, tmp_path):
     assert split_removed > 0
 
 
-def test_stream_pq_encode_equals_batch(spark):
+def test_stream_pq_encode_equals_batch(spark, sf_smoke):
     """q191b's hard equality: streaming PQ encoding is a pure per-row
     function of the shipped codebooks, so the replayed codes must
     equal batch pq_encode bit-for-bit on every vector."""
@@ -883,9 +887,9 @@ def test_stream_pq_encode_equals_batch(spark):
     got = {
         r["vec_id"]: (r["c_first"], r["c_last"], r["c_sum"])
         for r in all_queries()["q191b_stream_pq_encode"]
-        .fn(spark, SF_SMOKE).collect()
+        .fn(spark, sf_smoke).collect()
     }
-    (emb,) = load(spark, SF_SMOKE, "embeddings")
+    (emb,) = load(spark, sf_smoke, "embeddings")
     books = similarity.pq_codebooks(emb, m=16, n_cent=16)
     expected = {
         r["vec_id"]: (r["codes"][0], r["codes"][15], sum(r["codes"]))
@@ -895,14 +899,13 @@ def test_stream_pq_encode_equals_batch(spark):
     assert got == expected
 
 
+@pytest.mark.slow
 def test_stream_semi_join_emits_once_and_only_matched(spark, tmp_path):
     """q51d's claims: (a) a purchase with MULTIPLE matching clicks
     emits exactly ONCE (the fan-out the semi form removes); (b) an
     unmatched purchase never emits; (c) split == whole."""
-    import uuid
-
-    base = 1_700_000_000
-    rows = [
+    base = _BASE
+    read = _adversarial_events(spark, tmp_path, [
         (101, 1, "purchase", 1200),  # clicks at 900 AND 1000: ONE row
         (1, 1, "click", 900),
         (2, 1, "click", 1000),
@@ -910,45 +913,14 @@ def test_stream_semi_join_emits_once_and_only_matched(spark, tmp_path):
         (3, 2, "click", 200),        # outside (500, 1100]
         (103, 3, "purchase", 4000),  # open at wm: excluded by region
         (4, 4, "click", 4020),       # sets click-side max
-    ]
-    df = spark.createDataFrame(
-        [(e, u, t, o) for e, u, t, o in rows],
-        "event_id long, user_id long, event_type string, off long",
-    ).select(
-        "event_id", "user_id", "event_type",
-        F.timestamp_seconds(F.lit(base) + F.col("off")).alias("ts"),
-    )
-    read = stage_stream(df, str(tmp_path / "events"), "ts")
+    ])
 
     def run(max_files):
-        p = (
-            read(max_files).filter(F.col("event_type") == "purchase")
-            .select("event_id", "user_id", "ts")
-            .withWatermark("ts", "1 minute")
-        )
-        c = (
-            read(max_files).filter(F.col("event_type") == "click")
-            .select(F.col("user_id").alias("c_user"),
-                    F.col("ts").alias("click_ts"))
-            .withWatermark("click_ts", "1 minute")
-        )
-        j = p.join(
-            c,
-            (F.col("user_id") == F.col("c_user"))
-            & (F.col("click_ts") > F.col("ts") - F.expr("INTERVAL 10 MINUTES"))
-            & (F.col("click_ts") <= F.col("ts")),
-            "left_semi",
-        ).select("event_id", "user_id", "ts")
-        qname = f"q51d_adv_{uuid.uuid4().hex[:8]}"
-        q = (
-            j.writeStream.format("memory").queryName(qname)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        assert q.awaitTermination(600)
+        rows, _ = _q51_replay(read, "left_semi", max_files, "q51d_adv")
         cutoff = base + 4000 - 60 - 1  # min-side max 4000, 1min delay, 1s
         return sorted(
             (r["event_id"], r["user_id"])
-            for r in spark.table(qname).collect()
+            for r in rows
             if int(r["ts"].timestamp()) <= cutoff
         )
 
@@ -959,6 +931,7 @@ def test_stream_semi_join_emits_once_and_only_matched(spark, tmp_path):
     assert whole == expected, whole
 
 
+@pytest.mark.slow
 def test_window_collect_fires_once_across_microbatches(spark, tmp_path):
     """Facade window(collect=) on STREAMING input reduces EXACTLY ONCE
     per window even when the window's rows span micro-batches (round
@@ -1022,6 +995,7 @@ def test_window_collect_fires_once_across_microbatches(spark, tmp_path):
     assert len(streamed) == 2
 
 
+@pytest.mark.slow
 def test_window_collect_stateful_keyed(spark, tmp_path):
     """The keyed variant of the fire-once collect path: (window, key)
     groups buffer independently, key columns ride through the output,
@@ -1080,6 +1054,7 @@ def test_window_collect_stateful_keyed(spark, tmp_path):
     assert len(streamed) == len(expected)
 
 
+@pytest.mark.slow
 def test_stream_minhash_candidates_equal_batch_any_schedule(spark, tmp_path):
     """q205's contract: the streamed candidate-pair SET equals batch
     _lsh_candidate_pairs exactly, for any micro-batch schedule —
@@ -1144,6 +1119,7 @@ def test_stream_minhash_candidates_equal_batch_any_schedule(spark, tmp_path):
         assert got == expected, (tag, got, expected)
 
 
+@pytest.mark.slow
 def test_stream_minhash_verified_equal_batch_any_schedule(spark, tmp_path):
     """q205b's contract: the streamed VERIFIED pair set (in-stream
     exact-Jaccard over stream-static shingle join, plus the drop_id
@@ -1200,6 +1176,7 @@ def test_stream_minhash_verified_equal_batch_any_schedule(spark, tmp_path):
         assert all(r["drop_id"] == r["d2"] for r in got_rows)
 
 
+@pytest.mark.slow
 def test_window_collect_stateful_from_origin_alignment(spark, tmp_path):
     """from_ms on the STREAMING collect path: early rows are dropped
     and windows align to from_ms (origin = from_ms % interval), exactly
@@ -1249,6 +1226,7 @@ def test_window_collect_stateful_from_origin_alignment(spark, tmp_path):
     assert sum(s for _, _, s in streamed) == 1 + 2 + 4
 
 
+@pytest.mark.slow
 def test_window_collect_stateful_strict_watermark_boundary(spark, tmp_path):
     """Pins the strict timeout semantics q33b's oracle encodes (round-12
     review find, verified against Spark's FlatMapGroupsWithStateExec:
@@ -1321,7 +1299,7 @@ def test_window_state_arrow_ipc_roundtrip():
     pd.testing.assert_frame_equal(merged, pdf)
 
 
-def test_stream_lakehouse_ingest_multibatch_append(spark, tmp_path):
+def test_stream_lakehouse_ingest_multibatch_append(spark, sf_smoke, tmp_path):
     """q211b's contract under REAL multi-batch ingest: orders split
     across three files, replayed one file per trigger, each micro-batch
     z-staged and appended — the final written table's manifest must
@@ -1335,7 +1313,7 @@ def test_stream_lakehouse_ingest_multibatch_append(spark, tmp_path):
     from kstreamjs_spark.operators import layout
     from kstreamjs_spark.streaming.replay import run_foreach_batch
 
-    orders = spark.read.parquet(f"{SF_SMOKE}/orders.parquet")
+    orders = spark.read.parquet(f"{sf_smoke}/orders.parquet")
     src = str(tmp_path / "orders_stream")
     os.makedirs(src, exist_ok=True)
     parts = orders.randomSplit([1.0, 1.0, 1.0], seed=7)
@@ -1394,7 +1372,7 @@ def test_stream_lakehouse_ingest_multibatch_append(spark, tmp_path):
             assert all(lo <= yv <= hi for yv in ys), (cell, p)
 
 
-def test_stream_scd1_upsert_multibatch_equals_batch(spark, tmp_path):
+def test_stream_scd1_upsert_multibatch_equals_batch(spark, sf_smoke, tmp_path):
     """q213's contract under REAL multi-commit ingest: events split in
     three files, one per trigger — each commit merges into a new
     versioned snapshot; the final snapshot must equal the batch rollup
@@ -1406,7 +1384,7 @@ def test_stream_scd1_upsert_multibatch_equals_batch(spark, tmp_path):
 
     from kstreamjs_spark.queries.streaming_q import scd1_upsert_stream
 
-    events = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
+    events = spark.read.parquet(f"{sf_smoke}/events.parquet")
     assert (
         events.groupBy("user_id", "ts").count()
         .filter(F.col("count") > 1).count() == 0
@@ -1456,6 +1434,7 @@ def test_stream_scd1_upsert_multibatch_equals_batch(spark, tmp_path):
     assert len(live_bucket_dirs) == len(man["bucket_commit"])
 
 
+@pytest.mark.slow
 def test_stream_scd1_schema_evolution_mixed_manifest(spark, tmp_path):
     """q213d's mechanics, pinned on a hand-built 3-trigger schedule
     that straddles the evolution boundary (T = Jan 15):
@@ -1553,6 +1532,7 @@ def test_stream_scd1_schema_evolution_mixed_manifest(spark, tmp_path):
     assert all(r["n_events"] == 2 for r in as_of0)
 
 
+@pytest.mark.slow
 def test_stream_scd1_merge_prunes_untouched_buckets(spark, tmp_path):
     """The round-14 MERGE contract: a commit whose batch touches ONE
     key must rewrite only that key's bucket — every other bucket's
@@ -1650,7 +1630,10 @@ def test_stream_scd1_merge_prunes_untouched_buckets(spark, tmp_path):
         assert not os.path.exists(table_root + f"/commit_v0/pbucket={b}")
 
 
-def test_stream_scd1_changelog_ledger_across_commits(spark, tmp_path):
+@pytest.mark.slow
+def test_stream_scd1_changelog_ledger_across_commits(
+    spark, sf_smoke, tmp_path
+):
     """q213b's multi-commit contract on a 3-trigger replay: the
     changelog is a consistent ledger — (a) per user the commit deltas
     (n_after - n_before) sum to the final dimension count, (b) each
@@ -1661,7 +1644,7 @@ def test_stream_scd1_changelog_ledger_across_commits(spark, tmp_path):
 
     from kstreamjs_spark.queries.streaming_q import scd1_upsert_stream
 
-    events = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
+    events = spark.read.parquet(f"{sf_smoke}/events.parquet")
     src = str(tmp_path / "ev")
     os.makedirs(src, exist_ok=True)
     parts = events.randomSplit([1.0, 1.0, 1.0], seed=23)
@@ -1711,7 +1694,10 @@ def test_stream_scd1_changelog_ledger_across_commits(spark, tmp_path):
         assert (rows[-1][3], rows[-1][4]) == (dim[u][1], dim[u][2])
 
 
-def test_stream_scd1_time_travel_within_vacuum_horizon(spark, tmp_path):
+@pytest.mark.slow
+def test_stream_scd1_time_travel_within_vacuum_horizon(
+    spark, sf_smoke, tmp_path
+):
     """q213c's multi-commit contract on a 3-trigger replay with
     retain_commits=1: (a) AS OF each RETAINED version reproduces the
     exact prefix rollup (events from the batches up to that commit),
@@ -1719,14 +1705,13 @@ def test_stream_scd1_time_travel_within_vacuum_horizon(spark, tmp_path):
     bucket copies are physically gone and the as-of read fails, by
     design, (c) the default reader (newest manifest) equals the full
     rollup."""
-    import pytest as _pytest
 
     from kstreamjs_spark.queries.streaming_q import (
         scd1_read_as_of,
         scd1_upsert_stream,
     )
 
-    events = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
+    events = spark.read.parquet(f"{sf_smoke}/events.parquet")
     src = str(tmp_path / "ev")
     os.makedirs(src, exist_ok=True)
     parts = events.randomSplit([1.0, 1.0, 1.0], seed=31)
@@ -1773,14 +1758,13 @@ def test_stream_scd1_time_travel_within_vacuum_horizon(spark, tmp_path):
     # (b) version 0 is past the horizon (superseded at v1, pruned once
     # the table reached v2 = 1 + retain_commits): the read must fail on
     # missing files — time travel degrades exactly at the VACUUM edge
-    with _pytest.raises(Exception):
+    with pytest.raises(Exception):
         as_of(0)
 
 
 def test_stream_scd1_empty_source_raises(spark, tmp_path):
     """ADVICE fix: zero micro-batches -> a clear error, not a
     path-not-found on a v-1 read."""
-    import pytest as _pytest
 
     from kstreamjs_spark.queries.streaming_q import scd1_upsert_stream
 
@@ -1791,10 +1775,11 @@ def test_stream_scd1_empty_source_raises(spark, tmp_path):
         .schema("user_id long, value double, ts timestamp")
         .parquet(src + "/*")
     )
-    with _pytest.raises(ValueError, match="zero micro-batches"):
+    with pytest.raises(ValueError, match="zero micro-batches"):
         scd1_upsert_stream(sdf, str(tmp_path / "dim_empty"))
 
 
+@pytest.mark.slow
 def test_bucket_pair_stream_bounded_keys_collision_semantics(
     spark, tmp_path
 ):
@@ -1865,6 +1850,7 @@ def test_bucket_pair_stream_bounded_keys_collision_semantics(
     assert state_totals and max(state_totals) <= 4  # slots, not buckets
 
 
+@pytest.mark.slow
 def test_bucket_pair_stream_ttl_evicts_and_loses_late_pairs(
     spark, tmp_path
 ):
@@ -1998,8 +1984,9 @@ def test_bucket_pair_stream_ttl_evicts_and_loses_late_pairs(
     assert ttl_total == 0
 
 
+@pytest.mark.slow
 def test_stream_ingest_compacted_bounds_files_and_loses_nothing(
-    spark, tmp_path
+    spark, sf_smoke, tmp_path
 ):
     """q215b's contract under REAL multi-trigger ingest: orders split
     in three files, one per trigger — each commit appends z-staged
@@ -2014,7 +2001,7 @@ def test_stream_ingest_compacted_bounds_files_and_loses_nothing(
         stream_ingest_compacted,
     )
 
-    orders = spark.read.parquet(f"{SF_SMOKE}/orders.parquet")
+    orders = spark.read.parquet(f"{sf_smoke}/orders.parquet")
     src = str(tmp_path / "orders_stream")
     os.makedirs(src, exist_ok=True)
     parts = orders.randomSplit([1.0, 1.0, 1.0], seed=5)
@@ -2061,6 +2048,7 @@ def test_stream_ingest_compacted_bounds_files_and_loses_nothing(
     assert manifest == expected
 
 
+@pytest.mark.slow
 def test_stream_embedding_neardup_equals_batch_any_schedule(spark, tmp_path):
     """q214b's contract: the streamed VERIFIED embedding pair set
     (bucket_pair_stream over SRP bands + in-stream exact cosine)
@@ -2144,6 +2132,7 @@ def test_stream_embedding_neardup_equals_batch_any_schedule(spark, tmp_path):
         assert got == expected, (tag, got, expected)
 
 
+@pytest.mark.slow
 def test_scd1_concurrent_writers_optimistic_commit(spark, tmp_path):
     """Round-15 multi-writer story (the r14 verdict's open lakehouse
     gap): two INDEPENDENT writers against one SCD1 table root,
@@ -2168,7 +2157,6 @@ def test_scd1_concurrent_writers_optimistic_commit(spark, tmp_path):
         scd1_commit_batch,
         scd1_read_as_of,
     )
-    import pytest as _pytest
 
     n_buckets = 4
     # derive each user's bucket with the SAME hash the writer uses
@@ -2227,7 +2215,7 @@ def test_scd1_concurrent_writers_optimistic_commit(spark, tmp_path):
         spark, root, snap, batch([(b2, 2, 30.0)]), n_buckets=n_buckets
     )
     assert commit([(b2, 3, 40.0)]) == 3  # E wins v3, same bucket
-    with _pytest.raises(ConcurrentWriteConflict):
+    with pytest.raises(ConcurrentWriteConflict):
         _scd1_publish(root, pend_d)
     # D recomputes from a fresh snapshot and lands
     assert commit([(b2, 2, 30.0)]) == 4
@@ -2255,6 +2243,7 @@ def test_scd1_concurrent_writers_optimistic_commit(spark, tmp_path):
         assert scd1_read_as_of(spark, root, version=v).count() > 0
 
 
+@pytest.mark.slow
 def test_scd1_concurrent_committer_refuses_evolved_tables(spark, tmp_path):
     """Round-15 review finding: the concurrent batch committer merges
     the BASE schema only — rewriting an evolved bucket with a base
@@ -2263,7 +2252,6 @@ def test_scd1_concurrent_committer_refuses_evolved_tables(spark, tmp_path):
     _manifest_bucket_dir's key-presence semantics (an empty-but-
     present bucket_dir is an empty TABLE, not a missing key — the
     falsy-or form raised KeyError on concurrent-writer manifests)."""
-    import pytest as _pytest
 
     from kstreamjs_spark.queries.streaming_q import (
         _manifest_bucket_dir,
@@ -2300,7 +2288,7 @@ def test_scd1_concurrent_committer_refuses_evolved_tables(spark, tmp_path):
         "user_id long, ts_s string, value double",
     ).select("user_id", F.col("ts_s").cast("timestamp").alias("ts"),
              "value")
-    with _pytest.raises(ValueError, match="schema-evolved"):
+    with pytest.raises(ValueError, match="schema-evolved"):
         scd1_commit_batch(spark, root, batch)
 
 
@@ -2349,6 +2337,7 @@ def _data_file_stats(root):
     return out
 
 
+@pytest.mark.slow
 def test_scd1_delete_vectors_merge_on_read(spark, tmp_path):
     """q220's core merge-on-read contract. Pins:
     (a) DELETE rewrites NO data file (every parquet byte-identical by
@@ -2408,6 +2397,7 @@ def test_scd1_delete_vectors_merge_on_read(spark, tmp_path):
     assert _data_file_stats(root) == before
 
 
+@pytest.mark.slow
 def test_scd1_delete_then_writer_applies_and_resurrects(spark, tmp_path):
     """q220's MERGE interplay. After a DELETE, a batch commit touching
     a deleted bucket (1) applies the pending delete during its rewrite
@@ -2504,6 +2494,7 @@ def test_scd1_purge_deletes_materializes(spark, tmp_path):
     assert scd1_purge_deletes(spark, root, n_buckets=n_buckets) == v
 
 
+@pytest.mark.slow
 def test_scd1_delete_concurrent_overlap_conflicts(spark, tmp_path):
     """q220's concurrency rule, both directions: a MERGE prepared
     before a DELETE landed on the same bucket must conflict at publish
@@ -2514,7 +2505,6 @@ def test_scd1_delete_concurrent_overlap_conflicts(spark, tmp_path):
     import json
     import os
 
-    import pytest as _pytest
 
     from kstreamjs_spark.queries.streaming_q import (
         ConcurrentWriteConflict,
@@ -2542,7 +2532,7 @@ def test_scd1_delete_concurrent_overlap_conflicts(spark, tmp_path):
     assert scd1_delete_where(
         spark, root, "last.value < 10.0", n_buckets=n_buckets
     ) == 1
-    with _pytest.raises(ConcurrentWriteConflict):
+    with pytest.raises(ConcurrentWriteConflict):
         _scd1_publish(root, stale)
     # disjoint: merge of u1's bucket prepared before the SAME kind of
     # race rebases fine and carries the delete entry forward
@@ -2559,6 +2549,7 @@ def test_scd1_delete_concurrent_overlap_conflicts(spark, tmp_path):
     }
 
 
+@pytest.mark.slow
 def test_stream_knn_graph_insert_planted_manifold(spark, tmp_path):
     """q219b's search-then-link insert on the planted 4-cluster
     manifold (q218's fixture family): seed = first half, stream = full
@@ -2683,7 +2674,6 @@ def test_scd1_spec_mismatch_raises(spark, tmp_path):
     """q225's hardening: a writer/deleter/purger whose n_buckets
     differs from the recorded spec fails LOUDLY instead of silently
     scattering keys across two specs' buckets."""
-    import pytest as _pytest
 
     from kstreamjs_spark.queries.streaming_q import (
         scd1_commit_batch,
@@ -2695,13 +2685,13 @@ def test_scd1_spec_mismatch_raises(spark, tmp_path):
     scd1_commit_batch(
         spark, root, _scd1_batch(spark, [(1, 1, 1.0)]), n_buckets=4
     )
-    with _pytest.raises(ValueError, match="bucket spec"):
+    with pytest.raises(ValueError, match="bucket spec"):
         scd1_commit_batch(
             spark, root, _scd1_batch(spark, [(2, 1, 2.0)]), n_buckets=8
         )
-    with _pytest.raises(ValueError, match="bucket spec"):
+    with pytest.raises(ValueError, match="bucket spec"):
         scd1_delete_where(spark, root, "user_id = 1", n_buckets=8)
-    with _pytest.raises(ValueError, match="bucket spec"):
+    with pytest.raises(ValueError, match="bucket spec"):
         scd1_purge_deletes(spark, root, n_buckets=8)
 
 
@@ -2709,7 +2699,6 @@ def test_scd1_rebucket_conflicts_with_any_commit(spark, tmp_path):
     """q225's concurrency rule: a rebucket touches EVERY bucket, so a
     publish against a stale snapshot conflicts on ANY intervening
     commit (no disjoint rebase exists)."""
-    import pytest as _pytest
 
     from kstreamjs_spark.queries.streaming_q import (
         ConcurrentWriteConflict,
@@ -2726,7 +2715,7 @@ def test_scd1_rebucket_conflicts_with_any_commit(spark, tmp_path):
     scd1_commit_batch(
         spark, root, _scd1_batch(spark, [(2, 1, 2.0)]), n_buckets=4
     )
-    with _pytest.raises(ConcurrentWriteConflict):
+    with pytest.raises(ConcurrentWriteConflict):
         _scd1_publish(root, {
             "dir": "commit_wdeadbeef",
             "buckets": [0, 1],
@@ -2833,6 +2822,7 @@ def test_scd1_empty_table_reads_and_rebuckets(spark, tmp_path):
             for r in rows] == [(41, 1, 7.0)]
 
 
+@pytest.mark.slow
 def test_stream_cdc_lww_tombstone_semantics(spark, tmp_path):
     """q226's CDC contract on a planted ledger, split across 2
     triggers BOTH ways: (a) a key whose latest record is a tombstone
@@ -2914,6 +2904,7 @@ def test_stream_cdc_lww_tombstone_semantics(spark, tmp_path):
     assert run_split(2) == want
 
 
+@pytest.mark.slow
 def test_stream_graph_ann_serve_equals_batch(spark, tmp_path):
     """q229's stateless-serving claim, pinned: the SAME query set
     split across 2 triggers (both split points) produces exactly the
@@ -2986,7 +2977,8 @@ def test_stream_graph_ann_serve_equals_batch(spark, tmp_path):
     assert serve(4) == want
 
 
-def test_stream_weighted_minhash_equals_batch(spark):
+@pytest.mark.slow
+def test_stream_weighted_minhash_equals_batch(spark, sf_smoke):
     """q232b's hard contract: the streamed CWS-banded candidate set
     plus shared verify must equal batch q232 EXACTLY (the projection,
     the bucket emitter's schedule-invariance, and the one-home verify
@@ -2994,7 +2986,7 @@ def test_stream_weighted_minhash_equals_batch(spark):
     from kstreamjs_spark.queries import all_queries
 
     q = all_queries()
-    sfd = SF_SMOKE
+    sfd = sf_smoke
     batch = sorted(
         tuple(r)
         for r in q["q232_weighted_minhash_neardup"].fn(spark, sfd).collect()
@@ -3007,6 +2999,7 @@ def test_stream_weighted_minhash_equals_batch(spark):
     assert batch  # non-vacuous: the smoke corpus has >= 1 pair
 
 
+@pytest.mark.slow
 def test_stream_chunk_dedup_schedule_invariance(spark, tmp_path):
     """q221b's contract (round 16): for ANY in-doc-order trigger
     split, the streamed chunk-dedup table equals batch q221 on the
@@ -3076,6 +3069,7 @@ def test_stream_chunk_dedup_schedule_invariance(spark, tmp_path):
         assert got == batch, (cuts, got, batch)
 
 
+@pytest.mark.slow
 def test_stream_knn_graph_insert_persists_index(spark, tmp_path):
     """Round-16 verdict #4: the maintained graph-ANN index rides the
     on-disk bucketed-manifest store. On the planted 4-cluster
