@@ -29,7 +29,7 @@ def as_double(vec: Column) -> Column:
 def lit_doubles(values) -> Column:
     """array<double> literal built in ONE expression-parse call.
 
-    Round 16 (guide §1.2 per-task -> per-QUERY work): the per-element
+    Guide §1.2 (per-task -> per-QUERY work): the per-element
     ``F.array(*[F.lit(x) ...])`` idiom costs one py4j round trip PER
     ELEMENT — a k x dim codebook (16 x 64) spent ~0.5 s of DRIVER time
     per query just constructing the plan (measured; half of q42/q81's
@@ -49,10 +49,10 @@ def lit_doubles(values) -> Column:
 
 def lit_longs(values) -> Column:
     """array<bigint> literal built in ONE expression-parse call — the
-    integer sibling of :func:`lit_doubles` (round 17, r16 verdict #6:
-    sweep the remaining per-element ``F.lit`` loops; dedup.simhash64
-    built two 64-slot mask arrays = 128 py4j round trips per query
-    construction). Exact by construction — bigint literals are
+    integer sibling of :func:`lit_doubles` (a per-element ``F.lit``
+    loop costs one py4j round trip per slot: dedup.simhash64's two
+    64-slot mask arrays were 128 per query construction). Exact by
+    construction — bigint literals are
     lossless. ``Long.MIN_VALUE`` cannot be written as one SQL token
     (the parser reads the unsigned digits first, which overflow a
     bigint), so it is emitted as ``(-9223372036854775807L - 1L)`` and
@@ -91,7 +91,7 @@ def _argmax_cell(vec: Column, cents: list[list[float]]) -> Column:
     """1-based index of the max-cosine centroid for ``vec`` — the IVF
     cell assignment shared by `ivf_topk` and `ivfpq_topk`.
 
-    Round 16 (guide §4.1 / audit): the naive
+    Guide §4.1: the naive
     ``array_position(sims, array_max(sims))`` inlines the whole
     k-cosine array TWICE per row, and ``cosine`` refolds ``norm(vec)``
     once PER CENTROID — 2 x k x 3 interpreted folds where k+1 suffice.
@@ -125,8 +125,8 @@ def _argmax_cell(vec: Column, cents: list[list[float]]) -> Column:
             ),
         ),
     ).cast("int")
-    # coalesce makes the column provably NON-NULLABLE (round 16, guide
-    # §4.4's duplication problem for plain expressions): a downstream
+    # coalesce makes the column provably NON-NULLABLE (guide §4.4's
+    # duplication problem for plain expressions): a downstream
     # probe filter on a nullable _cell makes Catalyst push an
     # isnotnull(_cell) below the projection, INLINING this whole
     # 16-centroid fold a second time per row (q42's plan showed the
@@ -153,8 +153,8 @@ def topk_cosine(
     """
     from .dedup import bind
 
-    # The query norm is folded ONCE on the 1-row build side (round 16,
-    # guide §4.1): cosine() refolded norm(qv) — a 64-element aggregate
+    # The query norm is folded ONCE on the 1-row build side (guide
+    # §4.1): cosine() refolded norm(qv) — a 64-element aggregate
     # — per SCANNED ROW; same fold over the same array, so the score is
     # bit-identical. The row vector is bound once per row so its dot
     # and norm folds don't re-run the as_double transform per element.
@@ -286,8 +286,8 @@ def ivf_topk(
         ).alias("probe"),
     )
     # query norm folded once on the broadcast side; row vector bound
-    # once per candidate (round 16, guide §4.1 — same fold, same value;
-    # see topk_cosine)
+    # once per candidate (guide §4.1 — same fold, same value; see
+    # topk_cosine)
     from .dedup import bind
 
     qcells = qcells.withColumn("_qn", norm(F.col("qv")))
@@ -687,11 +687,10 @@ def nn_descent(
         )
     strides = [r * _NND_K + 97 for r in range(1, k + 1)]
 
-    # Norms folded ONCE PER NODE (round 17 — the r16 norms-once
-    # treatment the other scorers got, applied to the descent's pair
-    # scorer): cosine() refolds BOTH 64-element norm aggregates per
-    # candidate pair, tripling the interpreted-HOF bill of the
-    # N*(2k)^2-pairs-per-round scoring stage. norm() on the same array
+    # Norms folded ONCE PER NODE, as in the other scorers: cosine()
+    # refolds BOTH 64-element norm aggregates per candidate pair,
+    # tripling the interpreted-HOF bill of the N*(2k)^2-pairs-per-round
+    # scoring stage. norm() on the same array
     # is the same fold -> the same double bit-for-bit, and
     # dot/(ns*nd) is the identical expression shape cosine() expands
     # to — pinned by the oracle hash (the unrolled CTE computes
@@ -745,10 +744,10 @@ def nn_descent(
         F.lit(4294967296),
     )
     w_rev = Window.partitionBy("src").orderBy(rev_rank, "dst")
-    # Incremental candidate scoring (round 17 — the paper's own "new
-    # neighbor" optimization, measured: at sf0.1 ~80% of the 2.8M
+    # Incremental candidate scoring (the paper's own "new neighbor"
+    # optimization, measured: at sf0.1 ~80% of the 2.8M
     # candidate cosines across the 8 rounds re-score pairs already
-    # scored in an earlier round, 98% by round 8). A pair scored at
+    # scored in an earlier round, 98% in the last of the 8). A pair scored at
     # round i entered the pool in BOTH directions (sc union scᵀ below)
     # with its deterministic score; if it was kept it is already in g,
     # and if it was cut then score < kth(src) at round i <= kth(src)
@@ -867,7 +866,7 @@ def graph_ann_topk(
     — O(entries + hops·beam·2k) — so effective recall tracks
     pool_size x selectivity vs k.
 
-    ``exclude_self`` (round 16, ADVICE): when queries are drawn from
+    ``exclude_self``: when queries are drawn from
     the indexed corpus (qid IS a node id), the query's own node
     occupies a top-k slot at score 1.0; setting this filters
     node == qid before the final cut so the result — and any recall
@@ -1036,7 +1035,7 @@ def semdedup_drops(
     memory O(chunk x n_c) on top of the n_c x dim matrix) — the shape
     the SemDeDup paper itself runs, and ~8x faster than the previous
     cid equi-join whose per-pair fold cosine paid an expression-eval
-    constant per element (bench r11: 7.8 s -> ~1 s at sf0.1 while
+    constant per element (7.8 s -> ~1 s at sf0.1 while
     DuckDB's native list_cosine_similarity kernel runs the same pairs
     in 57 ms — the fold was the slow path, exactly the pyspark guide's
     vectorize-when-per-element-lambdas-dominate rule). Determinism
@@ -1644,8 +1643,8 @@ def cosine_neardup_pairs_lsh(
     (0.9+: p_bit ~0.9) uses WIDE bands — b=16, L=20 over 65k buckets
     per band, collapsing the candidate bill to ~20*N^2/65536 — so at
     scale the knob to turn is band_bits with the threshold, never a
-    wider scan. MEASURED at that operating point (round 14, planted
-    exact-cosine pairs; APPROX_EVIDENCE `q214_production_regime_b16`):
+    wider scan. MEASURED at that operating point (planted exact-cosine
+    pairs; APPROX_EVIDENCE `q214_production_regime_b16`):
     overall recall 0.97-0.98 over a 0.92-0.99 cosine mix, candidate
     fraction 0.07-0.14% of all pairs, zero false positives; per-level
     recall tracks the analytic curve 1-(1-p_bit^16)^20 within binomial
@@ -1677,9 +1676,9 @@ def cosine_neardup_pairs_lsh(
             .filter(F.col("_n") <= max_bucket)
             .drop("_n")
         )
-    # Round 16 (guide §3.3): the candidate self-join consumed ``banded``
-    # as both sides, and the plan replayed the Arrow matmul signature
-    # scan (the dominant projection) under EACH — the audit counted 4
+    # Guide §3.3: the candidate self-join consumes ``banded`` as both
+    # sides, and without a cut the plan replays the Arrow matmul
+    # signature scan (the dominant projection) under EACH — 4
     # embeddings scans and a duplicated ArrowEvalPython in q214's plan.
     # (id, band, bsig) is ~20 B/row, so one lazy lineage cut runs the
     # signature pass exactly once at any corpus size.

@@ -974,7 +974,7 @@ def _q211_oracle() -> str:
     bench=True,  # DuckDB restates the manifest arithmetic, it does not write
 )
 def q211(spark: SparkSession, sf: str) -> DataFrame:
-    """Lakehouse WRITE path (round 13) — q173 computed the z-order
+    """Lakehouse WRITE path — q173 computed the z-order
     footer statistics; this query actually WRITES the layout and
     proves the roundtrip: orders are directory-partitioned by the top
     8 interleaved z bits over (o_custkey, o_totalprice) — 256 curve
@@ -1030,7 +1030,7 @@ def q211(spark: SparkSession, sf: str) -> DataFrame:
     tags=("pipeline", "layout", "write", "maintenance"),
 )
 def q215(spark: SparkSession, sf: str) -> DataFrame:
-    """Lakehouse small-file COMPACTION (round 14) — the OPTIMIZE
+    """Lakehouse small-file COMPACTION — the OPTIMIZE
     maintenance shape that closes the write-path family: q211 writes
     the z-ordered layout, q211b APPENDS to it per micro-batch (one
     small file per batch per cell), q213 MERGEs at bucket granularity;
@@ -1091,8 +1091,7 @@ def q215(spark: SparkSession, sf: str) -> DataFrame:
 # -------- Q217 bucketed co-located join — shuffle-free fact-fact join
 @query(
     "q217_bucketed_colocated_join",
-    bench=True,  # round 15 (r14 verdict #7): the bucketed-write +
-                 # co-located-join shape gets bench coverage (the
+    bench=True,  # the bucketed-write + co-located-join shape (the
                  # oracle joins plain parquet — a real comparable-work
                  # row: both sides pay the join; the engine also pays
                  # the bucketed write, which IS the mechanism measured)
@@ -1107,7 +1106,7 @@ def q215(spark: SparkSession, sf: str) -> DataFrame:
     tags=("pipeline", "layout", "write", "join"),
 )
 def q217(spark: SparkSession, sf: str) -> DataFrame:
-    """BUCKETED co-located join (round 14) — the remaining physical-
+    """BUCKETED co-located join — the remaining physical-
     layout mechanism next to z-order (q173/q211) and compaction
     (q215): both join sides are written as Spark BUCKETED catalog
     tables (`layout.write_bucketed` — rows hash-partitioned into 8
@@ -1256,13 +1255,12 @@ def _q218_oracle(k: int = _Q218_K, iters: int = _Q218_ITERS) -> str:
     "q218_nn_descent_knn_graph",
     oracle=_q218_oracle(),
     tags=("similarity", "llm", "graph", "approx"),
-    bench=True,  # round 17 (r16 verdict #7): rotate the iterative
-    # graph-build family into the basket. ADD-only: the driver contract
-    # forbids removing existing bench entries, so q01/q05/q25 stay.
+    bench=True,  # the iterative graph-build family. Bench entries are
+    # add-only under the driver contract, so q01/q05/q25 stay.
 )
 def q218(spark: SparkSession, sf: str) -> DataFrame:
-    """NN-Descent k-NN GRAPH construction (round 15, the r14 verdict's
-    graph-ANN family ask; Dong et al., WWW 2011): builds the top-20
+    """NN-Descent k-NN GRAPH construction (the graph-ANN family; Dong
+    et al., WWW 2011): builds the top-20
     cosine neighbor list of EVERY embedding in 8 descent rounds of
     neighbor-of-neighbor equi-joins (k=20 is the paper's operating
     regime — the k=5/3-round draft starved the descent, recall 0.16
@@ -1317,7 +1315,7 @@ def _q218b_oracle() -> str:
     tags=("similarity", "dedup", "graph", "iterative", "llm", "slow"),
 )
 def q218b(spark: SparkSession, sf: str) -> DataFrame:
-    """CORPUS-WIDE embedding dedup THROUGH the k-NN graph (round 15) —
+    """CORPUS-WIDE embedding dedup THROUGH the k-NN graph —
     the application q218 exists for: the NN-Descent graph replaces the
     all-pairs cosine join as the pair-generation stage, its edges are
     thresholded into near-dup candidates, and q56's connected-
@@ -1529,8 +1527,8 @@ def _q222_oracle() -> str:
     tags=("pipeline", "sampling", "llm", "iterative"),
 )
 def q222(spark: SparkSession, sf: str) -> DataFrame:
-    """DOMAIN-MIXTURE REWEIGHTING by multiplicative weights (round 15
-    — the DoReMi shape, Xie et al. 2023: upweight the domains a proxy
+    """DOMAIN-MIXTURE REWEIGHTING by multiplicative weights (the
+    DoReMi shape, Xie et al. 2023: upweight the domains a proxy
     signal says are hardest; here the deterministic static proxy is
     per-domain mean type-token ratio, and the update is the
     polynomial Hedge variant w *= (1 + eta*loss), eta=1/2 — Freund &
@@ -1672,7 +1670,7 @@ def _q219c_oracle() -> str:
     tags=("similarity", "llm", "graph", "ann", "approx", "slow"),
 )
 def q219c(spark: SparkSession, sf: str) -> DataFrame:
-    """FILTERED graph-ANN search (round 15): cosine top-10 among the
+    """FILTERED graph-ANN search: cosine top-10 among the
     vectors matching an attribute predicate (label == 3, ~10%
     selectivity) — the query every real vector store serves
     ("nearest neighbors WHERE ...") and the one naive strategies
@@ -1740,11 +1738,11 @@ def _q227_oracle() -> str:
     "q227_hilbert_layout",
     oracle=_q227_oracle(),
     tags=("pipeline", "layout"),
-    bench=True,  # round 17 (r16 verdict #7): basket rotation — the
-    # Hilbert fold is the heaviest pure-codegen expression family.
+    bench=True,  # the Hilbert fold is the heaviest pure-codegen
+    # expression family.
 )
 def q227(spark: SparkSession, sf: str) -> DataFrame:
-    """HILBERT-curve data layout (round 15) — the locality upgrade
+    """HILBERT-curve data layout — the locality upgrade
     over q173's Z-order, stated precisely: at any fixed prefix depth
     both curves induce the SAME file blocks (every quadrant-recursive
     curve's top-2k bits name a 2^(15-k)-square — measured: identical
@@ -1842,7 +1840,7 @@ def _q228_oracle() -> str:
     tags=("sampling", "dedup", "graph", "llm", "slow"),
 )
 def q228(spark: SparkSession, sf: str) -> DataFrame:
-    """NEAR-DUP-CLUSTER-SAFE train/eval split (round 15) — closing the
+    """NEAR-DUP-CLUSTER-SAFE train/eval split — closing the
     loop q106 opened: q106 MEASURES near-dup leakage across a split,
     q79 prevents it only along metadata lines (the source column);
     this prevents it along CONTENT lines — the split key is the

@@ -31,13 +31,28 @@ Scale notes (100 TB target):
   deltas, sink files and their ``.crc`` files, 258 per perfbench
   ``stream_window`` drain. Rebuild the jar with
   ``scripts/build_localfs_jar.py``.
+- Local sessions load Spark's classes from a class-data-sharing archive
+  (``cds``): the first session for a class path dumps the classes it
+  loaded at JVM exit, and later ones map that archive instead of
+  parsing and verifying about 17k classes, which roughly halves JVM
+  start-up. ``<spark home>/jars/*`` goes on the driver class path ahead
+  of Spark's ``conf/`` directory, because JDK 17 dumps no archive when
+  a non-empty directory precedes the jars it archives. No jar in Spark's
+  ``jars/`` ships a root-level conf file, so ``conf/`` still wins for
+  those. Sessions passed in through ``configure_runtime`` keep the JVM's
+  defaults.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
+
+from kstreamjs_spark import cds
 
 # Directory holding the kstreamjs_spark package, for worker PYTHONPATH.
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -63,6 +78,7 @@ def get_spark(
         cpus = default_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * cpus, 8)
+    driver_memory = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -72,7 +88,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", driver_memory)
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         # plans.materialize_once upgrades to reliable checkpoint() when a
         # checkpoint dir is set; without this cleaner flag Spark never
@@ -103,18 +119,37 @@ def get_spark(
         .config("spark.hadoop.fs.file.impl", "kstreamjs_spark.jvm.NioLocalFileSystem")
     )
     extra_conf = dict(extra_conf or {})
-    extra_conf["spark.driver.extraClassPath"] = os.pathsep.join(
-        filter(None, [_LOCALFS_JAR, extra_conf.get("spark.driver.extraClassPath")])
-    )
+    # Spark's jars lead its conf directory (see the module docstring).
+    class_path = os.pathsep.join(filter(None, [
+        _LOCALFS_JAR,
+        extra_conf.get("spark.driver.extraClassPath"),
+        os.path.join(_find_spark_home(), "jars", "*"),
+    ]))
+    extra_conf["spark.driver.extraClassPath"] = class_path
     # The daemon and UDFs pickled by reference import kstreamjs_spark in
     # the worker; workers run in the driver's cwd, so without this a
     # driver started outside the repo fails every Python UDF.
     extra_conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
         filter(None, [_PACKAGE_PARENT, extra_conf.get("spark.executorEnv.PYTHONPATH")])
     )
+    # JVM options apply only when this call launches the JVM, and the
+    # caller's own archive or -Xshare options win.
+    claim = None
+    java_opts = extra_conf.get("spark.driver.extraJavaOptions", "")
+    if (
+        SparkContext._gateway is None
+        and "PYSPARK_GATEWAY_PORT" not in os.environ
+        and not re.search(r"SharedArchiveFile|ArchiveClassesAtExit|-Xshare", java_opts)
+    ):
+        memory = extra_conf.get("spark.driver.memory", driver_memory)
+        cds_opts, claim = cds.jvm_options(class_path, memory)
+        if cds_opts:
+            extra_conf["spark.driver.extraJavaOptions"] = f"{java_opts} {cds_opts}".strip()
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    if claim is not None:
+        cds.started(spark, claim)
     configure_runtime(spark)
     return spark
 

@@ -54,7 +54,7 @@ def run_to_memory(
     timeout_s: int = 600,
 ) -> DataFrame:
     """Execute a streaming DataFrame to completion (AvailableNow) into a
-    memory sink; returns the sink table as a batch DataFrame.
+    memory sink; returns the sink's rows as a batch DataFrame.
 
     Memory sink is a test/driver harness device — production sinks are the
     kafka/parquet writers in sources/. Complete mode is used for open-ended
@@ -62,7 +62,12 @@ def run_to_memory(
     hold back the final windows). ``timeout_s`` bounds the wait: a wedged
     micro-batch otherwise hangs the caller (and any correctness harness
     above it) forever — on expiry the query is stopped and the failure is
-    a clear TimeoutError, not a silent stall."""
+    a clear TimeoutError, not a silent stall.
+
+    The sink is registered as the temp view ``<name>_<8 hex digits>``.
+    The returned frame is analysed before the view is dropped, so it
+    reads the sink itself, and the sink's rows live only as long as the
+    frame does."""
     spark = sdf.sparkSession
     qname = f"{name}_{uuid.uuid4().hex[:8]}"
     q = (
@@ -77,7 +82,9 @@ def run_to_memory(
         raise TimeoutError(
             f"streaming query {qname!r} did not finish within {timeout_s}s"
         )
-    return spark.table(qname)
+    rows = spark.table(qname)
+    spark.catalog.dropTempView(qname)
+    return rows
 
 
 def keyed_fold(sdf: DataFrame, key: str, init, step, name: str) -> DataFrame:

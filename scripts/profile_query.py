@@ -8,6 +8,7 @@ warmed once, then built under job group `build:<name>#<i>` and collected
 under `collect:<name>#<i>`, so a query named twice is measured twice.
 After the session stops, prints one JSON line per argument:
 
+- `session_start_s`: wall time of `get_spark`, the same on every row.
 - `wall_s`, `build_s`, `collect_s`: driver wall time of the timed run.
   Iterative queries that checkpoint eagerly run most of their jobs while
   the frame is being built, so `build_jobs` says how much of the work
@@ -46,6 +47,7 @@ def main(names: list[str]) -> int:
         return 2
     log_dir = tempfile.mkdtemp(prefix="profile_query_events_")
     try:
+        t_start = time.perf_counter()
         spark = get_spark(
             "profile-query",
             extra_conf={
@@ -57,6 +59,7 @@ def main(names: list[str]) -> int:
                 "spark.eventLog.rolling.enabled": "false",
             },
         )
+        session_start_s = time.perf_counter() - t_start
         sc = spark.sparkContext
         cpus = sc.defaultParallelism
         runs, warmed = [], set()
@@ -86,6 +89,7 @@ def main(names: list[str]) -> int:
             "query": name,
             "sf_dir": DEFAULT_SF_DIR,
             "cpus": cpus,
+            "session_start_s": session_start_s,
             "wall_s": t2 - t0,
             "build_s": t1 - t0,
             "collect_s": t2 - t1,

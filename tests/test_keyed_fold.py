@@ -6,11 +6,11 @@ from __future__ import annotations
 
 import json
 import os
-import re
 
 import numpy as np
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
+import pytest
 
 from kstreamjs_spark.operators.sketch import (
     _kll_estimate,
@@ -20,22 +20,28 @@ from kstreamjs_spark.operators.sketch import (
     kmv_distinct,
     kmv_estimate,
 )
+from kstreamjs_spark.streaming import replay
 from kstreamjs_spark.streaming.replay import keyed_fold
 
 from .conftest import stage_stream
 
 
-def _snapshots(spark, name):
-    """The per-trigger snapshots `keyed_fold(..., name)` emitted: its
-    memory sink is the temp view ``<name>_<8 hex digits>``."""
-    (view,) = [
-        t.name for t in spark.catalog.listTables()
-        if re.fullmatch(rf"{name}_[0-9a-f]{{8}}", t.name)
-    ]
-    return spark.table(view)
+@pytest.fixture
+def snapshots(monkeypatch):
+    """``name ->`` the per-trigger snapshots ``keyed_fold(..., name)``
+    emitted: the memory-sink frame its ``run_to_memory`` returned."""
+    seen = {}
+    real = replay.run_to_memory
+
+    def capture(sdf, name, *args, **kwargs):
+        seen[name] = real(sdf, name, *args, **kwargs)
+        return seen[name]
+
+    monkeypatch.setattr(replay, "run_to_memory", capture)
+    return seen
 
 
-def test_keyed_fold_folds_every_trigger_per_key(spark, tmp_path):
+def test_keyed_fold_folds_every_trigger_per_key(spark, tmp_path, snapshots):
     """3 files replayed as 3 triggers, folded by a string key and by a
     bigint key: each key's final state equals a plain Python fold of its
     rows, ``n`` is its row count, and the key emitted one snapshot per
@@ -75,7 +81,7 @@ def test_keyed_fold_folds_every_trigger_per_key(spark, tmp_path):
             k: (sorted(r[3] for r in rs), len(rs)) for k, rs in want.items()
         }
         emits: dict = {}
-        for r in _snapshots(spark, name).collect():
+        for r in snapshots[name].collect():
             emits[r[key]] = emits.get(r[key], 0) + 1
         assert emits == {
             k: len({trigger_of[r[0]] for r in rs}) for k, rs in want.items()
@@ -83,7 +89,7 @@ def test_keyed_fold_folds_every_trigger_per_key(spark, tmp_path):
         assert {1, 2} <= set(emits.values())  # single and multi-trigger
 
 
-def test_stream_kll_sketch_folds_state_and_respects_bound(spark, tmp_path):
+def test_stream_kll_sketch_folds_state_and_respects_bound(spark, tmp_path, snapshots):
     """q181b's contracts on a crafted multi-trigger replay: the keyed
     KLL state FOLDS across micro-batches (n == exact row count — state
     is updated, never rebuilt per batch), the merged bound holds vs
@@ -107,7 +113,7 @@ def test_stream_kll_sketch_folds_state_and_respects_bound(spark, tmp_path):
         sdf, "bucket", [[[]], [0], 0], step, "kf_kll"
     ).collect()
     # each bucket emitted once per trigger it saw rows in: state FOLDED
-    assert _snapshots(spark, "kf_kll").count() > len(finals)
+    assert snapshots["kf_kll"].count() > len(finals)
     states = [json.loads(r["state"]) for r in finals]
     items = sorted(
         (float(v), 1 << h)
@@ -130,7 +136,7 @@ def test_stream_kll_sketch_folds_state_and_respects_bound(spark, tmp_path):
         assert bound <= n // 8
 
 
-def test_stream_misra_gries_folds_state_and_respects_bound(spark, tmp_path):
+def test_stream_misra_gries_folds_state_and_respects_bound(spark, tmp_path, snapshots):
     """q180b's contracts on a multi-trigger replay over a skewed vocab:
     token-bucketed MG state folds across micro-batches (total n ==
     exact token count), never over-counts, under-counts within the
@@ -159,7 +165,7 @@ def test_stream_misra_gries_folds_state_and_respects_bound(spark, tmp_path):
         "kf_mg",
     ).collect()
     # state folded across triggers
-    assert _snapshots(spark, "kf_mg").count() > len(finals)
+    assert snapshots["kf_mg"].count() > len(finals)
     exact: dict = {}
     for _, t in rows:
         exact[t] = exact.get(t, 0) + 1

@@ -35,6 +35,7 @@ def test_profile_query_reports_every_layer():
         assert r["spark.failed_tasks"] == 0
         # with SPARK_GRAFT_CPUS unset, the session uses every CPU it may
         assert r["cpus"] == len(os.sched_getaffinity(0))
+        assert r["session_start_s"] == rows[0]["session_start_s"] > 0
 
     q56a, q56b = rows[1], rows[2]
     # q56's iterative loop checkpoints eagerly: jobs run while building

@@ -116,6 +116,18 @@ def test_stream_dedup_within_watermark(spark, tmp_path):
     assert out == [7, 8]
 
 
+def test_run_to_memory_leaves_no_view(spark, tmp_path):
+    """Each call's memory-sink view is dropped, and the frame it returned
+    still reads the sink's rows."""
+    read = stage_stream(
+        spark.range(30).selectExpr("id", "id % 3 AS k"), str(tmp_path / "src"), "id", parts=3
+    )
+    frames = [run_to_memory(read().where(f"k = {k}"), "t_noview") for k in range(3)]
+    assert [t.name for t in spark.catalog.listTables() if t.name.startswith("t_noview")] == []
+    for k, df in enumerate(frames):
+        assert sorted(r["id"] for r in df.collect()) == list(range(k, 30, 3))
+
+
 def test_statistics_listener(spark, sf_smoke):
     """recv/send totals via StreamingQueryListener — parity with the
     reference's Statistics counters (src/context.ts:39-52)."""
