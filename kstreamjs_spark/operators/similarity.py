@@ -679,8 +679,8 @@ def nn_descent(
         raise ValueError("nn_descent: empty vector table")
     if min_id != 0 or max_id != n - 1 or n_distinct != n:
         # max==n-1 alone admits duplicates ([0,1,1,3]) and negatives
-        # ([-1..2,4]) that silently skew the init graph (round-15
-        # review finding) — all three facets checked, one aggregate
+        # ([-1..2,4]) that silently skew the init graph — all three
+        # facets checked, one aggregate
         raise ValueError(
             f"nn_descent requires dense unique ids [0, N): N={n}, "
             f"min={min_id}, max={max_id}, distinct={n_distinct}"
@@ -881,8 +881,8 @@ def graph_ann_topk(
     from pyspark.sql import Window
 
     # the beam must hold at least k candidates or the final cut
-    # silently under-fills (round-15 review: the streaming insert
-    # path asked for k=20 neighbors from a beam of 16); +1 when the
+    # silently under-fills (a caller asking for k=20 neighbors from a
+    # beam of 16 gets fewer); +1 when the
     # self row is dropped after the cut
     beam = max(beam, k + 1 if exclude_self else k)
     keep_cols = [F.col(filter_col).alias("_keep")] if filter_col else []
@@ -1029,7 +1029,7 @@ def semdedup_drops(
     order-free, and what the oracle states — the two rules differ only
     on such chains.
 
-    Execution (round-11 rework, bench-driven): ONE hash exchange on the
+    Execution: ONE hash exchange on the
     cell key feeds an Arrow-batched `applyInPandas` kernel that scores
     each cell's pairwise cosines as a numpy matmul (row-chunked, peak
     memory O(chunk x n_c) on top of the n_c x dim matrix) — the shape

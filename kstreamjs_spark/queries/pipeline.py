@@ -159,14 +159,14 @@ def q55(spark: SparkSession, sf: str) -> DataFrame:
     that survives scale: ONE shuffle on user_id serves both window passes
     and the final group-by (same partitioning reused across stages).
     Hot-user mitigation is q54's salting applied to the rollup. No
-    presentation ORDER BY: the round-5 profile (BASELINE.md) showed the
+    presentation ORDER BY: a profile (BASELINE.md) showed the
     global sort-collect cost ~0.3 s against 0.13 s for the windowing
     itself — at scale results go to a sink, not a sorted driver fetch
     (the driver's compare is order-insensitive). Session assignment is
     the shared operator q108 uses (funnel.with_sessions — one source of
     truth for the >gap boundary and (ts, event_id) tie-break, which the
     boundary property test pins); the physical plan is identical to the
-    former inline build, round-8 A/B."""
+    former inline build."""
     from ..operators import funnel as funnel_ops
 
     (events,) = load(spark, sf, "events")
@@ -916,10 +916,10 @@ def q176(spark: SparkSession, sf: str) -> DataFrame:
     q172b: ranks live in int64 micro-units, each edge contribution is
     floor((rank * 85) / (100 * outdeg)) via integer DIV — no
     floating-point sum exists on either engine — and the oracle unrolls
-    all 8 steps as a generated CTE chain. Spark-first plan (round-12
-    rewrite): pair generation needs NO self-join — ONE lineitem scan
-    folds to collect_set(l_partkey) per order (the only corpus-sized
-    exchange, on l_orderkey, map-side combined), and the per-order part
+    all 8 steps as a generated CTE chain. Spark-first plan: pair
+    generation needs NO self-join — ONE lineitem scan folds to
+    collect_set(l_partkey) per order (the only corpus-sized exchange,
+    on l_orderkey, map-side combined), and the per-order part
     sets explode into ordered pairs (fan-out bounded by order width
     squared, never corpus size). Cross-order duplicate pairs collapse
     inside pagerank's adjacency fold — no separate distinct pass — and
@@ -1429,10 +1429,10 @@ def _q219_oracle() -> str:
 )
 def q219(spark: SparkSession, sf: str) -> DataFrame:
     """Graph-ANN TOP-K SEARCH — the query-time half of the graph family
-    q218 builds (HNSW layer-0 beam search, Malkov & Yashunin 2016;
-    round-15 continuation): an 8-query batch walks the NN-Descent
-    k-NN graph greedily (4 deterministic entry points, beam 16, 4
-    hops through the undirected adjacency) and returns cosine top-10
+    q218 builds (HNSW layer-0 beam search, Malkov & Yashunin 2016):
+    an 8-query batch walks the NN-Descent k-NN graph greedily (4
+    deterministic entry points, beam 16, 4 hops through the undirected
+    adjacency) and returns cosine top-10
     per query WITHOUT scanning the vector table — the per-query bill
     is O(entries + hops*beam*2k) scored candidates instead of N
     (q27's exact row pays the full scan; q27b/q42/q191 prune by

@@ -136,7 +136,7 @@ def q31(spark: SparkSession, sf: str) -> DataFrame:
     oracle reproduces with a gaps-and-islands construction. Works identically
     over a stream (tests) and in batch (here, for the hash check).
 
-    Boundary rule (round-8 fix): session_window MERGES an event landing
+    Boundary rule: session_window MERGES an event landing
     EXACTLY gap seconds after its predecessor (new session only when the
     gap is strictly exceeded — measured empirically, and the same `>`
     rule as q55/q108's batch sessionization). The oracle originally said
@@ -239,7 +239,7 @@ def q33(spark: SparkSession, sf: str) -> DataFrame:
 )
 def q33b(spark: SparkSession, sf: str) -> DataFrame:
     """q33's arbitrary-Python window reducer on a REAL micro-batched
-    stream through the facade's round-12 fire-once path
+    stream through the facade's fire-once path
     (operators/window.py:window_collect_stateful): GroupState buffers
     each hour's rows across triggers and the event-time timeout runs
     the reducer ONCE per window when the watermark passes its end —
@@ -1543,7 +1543,7 @@ def q192b(spark: SparkSession, sf: str) -> DataFrame:
 @query("q191b_stream_pq_encode", oracle=None,
        tags=("streaming", "similarity", "approx"))
 def q191b(spark: SparkSession, sf: str) -> DataFrame:
-    """STREAMING PQ encoding (round 11) — the index-MAINTENANCE half of
+    """STREAMING PQ encoding — the index-MAINTENANCE half of
     ANN serving (q191 trains/serves, this keeps the codes table fresh):
     the sub-codebooks are trained ONCE on the static corpus (same
     `pq_codebooks`, the train-offline/apply-online split of
@@ -1637,7 +1637,7 @@ def _q196b_oracle() -> str:
     tags=("streaming", "text", "llm", "quality"),
 )
 def q196b(spark: SparkSession, sf: str) -> DataFrame:
-    """STREAMING Kneser-Ney scoring (round 11) — the CCNet deployment
+    """STREAMING Kneser-Ney scoring — the CCNet deployment
     shape: the LM is TRAINED OFFLINE on the static corpus (q196's exact
     count tables, one arithmetic home) and shipped to workers as a
     bounded artifact (KenLM deployments ship the binary model file the
@@ -1739,7 +1739,7 @@ def q196b(spark: SparkSession, sf: str) -> DataFrame:
     tags=("streaming", "multimodal", "dedup", "slow"),
 )
 def q160c(spark: SparkSession, sf: str) -> DataFrame:
-    """Streaming AUDIO dedup at ingest (round 12) — q165's shape for
+    """Streaming AUDIO dedup at ingest — q165's shape for
     the audio modality, completing the batch+stream matrix for both
     perceptual families (images: q158/q165; audio: q160b/here). The
     documents replay synthesizes each group's clip THROUGH TWO CODECS
@@ -1808,7 +1808,7 @@ def minhash_banded_projection(
     directly inside minhash_bands would inline the whole O(shingles x
     perms) fold into every one of the bands x rows_per_band
     element_at references (64 recomputes per doc: measured ~110 s vs
-    ~2 s on the sf0.1 corpus — the round-14 bench caught it); the
+    ~2 s on the sf0.1 corpus); the
     Generate (explode) barrier between the two projections is what
     keeps Catalyst from collapsing them back together."""
     from ..operators.dedup import (
@@ -1825,11 +1825,10 @@ def minhash_banded_projection(
     # it is valid on the streaming side too (plain exchange, no state);
     # the downstream stateful grouping re-shuffles by state key as
     # before. Measured: q205b stream-projection stage 3.2 s -> sub-1 s.
-    # Round 16: the permutation fold runs in the Arrow-batched numpy
-    # kernel (minhash_signature_frame, bit-identical by the equality
-    # pytest) instead of the interpreted higher-order-function
-    # expression — guide §4.2; works on the streaming side because
-    # mapInPandas is stateless.
+    # The permutation fold runs in the Arrow-batched numpy kernel
+    # (minhash_signature_frame, bit-identical by the equality pytest)
+    # instead of the interpreted higher-order-function expression;
+    # it works on the streaming side because mapInPandas is stateless.
     sig = minhash_signature_frame(
         _spread(df.filter(F.size(tokens("text")) >= n), "doc_id"),
         "doc_id",
@@ -1867,7 +1866,7 @@ def bucket_pair_stream(
     the moment it lands, plus same-trigger pairs once via the larger
     id. Callers collapse cross-band duplicates with a final distinct.
 
-    BOUNDED STATE-KEY SPACE (round 15, the r14 verdict's perf fix):
+    BOUNDED STATE-KEY SPACE:
     grouping the state by raw (band, bsig) made the per-trigger Python
     group count track bucket CARDINALITY — ~77k groups x ~55 µs of
     Arrow-slice + pandas-frame + state-commit overhead per sf0.1
@@ -1884,11 +1883,12 @@ def bucket_pair_stream(
     green against the batch equi-join). State stays set-pure, so
     micro-batch schedule still cannot change the emitted set.
     CHECKPOINT BREAK: the grouping key and state layout both changed —
-    a pre-round-15 checkpoint cannot resume onto this operator (the
+    a checkpoint from the earlier layout cannot resume onto this
+    operator (the
     window-collect precedent: restart from a fresh checkpoint or
     replay the source).
 
-    ``ttl_ms`` (round 14, opt-in — default None keeps the EXACT mode
+    ``ttl_ms`` (opt-in — default None keeps the EXACT mode
     q205/q205b/q214b ship with): bounded-state eviction in the
     `dropDuplicatesWithinWatermark` spirit for long-lived ingest
     services. When set, each bucket carries its own eviction deadline
@@ -1901,8 +1901,8 @@ def bucket_pair_stream(
     refreshes on EVERY arrival, duplicates included: Spark clears a
     group's registered timeout each time the update function is
     invoked for it, so the duplicate-only path must re-arm or the
-    slot's eviction timer is silently cancelled forever (round-15 fix,
-    pinned by the duplicate-fed bucket in the eviction pytest);
+    slot's eviction timer is silently cancelled forever (pinned by
+    the duplicate-fed bucket in the eviction pytest);
     semantically a duplicate-fed bucket is hot — keeping it is exactly
     what preserves its dedup recall. The trade, stated plainly:
 
@@ -2057,7 +2057,7 @@ def bucket_pair_stream(
     tags=("streaming", "dedup", "llm", "approx", "stateful", "slow"),
 )
 def q205(spark: SparkSession, sf: str) -> DataFrame:
-    """STREAMING near-dup candidate detection at ingest (round 12) —
+    """STREAMING near-dup candidate detection at ingest —
     the text analog of q165's streaming perceptual dedup and the
     missing production shape next to batch q26b: every arriving
     document's MinHash signature bands into 16 bucket keys (the SAME
@@ -2143,9 +2143,9 @@ def minhash_verified_stream(
 
 @query(
     "q205b_stream_minhash_verify",
-    bench=True,  # round 14 (r13 verdict #8): the stream-verify shape
-                 # gets bench coverage; the oracle performs the exact
-                 # pairwise-Jaccard verify, a comparable-work ratio row
+    bench=True,  # the stream-verify shape gets bench coverage; the
+                 # oracle performs the exact pairwise-Jaccard verify,
+                 # a comparable-work ratio row
     oracle="""
         WITH sh AS (
           SELECT doc_id,
@@ -2175,7 +2175,7 @@ def minhash_verified_stream(
     tags=("streaming", "dedup", "llm", "stateful", "slow"),
 )
 def q205b(spark: SparkSession, sf: str) -> DataFrame:
-    """STREAMING near-dup dedup END-TO-END (round 13) — the last
+    """STREAMING near-dup dedup END-TO-END — the last
     missing production shape in the dedup matrix: q205 stops at
     candidate emission; this pipeline VERIFIES (in-stream exact
     3-gram Jaccard via stream-static shingle join) and DECIDES
@@ -2428,7 +2428,7 @@ def q212b(spark: SparkSession, sf: str) -> DataFrame:
     tags=("streaming", "pipeline", "layout", "write"),
 )
 def q211b(spark: SparkSession, sf: str) -> DataFrame:
-    """STREAMING lakehouse ingest (round 13) — q211's write path the
+    """STREAMING lakehouse ingest — q211's write path the
     way a production pipeline runs it: arriving orders flow through
     `foreachBatch`, each micro-batch staged by the SAME
     `layout.zorder_stage` home (cell id from the top interleaved z
@@ -2491,7 +2491,7 @@ def q211b(spark: SparkSession, sf: str) -> DataFrame:
           "closed_form_oracle"),
 )
 def q215b(spark: SparkSession, sf: str) -> DataFrame:
-    """STREAMING ingest with INLINE compaction (round 14) — q211b's
+    """STREAMING ingest with INLINE compaction — q211b's
     append loop composed with q215's OPTIMIZE, the way a production
     table actually lives: every micro-batch z-stages and APPENDS its
     rows (one small file per batch per cell), and AFTER each commit
@@ -2570,8 +2570,8 @@ def stream_ingest_compacted(
     oracle="""
         -- last_value via lexicographic struct MAX, mirroring the
         -- engine's F.max(struct(ts, value)) exactly: deterministic
-        -- even under tied ts (round-16 ADVICE; arg_max(value, ts)
-        -- picks an arbitrary row on ties)
+        -- even under tied ts (arg_max(value, ts) picks an
+        -- arbitrary row on ties)
         SELECT user_id,
                CAST(COUNT(*) AS BIGINT) AS n_events,
                MAX(ts) AS last_ts,
@@ -2581,9 +2581,9 @@ def stream_ingest_compacted(
     tags=("streaming", "pipeline", "write", "cdc"),
 )
 def q213(spark: SparkSession, sf: str) -> DataFrame:
-    """STREAMING SCD-TYPE-1 UPSERT (round 13, partition-pruned MERGE
-    since round 14) — the CDC-apply write shape next to q121's batch
-    SCD2 analytics: arriving events merge into a keyed dimension table
+    """STREAMING SCD-TYPE-1 UPSERT (partition-pruned MERGE) — the
+    CDC-apply write shape next to q121's batch SCD2 analytics:
+    arriving events merge into a keyed dimension table
     (one row per user: latest state + lifetime event count) through
     `foreachBatch`. The table is hash-bucketed by key and each commit
     rewrites ONLY the buckets containing batch keys, copy-on-write at
@@ -2625,9 +2625,9 @@ def scd1_upsert_stream(
     MERGE of per-user (count, latest (ts, value)) into ``root``,
     returning the final snapshot as a batch frame.
 
-    Round-14 commit protocol (the Delta/Iceberg MERGE shape without
-    the format dependency — replaces round 13's whole-snapshot
-    rewrite): the dimension table is hash-bucketed by key
+    Commit protocol (the Delta/Iceberg MERGE shape without the
+    format dependency, instead of a whole-snapshot rewrite): the
+    dimension table is hash-bucketed by key
     (``pmod(xxhash64(user_id), n_buckets)``) and each commit rewrites
     ONLY the buckets containing batch keys, copy-on-write at bucket
     granularity:
@@ -2647,9 +2647,9 @@ def scd1_upsert_stream(
     - retention: once commit ``n`` rewrites bucket ``b``, the
       superseded ``commit_v{old}/pbucket={b}`` directory is garbage
       FOR THE LATEST VIEW and is pruned after the commit lands (the
-      ADVICE-flagged unbounded-snapshot growth); emptied commit dirs
+      unbounded-snapshot growth otherwise); emptied commit dirs
       are removed too, so steady-state storage is exactly one live
-      copy per bucket plus manifests. ``retain_commits`` (round 14)
+      copy per bucket plus manifests. ``retain_commits``
       is the VACUUM horizon: a superseded copy survives until the
       table is ``retain_commits`` commits past the version that
       superseded it, which keeps every manifest within the horizon
@@ -2657,7 +2657,7 @@ def scd1_upsert_stream(
       any retained version and degrades exactly like Delta's VACUUM:
       reads past the horizon fail because their files are gone, by
       design, not by accident. Default 0 = prune immediately (only
-      the latest view readable — the pre-round-14 behavior);
+      the latest view readable);
     - an empty source (zero micro-batches) raises a clear error
       instead of a confusing path-not-found on a ``v-1`` read.
 
@@ -2667,7 +2667,7 @@ def scd1_upsert_stream(
     the bucket column is re-derived from the key after every merge
     (functionally dependent, never trusted from the file).
 
-    ``evolve_sum_from`` (round 15, q213d — SCHEMA EVOLUTION across a
+    ``evolve_sum_from`` (q213d — SCHEMA EVOLUTION across a
     commit boundary, the remaining Delta pillar after MERGE/changelog/
     time-travel/OPTIMIZE): when set to a timestamp literal T, the
     dimension table ADDS a ``sum_value`` column — lifetime sum of
@@ -2746,7 +2746,7 @@ def scd1_upsert_stream(
         # probe rides in the SAME aggregate (any event at/after T iff
         # max per-user last.ts crosses it) — the earlier separate
         # batch_df.agg paid one extra full-batch scan per pre-boundary
-        # commit (round-15 review finding).
+        # commit.
         if evolve_ts is not None and not state["evolved"]:
             probe = delta.agg(
                 F.sort_array(F.collect_set("bucket")).alias("tb"),
@@ -2809,7 +2809,7 @@ def scd1_upsert_stream(
             "overwrite"
         ).partitionBy("pbucket").parquet(f"{root}/commit_v{n}")
         if changelog:
-            # CDC OUT (round 14, q213b): per commit, one change row per
+            # CDC OUT (q213b): per commit, one change row per
             # BATCH key — old state from the still-live previous bucket
             # copies (n_before=0 for first appearances), new state from
             # the just-written commit. Written BEFORE retention prunes
@@ -2863,7 +2863,7 @@ def scd1_upsert_stream(
         # write-temp-then-rename so a cross-process reader (the
         # scd1_read_as_of contract) can never observe a torn manifest
         # — the same atomicity the concurrent publisher gets from
-        # os.link (round-15 review fix)
+        # os.link
         mtmp = f"{root}/_manifest/v{n}.json.tmp"
         with open(mtmp, "w") as fh:
             json.dump(
@@ -2873,7 +2873,7 @@ def scd1_upsert_stream(
                         str(b): c
                         for b, c in state["bucket_commit"].items()
                     },
-                    # bucket -> data dir, explicit (round 15): the
+                    # bucket -> data dir, explicit: the
                     # concurrent-writer path publishes uniquely-named
                     # dirs that are not dense commit_v{n} ids, so
                     # readers resolve dirs from the manifest instead
@@ -2951,9 +2951,9 @@ def _manifest_bucket_dir(man: dict) -> dict:
     authoritative when PRESENT (key test, not truthiness — an empty
     table's manifest is a present-but-empty dict, and the concurrent-
     writer manifests carry no `bucket_commit` to fall back to);
-    deriving from `bucket_commit` keeps pre-round-15 manifests
-    readable. One home for the compatibility rule (round-15 review:
-    three copy-pasted sites shared a falsy-empty-dict bug)."""
+    deriving from `bucket_commit` keeps manifests written before
+    `bucket_dir` existed readable. One home for the compatibility rule
+    (three copies of it once shared a falsy-empty-dict bug)."""
     if "bucket_dir" in man:
         return dict(man["bucket_dir"])
     return {b: f"commit_v{c}" for b, c in man["bucket_commit"].items()}
@@ -2975,7 +2975,7 @@ def scd1_read_as_of(
     manifest JSON + the referenced parquet — no driver state, so any
     process can time-travel a table another process wrote.
 
-    ``extra_cols`` (round 15, q213d): schema-evolved columns with
+    ``extra_cols`` (q213d): schema-evolved columns with
     their documented defaults ({name: default}) — a manifest whose
     referenced files span the evolution boundary is read with
     mergeSchema and each evolved column default-fills rows from
@@ -3015,8 +3015,8 @@ def scd1_read_as_of(
         f"{root}/{d}/pbucket={b}" for b, d in sorted(bdir.items())
     ]
     if not paths:
-        # fully-deleted table (every bucket dropped and purged,
-        # round-16 ADVICE): the manifest is valid and the table is
+        # fully-deleted table (every bucket dropped and purged):
+        # the manifest is valid and the table is
         # EMPTY — return the empty table with its logical schema
         # instead of letting spark.read.parquet() fail on zero paths
         cols = [
@@ -3097,7 +3097,7 @@ def _scd1_snapshot(root: str) -> dict:
         "delete_files": {
             b: list(v) for b, v in man.get("delete_files", {}).items()
         },
-        # bucket SPEC (q225): absent from pre-round-15 manifests —
+        # bucket SPEC (q225): absent from older manifests —
         # writers can only validate against tables that record it
         "n_buckets": man.get("n_buckets"),
     }
@@ -3167,7 +3167,7 @@ def _scd1_prepare(
         # the base (user_id, n_events, last) schema only — rewriting
         # an evolved bucket with a base-schema copy would silently
         # reset the evolved column to its read-time default for every
-        # key in the bucket (round-15 review finding)
+        # key in the bucket
         extra = set(prev.columns) - {"user_id", "n_events", "last",
                                      "pbucket", "bucket"}
         if extra:
@@ -3353,9 +3353,9 @@ def scd1_commit_batch(
     n_buckets: int = 16,
     max_retries: int = 3,
 ) -> int:
-    """CONCURRENT-WRITER batch commit into an SCD1 MERGE table (round
-    15 — the multi-writer story the r14 verdict named as the open
-    lakehouse gap: q215b serializes compaction against ingest inside
+    """CONCURRENT-WRITER batch commit into an SCD1 MERGE table (the
+    multi-writer lakehouse story: q215b serializes compaction against
+    ingest inside
     ONE foreachBatch; this is the protocol for two INDEPENDENT
     processes committing to the same table root with no shared
     state). Optimistic concurrency in the Delta mold, conflicts
@@ -3403,7 +3403,7 @@ def scd1_delete_where(
     n_buckets: int = 16,
     max_retries: int = 3,
 ) -> int:
-    """MERGE-ON-READ DELETE on an SCD1 MERGE table (round 15, q220 —
+    """MERGE-ON-READ DELETE on an SCD1 MERGE table (q220 —
     the deletion-vector pillar: Iceberg v2 equality-delete files /
     Delta deletion vectors, both public formats): rows matching
     ``predicate`` are deleted WITHOUT rewriting any data file. The
@@ -3580,8 +3580,8 @@ def scd1_purge_deletes(
     oracle="""
         -- last_value via lexicographic struct MAX, mirroring the
         -- engine's F.max(struct(ts, value)) exactly: deterministic
-        -- even under tied ts (round-16 ADVICE; arg_max(value, ts)
-        -- picks an arbitrary row on ties)
+        -- even under tied ts (arg_max(value, ts) picks an
+        -- arbitrary row on ties)
         SELECT user_id,
                CAST(COUNT(*) AS BIGINT) AS n_events,
                MAX(ts) AS last_ts,
@@ -3591,7 +3591,7 @@ def scd1_purge_deletes(
     tags=("streaming", "pipeline", "write", "cdc"),
 )
 def q213c(spark: SparkSession, sf: str) -> DataFrame:
-    """SCD1 TIME TRAVEL (round 14) — the last Delta-style pillar on
+    """SCD1 TIME TRAVEL — the last Delta-style pillar on
     the MERGE table: q213 is MERGE (CDC in), q213b the changelog (CDC
     out), q215/q215b OPTIMIZE; this is AS-OF reads bounded by a VACUUM
     horizon. The MERGE runs with ``retain_commits=2`` so superseded
@@ -3617,7 +3617,7 @@ def q213c(spark: SparkSession, sf: str) -> DataFrame:
     "q220_scd1_delete_vectors",
     oracle="""
         -- deterministic struct-MAX mirror of the engine fold
-        -- (round-16 ADVICE: arg_max is arbitrary under tied ts)
+        -- (arg_max is arbitrary under tied ts)
         SELECT user_id,
                CAST(COUNT(*) AS BIGINT) AS n_events,
                MAX(ts) AS last_ts,
@@ -3629,7 +3629,7 @@ def q213c(spark: SparkSession, sf: str) -> DataFrame:
     tags=("streaming", "pipeline", "write", "cdc"),
 )
 def q220(spark: SparkSession, sf: str) -> DataFrame:
-    """MERGE-ON-READ DELETE via equality-delete files (round 15 — the
+    """MERGE-ON-READ DELETE via equality-delete files (the
     deletion-vector pillar: Iceberg v2 position/equality deletes,
     Delta deletion vectors; both public formats): the events stream
     MERGEs into the SCD1 dimension table (q213's pipeline), then
@@ -3665,7 +3665,7 @@ def q220(spark: SparkSession, sf: str) -> DataFrame:
     "q213b_scd1_changelog",
     oracle="""
         -- deterministic struct-MAX mirror of the engine fold
-        -- (round-16 ADVICE: arg_max is arbitrary under tied ts)
+        -- (arg_max is arbitrary under tied ts)
         SELECT user_id,
                CAST(COUNT(*) AS BIGINT) AS n_after,
                MAX(ts) AS last_ts_after,
@@ -3676,7 +3676,7 @@ def q220(spark: SparkSession, sf: str) -> DataFrame:
     tags=("streaming", "pipeline", "write", "cdc"),
 )
 def q213b(spark: SparkSession, sf: str) -> DataFrame:
-    """SCD1 MERGE CHANGELOG (round 14) — the CDC-OUT direction
+    """SCD1 MERGE CHANGELOG — the CDC-OUT direction
     completing q213's CDC-IN: each MERGE commit also emits one change
     row per batch key (old count, new count + latest state) into
     ``root/_changelog/c{n}``, written from the just-committed and
@@ -3729,10 +3729,9 @@ _Q213D_EVOLVE_TS = "2024-01-15 00:00:00"
     tags=("streaming", "pipeline", "write", "cdc", "schema"),
 )
 def q213d(spark: SparkSession, sf: str) -> DataFrame:
-    """SCD1 SCHEMA EVOLUTION across a commit boundary (round 15, the
-    r13/r14 verdicts' remaining Delta pillar after MERGE/changelog/
-    time-travel/OPTIMIZE): the dimension table ADDS a ``sum_value``
-    column — lifetime sum of ``value`` over events at/after the
+    """SCD1 SCHEMA EVOLUTION across a commit boundary (the Delta
+    pillar after MERGE/changelog/time-travel/OPTIMIZE): the dimension
+    table ADDS a ``sum_value`` column — lifetime sum of ``value`` over events at/after the
     boundary timestamp — starting at the first commit whose batch
     crosses it. Pre-boundary commits write the v1 schema (the column
     physically ABSENT from their footers); reads and merges spanning
@@ -3766,7 +3765,7 @@ def q213d(spark: SparkSession, sf: str) -> DataFrame:
           "stateful"),
 )
 def q214b(spark: SparkSession, sf: str) -> DataFrame:
-    """STREAMING embedding near-dup at ingest (round 13) — the q205b
+    """STREAMING embedding near-dup at ingest — the q205b
     shape for the EMBEDDING modality, completing the streaming dedup
     matrix (text candidates+verified, perceptual image+audio, now
     semantic): every arriving vector's banded SRP signature (the ONE
@@ -3846,8 +3845,8 @@ def _q216b_oracle() -> str:
     tags=("streaming", "text", "llm", "tokenizer"),
 )
 def q216b(spark: SparkSession, sf: str) -> DataFrame:
-    """STREAMING WordPiece application — tokenize at ingest (round
-    14), completing the tokenizer family's production split (q179b
+    """STREAMING WordPiece application — tokenize at ingest,
+    completing the tokenizer family's production split (q179b
     BPE, q212b unigram, now greedy): the vocabulary trains batch-side
     (`text.wordpiece_vocab`, one home with q216), and every arriving
     document tokenizes in a pure EXPRESSION projection — the greedy
@@ -3885,7 +3884,7 @@ def scd1_rebucket(
     new_n_buckets: int,
     max_retries: int = 3,
 ) -> int:
-    """BUCKET-SPEC EVOLUTION (round 15, q225 — the partition-spec-
+    """BUCKET-SPEC EVOLUTION (q225 — the partition-spec-
     evolution pillar, Iceberg's spec-id mechanism restated for a
     hash-bucketed MERGE table): atomically rewrite the table from its
     current ``n_buckets`` to ``new_n_buckets``. Unlike Iceberg's lazy
@@ -3918,7 +3917,7 @@ def scd1_rebucket(
             )
         bmap = snap["bucket_dir"]
         if not bmap:
-            # fully-deleted table (round-16 ADVICE): nothing to
+            # fully-deleted table: nothing to
             # rewrite — publish a manifest recording the NEW spec
             # with an empty bucket map (spec evolution on an empty
             # table is legitimate; the next MERGE writes under it)
@@ -3999,7 +3998,7 @@ def knn_graph_insert_stream(
     refine_rounds: int = 1,
     persist_root: str | None = None,
 ) -> DataFrame:
-    """STREAMING k-NN-graph maintenance (round 15 — the index-
+    """STREAMING k-NN-graph maintenance (the index-
     MAINTENANCE half of the graph-ANN family, the q191/q191b
     train-offline/apply-online split): the index is BUILT batch-side
     by q218's NN-Descent on the seed corpus; every arriving vector is
@@ -4022,7 +4021,7 @@ def knn_graph_insert_stream(
     schedule; the planted-manifold pytest and the APPROX_EVIDENCE
     recall row quantify the graph against the exact one.
 
-    ``persist_root`` (round 16, verdict #4): when set, the index ALSO
+    ``persist_root``: when set, the index ALSO
     rides the on-disk bucketed-manifest store — the seed graph lands
     as `ann_index_write`'s v0 commit and every trigger commits the
     COMPLETE new adjacency of its touched srcs (arrivals, their found
@@ -4142,8 +4141,8 @@ def knn_graph_insert_stream(
                 )
             )
             # each computed similarity updates BOTH endpoints' lists
-            # (Dong et al.'s both-lists rule; round-15 review: the
-            # one-directional form left inserted nodes' out-edges
+            # (Dong et al.'s both-lists rule; the one-directional
+            # form would leave inserted nodes' out-edges
             # frozen at the search result) — the reverse edge is free
             ref = ref.unionByName(
                 ref.select(
@@ -4183,7 +4182,7 @@ def knn_graph_insert_stream(
     tags=("streaming", "similarity", "graph", "ann", "approx", "slow"),
 )
 def q219b(spark: SparkSession, sf: str) -> DataFrame:
-    """STREAMING kNN-graph insert (round 15) — q218 builds the index
+    """STREAMING kNN-graph insert — q218 builds the index
     offline on the first half of the embedding corpus (ids [0, N/2):
     a dense prefix, so the descent's modular init applies unchanged);
     the stream then replays the full table and every NEW vector is
@@ -4290,8 +4289,8 @@ def q224(spark: SparkSession, sf: str) -> DataFrame:
     oracle="""
         -- last_value via lexicographic struct MAX, mirroring the
         -- engine's F.max(struct(ts, value)) exactly: deterministic
-        -- even under tied ts (round-16 ADVICE; arg_max(value, ts)
-        -- picks an arbitrary row on ties)
+        -- even under tied ts (arg_max(value, ts) picks an
+        -- arbitrary row on ties)
         SELECT user_id,
                CAST(COUNT(*) AS BIGINT) AS n_events,
                MAX(ts) AS last_ts,
@@ -4301,7 +4300,7 @@ def q224(spark: SparkSession, sf: str) -> DataFrame:
     tags=("streaming", "pipeline", "write", "cdc"),
 )
 def q225(spark: SparkSession, sf: str) -> DataFrame:
-    """BUCKET-SPEC EVOLUTION (round 15) — the partition-spec-evolution
+    """BUCKET-SPEC EVOLUTION — the partition-spec-evolution
     pillar on the SCD1 MERGE table, completing the Delta/Iceberg set
     (MERGE, changelog, time travel + VACUUM, OPTIMIZE, schema
     evolution, concurrent writers, deletion vectors, and now spec
@@ -4312,7 +4311,7 @@ def q225(spark: SparkSession, sf: str) -> DataFrame:
     manifest, and every writer now VALIDATES its n_buckets against it
     (`_scd1_check_spec` — a mismatched writer previously corrupted
     silently by scattering a key's rows across two specs' buckets;
-    round-15 hardening, pinned by the q225 pytest family). The hash
+    pinned by the q225 pytest family). The hash
     contract: the post-rebucket table equals the closed-form rollup —
     a rebucket moves every row, loses none, duplicates none."""
     from ..session import scratch_dir
@@ -4330,8 +4329,8 @@ def q225(spark: SparkSession, sf: str) -> DataFrame:
     oracle="""
         -- deterministic mirror of the engine's three-field struct
         -- MAX (ts, is_del, value): on a tied ts the tombstone wins,
-        -- then the larger value (round-16 ADVICE: arg_max is
-        -- arbitrary under ties)
+        -- then the larger value (arg_max is arbitrary under
+        -- ties)
         WITH lww AS (
           SELECT user_id,
                  CAST(COUNT(*) AS BIGINT) AS n_records,
@@ -4349,7 +4348,7 @@ def q225(spark: SparkSession, sf: str) -> DataFrame:
 )
 def q226(spark: SparkSession, sf: str) -> DataFrame:
     """STREAMING CDC APPLY with DELETE tombstones, last-writer-wins
-    (round 15 — the Debezium-consumer shape the SCD1 family still
+    (the Debezium-consumer shape the SCD1 family still
     lacked: q213 MERGEs additive facts, q220 deletes by PREDICATE;
     this applies a change FEED where each record is an upsert or a
     tombstone and the key's fate is decided by its LATEST record):
@@ -4433,7 +4432,7 @@ def q226(spark: SparkSession, sf: str) -> DataFrame:
     tags=("streaming", "similarity", "graph", "ann", "slow"),
 )
 def q229(spark: SparkSession, sf: str) -> DataFrame:
-    """STREAMING graph-ANN query serving (round 15) — q219's search
+    """STREAMING graph-ANN query serving — q219's search
     deployed the way an ANN service runs it: the index (NN-Descent
     graph) is built ONCE batch-side, then QUERIES arrive as a stream
     and every micro-batch is answered by the same beam walk through a
@@ -4511,7 +4510,7 @@ def q229(spark: SparkSession, sf: str) -> DataFrame:
     tags=("streaming", "dedup", "text", "approx", "stateful", "slow"),
 )
 def q232b(spark: SparkSession, sf: str) -> DataFrame:
-    """STREAMING weighted near-dup detection AT INGEST (round 15) —
+    """STREAMING weighted near-dup detection AT INGEST —
     the q205b shape for the WEIGHTED family: every arriving document
     projects its ICWS band signatures scan-side
     (`cws_banded_projection` — the one home shared with batch q232;
@@ -4561,8 +4560,7 @@ def q232b(spark: SparkSession, sf: str) -> DataFrame:
 
 
 # ------- Q221b STREAMING chunk dedup AT INGEST (the CCNet transform
-# deployed — round 16, the one dedup family member that lacked its
-# deployment shape per the r15 verdict)
+# deployed: the deployment shape of the chunk-dedup family member)
 @query(
     "q221b_stream_chunk_dedup",
     oracle=lambda: REGISTRY["q221_chunk_dedup_rebuild"].oracle,
@@ -4570,7 +4568,7 @@ def q232b(spark: SparkSession, sf: str) -> DataFrame:
 )
 def q221b(spark: SparkSession, sf: str) -> DataFrame:
     """STREAMING corpus-wide chunk dedup with document reconstruction
-    (round 16) — q221's CCNet paragraph-dedup transform run the way an
+    — q221's CCNet paragraph-dedup transform run the way an
     ingestion service runs it: arriving documents CHUNK SCAN-SIDE
     (fixed-8-token windows + rolling-hash fingerprints — a pure
     projection over the row's own token array, no shuffle before the
@@ -4684,7 +4682,7 @@ def chunk_dedup_stream(sdf: DataFrame) -> DataFrame:
     return state["out"].orderBy("doc_id")
 
 
-# ---- Graph-ANN index PERSISTENCE (round 16, verdict #4): the
+# ---- Graph-ANN index PERSISTENCE: the
 # NN-Descent edge frame rides the lakehouse write path — hash-bucketed
 # by src under the scd1 versioned-manifest commit protocol
 # (`_scd1_publish`: same atomic manifest flip, same optimistic
@@ -4834,8 +4832,8 @@ def ann_index_read(
     tags=("streaming", "similarity", "graph", "ann", "write", "slow"),
 )
 def q229b(spark: SparkSession, sf: str) -> DataFrame:
-    """STREAMING graph-ANN serving from the ON-DISK index (round 16,
-    verdict #4 — closes q229's restart gap): the NN-Descent graph is
+    """STREAMING graph-ANN serving from the ON-DISK index (closes
+    q229's restart gap): the NN-Descent graph is
     built once, PERSISTED through the bucketed-manifest store
     (`ann_index_write` — the q217 bucketed-layout idea under the q213
     commit protocol), and the serving loop then answers every query

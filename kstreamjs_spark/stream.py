@@ -225,7 +225,7 @@ class Stream:
         - ``collect``/``out_schema``: arbitrary Python reducer over the
           whole window (reference `collect` callback, src/stream.ts:133);
           rows arrive event-time-sorted. On batch input this is the
-          applyInPandas adapter; on STREAMING input (round 12) it is
+          applyInPandas adapter; on STREAMING input it is
           EXACT across micro-batches: keyed GroupState buffers the
           window's rows and an event-time timeout fires the reducer
           ONCE when the watermark passes the window end — the

@@ -843,7 +843,7 @@ def docgen_corpus(spark, mult: int, disjoint: bool, base_rows: int = 5000):
 def main() -> int:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     disjoint = "--disjoint" in sys.argv[1:]
-    # --scale-partitions[=cap]: scale spark.sql.shuffle.partitions with
+    # --scale-partitions[=cap]: scale the batch shuffle width with
     # the multiplier (the cluster-realistic regime — partition count
     # tracks input size, AQE coalesces the other way). The default pinned
     # count is the adversarial regime: at 100x each shuffle partition
@@ -978,11 +978,18 @@ def main() -> int:
     results: dict[str, list[float]] = {
         k: [] for k in (*ops, *eops, *vops, *fops, *cops)
     }
-    base_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # Batch exchanges under AQE take their width from initialPartitionNum
+    # (get_spark sets it; shuffle.partitions there sizes streaming state).
+    width_keys = (
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+        "spark.sql.shuffle.partitions",
+    )
+    base_parts = int(spark.conf.get(width_keys[0]))
     for mult in mults:
         if scale_parts:
             nparts = min(base_parts * mult, parts_cap)
-            spark.conf.set("spark.sql.shuffle.partitions", str(nparts))
+            for k in width_keys:
+                spark.conf.set(k, str(nparts))
             print(f"mult={mult}: shuffle.partitions={nparts}", flush=True)
         if source == "docgen":
             d = docgen_corpus(spark, mult, disjoint)

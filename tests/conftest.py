@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import re
 import time
 
 import pytest
@@ -46,6 +47,19 @@ def sf_smoke():
     return SF_SMOKE
 
 
+# The count is the last argument of hashpartitioning(...), so it is the
+# last ", N)" on the line that the exchange's own arguments follow; a
+# literal inside a key expression, as in pmod(k, 16), comes before it.
+_EXCHANGE_WIDTH = re.compile(r"hashpartitioning\(.*, (\d+)\)(?:,|$)", re.M)
+
+
+def exchange_widths(df) -> set[int]:
+    """Partition counts of the hash exchanges in ``df``'s physical plan
+    (the initial plan, when AQE is on)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return {int(n) for n in _EXCHANGE_WIDTH.findall(plan)}
+
+
 def stage_stream(df, path, by, parts=6):
     """Stage ``df`` as a multi-trigger file-stream source: ``parts``
     parquet part files under ``path``, range-partitioned by ``by``, with
@@ -73,8 +87,9 @@ def stage_stream(df, path, by, parts=6):
 
 @pytest.fixture(scope="session")
 def spark():
-    # shuffle_partitions is pinned so plan assertions do not depend on
-    # the host's core count; cpus follows get_spark's default.
+    # shuffle_partitions is pinned so batch plan assertions do not depend
+    # on the host's core count; cpus follows get_spark's default, and so
+    # does a new stateful query's state partition count, min(cpus, 8).
     s = get_spark("kstreamjs-tests", shuffle_partitions=8)
     yield s
     s.stop()

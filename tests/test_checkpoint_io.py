@@ -1,7 +1,9 @@
 """Streaming checkpoint I/O on sessions built by ``get_spark``: which
-checkpoint manager they use, what it writes to disk, and that a stateful
-window restarts from a checkpoint written by Spark's default manager.
-Every input is generated here, so no parquet fixtures are needed."""
+checkpoint manager they use, what it writes to disk, how many state
+partitions a stateful window gets, and that it restarts from a
+checkpoint written by Spark's default manager or under another state
+partition count. Every input is generated here, so no parquet fixtures
+are needed."""
 
 from __future__ import annotations
 
@@ -11,11 +13,16 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
+import pytest
 
 from kstreamjs_spark.session import get_spark
 from kstreamjs_spark.stream import Stream
 
+from .conftest import exchange_widths
+
 MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+SHUFFLE_KEY = "spark.sql.shuffle.partitions"
+INITIAL_KEY = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
 _PKG = "org.apache.spark.sql.execution.streaming.checkpointing."
 FILE_SYSTEM = _PKG + "FileSystemBasedCheckpointFileManager"
 FILE_CONTEXT = _PKG + "FileContextBasedCheckpointFileManager"
@@ -101,6 +108,11 @@ def drain(spark, src: str, ckpt: str, out: str):
     return handle.query
 
 
+def state_partitions(ckpt: str) -> int:
+    """Partition directories of the checkpoint's stateful operator."""
+    return sum(d.isdigit() for d in os.listdir(os.path.join(ckpt, "state", "0")))
+
+
 def sink(spark, out: str) -> pd.DataFrame:
     cols = ["window_start", "k", "n", "s"]
     return (
@@ -120,7 +132,7 @@ def test_get_spark_checkpoints_through_filesystem_manager(spark, tmp_path):
     ours = spark.conf.get(MANAGER_KEY)
     try:
         s = get_spark(
-            shuffle_partitions=int(spark.conf.get("spark.sql.shuffle.partitions")),
+            shuffle_partitions=int(spark.conf.get(INITIAL_KEY)),
             extra_conf={MANAGER_KEY: FILE_CONTEXT},
         )
         assert manager_class(s, tmp_path) == FILE_CONTEXT
@@ -178,3 +190,52 @@ def test_stateful_window_restart_equals_uninterrupted_run(spark, tmp_path):
         )
 
     assert late(q1, q2) == late(q3) == 6 - LATE_FROM
+
+
+def test_state_partitions_follow_cores_and_batch_keeps_its_width(spark, tmp_path):
+    """The fixture's session asks for 8 shuffle partitions. A batch
+    groupBy plans 8-way exchanges, while a new stateful window gets one
+    state partition per core (at most 8), so each trigger runs one wave
+    of tasks. With 8 or more cores both counts are 8, and the state half
+    cannot tell one rule from the other."""
+    batch = spark.range(100).groupBy((F.col("id") % 3).alias("k")).count()
+    assert exchange_widths(batch) == {8}
+
+    cpus = spark.sparkContext.defaultParallelism
+    if cpus >= 8:
+        pytest.skip(f"{cpus} cores: state and batch widths are both 8")
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    write_part(src, 0, parts()[0])
+    drain(spark, src, ckpt, str(tmp_path / "out"))
+    assert state_partitions(ckpt) == cpus
+
+
+def test_checkpoint_keeps_its_state_partition_count(spark, tmp_path):
+    """A checkpoint started with another state partition count than the
+    session's default (twice it here, as a checkpoint written before
+    state partitions followed the cores may hold) restarts on the
+    default session: Spark reads the count back from the offset log,
+    and the sink equals one uninterrupted drain under the default."""
+    default = min(spark.sparkContext.defaultParallelism, 8)
+    started = 2 * default
+    src, ckpt, out = (str(tmp_path / d) for d in ("src", "ckpt", "out"))
+    backlog = parts()
+    ours = spark.conf.get(SHUFFLE_KEY)
+    spark.conf.set(SHUFFLE_KEY, str(started))
+    try:
+        for i in range(3):
+            write_part(src, i, backlog[i])
+        drain(spark, src, ckpt, out)
+    finally:
+        spark.conf.set(SHUFFLE_KEY, ours)
+    assert state_partitions(ckpt) == started
+
+    for i in range(3, 6):
+        write_part(src, i, backlog[i])
+    drain(spark, src, ckpt, out)
+    assert state_partitions(ckpt) == started
+
+    whole_ckpt, whole_out = str(tmp_path / "ckpt2"), str(tmp_path / "out2")
+    drain(spark, src, whole_ckpt, whole_out)
+    assert state_partitions(whole_ckpt) == default
+    pd.testing.assert_frame_equal(sink(spark, out), sink(spark, whole_out))

@@ -8,9 +8,12 @@ would flake here long before it flaked against the DuckDB oracle.
 
 from __future__ import annotations
 
+import pyspark.sql.functions as F
 import pytest
 
 from kstreamjs_spark.queries import all_queries
+
+from .conftest import exchange_widths
 
 SPECS = all_queries()
 
@@ -30,6 +33,14 @@ CLAIMANTS = [
 ]
 
 
+WIDTH_KEYS = (
+    # batch exchanges under AQE take this width ...
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+    # ... and plans without AQE take this one
+    "spark.sql.shuffle.partitions",
+)
+
+
 def _canon(df):
     return sorted(tuple(r) for r in df.collect())
 
@@ -37,15 +48,21 @@ def _canon(df):
 @pytest.mark.parametrize("name", CLAIMANTS)
 def test_result_invariant_under_parallelism(spark, sf_smoke, name):
     fn = SPECS[name].fn
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    prev = {k: spark.conf.get(k) for k in WIDTH_KEYS}
+    runs = {}
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "2")
-        narrow = _canon(fn(spark, sf_smoke))
-        spark.conf.set("spark.sql.shuffle.partitions", "17")
-        wide = _canon(fn(spark, sf_smoke))
+        for n in (2, 17):
+            for k in WIDTH_KEYS:
+                spark.conf.set(k, str(n))
+            # the key's literal 16 must not be read as the width
+            key = F.pmod(F.col("id"), F.lit(16)).alias("k")
+            probe = spark.range(10).groupBy(key).count()
+            assert exchange_widths(probe) == {n}
+            runs[n] = _canon(fn(spark, sf_smoke))
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    assert narrow == wide, (
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    assert runs[2] == runs[17], (
         f"{name} changed under a different shuffle partitioning — "
         "an aggregation is order-sensitive"
     )

@@ -1066,6 +1066,61 @@ def test_window_collect_stateful_keyed(spark, tmp_path):
     assert len(streamed) == len(expected)
 
 
+def test_window_counts_row_behind_watermark_in_open_window(spark, tmp_path):
+    """A row behind the watermark whose window is still open is counted,
+    on the ``aggs=`` path and on the ``collect=`` path alike. Batch 0
+    moves the watermark to 00:49 (00:50 less the 1-minute buffer);
+    batch 1 brings a row at 00:30, still inside the open window
+    [00:00, 01:00); a far-future sentinel in batch 2 closes it."""
+    minute = 60_000
+    d = str(tmp_path / "open_in")
+    files = [
+        [(5 * minute, 1), (10 * minute, 2), (50 * minute, 3)],
+        [(30 * minute, 4)],
+        [(300 * minute, 0)],
+    ]
+    now = time.time()
+    for i, rows in enumerate(files):
+        p = f"{d}/f{i}.parquet"
+        _write_file(spark, rows, p)
+        for root, _, names in os.walk(p):
+            for n in names:
+                os.utime(os.path.join(root, n), (now + i, now + i))
+    schema = spark.read.parquet(f"{d}/f0.parquet").schema
+
+    def drain(name, **how):
+        sdf = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", "1").parquet(d + "/*")
+        )
+        out = Stream(sdf, "ts").window(
+            interval_ms=60 * minute, buffer_interval_ms=minute, **how
+        )
+        q = (
+            out.df.writeStream.format("memory").queryName(name)
+            .trigger(availableNow=True).start()
+        )
+        assert q.awaitTermination(600)
+        rows = [(r["window_start"].minute, r["n"], r["s"])
+                for r in spark.table(name).collect()]
+        spark.catalog.dropTempView(name)
+        progress = sorted(q.recentProgress, key=lambda p: p["batchId"])
+        assert progress[1]["eventTime"]["watermark"] == "1970-01-01T00:49:00.000Z"
+        dropped = sum(
+            op["numRowsDroppedByWatermark"]
+            for p in progress for op in p["stateOperators"]
+        )
+        return rows, dropped
+
+    aggs = drain("open_aggs", aggs={"n": F.count("*"), "s": F.sum("v")})
+    collect = drain(
+        "open_collect",
+        collect=lambda pdf: {"n": len(pdf), "s": int(pdf["v"].sum())},
+        out_schema="n long, s long",
+    )
+    assert aggs == collect == ([(0, 4, 10)], 0)
+
+
 @pytest.mark.slow
 def test_stream_minhash_candidates_equal_batch_any_schedule(spark, tmp_path):
     """q205's contract: the streamed candidate-pair SET equals batch
