@@ -14,7 +14,7 @@ Layout:
   session     SparkSession factory (AQE, Arrow, UTC, sane shuffle sizing)
   tables      test-table registry for /root/testdata/sf*/
   stream      fluent Stream facade — API parity with the reference's operators
-  operators/  window-collect adapter, dedup, similarity, text, multimodal
+  operators/  window collect, dedup, similarity, text, multimodal
   sources/    parquet/kafka source & sink builders
   streaming/  file-replay streaming helpers, statistics listener
   queries/    the declared query inventory (SURVEY.md §2B) + duckdb oracles

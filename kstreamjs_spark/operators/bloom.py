@@ -160,8 +160,7 @@ def member_semijoin(
 ) -> DataFrame:
     """EXACT membership semi-join — rows of ``candidates`` whose ``on``
     value appears in ``members`` — planned through whichever regime the
-    MEMBER-side size supports (the r8 verdict's q77-vs-q77b A/B rule,
-    encoded):
+    MEMBER-side size supports (the q77-vs-q77b A/B rule, encoded):
 
     - ``broadcast`` (member set fits the broadcast budget): plain
       ``left_semi`` against ``F.broadcast(members)`` — the candidate side

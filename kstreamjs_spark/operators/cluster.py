@@ -24,7 +24,7 @@ Scale properties (100 TB corpus, billions of pairs):
   an iterative join chain otherwise re-executes every prior round on each
   action (and the plan grows exponentially for Catalyst to analyze).
 - Duplicate-pair graphs are near-disjoint tiny components, so label
-  traffic shrinks geometrically after round 1; AQE coalesces the
+  traffic shrinks geometrically after the first iteration; AQE coalesces the
   shrinking shuffles.
 """
 

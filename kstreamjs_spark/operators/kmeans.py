@@ -153,7 +153,7 @@ def kmeanspp_centroids(
     # u STRICTLY interior to (0, 1): (pmod(h, M) + 0.5) / M, h seeded and
     # id-keyed. pmod, not abs(h) % M: abs(Long.MIN_VALUE) stays negative
     # (non-ANSI), which would make u <= 0, F.log NULL, and a nulls-first
-    # sort key that deterministically wins every D² race (ADVICE r5).
+    # sort key that deterministically wins every D² race.
     # +0.5 rather than +1: u == 1.0 exactly (pmod == M-1 under +1) makes
     # -log(u) == 0, a key of exactly 0 that beats every strictly-positive
     # competitor in EVERY round — one unlucky hash would return k-1

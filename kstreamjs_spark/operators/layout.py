@@ -110,7 +110,7 @@ def compact_partitions(
     partition_col: str = "zfile",
     max_files: int = 1,
 ) -> list[tuple[str, int, int]]:
-    """Lakehouse OPTIMIZE-style SMALL-FILE COMPACTION (round 14) — the
+    """Lakehouse OPTIMIZE-style SMALL-FILE COMPACTION — the
     maintenance half of the write path next to q211b's streaming
     appends and q213's partition-pruned MERGE: continuous micro-batch
     ingest leaves one small file per batch per partition; this
@@ -140,7 +140,7 @@ def compact_partitions(
        copies. Readers resolving the table path never see a
        half-compacted partition.
 
-    Crash recovery (round 15): a crash between the two renames leaves
+    Crash recovery: a crash between the two renames leaves
     the partition MISSING from the table and its old copy in the
     staging trash slot. The census therefore starts by recovering any
     orphaned staging dir from a previous run: a trash slot whose

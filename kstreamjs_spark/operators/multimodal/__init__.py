@@ -29,9 +29,8 @@ row groups) to keep Arrow batches memory-bounded; mapInPandas streams
 batches, never materializing a partition at once.
 """
 
-# Round-13 split of the former 4.3k-line single module into format
-# submodules (core/image/jpeg/animation/audio/video/blobs). Every name
-# the old module exposed — including the underscore-prefixed kernel
+# The format submodules (core/image/jpeg/animation/audio/video/blobs)
+# share one namespace: every name they expose — including the underscore-prefixed kernel
 # internals the white-box tests pin — is re-exported here verbatim so
 # `operators.multimodal.X` keeps working unchanged.
 from . import animation, audio, blobs, core, image, jpeg, video

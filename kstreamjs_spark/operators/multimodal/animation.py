@@ -22,7 +22,7 @@ from .image import (
 )
 
 # ------------------------------------------------------------- GIF (LZW)
-# Round 11: the fourth REAL pixel codec. GIF is pure-stdlib feasible
+# The fourth REAL pixel codec. GIF is pure-stdlib feasible
 # (LZW is integer bit-twiddling; no codec library needed), genuinely
 # common in crawled corpora, and — being palette-indexed and lossless —
 # pHashes identically to the same pixels in BMP/PNG, extending the
@@ -516,7 +516,7 @@ def gif_anim_phash_blobs(
 
 
 # ------------------------------------------------------------ APNG
-# Round 11, second animation container: APNG rides the PNG chunk
+# The second animation container: APNG rides the PNG chunk
 # stream (acTL/fcTL/fdAT, RFC-pending W3C spec, public) — pure-stdlib
 # feasible like GIF, and the still decoders already do the right thing
 # (an APNG's IDAT is its default image, so `decode_png_pixels` on an

@@ -146,7 +146,7 @@ def afp_blobs(
 ) -> DataFrame:
     """Per-clip audio fingerprint over a binary column: decode PCM
     samples with the real kernels — magic-byte codec dispatch, WAV or
-    FLAC (round 12), channels collapsed by summation (gain-safe) —
+    FLAC, channels collapsed by summation (gain-safe) —
     then the energy-difference AFP. Arrow-batched mapInPandas; blobs
     never leave the executors, output one BIGINT per row for
     `dedup.hamming_neardup_pairs`. Lossless codecs reproduce identical
@@ -285,7 +285,7 @@ def decode_audio_blobs(
 
 
 # ------------------------------------------------- FLAC (lossless audio)
-# Round 12: the remaining common crawled-audio format decodable with NO
+# The remaining common crawled-audio format decodable with NO
 # codec library — like PNG, the FLAC spec (RFC 9639, public) is pure
 # integer arithmetic: UTF-8-coded frame numbers, Rice-coded residuals,
 # fixed/LPC integer predictors, CRC-8/CRC-16 integrity, MD5 of the raw

@@ -551,7 +551,7 @@ def mjpeg_phash_blobs(
     bucketed video near-dup, the q158 chain one modality up."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Round 16 (guide §4.5): byte-identical blobs decode to the
+        # Byte-identical blobs decode to the
         # same (n_frames, vhash) — a per-task memo keyed on the blob
         # bytes skips redundant container walks + JPEG pixel decodes
         # (the q174 fixture repeats each video ~3x per group, and the
@@ -610,7 +610,7 @@ def synth_mjpeg_blobs(
     import numpy as np
 
     def make(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Round 16 (guide §4.5 per-task state): the video depends ONLY
+        # Per-task state: the video depends ONLY
         # on the group g — every doc in a group encodes the IDENTICAL
         # blob, so a per-task memo keyed on g cuts the JPEG+MP4 encode
         # bill ~3x. The keyed widen below colocates each group so the

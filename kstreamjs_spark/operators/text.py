@@ -248,7 +248,7 @@ def unicode_normalize(text: Column | str, form: str = "NFC") -> Column:
 
 
 # --------------------------- WordPiece-style greedy subword tokenizer
-# (round 14 — the third tokenizer family next to BPE q179 and
+# (the third tokenizer family next to BPE q179 and
 # unigram-LM q212, and the only one whose APPLICATION is exactly
 # SQL-restatable: greedy longest-match is a functional graph — the
 # jump length at a position depends only on (word, position), never on
@@ -290,7 +290,7 @@ def wordpiece_vocab(
     word-count frame — a caller that already aggregates word counts
     (q216's output table) passes it here so the corpus is scanned once
     for both halves instead of once per half (guide §3.3 duplicated
-    subtrees). REQUIRED derivation (ADVICE r16 — when this frame is
+    subtrees). REQUIRED derivation (when this frame is
     supplied, ``documents``/``text_col`` and the length filter below
     are NOT consulted, so the caller must have built it exactly as the
     in-house branch and the oracle's wp_wc CTE do): split ``text_col``

@@ -1,4 +1,4 @@
-"""Corpus-curation queries, round 4: benchmark decontamination, repetition
+"""Corpus-curation queries: benchmark decontamination, repetition
 filtering, group-aware splits, vocabulary coverage, embedding clustering
 and quantization, replication upsampling, lexical-diversity stats, and
 text normalization.
@@ -696,7 +696,7 @@ def q84(spark: SparkSession, sf: str) -> DataFrame:
     tags=("text", "llm"),
 )
 def q84b(spark: SparkSession, sf: str) -> DataFrame:
-    """Unicode NFC normalization (round 12; UAX #15, public) — the step
+    """Unicode NFC normalization (UAX #15, public) — the step
     q84's regex-class normalization skips and every real multilingual
     pipeline needs: canonically equivalent strings ("e" + COMBINING
     ACUTE vs precomposed U+00E9) must hash/shingle/dedup identically.
@@ -725,7 +725,7 @@ def q84b(spark: SparkSession, sf: str) -> DataFrame:
             # normalize ONCE and derive both columns from the alias —
             # two unicode_normalize calls are two distinct pandas_udf
             # instances Spark cannot common-subexpression-eliminate
-            # (round-12 review find: the Arrow round-trip ran twice)
+            # (the Arrow round-trip would run twice)
             text.unicode_normalize("decorated", "NFC").alias("nfc_text"),
         )
         .select(
@@ -887,7 +887,7 @@ def _length_bounds(d: DataFrame) -> tuple[DataFrame, DataFrame]:
     histogram, all-integer threshold tests."""
     n = d.groupBy("lang").agg(F.count(F.lit(1)).alias("n_l"))
     h = d.groupBy("lang", "L").agg(F.count(F.lit(1)).alias("c"))
-    # Round 16 (guide §3.3): lo and hi below each replayed the whole
+    # lo and hi below each replayed the whole
     # histogram + cumulative window (and its upstream corpus split)
     # from the scan. The cumulated histogram is (lang, length)-bounded
     # — kilobytes — so cut the lineage once, lazily.
@@ -950,7 +950,7 @@ def q88(spark: SparkSession, sf: str) -> DataFrame:
     Thresholds broadcast back to the scan; the final rollup is
     per-lang."""
     (docs,) = load(spark, sf, "documents")
-    # Round 16 (guide §3.3): (doc_id, lang, L) feeds the two histogram
+    # (doc_id, lang, L) feeds the two histogram
     # rollups AND the final threshold join — three subtrees, each
     # previously re-splitting the text from the scan (audit: 5 scans).
     # 24 B/row, so one lazy cut replaces two corpus re-splits.
@@ -1359,7 +1359,7 @@ def q106b(spark: SparkSession, sf: str) -> DataFrame:
     join bucket quadratic at 100 TB; here such shingles are dropped from
     BOTH the intersection and the per-doc set sizes before Jaccard
     (operators/dedup.py jaccard_pairs max_df), and the oracle mirrors the
-    DF-filtered metric exactly — the r5 verdict's ask: the variant a user
+    DF-filtered metric exactly, so the variant a user
     runs on a REAL corpus split is the hash-matched one (q26e proved this
     pattern source-blocked; this is the unblocked split-audit shape)."""
     (docs,) = load(spark, sf, "documents")
@@ -1459,7 +1459,7 @@ def q111(spark: SparkSession, sf: str) -> DataFrame:
     no text). The report (4 rows) is materialized eagerly inside the
     query and the cache UNPERSISTED before returning — a long-lived
     shared session (CLI runner, driver verify loop, bench sweeps) must
-    not accumulate one cached copy per invocation (ADVICE r5); the
+    not accumulate one cached copy per invocation; the
     4-row collect is bounded by construction."""
     (docs,) = load(spark, sf, "documents")
     tri = dedup.shingle_list("text", 3)

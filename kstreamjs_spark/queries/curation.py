@@ -1,4 +1,4 @@
-"""Round-6 query additions (SURVEY.md §2B Q112–Q156): chunk-level
+"""Curation queries (SURVEY.md §2B Q112–Q156): chunk-level
 boilerplate and near-dup detection, weighted priority sampling, Zipf-law
 auditing, vector-column health/drift checks, split-distribution
 divergence, quality/perplexity banding, per-source scorecards,
@@ -1169,7 +1169,7 @@ def q125(spark: SparkSession, sf: str) -> DataFrame:
     """Event-type co-occurrence lift across users — lift(a,b) =
     N·P(a∧b)/(P(a)·P(b)) over per-user distinct type sets: the
     market-basket association matrix behind "users who X also Y". Plan
-    (verified against the EXECUTED plan, round 7): the raw-events
+    (verified against the EXECUTED plan): the raw-events
     distinct shuffle materializes ONCE — AQE's runtime exchange reuse
     feeds the marginal/total/self-join consumers from the same stage
     (the static plan prints four copies; ReusedExchange appears at
@@ -1338,7 +1338,7 @@ def q127(spark: SparkSession, sf: str) -> DataFrame:
             )
         ).alias("dim", "xq"),
     )
-    # Round 16 (guide §3.3): the old/new-half split below consumes this
+    # The old/new-half split below consumes this
     # aggregate twice, and each filter branch replayed the per-dim
     # posexplode + integer-sum subtree from the embeddings scan (audit:
     # 6 scans). The aggregate is |labels| x 2 x |dims| rows — kilobytes
@@ -3271,7 +3271,7 @@ def q162(spark: SparkSession, sf: str) -> DataFrame:
     tags=("relational", "join", "tpch"),
 )
 def q184(spark: SparkSession, sf: str) -> DataFrame:
-    """Customer order-count DISTRIBUTION (TPC-H Q13 shape, round 11) —
+    """Customer order-count DISTRIBUTION (TPC-H Q13 shape) —
     the one classic shape the inventory lacked: a LEFT join whose
     unmatched side must surface as a ZERO bucket in a histogram of
     counts (customers with no qualifying orders are the business
@@ -3334,7 +3334,7 @@ _Q185_TO = "1995-10-01"
     tags=("relational", "join", "tpch"),
 )
 def q185(spark: SparkSession, sf: str) -> DataFrame:
-    """Top supplier by quarterly revenue (TPC-H Q15 shape, round 11):
+    """Top supplier by quarterly revenue (TPC-H Q15 shape):
     the max-of-an-aggregate membership test Q15 spells with a view —
     suppliers whose three-month revenue EQUALS the global maximum
     (plural on ties, which is why the shape is not a LIMIT 1).
@@ -3373,7 +3373,7 @@ def q185(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-# -------------------------- Q186 shipping priority (TPC-H Q3, round 11)
+# -------------------------- Q186 shipping priority (TPC-H Q3)
 _Q186_DATE = "1997-06-15"
 
 
@@ -3398,7 +3398,7 @@ _Q186_DATE = "1997-06-15"
     tags=("relational", "join", "tpch"),
 )
 def q186(spark: SparkSession, sf: str) -> DataFrame:
-    """Shipping priority (TPC-H Q3 shape, round 11): unshipped-revenue
+    """Shipping priority (TPC-H Q3 shape): unshipped-revenue
     top-10 for one market segment — the canonical selective 3-table
     join + aggregate + top-k.
 
@@ -3439,7 +3439,7 @@ def q186(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-# ----------------------- Q187 order priority checking (TPC-H Q4, round 11)
+# ----------------------- Q187 order priority checking (TPC-H Q4)
 _Q187_FROM = "1997-01-01"
 _Q187_TO = "1997-04-01"
 
@@ -3462,7 +3462,7 @@ _Q187_TO = "1997-04-01"
     tags=("relational", "join", "tpch"),
 )
 def q187(spark: SparkSession, sf: str) -> DataFrame:
-    """Order-priority checking (TPC-H Q4 shape, round 11): per-priority
+    """Order-priority checking (TPC-H Q4 shape): per-priority
     counts of orders having AT LEAST ONE late line — Q4's
     l_commitdate < l_receiptdate test re-expressed on this schema as
     l_shipdate > o_orderdate + 90 days (the q128 lateness convention;
@@ -3498,7 +3498,7 @@ def q187(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-# ------------------------- Q188 forecast revenue change (TPC-H Q6, round 11)
+# ------------------------- Q188 forecast revenue change (TPC-H Q6)
 @query(
     "q188_forecast_revenue",
     oracle="""
@@ -3514,7 +3514,7 @@ def q187(spark: SparkSession, sf: str) -> DataFrame:
     tags=("relational", "scan", "tpch"),
 )
 def q188(spark: SparkSession, sf: str) -> DataFrame:
-    """Forecast revenue change (TPC-H Q6 shape, round 11): the pure
+    """Forecast revenue change (TPC-H Q6 shape): the pure
     scan-aggregate — what would revenue have been without these
     discounts. No join, no groupBy key: ONE map-combined global
     aggregate over a fully-pushed-down scan (all three predicates
@@ -3544,7 +3544,7 @@ def q188(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-# ---------------------------- Q189 volume shipping (TPC-H Q7, round 11)
+# ---------------------------- Q189 volume shipping (TPC-H Q7)
 _Q189_N1 = "NATION_1"
 _Q189_N2 = "NATION_2"
 
@@ -3574,7 +3574,7 @@ _Q189_N2 = "NATION_2"
     tags=("relational", "join", "tpch"),
 )
 def q189(spark: SparkSession, sf: str) -> DataFrame:
-    """Volume shipping between two nations (TPC-H Q7 shape, round 11):
+    """Volume shipping between two nations (TPC-H Q7 shape):
     bilateral trade volume by year and direction — the 6-table join
     with a DISJUNCTIVE cross-table predicate (either nation supplies
     the other).
@@ -3630,7 +3630,7 @@ def q189(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-# --------------------------- Q190 returned items (TPC-H Q10, round 11)
+# --------------------------- Q190 returned items (TPC-H Q10)
 _Q190_FROM = "1997-01-01"
 _Q190_TO = "1997-04-01"
 
@@ -3657,7 +3657,7 @@ _Q190_TO = "1997-04-01"
     tags=("relational", "join", "tpch"),
 )
 def q190(spark: SparkSession, sf: str) -> DataFrame:
-    """Returned-item reporting (TPC-H Q10 shape, round 11): the top-20
+    """Returned-item reporting (TPC-H Q10 shape): the top-20
     customers by revenue lost to returns in one quarter — the
     customer-attribution join with two selective scan filters.
 
@@ -3734,7 +3734,7 @@ _Q199_TO = "1998-01-01"
     bench=True,
 )
 def q199(spark: SparkSession, sf: str) -> DataFrame:
-    """Local supplier volume (TPC-H Q5 shape, round 12) — the classic
+    """Local supplier volume (TPC-H Q5 shape) — the classic
     6-table star join with the LOCAL constraint (supplier and customer
     in the same nation) expressed as an extra equi-condition on the
     lineitem-supplier join, NOT a post-filter: Catalyst pushes it into
@@ -3817,7 +3817,7 @@ _Q200_TYPE = "ECONOMY"
     tags=("relational", "join", "tpch"),
 )
 def q200(spark: SparkSession, sf: str) -> DataFrame:
-    """National market share (TPC-H Q8 shape, round 12): the share of
+    """National market share (TPC-H Q8 shape): the share of
     one supplying nation's revenue within a consuming region's market
     for one part type, by order year — the 8-table join with TWO roles
     for nation (customer side restricting the market, supplier side
@@ -3916,7 +3916,7 @@ _Q201_NAME_PART = "gear"
     bench=True,
 )
 def q201(spark: SparkSession, sf: str) -> DataFrame:
-    """Product-type profit (TPC-H Q9 shape, round 12, ADAPTED: the
+    """Product-type profit (TPC-H Q9 shape, ADAPTED: the
     testdata star has no partsupp, so supply cost is proxied by 10% of
     p_retailprice x quantity — same join topology and arithmetic
     shape, profit = revenue minus cost joined in from the part dim).
@@ -3992,7 +3992,7 @@ _Q209_SIZES = (1, 9, 14, 19, 23, 36, 45, 49)
     tags=("relational", "join", "tpch"),
 )
 def q209(spark: SparkSession, sf: str) -> DataFrame:
-    """Parts/supplier relationship (TPC-H Q16 shape, round 13 —
+    """Parts/supplier relationship (TPC-H Q16 shape;
     completes the TPC-H shape sweep with q210). The schema has no
     partsupp table, so the supply relation is derived as DISTINCT
     (l_partkey, l_suppkey) from lineitem — one hash exchange on the
@@ -4071,7 +4071,7 @@ _Q210_WIN_TO = "1998-01-01"
     tags=("relational", "join", "tpch"),
 )
 def q210(spark: SparkSession, sf: str) -> DataFrame:
-    """Potential part promotion (TPC-H Q20 shape, round 13): suppliers
+    """Potential part promotion (TPC-H Q20 shape): suppliers
     in one nation holding surplus stock of name-matched parts. Q20's
     nested EXISTS/IN chain — parts IN-list inside a partsupp filter
     inside a supplier semi-join, with a CORRELATED half-sum scalar
@@ -4193,8 +4193,8 @@ def _q221_rebuild_sql(sts: str, ts: str) -> str:
     tags=("dedup", "text", "llm"),
 )
 def q221(spark: SparkSession, sf: str) -> DataFrame:
-    """GLOBAL chunk dedup with document RECONSTRUCTION (round 15 —
-    the CCNet/C4 paragraph-dedup shape, Wenzek et al. 2020: drop every
+    """GLOBAL chunk dedup with document RECONSTRUCTION
+    (the CCNet/C4 paragraph-dedup shape, Wenzek et al. 2020: drop every
     repeated paragraph corpus-wide, keep the FIRST occurrence, and
     re-emit the surviving document text): documents split into
     fixed-8-token chunks (this corpus has no paragraph separators, so
@@ -4293,7 +4293,7 @@ _HEAPS_G = 8       # prefix checkpoints at i/8 of the corpus
                        (SELECT COUNT(*) FROM fd f
                         WHERE f.first_doc < g.cp) AS v_vocab
                 FROM grid g
-                -- tiny-corpus robustness (round-15 review): duplicate
+                -- tiny-corpus robustness: duplicate
                 -- checkpoints are collapsed above, and an empty doc-id
                 -- prefix (possible when ids don't start at 0 or n <
                 -- grid size) contributes no point on EITHER engine
@@ -4306,7 +4306,7 @@ _HEAPS_G = 8       # prefix checkpoints at i/8 of the corpus
                      t_tok, v_vocab
               FROM pts)
         SELECT CAST(COUNT(*) AS BIGINT) AS n_points,
-               -- degenerate-fit guard (round-16 ADVICE): a single
+               -- degenerate-fit guard: a single
                -- surviving checkpoint (or all-equal x) zeroes the
                -- denominator; emit NULL explicitly on BOTH engines
                -- instead of relying on engine-specific /0 behavior
@@ -4324,7 +4324,7 @@ _HEAPS_G = 8       # prefix checkpoints at i/8 of the corpus
     tags=("text", "llm", "monitoring"),
 )
 def q230(spark: SparkSession, sf: str) -> DataFrame:
-    """HEAPS'-LAW vocabulary growth (round 15) — the companion to
+    """HEAPS'-LAW vocabulary growth — the companion to
     q114's Zipf slope in the corpus-health family: V(T) ~ K*T^beta
     (Heaps 1978, public), fit as a least-squares slope in log-log
     space over 8 corpus-prefix checkpoints (vocab after the first
@@ -4345,7 +4345,7 @@ def q230(spark: SparkSession, sf: str) -> DataFrame:
     (documents,) = load(spark, sf, "documents")
     # ONE explode feeds one first-level (doc, token) aggregate; fd and
     # dt then derive from that SMALL frame (distinct pairs, not the
-    # token stream) — the round-15 review's 3-scan finding. The
+    # token stream), so the corpus is scanned once, not three times. The
     # localCheckpoint materializes tf2 once, never the raw explode.
     tf2 = (
         documents.select(
@@ -4393,7 +4393,7 @@ def q230(spark: SparkSession, sf: str) -> DataFrame:
         "v_vocab",
     )
     cnt = F.count(F.lit(1))
-    # degenerate-fit guard mirrored with the oracle (round-16 ADVICE):
+    # degenerate-fit guard mirrored with the oracle:
     # one surviving checkpoint (or all-equal x) -> NULL, explicitly
     denom = (cnt * F.sum(F.col("x") * F.col("x"))
              - F.sum("x") * F.sum("x"))

@@ -2186,7 +2186,7 @@ def q48(spark: SparkSession, sf: str) -> DataFrame:
     transform slot (reference async `map` callback, src/stream.ts:38-56).
     Deliberately computes something SQL-expressible so the oracle can
     hash-check the UDF plumbing itself; completes the UDF surface next to
-    q33 (applyInPandas), q40 (mapInPandas), q44 (stateful).
+    q33 (mapInArrow), q40 (mapInPandas), q44 (stateful).
 
     Caveat (probed, not hit by this corpus): Python's s[::-1] reverses
     CODEPOINTS while DuckDB's reverse() reverses GRAPHEME clusters — they

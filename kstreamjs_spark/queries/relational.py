@@ -1190,7 +1190,7 @@ def q89(spark: SparkSession, sf: str) -> DataFrame:
     per ROW before the window SUM (standard idiom, cf. q44/q81b): DuckDB
     evaluates moving SUMs with a segment tree and Spark with per-frame
     accumulation, so a double sum associates differently and ulp drift
-    could flip a rounding boundary (ADVICE r5) — integer quanta make the
+    could flip a rounding boundary — integer quanta make the
     frame sum order-free. One hashpartitioning(user_id) exchange +
     per-key sort, evaluated streamingly per frame — no quadratic re-scan;
     at 100 TB the same skew caveat as all keyed windows applies (salt or
@@ -1505,7 +1505,7 @@ def q107(spark: SparkSession, sf: str) -> DataFrame:
 
     (events,) = load(spark, sf, "events")
     wk = F.date_trunc("week", F.col("ts"))
-    # Round 16 (guide §3.3): ``f`` feeds two consumers (the activity
+    # ``f`` feeds two consumers (the activity
     # join and the cohort-size rollup) — without a lineage cut each
     # replays the full events scan + per-user aggregation. The
     # user-dimension-sized aggregate is checkpointed once instead:

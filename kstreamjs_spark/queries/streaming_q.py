@@ -19,8 +19,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..operators.window import window_collect
 from ..operators.sampling import hash_bucket_sql
+from ..stream import Stream
 from ..streaming.replay import keyed_fold, run_to_memory, stream_table
 from ..tables import load
 from . import REGISTRY, query
@@ -181,6 +181,17 @@ def q32(spark: SparkSession, sf: str) -> DataFrame:
 
 
 # ----------------------------------------------- Q33 window-collect UDAF
+def _hourly_sum(pdf: pd.DataFrame) -> dict:
+    """q33's window reducer. It quantizes before it sums (q44's idiom):
+    the int64 sum is order-free, so the Python path cannot drift from
+    the oracle on a rounding boundary."""
+    q = np.floor(pdf["value"].to_numpy() * 1e4 + 0.5).astype("int64")
+    return {"sum_value": int(q.sum()) / 1e4, "n": len(pdf)}
+
+
+_HOURLY_SUM_SCHEMA = "sum_value double, n long"
+
+
 @query(
     "q33_window_collect_udaf",
     oracle="""
@@ -192,33 +203,20 @@ def q32(spark: SparkSession, sf: str) -> DataFrame:
     tags=("udf", "window-agg"),
 )
 def q33(spark: SparkSession, sf: str) -> DataFrame:
-    """Window-`collect` parity (reference src/stream.ts:133): an opaque
-    Python callback receives each window's rows (event-time-sorted pandas
-    frame) and reduces them — here to the same hourly sum as q05, proving
-    the applyInPandas adapter agrees with the built-in aggregate path."""
+    """Window-`collect` parity (reference src/stream.ts:133) on batch
+    input: an opaque Python callback receives each hour's rows (an
+    event-time-sorted pandas frame) and reduces them to the same hourly
+    sum as q05. `Stream.window(collect=)` runs it on the window
+    aggregation that `aggs=` uses, so it must agree with the built-in
+    aggregate path."""
     (events,) = load(spark, sf, "events")
-
-    def collect(pdf: pd.DataFrame) -> dict:
-        # quantize-before-sum inside the reducer too (q44's idiom): the
-        # int64 sum is order-free, so the Python path cannot drift from
-        # the oracle on a rounding boundary
-        q = np.floor(pdf["value"].to_numpy() * 1e4 + 0.5).astype("int64")
-        return {"sum_value": int(q.sum()) / 1e4}
-
-    out = window_collect(
-        events.select("ts", "value"),
-        ts_col="ts",
-        duration="1 hour",
-        collect=collect,
-        out_schema="sum_value double",
+    out = Stream(events.select("ts", "value"), "ts").window(
+        interval_ms=3_600_000, collect=_hourly_sum, out_schema=_HOURLY_SUM_SCHEMA
     )
-    return out.select(
-        F.col("window_start").alias("hour"),
-        F.col("sum_value"),
-    )
+    return out.df.select(F.col("window_start").alias("hour"), "sum_value")
 
 
-# --------------------- Q33b STREAMING window-collect (fire-once state)
+# --------------------------------- Q33b STREAMING window-collect
 @query(
     "q33b_stream_window_collect",
     oracle="""
@@ -227,47 +225,33 @@ def q33(spark: SparkSession, sf: str) -> DataFrame:
                    AS sum_value,
                CAST(COUNT(*) AS BIGINT) AS n
         FROM events
-        -- STRICT <: Spark fires an event-time timeout only when the
-        -- watermark strictly exceeds it (timeoutTimestamp < watermark
-        -- in FlatMapGroupsWithStateExec), so a window whose end lands
-        -- EXACTLY on the final watermark is held in state, not emitted
-        WHERE date_trunc('hour', ts) + INTERVAL 1 HOUR <
+        -- <=: a window fires once the watermark reaches its end, as the
+        -- reference fires at watermark >= end, so a window whose end is
+        -- exactly the final watermark is emitted
+        WHERE date_trunc('hour', ts) + INTERVAL 1 HOUR <=
               (SELECT MAX(ts) - INTERVAL 1 MILLISECOND FROM events)
         GROUP BY 1
     """,
     tags=("streaming", "udf", "window-agg", "stateful", "slow"),
 )
 def q33b(spark: SparkSession, sf: str) -> DataFrame:
-    """q33's arbitrary-Python window reducer on a REAL micro-batched
-    stream through the facade's fire-once path
-    (operators/window.py:window_collect_stateful): GroupState buffers
-    each hour's rows across triggers and the event-time timeout runs
-    the reducer ONCE per window when the watermark passes its end —
-    the reference's buffered window semantics (src/stream.ts:186-198)
-    made exactly stateful, closing the last §2A delta. The oracle is
-    the SAME hourly quantized sum as q33 restricted to CLOSED windows:
-    the final watermark is max(ts) minus the 1 ms buffer interval, so
-    hours whose end exceeds it are still open when the replay ends —
-    held in state, not emitted — exactly as the reference's buffer
-    holds its open window at shutdown. APPEND mode output (each row
-    emitted exactly once, by the timeout), unlike q33/q141's
-    complete-mode aggregations."""
+    """q33's Python window reducer on a micro-batched stream of events,
+    through `Stream.window(collect=)` in append mode: each hour's rows
+    build up in the window aggregation's state across triggers, and the
+    reducer runs once per hour, when the watermark reaches the hour's
+    end (the reference's buffered window, src/stream.ts:186-198). The
+    oracle is q33's hourly sum restricted to the fired hours: the final
+    watermark is max(ts) less the 1 ms buffer, and an hour whose end is
+    past it is still open when the replay ends, held in state as the
+    reference's buffer holds its open window at shutdown."""
     sdf = stream_table(spark, sf, "events")
-    from ..stream import Stream
-
-    def collect(pdf: pd.DataFrame) -> dict:
-        # the q33 reducer plus a row count: quantize-before-sum keeps
-        # the Python path bit-stable vs the SQL oracle
-        q = np.floor(pdf["value"].to_numpy() * 1e4 + 0.5).astype("int64")
-        return {"sum_value": int(q.sum()) / 1e4, "n": len(pdf)}
-
     out = (
         Stream(sdf.select("ts", "value"), "ts")
         .window(
             interval_ms=3_600_000,
             buffer_interval_ms=1,
-            collect=collect,
-            out_schema="sum_value double, n long",
+            collect=_hourly_sum,
+            out_schema=_HOURLY_SUM_SCHEMA,
         )
         .run_available("q33b", output_mode="append")
     )

@@ -35,7 +35,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
-from .operators.window import window_collect, window_collect_stateful
+from .operators.window import collect_windows
 
 # Spark's default JSON timestampFormat keeps only milliseconds; the engine's
 # event times are microsecond-resolution, so every JSON write/read on this
@@ -224,15 +224,26 @@ class Stream:
         - ``aggs``: named built-in aggregates — THE fast path.
         - ``collect``/``out_schema``: arbitrary Python reducer over the
           whole window (reference `collect` callback, src/stream.ts:133);
-          rows arrive event-time-sorted. On batch input this is the
-          applyInPandas adapter; on STREAMING input it is
-          EXACT across micro-batches: keyed GroupState buffers the
-          window's rows and an event-time timeout fires the reducer
-          ONCE when the watermark passes the window end — the
-          reference's fire-once buffer (src/stream.ts:186-198) and its
-          drop-late-data policy (src/stream.ts:157-177), stateful like
-          ``aggs``. See operators/window.py:window_collect_stateful.
+          it gets the window's rows, event-time-sorted, as a pandas frame
+          of the input's columns and returns a dict of ``out_schema``'s
+          columns.
+
+        Both forms are one ``groupBy(window, *keys)`` aggregation; for
+        ``collect`` its one aggregate is ``collect_list(struct(*columns))``
+        and a stateless map calls the reducer once per emitted group
+        (operators/window.py). On streaming input (append mode) a window
+        is emitted once, on the first trigger whose watermark is at or
+        past its end, and a row is late, dropped and counted in
+        ``numRowsDroppedByWatermark``, when its window's end is at or
+        behind the watermark: the reference's fire-once buffer
+        (src/stream.ts:186-198) and drop-late policy
+        (src/stream.ts:157-177). A ``collect`` checkpoint written by the
+        earlier GroupState buffer has another state schema and needs a
+        state reset (a new checkpoint location, replayed from the
+        source).
         """
+        if aggs is None and (collect is None or out_schema is None):
+            raise ValueError("window() needs either aggs= or collect=+out_schema=")
         df = self.df
         ts = self.ts_col
         keys = list(keys)  # consumed by BOTH groupBy and the projection
@@ -244,11 +255,11 @@ class Stream:
             )
         if df.isStreaming:
             df = df.withWatermark(ts, f"{buffer_interval_ms} milliseconds")
+        win = F.window(ts, dur, startTime=start) if start else F.window(ts, dur)
+        grouped = df.groupBy(win, *keys)
         if aggs is not None:
-            win = F.window(ts, dur, startTime=start) if start else F.window(ts, dur)
             out = (
-                df.groupBy(win, *keys)
-                .agg(*[expr.alias(name) for name, expr in aggs.items()])
+                grouped.agg(*[expr.alias(name) for name, expr in aggs.items()])
                 .select(
                     F.col("window.start").alias("window_start"),
                     F.col("window.end").alias("window_end"),
@@ -257,34 +268,8 @@ class Stream:
                 )
             )
             return self._wrap(out)
-        if collect is None or out_schema is None:
-            raise ValueError("window() needs either aggs= or collect=+out_schema=")
-        if df.isStreaming:
-            return self._wrap(
-                window_collect_stateful(
-                    df,
-                    ts_col=ts,
-                    interval_ms=interval_ms,
-                    collect=collect,
-                    out_schema=out_schema,
-                    keys=keys,
-                    sort_by=[ts],
-                    origin_ms=(from_ms % interval_ms) if from_ms else 0,
-                )
-            )
         return self._wrap(
-            window_collect(
-                df,
-                ts_col=ts,
-                duration=dur,
-                collect=collect,
-                out_schema=out_schema,
-                keys=keys,
-                sort_by=[ts],
-                # same origin alignment as the aggs branch — collect
-                # windows must not silently snap back to the epoch
-                start_time=start,
-            )
+            collect_windows(grouped, df.columns, keys, ts, collect, out_schema)
         )
 
     def union(self, other: "Stream") -> "Stream":

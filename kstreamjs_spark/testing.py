@@ -2,14 +2,13 @@
 + column names + order-insensitive canonical values) between a Spark query
 result and its DuckDB oracle.
 
-Driver-faithful canonicalization (round-3 hardening): the driver routes
+Driver-faithful canonicalization: the driver routes
 BOTH result sets through pandas (Spark ``toPandas()``, DuckDB ``.df()``)
 and hashes dtype-sensitively — DuckDB's ``SUM(INTEGER)`` returns HUGEINT,
 which pandas materializes as float64, while Spark's LONG arrives as int64;
-equal values, different canonical bytes, red row. Round 2 shipped four
-driver-red queries (q53/q55/q59/q62) precisely because the old mirror
-compared raw Python values (``fetchall()`` gives Python ints for HUGEINT)
-and was structurally blind to that class. This mirror therefore:
+equal values, different canonical bytes, red row. A mirror that
+compares raw Python values (``fetchall()`` gives Python ints for HUGEINT)
+is blind to that class. This mirror therefore:
 
 - materializes both sides as pandas frames exactly like the driver;
 - keeps int-typed and float-typed cells DISTINCT in the canonical form

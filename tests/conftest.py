@@ -4,6 +4,7 @@ import os
 import re
 import time
 
+import pyspark.sql.functions as F
 import pytest
 
 from kstreamjs_spark.session import get_spark
@@ -83,6 +84,40 @@ def stage_stream(df, path, by, parts=6):
         return reader.parquet(path)
 
     return read
+
+
+def stage_triggers(spark, path, triggers, schema=None):
+    """Stage one parquet file per trigger under ``path`` and return a
+    streaming reader that takes one file per trigger, in list order.
+    ``triggers`` holds DataFrames, or row lists in the DDL ``schema``.
+    File mtimes ascend in list order, so the file source (oldest first)
+    replays them in that order."""
+    mtime = time.time() - 3600
+    for i, rows in enumerate(triggers):
+        df = rows if schema is None else spark.createDataFrame(rows, schema)
+        fp = os.path.join(path, f"f{i}.parquet")
+        df.coalesce(1).write.mode("overwrite").parquet(fp)
+        for name in os.listdir(fp):
+            os.utime(os.path.join(fp, name), (mtime + i * 10, mtime + i * 10))
+    return (
+        spark.readStream.schema(spark.read.parquet(f"{path}/f0.parquet").schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(f"{path}/*")
+    )
+
+
+WINDOW_FORMS = ("aggs", "collect")
+
+
+def count_sum(form):
+    """``Stream.window`` arguments for a row count ``n`` and a sum ``s``
+    of ``v``, in the ``aggs=`` or the ``collect=`` form."""
+    if form == "aggs":
+        return {"aggs": {"n": F.count("*"), "s": F.sum("v")}}
+    return {
+        "collect": lambda pdf: {"n": len(pdf), "s": int(pdf["v"].sum())},
+        "out_schema": "n long, s long",
+    }
 
 
 @pytest.fixture(scope="session")

@@ -18,7 +18,7 @@ import pytest
 from kstreamjs_spark.session import get_spark
 from kstreamjs_spark.stream import Stream
 
-from .conftest import exchange_widths
+from .conftest import WINDOW_FORMS, count_sum, exchange_widths
 
 MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
 SHUFFLE_KEY = "spark.sql.shuffle.partitions"
@@ -83,9 +83,11 @@ def parts() -> list[list[tuple[int, str, int]]]:
     return out
 
 
-def drain(spark, src: str, ckpt: str, out: str):
+def drain(spark, src: str, ckpt: str, out: str, form: str = "aggs"):
     """Stateful window over ``src`` into a parquet sink, one file per
-    micro-batch, until the input is drained. Returns the stopped query."""
+    micro-batch, until the input is drained. ``form`` is the
+    ``Stream.window`` form (``WINDOW_FORMS``). Returns the stopped
+    query."""
     sdf = (
         spark.readStream.schema(SCHEMA)
         .option("maxFilesPerTrigger", "1")
@@ -96,8 +98,8 @@ def drain(spark, src: str, ckpt: str, out: str):
         .window(
             interval_ms=5 * MINUTE_MS,
             buffer_interval_ms=10 * MINUTE_MS,
-            aggs={"n": F.count("*"), "s": F.sum("v")},
             keys=["k"],
+            **count_sum(form),
         )
         .write_to(out, "parquet", checkpointLocation=ckpt)
     )
@@ -147,10 +149,12 @@ def test_get_spark_checkpoints_through_filesystem_manager(spark, tmp_path):
     assert {"1.delta", "1.delta.crc", ".1.delta.crc"} <= set(state), state
 
 
-def test_stateful_window_restart_equals_uninterrupted_run(spark, tmp_path):
+@pytest.mark.parametrize("form", WINDOW_FORMS)
+def test_stateful_window_restart_equals_uninterrupted_run(spark, tmp_path, form):
     """Stop a stateful window between two halves of its backlog, while
     windows are still open in state, and restart it from the same
-    checkpoint: the sink equals one uninterrupted drain. The first half
+    checkpoint: the sink and the late-row count equal one uninterrupted
+    drain's, for both forms of ``Stream.window``. The first half
     runs under Spark's default FileContext manager, so a checkpoint
     written before get_spark chose the FileSystem manager restarts
     under it. The stop is placed by landing the backlog in two halves,
@@ -163,7 +167,7 @@ def test_stateful_window_restart_equals_uninterrupted_run(spark, tmp_path):
         assert manager_class(spark, ckpt) == FILE_CONTEXT
         for i in range(3):
             write_part(src, i, backlog[i])
-        q1 = drain(spark, src, ckpt, out)
+        q1 = drain(spark, src, ckpt, out, form)
     finally:
         spark.conf.set(MANAGER_KEY, ours)
     # stopped with windows still open in state
@@ -173,12 +177,12 @@ def test_stateful_window_restart_equals_uninterrupted_run(spark, tmp_path):
     for i in range(3, 6):
         write_part(src, i, backlog[i])
     assert manager_class(spark, ckpt) == FILE_SYSTEM
-    q2 = drain(spark, src, ckpt, out)
+    q2 = drain(spark, src, ckpt, out, form)
     restarted = sink(spark, out)
     assert n_first < len(restarted)
 
     whole_ckpt, whole_out = str(tmp_path / "ckpt2"), str(tmp_path / "out2")
-    q3 = drain(spark, src, whole_ckpt, whole_out)
+    q3 = drain(spark, src, whole_ckpt, whole_out, form)
     pd.testing.assert_frame_equal(restarted, sink(spark, whole_out))
 
     def late(*queries):

@@ -1,4 +1,4 @@
-"""Regression tests for facade semantics fixed in round 6: window-origin
+"""Regression tests for facade semantics: window-origin
 alignment on the collect path, positional+named map composition,
 session-global statistics listener scoping, and microsecond-preserving
 JSONL file helpers."""

@@ -1,6 +1,6 @@
 """Source hygiene. A comment states a rule and its reason; how the rule
-came about belongs in git history. The modules listed here have been
-cleared of such history notes and must stay clear."""
+came about belongs in git history. Every module of the package must be
+clear of such history notes, except those in ``NOT_YET_CLEARED``."""
 
 from __future__ import annotations
 
@@ -17,13 +17,12 @@ HISTORY_NOTE = re.compile(
     rf"(?i:\bround{_GAP}\d+|\br\d+{_GAP}verdict|review{_GAP}(?:finding|fix)\b)"
     r"|verdict #|\bADVICE\b"
 )
-CLEARED = [
-    "queries/pipeline.py",
-    "operators/similarity.py",
-    "queries/streaming_q.py",
-    "stream.py",
-    "session.py",
-]
+NOT_YET_CLEARED = {"queries/llm.py"}
+MODULES = sorted(
+    rel
+    for rel in (p.relative_to(PACKAGE).as_posix() for p in PACKAGE.rglob("*.py"))
+    if rel not in NOT_YET_CLEARED
+)
 
 
 def history_notes(text: str) -> list[tuple[int, str]]:
@@ -58,7 +57,7 @@ def test_pattern_spares(text):
     assert not history_notes(text)
 
 
-@pytest.mark.parametrize("rel", CLEARED)
+@pytest.mark.parametrize("rel", MODULES)
 def test_no_history_notes(rel):
     hits = [f"{rel}:{n}: {s}" for n, s in history_notes((PACKAGE / rel).read_text())]
     assert not hits, "\n".join(hits)

@@ -8,13 +8,19 @@ import os
 import subprocess
 import sys
 
+import pytest
+
 from perfbench.layers import spark_layers
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-QUERIES = ["q01_scan_count", "q56_dup_clusters", "q56_dup_clusters"]
+QUERIES = [
+    "q01_scan_count", "q56_dup_clusters", "q56_dup_clusters",
+    "q141_stream_daily_revenue",
+]
 
 
-def test_profile_query_reports_every_layer():
+@pytest.fixture(scope="module")
+def rows():
     env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
     env["SPARK_GRAFT_SF_DIR"] = os.path.join(REPO, "perfbench", "data", "sf0.01")
     res = subprocess.run(
@@ -26,7 +32,10 @@ def test_profile_query_reports_every_layer():
         timeout=600,
     )
     assert res.returncode == 0, res.stderr[-2000:]
-    rows = [json.loads(line) for line in res.stdout.splitlines()]
+    return [json.loads(line) for line in res.stdout.splitlines()]
+
+
+def test_profile_query_reports_every_layer(rows):
     assert [r["query"] for r in rows] == QUERIES
 
     layer_keys = set(spark_layers([], set(), 1, 0.0))
@@ -42,3 +51,13 @@ def test_profile_query_reports_every_layer():
     assert 1 <= q56a["build_jobs"] <= q56a["spark.jobs"]
     for key in ("spark.jobs", "spark.stages", "spark.tasks"):
         assert q56a[key] == q56b[key], key
+
+
+def test_profile_query_counts_micro_batch_jobs(rows):
+    """Micro-batches run under their streaming query's run id, not the
+    span's job group; they still count with the query that started
+    them: at least one job per micro-batch, plus the sink's collect."""
+    q141 = rows[3]
+    assert q141["stream_batches"] >= 1
+    assert q141["spark.jobs"] >= q141["stream_batches"] + 1
+    assert q141["spark.task_cpu_s"] > 0

@@ -61,7 +61,7 @@ def test_window_builtin_agg(spark):
     assert sums[6] == 5  # a=5@7 (batch replay emits every window)
 
 
-# A3 via the arbitrary-collect adapter (reference collect callback,
+# A3 via collect= (the reference collect callback,
 # src/stream.ts:133) — rows arrive event-time-sorted
 def test_window_collect_callback(spark):
     df = ts_df(
@@ -81,6 +81,25 @@ def test_window_collect_callback(spark):
     )
     sums = {r["window_start"].microsecond // 1000: r["s"] for r in out}
     assert sums[0] == 3 and sums[2] == 7
+
+
+def test_window_collect_frame_has_input_columns_only(spark):
+    """The ``collect`` frame holds the input's columns and nothing of
+    the window aggregation, with naive ``datetime64[ns]`` timestamps
+    (tests/test_streaming.py pins the same on streaming input)."""
+    df = ts_df(spark, [(0, 1, "x"), (1, 2, "y")], "ts long, a long, k string")
+    out = (
+        Stream.from_dataframe(df)
+        .window(
+            interval_ms=2, keys=["k"],
+            collect=lambda pdf: {"dtypes": [f"{c}:{t}" for c, t in pdf.dtypes.items()]},
+            out_schema="dtypes array<string>",
+        )
+        .collect()
+    )
+    assert [r["dtypes"] for r in out] == [
+        ["ts:datetime64[ns]", "a:int64", "k:object"]
+    ] * 2
 
 
 # window `from` semantics: rows before `from` dropped (late-data drop,
@@ -198,7 +217,7 @@ def test_curation_pipeline_example_runs(spark, sf_smoke):
 
 
 def test_multimodal_retrieval_example_runs(spark, sf_smoke):
-    """examples/multimodal_retrieval.py composes the round-9 operators
+    """examples/multimodal_retrieval.py composes the multimodal operators
     (pHash dedup -> AFP dedup -> batched BM25 -> banded k-NN); it must
     keep running as those APIs evolve. Same shared-session guard as the
     quickstart test."""

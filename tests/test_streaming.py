@@ -17,7 +17,7 @@ from kstreamjs_spark.stream import Stream
 from kstreamjs_spark.streaming.replay import run_to_memory, stream_table
 from kstreamjs_spark.streaming.stats import StatisticsListener
 
-from .conftest import stage_stream
+from .conftest import WINDOW_FORMS, count_sum, stage_stream, stage_triggers
 
 
 def test_stream_replay_equals_batch(spark, sf_smoke):
@@ -43,11 +43,15 @@ def test_stream_replay_equals_batch(spark, sf_smoke):
     assert streamed == expected
 
 
+def _ts_rows(spark, rows, schema="ts long, v long"):
+    """A frame of ``rows`` with the leading ``ts`` in epoch ms cast to a
+    timestamp."""
+    df = spark.createDataFrame(rows, schema)
+    return df.withColumn("ts", F.timestamp_millis(F.col("ts")))
+
+
 def _write_file(spark, rows, path):
-    df = spark.createDataFrame(rows, "ts long, v long").select(
-        F.timestamp_millis(F.col("ts")).alias("ts"), "v"
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(path)
+    _ts_rows(spark, rows).coalesce(1).write.mode("overwrite").parquet(path)
 
 
 @pytest.mark.slow
@@ -943,182 +947,183 @@ def test_stream_semi_join_emits_once_and_only_matched(spark, tmp_path):
     assert whole == expected, whole
 
 
-@pytest.mark.slow
+# ---- Stream.window on streaming input: one fire and drop rule for
+# aggs= and collect= (operators/window.py). A window fires once, on the
+# first trigger whose watermark is at or past its end; a row is late
+# when its window's end is at or behind the watermark.
+
+def _stage_ts(spark, path, triggers):
+    return stage_triggers(spark, path, [_ts_rows(spark, t) for t in triggers])
+
+
+def _drain_window(sdf, name, **how):
+    """Drain ``Stream(sdf).window(**how)`` into a memory sink in append
+    mode. Returns the sink's rows and the progress reports in batch
+    order."""
+    spark = sdf.sparkSession
+    q = (
+        Stream(sdf, "ts").window(**how).df.writeStream.format("memory")
+        .queryName(name).trigger(availableNow=True).start()
+    )
+    assert q.awaitTermination(600)
+    rows = spark.table(name).collect()
+    spark.catalog.dropTempView(name)
+    return rows, sorted(q.recentProgress, key=lambda p: p["batchId"])
+
+
+def _dropped(progress):
+    return sum(
+        op["numRowsDroppedByWatermark"]
+        for p in progress for op in p["stateOperators"]
+    )
+
+
 def test_window_collect_fires_once_across_microbatches(spark, tmp_path):
-    """Facade window(collect=) on STREAMING input reduces EXACTLY ONCE
-    per window even when the window's rows span micro-batches (round
-    12; closes the last §2A semantic delta — the reference's window
-    buffers and fires once, src/stream.ts:186-198, where the round-11
-    facade emitted one partial row per micro-batch). Window [0,2s)
-    deliberately spans batches 0 and 1 (maxFilesPerTrigger=1); the
-    10s watermark keeps the spread on time; a far-future sentinel in
-    the last batch advances the final watermark past every real
-    window. The streamed rows must equal the batch-path rows on the
-    identical input — same values AND same row count (fire-once, not
-    one-partial-per-batch)."""
-    d = str(tmp_path / "wcs_in")
-    os.makedirs(d, exist_ok=True)
+    """``collect=`` on streaming input calls the reducer once per
+    window, with all of its rows, even when they span micro-batches.
+    Window [0, 2 s) spans triggers 0 and 1; the 10 s buffer keeps every
+    row on time; a far-future sentinel in the last trigger moves the
+    final watermark past every real window. The streamed rows equal the
+    batch facade's on the same input."""
     files = [
-        [(100, 1), (300, 2), (2_100, 10)],      # window 0 partly here
-        [(500, 4), (2_500, 20)],                # rest of windows 0 and 1
-        [(10_000_000, 999)],                    # sentinel: flush watermark
+        [(100, 1), (300, 2), (2_100, 10)],
+        [(500, 4), (2_500, 20)],
+        [(10_000_000, 999)],
     ]
-    now = time.time()
-    for i, rows in enumerate(files):
-        p = f"{d}/f{i}.parquet"
-        _write_file(spark, rows, p)
-        for root, _, names in os.walk(p):
-            for n in names:
-                os.utime(os.path.join(root, n), (now + i, now + i))
+    sdf = _stage_ts(spark, str(tmp_path / "in"), files)
 
     def collect(pdf):
-        # order-sensitive on purpose: proves rows arrive ts-sorted and
-        # complete (a per-batch partial would change first/last/n)
+        # order-sensitive on purpose: rows arrive ts-sorted and complete
         v = pdf["v"].tolist()
         return {"s": int(sum(v)), "first": int(v[0]),
                 "last": int(v[-1]), "n": len(v)}
 
-    out_schema = "s long, first long, last long, n int"
-    schema = spark.read.parquet(f"{d}/f0.parquet").schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(d + "/*")
-    )
-    streamed = (
-        Stream(sdf, "ts")
-        .window(interval_ms=2_000, buffer_interval_ms=10_000,
-                collect=collect, out_schema=out_schema)
-        .run_available("wcs_parity")
-        .collect()
-    )
-    batch_rows = [r for rows in files[:2] for r in rows]
-    bdf = spark.createDataFrame(batch_rows, "ts long, v long").select(
-        F.timestamp_millis(F.col("ts")).alias("ts"), "v"
-    )
-    expected = (
-        Stream.from_dataframe(bdf, "ts")
-        .window(interval_ms=2_000, collect=collect, out_schema=out_schema)
-        .collect()
-    )
-    key = lambda r: (r["window_start"], r["window_end"], r["s"],
-                     r["first"], r["last"], r["n"])
-    assert sorted(map(key, streamed)) == sorted(map(key, expected))
-    # fire-once: exactly one row per real window, none for the sentinel
+    how = dict(interval_ms=2_000, collect=collect,
+               out_schema="s long, first long, last long, n int")
+    streamed, _ = _drain_window(sdf, "wcs_parity", buffer_interval_ms=10_000, **how)
+    bdf = _ts_rows(spark, [r for rows in files[:2] for r in rows])
+    expected = Stream.from_dataframe(bdf, "ts").window(**how).collect()
+    assert sorted(streamed) == sorted(expected)
+    # one row per real window, none for the sentinel's
     assert len(streamed) == 2
 
 
-@pytest.mark.slow
-def test_window_collect_stateful_keyed(spark, tmp_path):
-    """The keyed variant of the fire-once collect path: (window, key)
-    groups buffer independently, key columns ride through the output,
-    and each (window, key) fires exactly once — against the batch
-    facade on identical rows."""
-    d = str(tmp_path / "wcsk_in")
-    os.makedirs(d, exist_ok=True)
-    rows0 = [(100, 1), (300, 2), (2_100, 10)]
-    rows1 = [(500, 4), (2_500, 20)]
-    sentinel = [(10_000_000, 999)]
-
-    def write_keyed(rows, path, ksel):
-        df = spark.createDataFrame(
-            [(ts, v, f"k{(v % ksel)}") for ts, v in rows],
-            "ts long, v long, k string",
-        ).select(F.timestamp_millis(F.col("ts")).alias("ts"), "v", "k")
-        df.coalesce(1).write.mode("overwrite").parquet(path)
-
-    now = time.time()
-    for i, rows in enumerate([rows0, rows1, sentinel]):
-        p = f"{d}/f{i}.parquet"
-        write_keyed(rows, p, 2)
-        for root, _, names in os.walk(p):
-            for n in names:
-                os.utime(os.path.join(root, n), (now + i, now + i))
-
-    def collect(pdf):
-        return {"s": int(pdf["v"].sum()), "n": len(pdf)}
-
-    schema = spark.read.parquet(f"{d}/f0.parquet").schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(d + "/*")
+def test_window_collect_keyed(spark, tmp_path):
+    """Keyed ``collect=``: each (window, key) group fires once, and the
+    key column rides through to the output, as on the batch facade."""
+    files = [[(100, 1), (300, 2), (2_100, 10)], [(500, 4), (2_500, 20)],
+             [(10_000_000, 999)]]
+    keyed = [[(ts, v, f"k{v % 2}") for ts, v in rows] for rows in files]
+    schema = "ts long, v long, k string"
+    sdf = stage_triggers(
+        spark, str(tmp_path / "in"), [_ts_rows(spark, t, schema) for t in keyed]
     )
-    streamed = (
-        Stream(sdf, "ts")
-        .window(interval_ms=2_000, buffer_interval_ms=10_000,
-                keys=["k"], collect=collect, out_schema="s long, n int")
-        .run_available("wcsk")
-        .collect()
-    )
-    batch_rows = rows0 + rows1
-    bdf = spark.createDataFrame(
-        [(ts, v, f"k{(v % 2)}") for ts, v in batch_rows],
-        "ts long, v long, k string",
-    ).select(F.timestamp_millis(F.col("ts")).alias("ts"), "v", "k")
-    expected = (
-        Stream.from_dataframe(bdf, "ts")
-        .window(interval_ms=2_000, keys=["k"],
-                collect=collect, out_schema="s long, n int")
-        .collect()
-    )
-    key = lambda r: (r["window_start"], r["k"], r["s"], r["n"])
-    assert sorted(map(key, streamed)) == sorted(map(key, expected))
-    # one row per (window, key) that has data; sentinel window withheld
-    assert len(streamed) == len(expected)
+    how = dict(interval_ms=2_000, keys=["k"], **count_sum("collect"))
+    streamed, _ = _drain_window(sdf, "wcsk", buffer_interval_ms=10_000, **how)
+    bdf = _ts_rows(spark, keyed[0] + keyed[1], schema)
+    expected = Stream.from_dataframe(bdf, "ts").window(**how).collect()
+    assert sorted(streamed) == sorted(expected)
+    assert len(expected) == 3
 
 
 def test_window_counts_row_behind_watermark_in_open_window(spark, tmp_path):
     """A row behind the watermark whose window is still open is counted,
-    on the ``aggs=`` path and on the ``collect=`` path alike. Batch 0
-    moves the watermark to 00:49 (00:50 less the 1-minute buffer);
-    batch 1 brings a row at 00:30, still inside the open window
-    [00:00, 01:00); a far-future sentinel in batch 2 closes it."""
+    on the ``aggs=`` and the ``collect=`` path alike, however many
+    triggers came before it. Triggers 0 and 1 move the watermark to
+    00:49 and then 00:50 (1-minute buffer); trigger 2 brings a row at
+    00:30, inside the open window [00:00, 01:00); a sentinel at 05:00
+    closes it."""
     minute = 60_000
-    d = str(tmp_path / "open_in")
-    files = [
-        [(5 * minute, 1), (10 * minute, 2), (50 * minute, 3)],
+    sdf = _stage_ts(spark, str(tmp_path / "in"), [
+        [(5 * minute, 1), (50 * minute, 2)],
+        [(51 * minute, 3)],
         [(30 * minute, 4)],
         [(300 * minute, 0)],
-    ]
-    now = time.time()
-    for i, rows in enumerate(files):
-        p = f"{d}/f{i}.parquet"
-        _write_file(spark, rows, p)
-        for root, _, names in os.walk(p):
-            for n in names:
-                os.utime(os.path.join(root, n), (now + i, now + i))
-    schema = spark.read.parquet(f"{d}/f0.parquet").schema
+    ])
+    got = {}
+    for form in WINDOW_FORMS:
+        rows, progress = _drain_window(
+            sdf, f"open_{form}", interval_ms=60 * minute,
+            buffer_interval_ms=minute, **count_sum(form),
+        )
+        assert [p["eventTime"]["watermark"] for p in progress[1:3]] == [
+            "1970-01-01T00:49:00.000Z", "1970-01-01T00:50:00.000Z",
+        ]
+        got[form] = (
+            [(r["window_start"].minute, r["n"], r["s"]) for r in rows],
+            _dropped(progress),
+        )
+    assert got["aggs"] == got["collect"] == ([(0, 4, 10)], 0)
 
-    def drain(name, **how):
-        sdf = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(d + "/*")
-        )
-        out = Stream(sdf, "ts").window(
-            interval_ms=60 * minute, buffer_interval_ms=minute, **how
-        )
-        q = (
-            out.df.writeStream.format("memory").queryName(name)
-            .trigger(availableNow=True).start()
-        )
-        assert q.awaitTermination(600)
-        rows = [(r["window_start"].minute, r["n"], r["s"])
-                for r in spark.table(name).collect()]
-        spark.catalog.dropTempView(name)
-        progress = sorted(q.recentProgress, key=lambda p: p["batchId"])
-        assert progress[1]["eventTime"]["watermark"] == "1970-01-01T00:49:00.000Z"
-        dropped = sum(
-            op["numRowsDroppedByWatermark"]
-            for p in progress for op in p["stateOperators"]
-        )
-        return rows, dropped
 
-    aggs = drain("open_aggs", aggs={"n": F.count("*"), "s": F.sum("v")})
-    collect = drain(
-        "open_collect",
-        collect=lambda pdf: {"n": len(pdf), "s": int(pdf["v"].sum())},
-        out_schema="n long, s long",
+@pytest.mark.parametrize("last_ms, fired", [(2_000, False), (2_001, True)])
+def test_window_fires_when_watermark_reaches_end(spark, tmp_path, last_ms, fired):
+    """Both paths fire window [0, 2 s) on the same trigger: held while
+    the final watermark (the last row less the 1 ms buffer) is behind
+    its end, emitted once it equals the end."""
+    sdf = _stage_ts(spark, str(tmp_path / "in"), [[(100, 7)], [(last_ms, 0)]])
+    for form in WINDOW_FORMS:
+        rows, _ = _drain_window(
+            sdf, f"wm_{form}", interval_ms=2_000, buffer_interval_ms=1, **count_sum(form)
+        )
+        assert [(r["n"], r["s"]) for r in rows] == ([(1, 7)] if fired else []), form
+
+
+def test_window_drops_each_late_row_on_both_paths(spark, tmp_path):
+    """Rows whose window already fired are dropped and counted in
+    ``numRowsDroppedByWatermark``: N late rows read N on both paths.
+    Spark filters late rows against the previous trigger's watermark,
+    so a filler trigger separates the one that moves the watermark to
+    59 s from the late rows. The counter counts rows after partial
+    aggregation, one per (window, keys) group and task, so each late
+    row gets a window of its own."""
+    late = [(100, 1), (2_100, 2), (4_100, 3)]
+    sdf = _stage_ts(spark, str(tmp_path / "in"), [
+        [(50, 0), (2_050, 0), (4_050, 0)],
+        [(60_000, 0)],
+        [(61_000, 0)],
+        late,
+        [(120_000, 0)],
+    ])
+    for form in WINDOW_FORMS:
+        rows, progress = _drain_window(
+            sdf, f"late_{form}", interval_ms=2_000,
+            buffer_interval_ms=1_000, **count_sum(form),
+        )
+        assert _dropped(progress) == len(late), form
+        assert sorted((r["n"], r["s"]) for r in rows) == (
+            [(1, 0)] * 3 + [(2, 0)]
+        ), form
+
+
+def test_window_collect_frame_on_streaming_input(spark, tmp_path):
+    """On streaming input ``collect`` sees the input's columns only,
+    with naive ``datetime64[ns]`` timestamps, as on batch input."""
+    sdf = _stage_ts(spark, str(tmp_path / "in"), [[(100, 1)], [(9_000, 2)]])
+    rows, _ = _drain_window(
+        sdf, "frame", interval_ms=2_000, buffer_interval_ms=1,
+        collect=lambda pdf: {"dtypes": [f"{c}:{t}" for c, t in pdf.dtypes.items()]},
+        out_schema="dtypes array<string>",
     )
-    assert aggs == collect == ([(0, 4, 10)], 0)
+    assert [r["dtypes"] for r in rows] == [["ts:datetime64[ns]", "v:int64"]]
+
+
+def test_window_collect_from_origin_alignment(spark, tmp_path):
+    """``from_ms`` on the streaming collect path drops the rows before
+    it and aligns windows to it (origin ``from_ms % interval``), as the
+    batch path does."""
+    # interval 2 s, from 500 ms -> windows [500, 2500), [2500, 4500), ...
+    files = [[(100, 99), (600, 1), (2_400, 2)], [(2_600, 4)], [(9_000_000, 0)]]
+    sdf = _stage_ts(spark, str(tmp_path / "in"), files)
+    how = dict(interval_ms=2_000, from_ms=500,
+               collect=lambda pdf: {"s": int(pdf["v"].sum())},
+               out_schema="s long")
+    streamed, _ = _drain_window(sdf, "wcso", buffer_interval_ms=10_000, **how)
+    bdf = _ts_rows(spark, files[0] + files[1])
+    expected = Stream.from_dataframe(bdf, "ts").window(**how).collect()
+    assert sorted(streamed) == sorted(expected)
+    assert all(r["window_start"].microsecond == 500_000 for r in streamed)
+    assert sum(r["s"] for r in streamed) == 1 + 2 + 4
 
 
 @pytest.mark.slow
@@ -1151,31 +1156,16 @@ def test_stream_minhash_candidates_equal_batch_any_schedule(spark, tmp_path):
     assert expected, "fixture must produce at least one candidate pair"
 
     d = str(tmp_path / "mh_in")
-    os.makedirs(d, exist_ok=True)
     # schedule A: 2 docs per file ascending; schedule B: all in one
     # file; schedule C: DESCENDING id order — docs 0/1 land in buckets
-    # that already hold the larger member 3 (the regression the r12
-    # advice found: pairing new-as-larger-only loses (0,3)/(1,3))
+    # that already hold the larger member 3 (pairing new-as-larger-only
+    # would lose (0,3)/(1,3))
     for tag, chunks in (
         ("a", [rows[0:2], rows[2:4], rows[4:6]]),
         ("b", [rows]),
         ("c", [rows[4:6], rows[2:4], rows[0:2]]),
     ):
-        dd = f"{d}/{tag}"
-        os.makedirs(dd, exist_ok=True)
-        now = time.time()
-        for i, chunk in enumerate(chunks):
-            p = f"{dd}/f{i}.parquet"
-            spark.createDataFrame(chunk, "doc_id long, text string") \
-                .coalesce(1).write.mode("overwrite").parquet(p)
-            for root, _, names in os.walk(p):
-                for n in names:
-                    os.utime(os.path.join(root, n), (now + i, now + i))
-        schema = spark.read.parquet(f"{dd}/f0.parquet").schema
-        sdf = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(dd + "/*")
-        )
+        sdf = stage_triggers(spark, f"{d}/{tag}", chunks, "doc_id long, text string")
         pairs = minhash_candidate_stream(sdf)
         got = {
             (r["d1"], r["d2"])
@@ -1213,26 +1203,11 @@ def test_stream_minhash_verified_equal_batch_any_schedule(spark, tmp_path):
     assert expected, "fixture must produce at least one verified pair"
 
     d = str(tmp_path / "mhv_in")
-    os.makedirs(d, exist_ok=True)
     for tag, chunks in (
         ("a", [rows[0:2], rows[2:4], rows[4:6]]),
         ("c", [rows[4:6], rows[2:4], rows[0:2]]),  # descending ids
     ):
-        dd = f"{d}/{tag}"
-        os.makedirs(dd, exist_ok=True)
-        now = time.time()
-        for i, chunk in enumerate(chunks):
-            p = f"{dd}/f{i}.parquet"
-            spark.createDataFrame(chunk, "doc_id long, text string") \
-                .coalesce(1).write.mode("overwrite").parquet(p)
-            for root, _, names in os.walk(p):
-                for n in names:
-                    os.utime(os.path.join(root, n), (now + i, now + i))
-        schema = spark.read.parquet(f"{dd}/f0.parquet").schema
-        sdf = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(dd + "/*")
-        )
+        sdf = stage_triggers(spark, f"{d}/{tag}", chunks, "doc_id long, text string")
         verified = minhash_verified_stream(sdf, bdf, threshold=0.5)
         got_rows = run_to_memory(
             verified, f"mhv_{tag}", output_mode="append"
@@ -1241,129 +1216,6 @@ def test_stream_minhash_verified_equal_batch_any_schedule(spark, tmp_path):
         assert got == expected, (tag, got, expected)
         # decision column: drop the larger member of every verified pair
         assert all(r["drop_id"] == r["d2"] for r in got_rows)
-
-
-@pytest.mark.slow
-def test_window_collect_stateful_from_origin_alignment(spark, tmp_path):
-    """from_ms on the STREAMING collect path: early rows are dropped
-    and windows align to from_ms (origin = from_ms % interval), exactly
-    like the batch path — same boundaries, same sums."""
-    d = str(tmp_path / "wcso_in")
-    os.makedirs(d, exist_ok=True)
-    # interval 2s, from=500ms -> windows [500,2500), [2500,4500), ...
-    rows0 = [(100, 99), (600, 1), (2_400, 2)]   # 100ms is pre-from: drop
-    rows1 = [(2_600, 4)]
-    sentinel = [(9_000_000, 0)]
-    now = time.time()
-    for i, rows in enumerate([rows0, rows1, sentinel]):
-        p = f"{d}/f{i}.parquet"
-        _write_file(spark, rows, p)
-        for root, _, names in os.walk(p):
-            for n in names:
-                os.utime(os.path.join(root, n), (now + i, now + i))
-
-    def collect(pdf):
-        return {"s": int(pdf["v"].sum())}
-
-    schema = spark.read.parquet(f"{d}/f0.parquet").schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(d + "/*")
-    )
-    streamed = sorted(
-        (r["window_start"], r["window_end"], r["s"])
-        for r in Stream(sdf, "ts")
-        .window(interval_ms=2_000, from_ms=500, buffer_interval_ms=10_000,
-                collect=collect, out_schema="s long")
-        .run_available("wcso").collect()
-    )
-    bdf = spark.createDataFrame(
-        rows0 + rows1, "ts long, v long"
-    ).select(F.timestamp_millis(F.col("ts")).alias("ts"), "v")
-    expected = sorted(
-        (r["window_start"], r["window_end"], r["s"])
-        for r in Stream.from_dataframe(bdf, "ts")
-        .window(interval_ms=2_000, from_ms=500,
-                collect=collect, out_schema="s long")
-        .collect()
-    )
-    assert streamed == expected
-    # boundaries aligned to the 500ms origin, pre-from row dropped
-    assert all(ws.microsecond == 500_000 for ws, _, _ in streamed)
-    assert sum(s for _, _, s in streamed) == 1 + 2 + 4
-
-
-@pytest.mark.slow
-def test_window_collect_stateful_strict_watermark_boundary(spark, tmp_path):
-    """Pins the strict timeout semantics q33b's oracle encodes (round-12
-    review find, verified against Spark's FlatMapGroupsWithStateExec:
-    timeouts fire only when timeoutTimestamp < watermark). A window
-    whose end lands EXACTLY on the final watermark is HELD in state;
-    one more millisecond of event time releases it."""
-
-    def run(last_ts_ms, tag):
-        d = str(tmp_path / f"wm_{tag}")
-        os.makedirs(d, exist_ok=True)
-        now = time.time()
-        for i, rows in enumerate([[(100, 7)], [(last_ts_ms, 0)]]):
-            p = f"{d}/f{i}.parquet"
-            _write_file(spark, rows, p)
-            for root, _, names in os.walk(p):
-                for n in names:
-                    os.utime(os.path.join(root, n), (now + i, now + i))
-        schema = spark.read.parquet(f"{d}/f0.parquet").schema
-        sdf = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(d + "/*")
-        )
-        return (
-            Stream(sdf, "ts")
-            .window(interval_ms=2_000, buffer_interval_ms=1,
-                    collect=lambda pdf: {"s": int(pdf["v"].sum())},
-                    out_schema="s long")
-            .run_available(f"wm_{tag}")
-            .collect()
-        )
-
-    # final watermark = 2001 - 1 = 2000 == window [0,2000) end: HELD
-    held = run(2_001, "held")
-    assert [r["s"] for r in held] == []
-    # final watermark = 2002 - 1 = 2001 > 2000: fires exactly once
-    fired = run(2_002, "fired")
-    assert [r["s"] for r in fired] == [7]
-
-
-def test_window_state_arrow_ipc_roundtrip():
-    """Round-13 state encoding: the fire-once window buffers Arrow IPC
-    stream chunks (version-stable bytes), not pickle. The encoder must
-    roundtrip every dtype the buffered rows can carry — timestamps,
-    ints, floats, strings with NULLs — value- and dtype-exactly."""
-    import numpy as np
-    import pandas as pd
-
-    from kstreamjs_spark.operators.window import (
-        ipc_deserialize,
-        ipc_serialize,
-    )
-
-    pdf = pd.DataFrame(
-        {
-            "ts": pd.to_datetime([1_000, 3_500, 7_200], unit="ms"),
-            "v": pd.Series([1, -2, 3], dtype="int64"),
-            "x": pd.Series([0.5, np.nan, 2.25], dtype="float64"),
-            "s": pd.Series(["a", None, "c"], dtype="object"),
-        }
-    )
-    buf = ipc_serialize(pdf)
-    assert isinstance(buf, bytes)
-    back = ipc_deserialize(buf)
-    pd.testing.assert_frame_equal(back, pdf)
-    # chunked append-then-concat (the per-trigger shape) equals the
-    # one-shot frame
-    parts = [ipc_deserialize(ipc_serialize(pdf.iloc[i : i + 1]))
-             for i in range(len(pdf))]
-    merged = pd.concat(parts, ignore_index=True)
-    pd.testing.assert_frame_equal(merged, pdf)
 
 
 def test_stream_lakehouse_ingest_multibatch_append(spark, sf_smoke, tmp_path):
@@ -1381,17 +1233,10 @@ def test_stream_lakehouse_ingest_multibatch_append(spark, sf_smoke, tmp_path):
     from kstreamjs_spark.streaming.replay import run_foreach_batch
 
     orders = spark.read.parquet(f"{sf_smoke}/orders.parquet")
-    src = str(tmp_path / "orders_stream")
-    os.makedirs(src, exist_ok=True)
-    parts = orders.randomSplit([1.0, 1.0, 1.0], seed=7)
-    now = time.time()
-    for i, p in enumerate(parts):
-        fp = f"{src}/f{i}.parquet"
-        p.coalesce(1).write.mode("overwrite").parquet(fp)
-        for root, _, names in os.walk(fp):
-            for n in names:
-                os.utime(os.path.join(root, n), (now + i, now + i))
-
+    sdf = stage_triggers(
+        spark, str(tmp_path / "orders_stream"),
+        orders.randomSplit([1.0, 1.0, 1.0], seed=7),
+    )
     out = str(tmp_path / "ztable")
 
     def write_batch(batch_df, _bid):
@@ -1401,11 +1246,6 @@ def test_stream_lakehouse_ingest_multibatch_append(spark, sf_smoke, tmp_path):
             "append"
         ).partitionBy("zfile").parquet(out)
 
-    schema = spark.read.parquet(f"{src}/f0.parquet").schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src + "/*")
-    )
     run_foreach_batch(sdf, write_batch, "zingest")
 
     back = spark.read.parquet(out)
@@ -1456,21 +1296,9 @@ def test_stream_scd1_upsert_multibatch_equals_batch(spark, sf_smoke, tmp_path):
         events.groupBy("user_id", "ts").count()
         .filter(F.col("count") > 1).count() == 0
     )
-    src = str(tmp_path / "ev_stream")
-    os.makedirs(src, exist_ok=True)
-    parts = events.randomSplit([1.0, 1.0, 1.0], seed=11)
-    now = time.time()
-    for i, p in enumerate(parts):
-        fp = f"{src}/f{i}.parquet"
-        p.coalesce(1).write.mode("overwrite").parquet(fp)
-        for root, _, names in os.walk(fp):
-            for n in names:
-                os.utime(os.path.join(root, n), (now + i, now + i))
-
-    schema = spark.read.parquet(f"{src}/f0.parquet").schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src + "/*")
+    sdf = stage_triggers(
+        spark, str(tmp_path / "ev_stream"),
+        events.randomSplit([1.0, 1.0, 1.0], seed=11),
     )
     table_root = str(tmp_path / "dim_user")
     got = {
@@ -1538,27 +1366,15 @@ def test_stream_scd1_schema_evolution_mixed_manifest(spark, tmp_path):
         # trigger 2: post-T only; u11 is a post-evolution new user
         [ev(9, 25, 0, 13.0), ev(11, 26, 0, 17.0)],
     ]
-    src = str(tmp_path / "evo_src")
-    os.makedirs(src, exist_ok=True)
-    now = time.time()
-    for i, rows in enumerate(batches):
-        df = spark.createDataFrame(
+    sdf = stage_triggers(spark, str(tmp_path / "evo_src"), [
+        spark.createDataFrame(
             rows, "user_id long, ts_s string, value double"
         ).select(
             "user_id", F.col("ts_s").cast("timestamp").alias("ts"),
             "value",
         )
-        df.coalesce(1).write.mode("overwrite").parquet(
-            f"{src}/f{i}.parquet"
-        )
-        for root, _, names in os.walk(f"{src}/f{i}.parquet"):
-            for n in names:
-                os.utime(os.path.join(root, n), (now + i, now + i))
-    schema = spark.read.parquet(f"{src}/f0.parquet").schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src + "/*")
-    )
+        for rows in batches
+    ])
     root_t = str(tmp_path / "dim_evo")
     got = {
         r["user_id"]: (r["n_events"], round(r["sum_value"], 4))
@@ -1601,12 +1417,11 @@ def test_stream_scd1_schema_evolution_mixed_manifest(spark, tmp_path):
 
 @pytest.mark.slow
 def test_stream_scd1_merge_prunes_untouched_buckets(spark, tmp_path):
-    """The round-14 MERGE contract: a commit whose batch touches ONE
+    """The MERGE contract: a commit whose batch touches ONE
     key must rewrite only that key's bucket — every other bucket's
     files stay byte-identical (same paths, same bytes: never opened,
     copied, or rewritten) — and the superseded copy of the touched
     bucket is pruned. Drives the SHIPPED scd1_upsert_stream."""
-    import datetime as dt
     import glob
     import json
 
@@ -1616,33 +1431,11 @@ def test_stream_scd1_merge_prunes_untouched_buckets(spark, tmp_path):
     # batch 1: a single key -> exactly one touched bucket
     rows0 = [(u, float(u), u * 1000) for u in range(1, 41)]
     rows1 = [(7, 99.5, 777000)]
-    src = str(tmp_path / "src")
-    os.makedirs(src, exist_ok=True)
-    now = time.time()
-    for i, rows in enumerate((rows0, rows1)):
-        df = spark.createDataFrame(
-            [
-                (
-                    u,
-                    v,
-                    dt.datetime.fromtimestamp(ts / 1000, dt.timezone.utc)
-                    .replace(tzinfo=None),
-                )
-                for u, v, ts in rows
-            ],
-            "user_id long, value double, ts timestamp",
-        )
-        fp = f"{src}/f{i}.parquet"
-        df.coalesce(1).write.mode("overwrite").parquet(fp)
-        for root, _, names in os.walk(fp):
-            for n in names:
-                os.utime(os.path.join(root, n), (now + i, now + i))
-
-    schema = spark.read.parquet(f"{src}/f0.parquet").schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src + "/*")
-    )
+    sdf = stage_triggers(spark, str(tmp_path / "src"), [
+        spark.createDataFrame(rows, "user_id long, value double, ts long")
+        .withColumn("ts", F.timestamp_millis("ts"))
+        for rows in (rows0, rows1)
+    ])
     table_root = str(tmp_path / "dim")
     final = {
         r["user_id"]: (r["n_events"], r["last_value"])
@@ -1712,20 +1505,9 @@ def test_stream_scd1_changelog_ledger_across_commits(
     from kstreamjs_spark.queries.streaming_q import scd1_upsert_stream
 
     events = spark.read.parquet(f"{sf_smoke}/events.parquet")
-    src = str(tmp_path / "ev")
-    os.makedirs(src, exist_ok=True)
-    parts = events.randomSplit([1.0, 1.0, 1.0], seed=23)
-    now = time.time()
-    for i, p in enumerate(parts):
-        fp = f"{src}/f{i}.parquet"
-        p.coalesce(1).write.mode("overwrite").parquet(fp)
-        for root, _, names in os.walk(fp):
-            for n in names:
-                os.utime(os.path.join(root, n), (now + i, now + i))
-    schema = spark.read.parquet(f"{src}/f0.parquet").schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src + "/*")
+    sdf = stage_triggers(
+        spark, str(tmp_path / "ev"),
+        events.randomSplit([1.0, 1.0, 1.0], seed=23),
     )
     table_root = str(tmp_path / "dim")
     dim = {
@@ -1779,21 +1561,8 @@ def test_stream_scd1_time_travel_within_vacuum_horizon(
     )
 
     events = spark.read.parquet(f"{sf_smoke}/events.parquet")
-    src = str(tmp_path / "ev")
-    os.makedirs(src, exist_ok=True)
     parts = events.randomSplit([1.0, 1.0, 1.0], seed=31)
-    now = time.time()
-    for i, p in enumerate(parts):
-        fp = f"{src}/f{i}.parquet"
-        p.coalesce(1).write.mode("overwrite").parquet(fp)
-        for root, _, names in os.walk(fp):
-            for n in names:
-                os.utime(os.path.join(root, n), (now + i, now + i))
-    schema = spark.read.parquet(f"{src}/f0.parquet").schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src + "/*")
-    )
+    sdf = stage_triggers(spark, str(tmp_path / "ev"), parts)
     table_root = str(tmp_path / "dim")
     scd1_upsert_stream(sdf, table_root, retain_commits=1)
 
@@ -1830,7 +1599,7 @@ def test_stream_scd1_time_travel_within_vacuum_horizon(
 
 
 def test_stream_scd1_empty_source_raises(spark, tmp_path):
-    """ADVICE fix: zero micro-batches -> a clear error, not a
+    """Zero micro-batches -> a clear error, not a
     path-not-found on a v-1 read."""
 
     from kstreamjs_spark.queries.streaming_q import scd1_upsert_stream
@@ -1850,16 +1619,15 @@ def test_stream_scd1_empty_source_raises(spark, tmp_path):
 def test_bucket_pair_stream_bounded_keys_collision_semantics(
     spark, tmp_path
 ):
-    """Round-15 bounded state-key space, pinned at its hardest point:
+    """Bounded state-key space, pinned at its hardest point:
     60 distinct (band, bsig) buckets forced into n_state_keys=4 slots
     (heavy collisions — ~15 co-resident buckets per slot), delivered
     across two interleaved triggers with ids in descending order.
     The emitted pair set must equal the per-bucket batch expectation
     EXACTLY (slot co-residency is storage, never pairing semantics)
     and the state operator's numRowsTotal must be bounded by the slot
-    count, not the bucket count — the whole point of the fix (the r14
-    verdict measured ~77k Python groups x ~55 us/group as 4.2 s of
-    q205b's 10.6 s bill)."""
+    count, not the bucket count (~77k Python groups x ~55 us/group
+    made 4.2 s of q205b's 10.6 s without the bound)."""
     import itertools
 
     from kstreamjs_spark.queries.streaming_q import bucket_pair_stream
@@ -1878,20 +1646,9 @@ def test_bucket_pair_stream_bounded_keys_collision_semantics(
     rows_desc = sorted(rows, reverse=True)
     batches = [rows_desc[0::2], rows_desc[1::2]]
 
-    src = str(tmp_path / "src")
-    os.makedirs(src, exist_ok=True)
-    now = time.time()
-    for i, rws in enumerate(batches):
-        spark.createDataFrame(
-            rws, "doc_id long, band int, bsig string"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{src}/f{i}.parquet")
-        for root, _, names in os.walk(f"{src}/f{i}.parquet"):
-            for n in names:
-                os.utime(os.path.join(root, n), (now + i, now + i))
-    schema = spark.read.parquet(f"{src}/f0.parquet").schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src + "/*")
+    sdf = stage_triggers(
+        spark, str(tmp_path / "src"), batches,
+        "doc_id long, band int, bsig string",
     )
     q = (
         bucket_pair_stream(sdf, n_state_keys=4)
@@ -1921,7 +1678,7 @@ def test_bucket_pair_stream_bounded_keys_collision_semantics(
 def test_bucket_pair_stream_ttl_evicts_and_loses_late_pairs(
     spark, tmp_path
 ):
-    """The round-14 opt-in TTL mode, pinned adversarially (the q167b
+    """The opt-in TTL mode, pinned adversarially (the q167b
     pattern): bucket A is seeded in trigger 0, sits idle through
     trigger 1 (only bucket B arrives) so its TTL expires and the state
     evicts (numRowsRemoved > 0), then a LATE member of A arrives in
@@ -1930,11 +1687,11 @@ def test_bucket_pair_stream_ttl_evicts_and_loses_late_pairs(
     (ttl_ms=None) on the IDENTICAL schedule emits the full pair set —
     the exactness contract q205/q205b/q214b ship with is untouched.
 
-    Round 15: bucket C is DUPLICATE-FED (seeded in trigger 0, receives
+    Bucket C is DUPLICATE-FED (seeded in trigger 0, receives
     only an already-seen id in trigger 1). Spark clears a group's
-    timeout every time the update function runs, so before the
-    round-15 re-arm fix the duplicate-only path cancelled C's eviction
-    timer forever — C sat in state unbounded. Pinned by requiring the
+    timeout every time the update function runs, so without a re-arm
+    the duplicate-only path would cancel C's eviction timer forever and
+    C would sit in state unbounded. Pinned by requiring the
     TTL run's state to drain COMPLETELY (numRowsTotal -> 0): with the
     bug C never evicts and the drain never completes."""
     from kstreamjs_spark.queries.streaming_q import bucket_pair_stream
@@ -1951,24 +1708,12 @@ def test_bucket_pair_stream_ttl_evicts_and_loses_late_pairs(
         # loses (1,3)/(2,3); a same-trigger partner 4 still pairs
         [(3, 0, "A"), (4, 0, "A")],
     ]
-    src = str(tmp_path / "src")
-    os.makedirs(src, exist_ok=True)
-    now = time.time()
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(
-            rows, "doc_id long, band int, bsig string"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{src}/f{i}.parquet")
-        for root, _, names in os.walk(f"{src}/f{i}.parquet"):
-            for n in names:
-                os.utime(os.path.join(root, n), (now + i, now + i))
-
-    schema = spark.read.parquet(f"{src}/f0.parquet").schema
+    sdf = stage_triggers(
+        spark, str(tmp_path / "src"), batches,
+        "doc_id long, band int, bsig string",
+    )
 
     def run(ttl_ms):
-        sdf = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(src + "/*")
-        )
         qname = f"ttl_{'off' if ttl_ms is None else ttl_ms}"
         q = (
             bucket_pair_stream(sdf, ttl_ms=ttl_ms)
@@ -2069,20 +1814,9 @@ def test_stream_ingest_compacted_bounds_files_and_loses_nothing(
     )
 
     orders = spark.read.parquet(f"{sf_smoke}/orders.parquet")
-    src = str(tmp_path / "orders_stream")
-    os.makedirs(src, exist_ok=True)
-    parts = orders.randomSplit([1.0, 1.0, 1.0], seed=5)
-    now = time.time()
-    for i, p in enumerate(parts):
-        fp = f"{src}/f{i}.parquet"
-        p.coalesce(1).write.mode("overwrite").parquet(fp)
-        for root, _, names in os.walk(fp):
-            for n in names:
-                os.utime(os.path.join(root, n), (now + i, now + i))
-    schema = spark.read.parquet(f"{src}/f0.parquet").schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src + "/*")
+    sdf = stage_triggers(
+        spark, str(tmp_path / "orders_stream"),
+        orders.randomSplit([1.0, 1.0, 1.0], seed=5),
     )
     out = str(tmp_path / "tbl")
     manifest = {
@@ -2152,26 +1886,12 @@ def test_stream_embedding_neardup_equals_batch_any_schedule(spark, tmp_path):
     assert expected, "fixture must produce verified near-dup pairs"
 
     d = str(tmp_path / "emb_in")
-    os.makedirs(d, exist_ok=True)
     for tag, chunks in (
         ("a", [rows[0:3], rows[3:6], rows[6:8]]),
         ("c", [rows[6:8], rows[3:6], rows[0:3]]),  # descending ids
     ):
-        dd = f"{d}/{tag}"
-        os.makedirs(dd, exist_ok=True)
-        now = time.time()
-        for i, chunk in enumerate(chunks):
-            p = f"{dd}/f{i}.parquet"
-            spark.createDataFrame(
-                chunk, "vec_id long, embedding array<float>"
-            ).coalesce(1).write.mode("overwrite").parquet(p)
-            for root, _, names in os.walk(p):
-                for n in names:
-                    os.utime(os.path.join(root, n), (now + i, now + i))
-        schema = spark.read.parquet(f"{dd}/f0.parquet").schema
-        sdf = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1").parquet(dd + "/*")
+        sdf = stage_triggers(
+            spark, f"{d}/{tag}", chunks, "vec_id long, embedding array<float>"
         )
         banded = srp_banded_buckets(sdf).withColumnRenamed(
             "vec_id", "doc_id"
@@ -2201,8 +1921,7 @@ def test_stream_embedding_neardup_equals_batch_any_schedule(spark, tmp_path):
 
 @pytest.mark.slow
 def test_scd1_concurrent_writers_optimistic_commit(spark, tmp_path):
-    """Round-15 multi-writer story (the r14 verdict's open lakehouse
-    gap): two INDEPENDENT writers against one SCD1 table root,
+    """The multi-writer story: two INDEPENDENT writers against one SCD1 table root,
     coordinated only through the manifest dir. Pins, by hand-built
     interleave:
 
@@ -2312,7 +2031,7 @@ def test_scd1_concurrent_writers_optimistic_commit(spark, tmp_path):
 
 @pytest.mark.slow
 def test_scd1_concurrent_committer_refuses_evolved_tables(spark, tmp_path):
-    """Round-15 review finding: the concurrent batch committer merges
+    """The concurrent batch committer merges
     the BASE schema only — rewriting an evolved bucket with a base
     copy would silently reset sum_value to the read-time default for
     every key in the bucket. It must refuse LOUDLY instead. Also pins
@@ -2643,18 +2362,9 @@ def test_stream_knn_graph_insert_planted_manifold(spark, tmp_path):
         [(i, [float(x) for x in base[i]]) for i in range(n)],
         "vec_id long, embedding array<double>",
     )
-    src = str(tmp_path / "vec_src")
-    os.makedirs(src, exist_ok=True)
-    # two files -> two triggers with maxFilesPerTrigger=1
-    df.filter(F.col("vec_id") < 36).coalesce(1).write.parquet(
-        f"{src}/f0.parquet"
-    )
-    df.filter(F.col("vec_id") >= 36).coalesce(1).write.parquet(
-        f"{src}/f1.parquet"
-    )
-    sdf = spark.readStream.schema(df.schema).option(
-        "maxFilesPerTrigger", "1"
-    ).parquet(src + "/*")
+    sdf = stage_triggers(spark, str(tmp_path / "vec_src"), [
+        df.filter(F.col("vec_id") < 36), df.filter(F.col("vec_id") >= 36)
+    ])
     seed = df.filter(F.col("vec_id") < 24)
     g = knn_graph_insert_stream(sdf, seed, k=3, refine_rounds=2)
     rows = g.collect()
@@ -2795,7 +2505,7 @@ def test_scd1_rebucket_conflicts_with_any_commit(spark, tmp_path):
 
 
 def test_scd1_reader_snapshot_isolated_across_rebucket(spark, tmp_path):
-    """Round-16 verdict ask: a reader that RESOLVED its manifest
+    """A reader that RESOLVED its manifest
     before a concurrent `scd1_rebucket` must keep a consistent
     old-spec view when it finally collects — never mixed specs,
     never a vanished-file error. Holds by construction (manifests
@@ -2845,7 +2555,7 @@ def test_scd1_reader_snapshot_isolated_across_rebucket(spark, tmp_path):
 
 
 def test_scd1_empty_table_reads_and_rebuckets(spark, tmp_path):
-    """Round-16 ADVICE: full-table deletion is a legal state. After
+    """Full-table deletion is a legal state. After
     every key is deleted and purged (bucket_dir empties), (a)
     `scd1_read_as_of` returns an EMPTY frame with the table schema
     instead of an opaque zero-path parquet error; (b)
@@ -2920,20 +2630,13 @@ def test_stream_cdc_lww_tombstone_semantics(spark, tmp_path):
     )
 
     def run_split(cut_day):
-        src = str(tmp_path / f"cdc_{cut_day}")
-        os.makedirs(src, exist_ok=True)
-        df.filter(F.dayofmonth("ts") <= cut_day).coalesce(1).write.parquet(
-            f"{src}/f0.parquet"
-        )
-        df.filter(F.dayofmonth("ts") > cut_day).coalesce(1).write.parquet(
-            f"{src}/f1.parquet"
-        )
         from kstreamjs_spark.streaming.replay import run_foreach_batch
 
         sdf = (
-            spark.readStream.schema(df.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src + "/*")
+            stage_triggers(spark, str(tmp_path / f"cdc_{cut_day}"), [
+                df.filter(F.dayofmonth("ts") <= cut_day),
+                df.filter(F.dayofmonth("ts") > cut_day),
+            ])
             .select(
                 "user_id", "ts", "value",
                 (F.col("event_type") == "error").alias("is_del"),
@@ -3006,19 +2709,10 @@ def test_stream_graph_ann_serve_equals_batch(spark, tmp_path):
     )
 
     def serve(cut):
-        src = str(tmp_path / f"qsrc_{cut}")
-        os.makedirs(src, exist_ok=True)
-        df.filter(F.col("vec_id") < cut).coalesce(1).write.parquet(
-            f"{src}/f0.parquet"
-        )
-        df.filter(
-            (F.col("vec_id") >= cut) & (F.col("vec_id") < 6)
-        ).coalesce(1).write.parquet(f"{src}/f1.parquet")
-        sdf = (
-            spark.readStream.schema(df.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src + "/*")
-        )
+        sdf = stage_triggers(spark, str(tmp_path / f"qsrc_{cut}"), [
+            df.filter(F.col("vec_id") < cut),
+            df.filter((F.col("vec_id") >= cut) & (F.col("vec_id") < 6)),
+        ])
         acc = {"df": None}
 
         def commit(b, _bid):
@@ -3068,7 +2762,7 @@ def test_stream_weighted_minhash_equals_batch(spark, sf_smoke):
 
 @pytest.mark.slow
 def test_stream_chunk_dedup_schedule_invariance(spark, tmp_path):
-    """q221b's contract (round 16): for ANY in-doc-order trigger
+    """q221b's contract: for ANY in-doc-order trigger
     split, the streamed chunk-dedup table equals batch q221 on the
     same corpus. Planted cases: within-doc repeat (doc 0), cross-doc
     repeat within one trigger (docs 0/1), cross-TRIGGER repeat (doc
@@ -3116,18 +2810,11 @@ def test_stream_chunk_dedup_schedule_invariance(spark, tmp_path):
 
     df = spark.createDataFrame(docs, schema)
     for cuts in ([5], [2, 5], [2, 4, 5]):  # 1-, 2-, 3-file splits
-        src = str(tmp_path / f"q221b_{len(cuts)}")
-        os.makedirs(src, exist_ok=True)
-        lo = 0
-        for i, hi in enumerate(cuts):
-            df.filter(
-                (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
-            ).coalesce(1).write.parquet(f"{src}/f{i}.parquet")
-            lo = hi
         sdf = (
-            spark.readStream.schema(df.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src + "/*")
+            stage_triggers(spark, str(tmp_path / f"q221b_{len(cuts)}"), [
+                df.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
+                for lo, hi in zip([0, *cuts], cuts)
+            ])
             .select("doc_id", F.split("text", " ").alias("ts"))
         )
         got = sorted(
@@ -3138,7 +2825,7 @@ def test_stream_chunk_dedup_schedule_invariance(spark, tmp_path):
 
 @pytest.mark.slow
 def test_stream_knn_graph_insert_persists_index(spark, tmp_path):
-    """Round-16 verdict #4: the maintained graph-ANN index rides the
+    """The maintained graph-ANN index rides the
     on-disk bucketed-manifest store. On the planted 4-cluster
     manifold (the q219b fixture), the insert stream runs with
     ``persist_root``; pins (a) `ann_index_read` == the returned
@@ -3168,19 +2855,11 @@ def test_stream_knn_graph_insert_persists_index(spark, tmp_path):
         [(i, [float(x) for x in base[i]]) for i in range(n)],
         "vec_id long, embedding array<double>",
     )
-    src = str(tmp_path / "vec_src_p")
-    os.makedirs(src, exist_ok=True)
     # trigger 2 inserts ONE vector: its touched-src set stays inside
     # one cluster, so bucket-granular commit reuse (c) is observable
-    df.filter(F.col("vec_id") < 47).coalesce(1).write.parquet(
-        f"{src}/f0.parquet"
-    )
-    df.filter(F.col("vec_id") >= 47).coalesce(1).write.parquet(
-        f"{src}/f1.parquet"
-    )
-    sdf = spark.readStream.schema(df.schema).option(
-        "maxFilesPerTrigger", "1"
-    ).parquet(src + "/*")
+    sdf = stage_triggers(spark, str(tmp_path / "vec_src_p"), [
+        df.filter(F.col("vec_id") < 47), df.filter(F.col("vec_id") >= 47)
+    ])
     seed = df.filter(F.col("vec_id") < 24)
     root = str(tmp_path / "ann_idx")
     g = knn_graph_insert_stream(
