@@ -185,10 +185,9 @@ def q26e(spark: SparkSession, sf: str) -> DataFrame:
 @query("q26c_simhash_neardup", oracle=None, tags=("dedup", "llm", "approx"))
 def q26c(spark: SparkSession, sf: str) -> DataFrame:
     """SimHash-64 near-dup pairs within Hamming distance 6, candidates
-    via the 2-of-8-chunk combination pigeonhole (round 11: the fixture's
-    true near-dup pairs reach SimHash distance 5, so the old radius-3
-    geometry could never recall them — the r9/r10 verdicts' 0.6-recall
-    watch item; the combination keys guarantee every pair within
+    via the 2-of-8-chunk combination pigeonhole (the fixture's true
+    near-dup pairs reach SimHash distance 5, beyond a radius-3
+    geometry; the combination keys guarantee every pair within
     distance 6 is a candidate while keeping 16-bit key values, i.e.
     unchanged bucket widths). Recall vs the exact Jaccard pair set is
     pinned at 1.0 in APPROX_EVIDENCE.json with precision alongside."""
@@ -277,7 +276,7 @@ _BM25_TERMS_SQL = ", ".join(f"'{t}'" for t in _BM25_TERMS)
 def _bm25_tf_dl(documents: DataFrame, terms: list[str]):
     """((doc_id, token, tf, dl) frame, 1-row (n, dl_sum) stats) — ONE
     corpus scan, ZERO corpus shuffle, shared by every BM25 consumer.
-    Round-15 plan: the token array is filtered ONCE per document
+    The token array is filtered ONCE per document
     through an `isin` membership probe (above the 10-literal
     threshold — q157b's 31-term union — Catalyst converts it to an
     InSet hash set, O(1) per token; q157's 5-term set stays an In
@@ -290,7 +289,7 @@ def _bm25_tf_dl(documents: DataFrame, terms: list[str]):
     MATERIALIZED frame is the pre-explode (doc_id, dl, matched) base —
     all docs, but only ids + lengths + matched terms, never the text —
     so the corpus stats (n, dl_sum) aggregate from it instead of
-    paying a second corpus scan+split (round-15 review finding), and
+    paying a second corpus scan+split, and
     the df aggregate + scoring join both re-derive the tf explode from
     it cheaply. Values are plan-independent (same counts), so every
     BM25 oracle is untouched. The `spread` fan-out exists for the same
@@ -744,10 +743,10 @@ def q170(spark: SparkSession, sf: str) -> DataFrame:
     semdedup_drops documents the delta).
     Output: per-cell (n_vecs, n_dropped, n_kept), emitted BY the
     kernel — the rollup is fused, so the whole query is one cell-key
-    exchange plus a k-row sum (the round-11 rework: the previous cid
-    equi-join paid an expression-eval constant per pair ELEMENT in the
-    fold cosine — 7.8 s at sf0.1 vs ~1 s fused, while the pair count
-    is identical; bench-driven, the q179b unroll-vs-kernel lesson).
+    exchange plus a k-row sum (a cid equi-join pays an expression-eval
+    constant per pair ELEMENT in the fold cosine — 7.8 s at sf0.1 vs
+    ~1 s fused, for the same pair count; the q179b unroll-vs-kernel
+    lesson).
 
     Determinism: pair membership tests the 6-dp-ROUNDED cosine (the
     q58 idiom — the round absorbs summation-order low bits, numpy here
@@ -765,7 +764,7 @@ def q170(spark: SparkSession, sf: str) -> DataFrame:
     spreads the exchange across k partitions — and a degenerate hot
     cell (the all-one-cell geometry a botched embedder produces) gets
     the ``max_cell`` sub-split ceiling, q159's max-bucket precedent
-    (round-11; adversarially tested, OFF here so the oracle semantics
+    (adversarially tested, OFF here so the oracle semantics
     stay exact — with the kernel it bounds task MEMORY as well as
     pair work)."""
     from ..operators import kmeans
@@ -1103,7 +1102,7 @@ def _synth_group_images_quadcodec(df: DataFrame) -> DataFrame:
     """q158d fixture: groups of FOUR docs (doc_id // 4) render one
     pseudo-random 56x56 pattern through four DIFFERENT real codecs —
     BMP (d%4==0), PNG (1), quant-exact baseline JPEG (2), and GIF with
-    real LZW compression (3, round-11's `encode_gif_pixels`) — at
+    real LZW compression (3, `encode_gif_pixels`) — at
     per-doc brightness/contrast (pHash exactly invariant to both). The
     56x56 geometry and the JPEG even-value/quant-16 exactness contract
     are q158c's (see `_synth_group_images_multicodec`); the group seed
@@ -1160,7 +1159,7 @@ def _synth_group_images_quadcodec(df: DataFrame) -> DataFrame:
     tags=("multimodal", "dedup", "llm"),
 )
 def q158d(spark: SparkSession, sf: str) -> DataFrame:
-    """FOUR-codec perceptual image near-dup (round 11): q158c's
+    """FOUR-codec perceptual image near-dup: q158c's
     cross-codec chain extended with the GIF leg — each duplicate group
     renders the same pattern as a BMP, a PNG, a quant-exact baseline
     JPEG, and a REAL-LZW GIF (half of them interlaced, exercising the
@@ -1368,7 +1367,7 @@ def _synth_group_clips_dualcodec(df: DataFrame) -> DataFrame:
     tags=("multimodal", "dedup", "llm"),
 )
 def q160b(spark: SparkSession, sf: str) -> DataFrame:
-    """CROSS-CODEC audio near-dup (round 12) — q158c's shape for the
+    """CROSS-CODEC audio near-dup — q158c's shape for the
     audio modality: each duplicate group renders ONE pseudo-random
     2100-sample pattern through TWO different real codecs, 16-bit PCM
     WAV (member 0, gain 1) and FLAC (members 1-2, gains 2 and 3;
@@ -1574,7 +1573,7 @@ def q40(spark: SparkSession, sf: str) -> DataFrame:
     documents exported once as .bin files (test fixture), read back via
     spark.read.format('binaryFile') -> (doc_id, blob), then mapInPandas
     'decode' to typed metadata. The decode kernel decodes uncompressed
-    BMP for real (multimodal.decode_bmp, round 7 — header arithmetic, no
+    BMP for real (multimodal.decode_bmp — header arithmetic, no
     codec library, round-trip-tested); non-image payloads like these text
     blobs take the deterministic stub fallback, which is what the oracle
     states (text bytes can never alias into the BMP path: the validated
@@ -2252,7 +2251,7 @@ def q68(spark: SparkSession, sf: str) -> DataFrame:
     # at sf0.1); harmless at real scale, where the scan is already split.
     docs = dedup.spread(documents, "doc_id")
     toks = F.split("text", " ")
-    # Round 16 (guide §3.3): uni feeds the total, both join sides, and
+    # uni feeds the total, both join sides, and
     # bg feeds its total + the PMI join — five subtrees that each
     # replayed a corpus token explode from the scan (audit: 5 scans).
     # Both aggregates are vocabulary-sized; cut once, lazily.
@@ -2444,11 +2443,11 @@ def q74(spark: SparkSession, sf: str) -> DataFrame:
     list. ln(N/df) on exact int64 counts, rounded 6 dp, same term order
     both engines (binary collation).
 
-    Round 16 (guide §3.3): ``tf`` feeds TWO consumers (the df aggregate
-    and the scoring join) and the runtime plan replayed the token
+    ``tf`` feeds TWO consumers (the df aggregate and the scoring join),
+    and without a lineage cut the runtime plan replays the token
     explode + (doc, term) shuffle under BOTH (2 Generates in the
     executed plan; different column prunings defeat ReusedExchange), so
-    the corpus paid its heaviest pass twice. The POST-shuffle aggregate
+    the corpus pays its heaviest pass twice. The POST-shuffle aggregate
     is materialized once instead — the q157b tf precedent: checkpoint
     the deduped (doc, term, tf) rows, never re-run the corpus
     explode."""
@@ -2529,7 +2528,7 @@ def q86(spark: SparkSession, sf: str) -> DataFrame:
 
     (documents,) = load(spark, sf, "documents")
     toks = F.split("text", " ")
-    # Round 16 (guide §3.3): ``uni`` feeds two consumers (the V scalar
+    # ``uni`` feeds two consumers (the V scalar
     # and the scoring join) — without a lineage cut each replays the
     # full token explode + vocabulary shuffle from the scan. The
     # vocabulary-sized aggregate is checkpointed once instead.
@@ -2560,7 +2559,7 @@ def q86(spark: SparkSession, sf: str) -> DataFrame:
     bg = dedup.spread(documents, "doc_id").select(
         "doc_id", F.explode(bigram_structs).alias("s")
     ).select("doc_id", F.col("s.w1").alias("w1"), F.col("s.b").alias("b"))
-    # Round 16 A/B NOTE (guide §3.3): a per-doc bigram-count fold +
+    # A/B note: a per-doc bigram-count fold +
     # checkpoint (the q196/q157b treatment — explode once, shuffle
     # distinct (doc, bigram) rows, derive count table and scoring join
     # from the cut) was measured ~0.3-0.6 s SLOWER at sf0.1 than the
@@ -3774,8 +3773,8 @@ def _synth_gif_anim_blobs(df: DataFrame) -> DataFrame:
     tags=("multimodal", "dedup", "llm", "video", "slow"),
 )
 def q182(spark: SparkSession, sf: str) -> DataFrame:
-    """ANIMATED-GIF perceptual dedup over real frame-pixel decode
-    (round 11): q174's video-dedup chain for the GIF container — the
+    """ANIMATED-GIF perceptual dedup over real frame-pixel decode:
+    q174's video-dedup chain for the GIF container — the
     other intra-frame animation format a crawl actually contains whose
     frames need NO codec library. The frame table walks the
     graphic-control/image-descriptor structure (`gif_frame_table`, the
@@ -3843,8 +3842,8 @@ def _synth_apng_anim_blobs(df: DataFrame) -> DataFrame:
     tags=("multimodal", "dedup", "llm", "video", "slow"),
 )
 def q183(spark: SparkSession, sf: str) -> DataFrame:
-    """APNG animation perceptual dedup over real frame decode
-    (round 11): q182's chain for the SECOND pure-stdlib animation
+    """APNG animation perceptual dedup over real frame decode:
+    q182's chain for the SECOND pure-stdlib animation
     container — APNG rides the PNG chunk stream (acTL/fcTL/fdAT, W3C
     spec, public), so `apng_frame_table` walks CRC-verified chunks and
     sequence numbers, `decode_apng_frame` composes regions through the
@@ -3868,7 +3867,7 @@ def q183(spark: SparkSession, sf: str) -> DataFrame:
 
 @query("q191_pq_ann_topk", oracle=None, tags=("similarity", "llm", "approx"))
 def q191(spark: SparkSession, sf: str) -> DataFrame:
-    """PQ/ADC approximate top-10 with exact rerank (round 11): vectors
+    """PQ/ADC approximate top-10 with exact rerank: vectors
     compressed to 16 sub-quantizer codes (sample-trained codebooks,
     Arrow-batched encoding), query scored by an m x 16 lookup table as
     a pure codegen int-array expression, ADC top-80 reranked exactly.
@@ -4137,7 +4136,7 @@ def q193(spark: SparkSession, sf: str) -> DataFrame:
 @query("q194_ivfpq_ann_topk", oracle=None,
        tags=("similarity", "llm", "approx"))
 def q194(spark: SparkSession, sf: str) -> DataFrame:
-    """IVFADC approximate top-10 (round 11) — the canonical composed
+    """IVFADC approximate top-10 — the canonical composed
     index (Jegou et al. 2011): IVF cells bound WHICH rows are scanned
     (q42's partition pruning), PQ/ADC bounds WHAT is read per row
     (q191's 16x-smaller codes); the reductions MULTIPLY (~n_probe/
@@ -4157,7 +4156,7 @@ def q194(spark: SparkSession, sf: str) -> DataFrame:
 @query("q195_kmv_overlap", oracle=None,
        tags=("sketch", "approx", "relational"))
 def q195(spark: SparkSession, sf: str) -> DataFrame:
-    """SET ALGEBRA on KMV sketches (round 11; Beyer et al. 2007,
+    """SET ALGEBRA on KMV sketches (Beyer et al. 2007,
     public) — the q95/q100 cross-source-overlap question answered at
     SKETCH cost: how many order keys appear in BOTH the returned
     ('R') and accepted ('A') line populations, and their Jaccard,
@@ -4230,7 +4229,7 @@ def q195(spark: SparkSession, sf: str) -> DataFrame:
     tags=("text", "llm", "quality"),
 )
 def q196(spark: SparkSession, sf: str) -> DataFrame:
-    """Interpolated Kneser-Ney bigram scoring (round 11; Kneser & Ney
+    """Interpolated Kneser-Ney bigram scoring (Kneser & Ney
     1995 / Chen & Goodman 1998, public) — the smoothing a real
     CCNet-style perplexity filter runs (KenLM's default), upgrading
     q86's add-1 proxy: P(w2|w1) = (c(w1w2) - d)/c(w1•) +
@@ -4266,10 +4265,10 @@ def q196(spark: SparkSession, sf: str) -> DataFrame:
     ).select(
         "doc_id", F.col("s.w1").alias("w1"), F.col("s.w2").alias("w2")
     )
-    # Round 16 (guide §3.3/§2.3): the corpus bigram explode previously
-    # fed FIVE subtrees (the global count table, its three rollups, and
-    # the scoring join's occurrence stream) and was replayed from the
-    # scan under each (audit: 5 documents scans). Fold occurrences to
+    # The corpus bigram explode feeds FIVE subtrees (the global count
+    # table, its three rollups, and the scoring join's occurrence
+    # stream), and unmaterialized it is replayed from the scan under
+    # each (5 documents scans). Fold occurrences to
     # per-doc bigram counts ONCE (map-side combinable, output bounded
     # by distinct bigrams per doc), materialize, and derive every count
     # table from that frame; the per-doc sum weights each distinct
@@ -4358,14 +4357,14 @@ def _q197_oracle() -> str:
     tags=("text", "llm", "quality"),
 )
 def q197(spark: SparkSession, sf: str) -> DataFrame:
-    """CCNet's head/middle/tail split (round 11/12; Wenzek et al. 2020,
+    """CCNet's head/middle/tail split (Wenzek et al. 2020,
     public) — the final stage of the perplexity-filtering pipeline:
     rank every document by its KN score (q196, one scoring home) and
     cut the corpus into three equal-count bands; head = most fluent
     third (what CCNet keeps or upweights). Semantics are exactly
     NTILE(3) over the TOTAL order (score desc, doc_id tiebreak) — the
     oracle states it that way — but the plan never sorts the corpus in
-    one task (the round-11 verdict's flagged anti-pattern). Instead,
+    one task. Instead,
     the q131 histogram idiom: (1) histogram by the 6-dp-rounded score —
     distinct values are bounded by the score RANGE in micro-nats, a
     constant wrt corpus size, so the one cumulative window over the
@@ -4381,8 +4380,8 @@ def q197(spark: SparkSession, sf: str) -> DataFrame:
     rollup: every corpus-sized exchange is hash-partitioned."""
     # the KN scoring pipeline feeds BOTH the histogram and the join
     # probe (different projections — ReuseExchange cannot collapse
-    # them), so materialize it once (the q157b tf policy; round-12
-    # review find: unmaterialized, the dominant scoring cost ran twice)
+    # them), so materialize it once (the q157b tf policy;
+    # unmaterialized, the dominant scoring cost runs twice)
     scored = materialize_once(
         REGISTRY["q196_kneser_ney_score"].fn(spark, sf)
     )
@@ -4464,8 +4463,8 @@ def q198(spark: SparkSession, sf: str) -> DataFrame:
     summary rows, pass 2 counts 64 candidates instead of the full
     vocabulary; both scans, no vocabulary-sized shuffle anywhere.
 
-    The exactness guarantee is CHECKED at runtime (round 12, advisor
-    ask): pass 2 folds non-candidates into one NULL bucket, so the
+    The exactness guarantee is CHECKED at runtime: pass 2 folds
+    non-candidates into one NULL bucket, so the
     same bounded aggregate yields every candidate's exact count AND
     the total token count N; the result is provably the true top-10
     iff the 10th-ranked candidate count exceeds N/(k'+1) (anything
@@ -4545,7 +4544,7 @@ def q198(spark: SparkSession, sf: str) -> DataFrame:
     tags=("text", "llm", "quality"),
 )
 def q202(spark: SparkSession, sf: str) -> DataFrame:
-    """FILTER-STACK ensemble (round 12): the go/no-go contingency a
+    """FILTER-STACK ensemble: the go/no-go contingency a
     real curation run reads before committing to a ruleset — every doc
     judged by BOTH canonical rule families in one pass (Gopher, Rae et
     al. 2021; C4, Raffel et al. 2020), rolled up into the 2x2
@@ -4690,7 +4689,7 @@ def _q203_oracle() -> str:
        tags=("text", "llm", "quality", "slow"), bench=True)
 def q203(spark: SparkSession, sf: str) -> DataFrame:
     """Gopher's FULL repetition-signal family (Rae et al. 2021 A1,
-    public; round 12) — the eight n-gram rules q178 sampled one of:
+    public) — the eight n-gram rules q178 sampled one of:
     top-n-gram character-coverage ceilings (n = 2, 3, 4) and
     duplicate-n-gram coverage ceilings (n = 5..10, the count x
     char-len mass of grams occurring twice or more — the standard
@@ -4843,7 +4842,7 @@ _Q204_QMOD = 101    # query sample: vec_id % 101 == 0 (bounded audit set)
 )
 def q204(spark: SparkSession, sf: str) -> DataFrame:
     """Matryoshka truncation recall audit (Kusupati et al. 2022 MRL,
-    public; round 12) — the dimension-reduction question every
+    public) — the dimension-reduction question every
     embedding-storage budget decision asks: if queries ran on the
     first-16-of-64 dim prefix, what fraction of each query's exact
     top-10 survives? Recall@10 per sampled query (bounded audit set,
@@ -4954,7 +4953,7 @@ def q204(spark: SparkSession, sf: str) -> DataFrame:
     tags=("dedup", "llm"),
 )
 def q206(spark: SparkSession, sf: str) -> DataFrame:
-    """Dedup THRESHOLD-SENSITIVITY curve (round 12) — the parameter
+    """Dedup THRESHOLD-SENSITIVITY curve — the parameter
     question every near-dup deployment answers before committing to a
     cutoff: at each Jaccard band (0.3 steps of 0.1 up to exact dup),
     how many candidate pairs exist, how many pairs a >= cutoff run
@@ -4974,10 +4973,10 @@ def q206(spark: SparkSession, sf: str) -> DataFrame:
     )
     from ..plans import materialize_once
 
-    # Round 16 (guide §3.3): three consumers fan out of ``b`` below —
-    # the pair rollup plus BOTH branches of the doc-level union — and
-    # each replayed the whole shingle self-join from the scan (the
-    # audit counted 6 documents scans). (d1, d2, band) is 24 B/row, so
+    # Three consumers fan out of ``b`` below — the pair rollup plus
+    # BOTH branches of the doc-level union — and unmaterialized each
+    # replays the whole shingle self-join from the scan (6 documents
+    # scans). (d1, d2, band) is 24 B/row, so
     # one lazy lineage cut replaces two full pair-join re-executions.
     b = materialize_once(
         agg.select(
@@ -5065,7 +5064,7 @@ _Q207_D = 71    # boundary density: ~1 boundary per D positions (prime)
     tags=("dedup", "llm", "storage"),
 )
 def q207(spark: SparkSession, sf: str) -> DataFrame:
-    """Content-defined chunking dedup audit (round 12; the
+    """Content-defined chunking dedup audit (the
     Rabin/FastCDC family, Muthitacharoen et al. 2001 LBFS, public) —
     the STORAGE-level dedup question next to the document-level
     families: split every text at content-defined boundaries (a
@@ -5122,11 +5121,11 @@ def q207(spark: SparkSession, sf: str) -> DataFrame:
         d.select("doc_id", F.col("n").alias("e"))
     ).distinct()
     w = Window.partitionBy("doc_id").orderBy("e")
-    # Round 16 (guide §3.3): the savings accounting consumes ``ck``
-    # twice (distinct-chunk stats + totals), and each consumer
-    # replayed the O(W x n) per-position boundary fold — the most
-    # expensive projection here — from the scan (audit: 6 documents
-    # scans). Materializing the OFFSET frame (doc_id, s, e — 24 B/row,
+    # The savings accounting consumes ``ck`` twice (distinct-chunk
+    # stats + totals), and unmaterialized each consumer replays the
+    # O(W x n) per-position boundary fold — the most expensive
+    # projection here — from the scan (6 documents scans).
+    # Materializing the OFFSET frame (doc_id, s, e — 24 B/row,
     # never the text) runs the fold once; the two consumers re-join
     # the text by doc_id, which is plain pruned IO.
     from ..plans import materialize_once
@@ -5142,8 +5141,8 @@ def q207(spark: SparkSession, sf: str) -> DataFrame:
     )
     # n_docs rides the same aggregate (every doc with n >= 1 owns at
     # least one chunk, so countDistinct(doc_id) here IS the doc count
-    # — round-12 review find: a separate d.count() action re-scanned
-    # the corpus just for the header scalar)
+    # — a separate d.count() action would re-scan the corpus just for
+    # the header scalar)
     dc = ck.select("chunk").distinct().agg(
         F.count(F.lit(1)).cast("long").alias("n_distinct"),
         F.sum(F.length("chunk")).cast("long").alias("distinct_chars"),
@@ -5222,7 +5221,7 @@ def _q208_oracle() -> str:
     tags=("retrieval", "llm", "eval"),
 )
 def q208(spark: SparkSession, sf: str) -> DataFrame:
-    """Retrieval-quality evaluation (round 12) — the rank-metric
+    """Retrieval-quality evaluation — the rank-metric
     family every retrieval stack reports and the inventory lacked:
     MRR@10, binary NDCG@10, and hit-rate@10 of the q157b BM25 ranking
     against a deterministic synthetic relevance (rel(q, d) iff
@@ -5581,7 +5580,7 @@ _Q214_THRESHOLD = 0.4
     tags=("dedup", "similarity", "llm", "approx"),
 )
 def q214(spark: SparkSession, sf: str) -> DataFrame:
-    """Embedding-cosine near-dup PAIRS at corpus scale (round 13) —
+    """Embedding-cosine near-dup PAIRS at corpus scale —
     fills the one open cell in the dedup matrix's batch row: text has
     exact/minhash/simhash pair joins, perceptual has hamming buckets,
     embeddings had only label-blocked exact (q37) and cell-bounded
@@ -5619,13 +5618,12 @@ def _q216_oracle() -> str:
 @query(
     "q216_wordpiece_tokenize",
     oracle=_q216_oracle(),
-    bench=True,  # round 15 (r14 verdict #7): the greedy-fold tokenizer
-                 # application shape gets bench coverage
+    bench=True,  # the greedy-fold tokenizer application shape
     tags=("text", "llm", "tokenizer"),
 )
 def q216(spark: SparkSession, sf: str) -> DataFrame:
-    """WordPiece-STYLE greedy longest-match tokenizer (round 14;
-    Schuster & Nakajima 2012, the greedy maximal-munch application
+    """WordPiece-STYLE greedy longest-match tokenizer (Schuster &
+    Nakajima 2012, the greedy maximal-munch application
     BERT's tokenizer popularized — public) — the third tokenizer
     family next to BPE (q179, merge-driven) and unigram-LM (q212,
     Viterbi-EM), and the only one whose application
@@ -5689,15 +5687,15 @@ def q216(spark: SparkSession, sf: str) -> DataFrame:
 
 
 
-# ----- Q216c WordPiece LIKELIHOOD-scored tokenizer training (round 14)
+# ----- Q216c WordPiece LIKELIHOOD-scored tokenizer training
 _WPT_MERGES = 6
 _WPT_SCALE = 1_000_000_000_000  # 1e12 integer score quantization
 
 # The WordPiece argmax score (n_ab * 1e12) DIV (n_a * n_b), computed in
 # DECIMAL so it CANNOT wrap: long*long would overflow silently (non-ANSI
 # Spark) past n_ab ~9.2e6 while the DuckDB oracle's HUGEINT kept going —
-# a silent wrong-argmax divergence at corpus scale (round-15 fix; the
-# oracle mirrors with explicit HUGEINT casts). DECIMAL(19,0) holds any
+# a silent wrong-argmax divergence at corpus scale (the oracle mirrors
+# with explicit HUGEINT casts). DECIMAL(19,0) holds any
 # BIGINT count; the numerator product is DECIMAL(33,0) and the
 # denominator DECIMAL(38,0) — both exact, no precision loss — and the
 # quotient (<= 1e12 since n_ab <= min(n_a, n_b)) returns as BIGINT.
@@ -5774,8 +5772,8 @@ def _wpt_oracle(k: int = _WPT_MERGES) -> str:
     tags=("text", "llm", "tokenizer", "slow"),
 )
 def q216c(spark: SparkSession, sf: str) -> DataFrame:
-    """WordPiece LIKELIHOOD-scored tokenizer TRAINING (round 14;
-    Schuster & Nakajima 2012, public) — completes the family q216
+    """WordPiece LIKELIHOOD-scored tokenizer TRAINING (Schuster &
+    Nakajima 2012, public) — completes the family q216
     deliberately split: q216 isolated the greedy APPLICATION, this is
     the real WordPiece vocabulary SELECTION rule. Identical machinery
     to BPE (q179: pair-count aggregate per round + 1-row argmax + the
@@ -5792,10 +5790,10 @@ def q216c(spark: SparkSession, sf: str) -> DataFrame:
     Scale shape: q179's exactly, plus one vocabulary-sized aggregate
     per round; the argmax joins are pair-table x symbol-table
     (both vocabulary-bounded). The score multiply runs in DECIMAL on
-    the Spark side and HUGEINT in the oracle (round 15;
-    _WPT_SCORE_SQL), so it is exact for ANY int64 counts — the earlier
-    long*long form wrapped silently past n_ab ~9.2e6 while the oracle
-    kept going, a wrong-argmax divergence instead of a loud failure."""
+    the Spark side and HUGEINT in the oracle (_WPT_SCORE_SQL), so it
+    is exact for ANY int64 counts — a long*long form wraps silently
+    past n_ab ~9.2e6 while the oracle keeps going, a wrong-argmax
+    divergence instead of a loud failure."""
     from ..plans import materialize_once
 
     (documents,) = load(spark, sf, "documents")
@@ -5948,7 +5946,7 @@ def _q223_oracle() -> str:
 )
 def q223(spark: SparkSession, sf: str) -> DataFrame:
     """DISTRIBUTED CLASSIFIER TRAINING — full-batch perceptron over
-    hashed bag-of-words (round 15): the fastText-style linear quality/
+    hashed bag-of-words: the fastText-style linear quality/
     language filter every curation pipeline trains (Joulin et al.
     2016; FineWeb's edu classifier is the modern instance), here on
     the synthetic label lang=='en'. Five full-batch rounds: per-doc
@@ -5970,7 +5968,7 @@ def q223(spark: SparkSession, sf: str) -> DataFrame:
     At 100 TB: weights grow at most T * total_token_count (~1e14 at
     T=5 over 2.5e13 tokens — comfortably int64), but the MARGIN
     product cnt * w reaches ~1e20 and would silently wrap int64, so
-    margins carry the q216c DECIMAL treatment (round-16 fix):
+    margins carry the q216c DECIMAL treatment:
     DECIMAL(19,0) x DECIMAL(18,0) -> DECIMAL(38,0) products summed
     exactly — cannot wrap below 1e38. Feature hashing keeps the
     model O(buckets) regardless of vocabulary."""
@@ -6020,7 +6018,7 @@ def _q223_train(spark: SparkSession, sf: str):
         wdf = spark.createDataFrame(
             sorted(weights.items()), "bucket long, w long"
         )
-        # DECIMAL margins (round 16): cnt*w is the one product that
+        # DECIMAL margins: cnt*w is the one product that
         # outgrows int64 at scale (cnt <= 1e6/doc, |w| <= T*tokens)
         margins = (
             feats.join(F.broadcast(wdf), "bucket")
@@ -6037,11 +6035,11 @@ def _q223_train(spark: SparkSession, sf: str):
             .filter(F.col("y") * F.col("m") <= 0)
             .select("doc_id", "y")
         )
-        # NO broadcast hint on mis: in round 1 (all-zero weights) every
-        # doc is misclassified, so mis is the FULL corpus key set — a
-        # forced broadcast would ship it to every executor and cap out
-        # at scale; AQE picks broadcast when mis is genuinely small
-        # (round-15 review finding)
+        # NO broadcast hint on mis: in the first training pass (all-zero
+        # weights) every doc is misclassified, so mis is the FULL corpus
+        # key set — a forced broadcast would ship it to every executor
+        # and cap out at scale; AQE picks broadcast when mis is
+        # genuinely small
         upd = (
             feats.join(mis, "doc_id")
             .groupBy("bucket")
@@ -6075,7 +6073,7 @@ def _q223_train(spark: SparkSession, sf: str):
     tags=("text", "llm", "quality"),
 )
 def q223b(spark: SparkSession, sf: str) -> DataFrame:
-    """TRAIN-THEN-SERVE for the q223 classifier (round 15): the same
+    """TRAIN-THEN-SERVE for the q223 classifier: the same
     5-round perceptron trains, then the final weight vector SCORES
     the whole corpus in one broadcast-join pass and the per-language
     scorecard (docs, predicted-en, correct) comes off an integer
@@ -6083,7 +6081,7 @@ def q223b(spark: SparkSession, sf: str) -> DataFrame:
     runs after training (q177's DSIR and q179b's tokenizer follow
     the same train-offline/apply-online split). The margin sign is
     the classification; all arithmetic is exact (integer counts,
-    DECIMAL margins — the round-16 wrap fix), so the scorecard
+    DECIMAL margins, which cannot wrap), so the scorecard
     hash-matches the oracle that re-runs the identical unrolled
     training chain and scores with ITS final weights — training AND
     serving value-checked end to end in one contract.
@@ -6131,13 +6129,12 @@ def _wjac_tf(documents: DataFrame) -> DataFrame:
     """(doc_id, source, token, tf) — the ONE tokenization/counting home
     shared by q231 (exact) and q232 (sketch + verify). The q232
     precision-1.0 invariant depends on its verify arithmetic staying
-    byte-identical to q231's; a single source makes drift impossible
-    (round-15 review finding).
+    byte-identical to q231's; a single source makes drift impossible.
 
-    Materialized ONCE (round 16, guide §3.3): every consumer fans this
+    Materialized ONCE: every consumer fans this
     frame into 3-4 subtrees (pair sides a/b, per-doc totals, q232's
     source map) and each subtree otherwise replays the full corpus
-    explode + tf groupBy from the parquet scan — the audit counted 8
+    explode + tf groupBy from the parquet scan — 8
     documents scans in q232's plan, 4 in q231's. The aggregate output
     (ids + distinct tokens + counts, no text) is the smaller side of
     the explode, so one lineage cut replaces 3 corpus re-aggregations.
@@ -6244,11 +6241,10 @@ def _wjac_pairs(tf: DataFrame, cand: DataFrame | None = None) -> DataFrame:
         ORDER BY d1, d2
     """,
     tags=("dedup", "text", "llm"),
-    bench=True,  # round 17 (r16 verdict #7): basket rotation — the
-    # exact weighted-Jaccard blocked join.
+    bench=True,  # the exact weighted-Jaccard blocked join
 )
 def q231(spark: SparkSession, sf: str) -> DataFrame:
-    """WEIGHTED (tf) Jaccard near-dup pairs (round 15) — the
+    """WEIGHTED (tf) Jaccard near-dup pairs — the
     multiset upgrade to q26's set-Jaccard: J_w(A,B) =
     sum_t min(tf_A, tf_B) / sum_t max(tf_A, tf_B), the weighted
     Jaccard every production dedup weighs tokens by (a 10x-repeated
@@ -6303,19 +6299,19 @@ def cws_banded_projection(
     candidate count scoped at sf0.1 — the m^2 bucket bill the batch
     path's same-source join key avoids)."""
     toks = F.split("text", " ")
-    # (token, tf) entries via SORT + RUN-LENGTH boundaries (round-16
-    # ADVICE: the earlier per-distinct-token F.filter count was
-    # O(doc_len * distinct_tokens) per row — quadratic for long
-    # documents, undercutting the scan-side cost framing at ingest
-    # scale). array_sort is O(n log n); run starts are found with one
+    # (token, tf) entries via SORT + RUN-LENGTH boundaries (a
+    # per-distinct-token F.filter count is O(doc_len * distinct_tokens)
+    # per row — quadratic for long documents, undercutting the
+    # scan-side cost framing at ingest scale). array_sort is
+    # O(n log n); run starts are found with one
     # O(n) pass of O(1) element_at probes; tf = next start - start.
     # Entry ORDER differs from the old first-occurrence order, but the
     # signature takes array_min over the entries — order-invariant, so
     # emitted (band, bsig) rows are identical.
-    # Round 16 fix (the dedup.bind rule): the sorted token array and the
-    # run-start index array are BOUND once per row. The previous shape
-    # captured `srt` (an O(n log n) array_sort) inside the filter and
-    # zip_with lambdas, and Catalyst re-evaluates a captured
+    # The dedup.bind rule: the sorted token array and the run-start
+    # index array are BOUND once per row. A shape that captures
+    # `srt` (an O(n log n) array_sort) inside the filter and
+    # zip_with lambdas makes Catalyst re-evaluate the captured
     # subexpression PER ARRAY ELEMENT — the sort ran hundreds of times
     # per document (measured: the banded projection alone cost 26 s at
     # sf0.1/local[32]; ~1 s after binding). Same values, same entries.
@@ -6409,7 +6405,7 @@ def cws_banded_projection(
     tags=("dedup", "text", "llm", "approx"),
 )
 def q232(spark: SparkSession, sf: str) -> DataFrame:
-    """WEIGHTED-MinHash near-dup pairs (round 15) — the SKETCH twin of
+    """WEIGHTED-MinHash near-dup pairs — the SKETCH twin of
     q231's exact weighted Jaccard, exactly as q26b is to q26: ICWS
     signatures (`_cws_signature`) banded 8x2, candidates from ONE
     equi-join on (band, band-signature), then every candidate
@@ -6431,7 +6427,7 @@ def q232(spark: SparkSession, sf: str) -> DataFrame:
     (documents,) = load(spark, sf, "documents")
     tf = _wjac_tf(documents)
     src = tf.select("doc_id", "source").dropDuplicates(["doc_id"])
-    # Materialize the banded ICWS rows once (round 16, guide §3.3): the
+    # Materialize the banded ICWS rows once: the
     # candidate self-join below otherwise replays the 16-hash ICWS
     # argmin fold — the most expensive projection in the query — under
     # BOTH join sides. (doc_id, band, bsig, source) is ~32 B/row, so

@@ -11,10 +11,11 @@ Scale notes (100 TB target):
 - Micro-batches run with AQE off, so ``spark.sql.shuffle.partitions`` is
   the state partition count of a stateful query, and it equals the cores
   (at most ``shuffle_partitions``). Each trigger runs one task per state
-  partition, and each task costs tens of milliseconds of CPU however few
-  rows it has, much of it deserializing a closure that carries two Hadoop
-  configurations; one task per core makes a trigger one wave. A
-  checkpoint records the count it started with and keeps it on restart.
+  partition, and each task pays a fixed CPU cost however few rows it
+  has, much of it deserializing a closure that carries two copies of
+  the Hadoop configuration (see property sources below); one task per
+  core makes a trigger one wave. A checkpoint records the count it
+  started with and keeps it on restart.
   A ``foreachBatch`` body runs on the micro-batch's session, so its
   shuffles and writes on ``batch_df`` are one partition per core too.
 - Arrow enabled: every Python-side operator here is a Pandas UDF /
@@ -33,7 +34,23 @@ Scale notes (100 TB target):
   ``pyspark.zip``'s directory: most of a short Arrow kernel task's CPU.
   The daemon re-reads an archive only when it changed. The package's
   parent directory leads the executors' ``PYTHONPATH`` so the daemon (and
-  every UDF pickled by reference) imports from any driver cwd.
+  every UDF pickled by reference) imports from any driver cwd. Workers
+  run in the driver's cwd with ``PYTHONSAFEPATH`` set, and that cwd
+  follows the package's parent on ``PYTHONPATH``: a cwd inside another
+  checkout cannot shadow the package, and modules in it still import.
+- Sessions from ``get_spark`` keep no property sources in their Hadoop
+  configuration. Hadoop's ``Configuration`` records, per key, the
+  resources that set it (``core-default.xml``, ...), and its ``write``
+  wraps each key's list in its own GZIP stream. Every conf a trigger
+  ships (the file sink's write job and stats tracker, the file-scan and
+  state-store broadcasts) is a copy of the session's, so each copy cost
+  about 1,100 Deflater and Inflater set-ups and 40% of its bytes.
+  ``get_spark`` registers and loads every default resource (one
+  registered later would reload the conf, sources and all), then
+  empties that map; every key and value stays, and
+  ``getPropertySources`` returns ``None``, as Hadoop allows and Spark
+  handles. Sessions passed in through ``configure_runtime`` keep their
+  sources.
 - Local sessions put ``jvm/NioLocalFileSystem.jar`` on the driver class
   path and serve ``file:`` with its class: Hadoop's ``LocalFileSystem``
   whose ``setPermission`` calls ``chmod(2)`` through ``java.nio``. Without
@@ -59,6 +76,7 @@ from __future__ import annotations
 import os
 import re
 
+from py4j.protocol import Py4JError
 from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
@@ -142,9 +160,12 @@ def get_spark(
     extra_conf["spark.driver.extraClassPath"] = class_path
     # The daemon and UDFs pickled by reference import kstreamjs_spark in
     # the worker; workers run in the driver's cwd, so without this a
-    # driver started outside the repo fails every Python UDF.
+    # driver started outside the repo fails every Python UDF. `python -m`
+    # would put that cwd first on sys.path, where another checkout's
+    # package shadows ours, so it goes after ours instead.
+    extra_conf.setdefault("spark.executorEnv.PYTHONSAFEPATH", "1")
     extra_conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
-        filter(None, [_PACKAGE_PARENT, extra_conf.get("spark.executorEnv.PYTHONPATH")])
+        filter(None, [_PACKAGE_PARENT, extra_conf.get("spark.executorEnv.PYTHONPATH"), os.getcwd()])
     )
     # JVM options apply only when this call launches the JVM, and the
     # caller's own archive or -Xshare options win.
@@ -164,8 +185,41 @@ def get_spark(
     spark = builder.getOrCreate()
     if claim is not None:
         cds.started(spark, claim)
+    _drop_property_sources(spark)
     configure_runtime(spark)
     return spark
+
+
+def _drop_property_sources(spark: SparkSession) -> None:
+    """Empty the per-key source map of the session's Hadoop conf (see the
+    module docstring); keys and values stay as they are. A Hadoop without
+    these classes or the private field keeps its sources."""
+    jvm, conf = spark._jvm, spark._jsc.hadoopConfiguration()
+    try:
+        # A default resource registered later reloads the conf and its
+        # sources, so register the HDFS, MapReduce and YARN ones first.
+        jvm.org.apache.hadoop.hdfs.HdfsConfiguration.init()
+        jvm.org.apache.hadoop.mapreduce.util.ConfigUtil.loadResources()
+        conf.size()  # loads every default resource
+        field = conf.getClass().getDeclaredField("updatingResource")
+    except Py4JError:
+        return
+    field.setAccessible(True)
+    field.set(conf, jvm.java.util.concurrent.ConcurrentHashMap())
+
+
+def hadoop_conf_bytes(spark: SparkSession, conf=None) -> int:
+    """Bytes of ``conf`` serialized as Spark ships it, in a
+    ``SerializableConfiguration``. The default is the conf the session's
+    next query derives (``sessionState().newHadoopConf()``)."""
+    jvm = spark._jvm
+    if conf is None:
+        conf = spark._jsparkSession.sessionState().newHadoopConf()
+    buf = jvm.java.io.ByteArrayOutputStream()
+    out = jvm.java.io.ObjectOutputStream(buf)
+    out.writeObject(jvm.org.apache.spark.util.SerializableConfiguration(conf))
+    out.close()
+    return buf.size()
 
 
 def configure_runtime(spark: SparkSession) -> None:

@@ -17,6 +17,9 @@ After the session stops, prints one JSON line per argument:
   `build_s` holds.
 - `reused_exchanges`, `parquet_scans`: counts in the post-execution plan.
 - `stream_batches`: micro-batches the query's streaming queries ran.
+- `hadoop_conf_bytes`: serialized size of the Hadoop conf the session's
+  next query ships (`session.hadoop_conf_bytes`), read after the timed
+  run, so a query that brings back the conf's property sources shows.
 - every field of `perfbench/layers.py:spark_layers` (jobs, stages, tasks,
   task run and CPU time, driver gap, shuffle bytes, GC, ...), read from
   Spark's event log.
@@ -36,7 +39,7 @@ sys.path.insert(0, ROOT)
 
 from kstreamjs_spark.plans import explain_str  # noqa: E402
 from kstreamjs_spark.queries import all_queries  # noqa: E402
-from kstreamjs_spark.session import DEFAULT_SF_DIR, get_spark  # noqa: E402
+from kstreamjs_spark.session import DEFAULT_SF_DIR, get_spark, hadoop_conf_bytes  # noqa: E402
 from perfbench.layers import read_event_log, spark_layers  # noqa: E402
 
 # A local property the stream execution thread inherits from the driver
@@ -111,12 +114,12 @@ def main(names: list[str]) -> int:
             t2 = time.perf_counter()
             enter(f"plan:{tag}", name)
             plan = explain_str(df)
-            runs.append((name, tag, t0, t1, t2, plan))
+            runs.append((name, tag, t0, t1, t2, plan, hadoop_conf_bytes(spark)))
         spark.stop()
         events = read_event_log(log_dir)
     finally:
         shutil.rmtree(log_dir, ignore_errors=True)
-    for name, tag, t0, t1, t2, plan in runs:
+    for name, tag, t0, t1, t2, plan, conf_bytes in runs:
         build, collect = f"build:{tag}", f"collect:{tag}"
         groups = span_groups(events, {build, collect})
         row = {
@@ -133,6 +136,7 @@ def main(names: list[str]) -> int:
             "reused_exchanges": plan.count("ReusedExchange"),
             "parquet_scans": plan.count("Scan parquet"),
             "stream_batches": stream_batches(events, groups),
+            "hadoop_conf_bytes": conf_bytes,
         }
         row |= spark_layers(events, groups, cpus, t2 - t0)
         row = {k: round(v, 3) if isinstance(v, float) else v for k, v in row.items()}

@@ -1,6 +1,6 @@
 """Source hygiene. A comment states a rule and its reason; how the rule
 came about belongs in git history. Every module of the package must be
-clear of such history notes, except those in ``NOT_YET_CLEARED``."""
+clear of such history notes."""
 
 from __future__ import annotations
 
@@ -17,12 +17,7 @@ HISTORY_NOTE = re.compile(
     rf"(?i:\bround{_GAP}\d+|\br\d+{_GAP}verdict|review{_GAP}(?:finding|fix)\b)"
     r"|verdict #|\bADVICE\b"
 )
-NOT_YET_CLEARED = {"queries/llm.py"}
-MODULES = sorted(
-    rel
-    for rel in (p.relative_to(PACKAGE).as_posix() for p in PACKAGE.rglob("*.py"))
-    if rel not in NOT_YET_CLEARED
-)
+MODULES = sorted(p.relative_to(PACKAGE).as_posix() for p in PACKAGE.rglob("*.py"))
 
 
 def history_notes(text: str) -> list[tuple[int, str]]:

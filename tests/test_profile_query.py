@@ -45,6 +45,9 @@ def test_profile_query_reports_every_layer(rows):
         # with SPARK_GRAFT_CPUS unset, the session uses every CPU it may
         assert r["cpus"] == len(os.sched_getaffinity(0))
         assert r["session_start_s"] == rows[0]["session_start_s"] > 0
+        # the session's Hadoop conf ships without property sources: about
+        # 70 KB, where its copy with sources takes about 113 KB
+        assert 0 < r["hadoop_conf_bytes"] < 90_000
 
     q56a, q56b = rows[1], rows[2]
     # q56's iterative loop checkpoints eagerly: jobs run while building

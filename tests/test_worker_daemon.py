@@ -6,9 +6,7 @@ from __future__ import annotations
 
 import importlib
 import os
-import subprocess
 import sys
-import textwrap
 import zipfile
 import zipimport
 
@@ -16,7 +14,7 @@ import pytest
 
 from kstreamjs_spark import worker_daemon
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from .test_local_fs import REPO, run_driver
 
 
 @pytest.fixture
@@ -107,31 +105,31 @@ def test_get_spark_workers_run_the_wrapper(spark):
 
 
 def test_python_udf_runs_from_outside_the_repo(tmp_path):
-    script = textwrap.dedent(f"""
+    """A driver whose cwd is outside the repo, and holds another
+    ``kstreamjs_spark`` (as inside another checkout), runs its workers on
+    its own package, and a UDF still imports a module from that cwd by
+    reference."""
+    decoy = tmp_path / "kstreamjs_spark"
+    decoy.mkdir()
+    (decoy / "__init__.py").write_text('raise ImportError("decoy package imported")\n')
+    (tmp_path / "localmod.py").write_text("def double(v):\n    return v * 2\n")
+    # PYTHONPATH would reach the workers through the JVM's environment
+    # and hide a missing executor path, so the driver finds the package
+    # through sys.path alone.
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    run_driver(f"""
         import sys
         sys.path.insert(0, {REPO!r})
         import pandas as pd
+        import localmod
         from kstreamjs_spark.session import get_spark
 
         def double(batches):
             for pdf in batches:
-                yield pd.DataFrame({{"v": pdf["id"] * 2}})
+                yield pd.DataFrame({{"v": localmod.double(pdf["id"])}})
 
         spark = get_spark("worker-daemon-cwd", cpus=1)
         rows = spark.range(21, 22).mapInPandas(double, "v long").collect()
         spark.stop()
         assert [r.v for r in rows] == [42], rows
-    """)
-    # PYTHONPATH would reach the workers through the JVM's environment
-    # and hide a missing executor path, so the driver finds the package
-    # through sys.path alone.
-    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    res = subprocess.run(
-        [sys.executable, "-c", script],
-        cwd=tmp_path,
-        env=env,
-        capture_output=True,
-        text=True,
-        timeout=600,
-    )
-    assert res.returncode == 0, res.stderr[-3000:]
+    """, tmp_path, env)
