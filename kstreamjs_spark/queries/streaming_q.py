@@ -1767,10 +1767,10 @@ def minhash_candidate_stream(
 ) -> DataFrame:
     """The shipped q205 pipeline as a reusable streaming transform
     (one code home — the schedule-invariance pytest drives THIS, not a
-    private copy): band each arriving doc through `minhash_bands`,
-    keep per-(band, bsig) member ids in GroupState, emit candidate
-    pairs the moment the later member lands. Callers dedupe the
-    cross-band emissions with a final distinct."""
+    private copy): band each arriving doc through `minhash_bands` and
+    self-join the banded stream on (band, bsig) (`bucket_pair_stream`),
+    so a candidate pair is emitted the moment its later member lands.
+    Callers dedupe the cross-band emissions with a final distinct."""
     return bucket_pair_stream(
         minhash_banded_projection(sdf, num_perm, bands, n, seed)
     )
@@ -1807,8 +1807,8 @@ def minhash_banded_projection(
     # perms) signature fold otherwise runs on one core per trigger. The
     # repartition moves only (doc_id, text) rows and is keyed by id, so
     # it is valid on the streaming side too (plain exchange, no state);
-    # the downstream stateful grouping re-shuffles by state key as
-    # before. Measured: q205b stream-projection stage 3.2 s -> sub-1 s.
+    # the downstream bucket join re-shuffles by (band, bsig).
+    # Measured: q205b stream-projection stage 3.2 s -> sub-1 s.
     # The permutation fold runs in the Arrow-batched numpy kernel
     # (minhash_signature_frame, bit-identical by the equality pytest)
     # instead of the interpreted higher-order-function expression;
@@ -1836,200 +1836,35 @@ def minhash_banded_projection(
     )
 
 
-def bucket_pair_stream(
-    banded: DataFrame,
-    ttl_ms: int | None = None,
-    n_state_keys: int = 4096,
-) -> DataFrame:
-    """Generic streaming bucket-collision pair emitter — the stateful
-    core shared by q205 (MinHash text buckets) and q214b (SRP
-    embedding buckets): ``banded`` is an unbounded (doc_id, band,
-    bsig) frame; each (band, bsig) bucket's state holds the ids seen
-    so far (set semantics, arrival-order-free) and every new member
-    emits a normalized (min, max) pair against every earlier member
-    the moment it lands, plus same-trigger pairs once via the larger
-    id. Callers collapse cross-band duplicates with a final distinct.
+def bucket_pair_stream(banded: DataFrame) -> DataFrame:
+    """Bucket-collision pairs of an unbounded (doc_id, band, bsig)
+    frame: every (d1, d2) with d1 < d2 that share a (band, bsig)
+    bucket, emitted the moment the later member lands. The shared
+    candidate emitter of q205/q205b (MinHash text buckets), q214b (SRP
+    embedding buckets) and q232b (weighted-MinHash buckets); a pair
+    that collides in several bands is emitted once per band, and
+    callers collapse those duplicates with a final distinct.
 
-    BOUNDED STATE-KEY SPACE:
-    grouping the state by raw (band, bsig) made the per-trigger Python
-    group count track bucket CARDINALITY — ~77k groups x ~55 µs of
-    Arrow-slice + pandas-frame + state-commit overhead per sf0.1
-    replay, 4.2 s of q205b's 10.6 s bill, and linear in arrivals x
-    bands at ingest scale. The state key is now
-    ``pmod(xxhash64(band, bsig), n_state_keys)`` and each GroupState
-    value is a dict of that slot's buckets ({"band\x1fbsig":
-    members}); a trigger invokes AT MOST ``n_state_keys`` Python
-    groups no matter how many buckets exist, and the per-bucket
-    pairing inside a slot is a vectorized pandas groupby. Pair
-    semantics are UNCHANGED — pairs only ever form within one
-    (band, bsig) bucket; slot co-residency is storage, not semantics
-    (pinned by the descending-id schedule pytests, which must stay
-    green against the batch equi-join). State stays set-pure, so
-    micro-batch schedule still cannot change the emitted set.
-    CHECKPOINT BREAK: the grouping key and state layout both changed —
-    a checkpoint from the earlier layout cannot resume onto this
-    operator (the
-    window-collect precedent: restart from a fresh checkpoint or
-    replay the source).
+    It is a stream-stream inner equi-join of ``banded`` with itself on
+    (band, bsig). The symmetric hash join emits each matching row pair
+    exactly once, across triggers and within one, so the emitted pair
+    set equals the batch band equi-join for every trigger schedule,
+    whatever order the ids arrive in. Both join sides are the same
+    projection, so the micro-batch plan reuses one exchange of it and
+    the banding kernel runs once per trigger.
 
-    ``ttl_ms`` (opt-in — default None keeps the EXACT mode
-    q205/q205b/q214b ship with): bounded-state eviction in the
-    `dropDuplicatesWithinWatermark` spirit for long-lived ingest
-    services. When set, each bucket carries its own eviction deadline
-    INSIDE the slot dict ({token: [deadline_ms, members]}): a bucket
-    that has received NO arrival — new member or duplicate — for
-    ``ttl_ms`` of PROCESSING time is dropped from its slot, lazily on
-    the slot's next touch and eagerly when the slot's
-    ProcessingTimeTimeout fires (armed to the slot's EARLIEST bucket
-    deadline); an empty slot removes its state row. The clock
-    refreshes on EVERY arrival, duplicates included: Spark clears a
-    group's registered timeout each time the update function is
-    invoked for it, so the duplicate-only path must re-arm or the
-    slot's eviction timer is silently cancelled forever (pinned by
-    the duplicate-fed bucket in the eviction pytest);
-    semantically a duplicate-fed bucket is hot — keeping it is exactly
-    what preserves its dedup recall. The trade, stated plainly:
-
-    - RECALL: a duplicate arriving after its bucket partners were
-      evicted re-seeds an empty bucket — the (late, evicted) pair is
-      NEVER emitted. TTL mode misses arbitrarily-late duplicates by
-      construction; size ttl to the ingest service's dedup horizon.
-    - NO RETRACTION: pairs already emitted stay emitted (append mode
-      is monotone); eviction only forgoes FUTURE pairs, so downstream
-      consumers never see a take-back.
-    - EXACTNESS: with ttl_ms=None the emitted pair set equals the
-      batch equi-join for any schedule (the pytest-pinned contract);
-      with a TTL it is a subset, equal whenever every duplicate
-      arrives within the TTL of its partners.
-
-    The adversarial eviction pytest pins numRowsRemoved > 0, the
-    exact cross-eviction pair loss (the q167b pattern), and a full
-    state drain (numRowsTotal -> 0) with a duplicate-fed bucket in
-    the schedule.
-
-    Operational note: with a TTL the micro-batch engine keeps running
-    no-data batches to poll processing-time timers even when the
-    source is idle — `processAllAvailable()` therefore never returns
-    on an exhausted replay; production queries don't care (they are
-    long-running by definition), but test/replay harnesses must poll
-    progress and stop explicitly (see the eviction pytest)."""
-    import json as _json
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    sep = "\x1f"
-
-    def _emit(seen: set, new_ids: list, d1s: list, d2s: list) -> None:
-        # old-new pairs: every new id against EVERY existing member,
-        # normalized (min, max) — a new arrival may carry a SMALLER id
-        # than an old member (nothing orders ingest by doc id), so
-        # pairing only new-as-larger would lose (new_small, old_large)
-        # forever: the old larger id never becomes "new" again. seen
-        # and new_ids are disjoint by construction, so no self-pairs.
-        old = sorted(seen)
-        for b in new_ids:
-            for a in old:
-                if a < b:
-                    d1s.append(a)
-                    d2s.append(b)
-                else:
-                    d1s.append(b)
-                    d2s.append(a)
-        # new-new pairs exactly once: the larger new id is the outer b
-        for i, b in enumerate(new_ids):
-            for a in new_ids[:i]:
-                d1s.append(a)
-                d2s.append(b)
-
-    def update(key, pdfs, state: GroupState):
-        st = _json.loads(state.get[0]) if state.exists else {}
-        if ttl_ms is not None:
-            now = state.getCurrentProcessingTimeMs()
-            if state.hasTimedOut:
-                # the slot's earliest deadline lapsed: drop every
-                # expired bucket; an emptied slot leaves state whole
-                st = {t: v for t, v in st.items() if v[0] > now}
-                if not st:
-                    state.remove()
-                else:
-                    state.update((_json.dumps(st),))
-                    state.setTimeoutDuration(
-                        max(1, min(v[0] for v in st.values()) - now)
-                    )
-                return
-            # lazy eviction on touch: a bucket past its deadline is
-            # gone even if the slot's timer (set to the MIN deadline)
-            # has not fired for it yet — per-bucket TTL semantics are
-            # independent of slot co-residency
-            live = {t: v for t, v in st.items() if v[0] > now}
-            changed = len(live) != len(st)
-            st = live
-        else:
-            changed = False
-        d1s, d2s = [], []
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            pdf = (
-                chunks[0]
-                if len(chunks) == 1
-                else pd.concat(chunks, ignore_index=True)
-            )
-            # group on the raw columns (no per-row string build); the
-            # state-dict token is built once per bucket group
-            for (band, bsig), ids in pdf.groupby(
-                ["band", "bsig"], sort=True
-            )["doc_id"]:
-                token = f"{band}{sep}{bsig}"
-                ent = st.get(token)
-                members = (
-                    []
-                    if ent is None
-                    else (ent[1] if ttl_ms is not None else ent)
-                )
-                seen = set(members)
-                new_ids = sorted(
-                    {int(d) for d in ids if int(d) not in seen}
-                )
-                if ttl_ms is not None:
-                    # keep-alive on every arrival, duplicates included
-                    st[token] = [
-                        now + ttl_ms,
-                        sorted(seen | set(new_ids)),
-                    ]
-                    changed = True
-                elif new_ids:
-                    st[token] = sorted(seen | set(new_ids))
-                    changed = True
-                if new_ids:
-                    _emit(seen, new_ids, d1s, d2s)
-        # the write + re-arm sit OUTSIDE the data block: Spark cleared
-        # this slot's timeout when it invoked us, so even a no-new-row
-        # touch must re-arm or the slot's eviction timer dies
-        if changed:
-            if st:
-                state.update((_json.dumps(st),))
-            elif state.exists:
-                state.remove()
-        if ttl_ms is not None and st:
-            state.setTimeoutDuration(
-                max(1, min(v[0] for v in st.values()) - now)
-            )
-        if d1s:
-            yield pd.DataFrame({"d1": d1s, "d2": d2s})
-
-    keyed = banded.withColumn(
-        "skey", F.pmod(F.xxhash64("band", "bsig"), F.lit(n_state_keys))
-    )
-    return keyed.groupBy("skey").applyInPandasWithState(
-        update,
-        outputStructType="d1 long, d2 long",
-        stateStructType="buckets string",
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if ttl_ms is None
-            else GroupStateTimeout.ProcessingTimeTimeout
-        ),
+    - State holds one row per delivered (doc, band) on each side: a
+      re-delivered doc adds rows (and re-emits its pairs) rather than
+      being folded into a member set.
+    - State is unbounded; there is no eviction.
+    - A checkpoint written by the earlier GroupState emitter cannot
+      resume onto this operator and needs a state reset."""
+    left = banded.withColumnRenamed("doc_id", "d1")
+    right = banded.withColumnRenamed("doc_id", "d2")
+    return (
+        left.join(right, ["band", "bsig"])
+        .where("d1 < d2")
+        .select("d1", "d2")
     )
 
 
@@ -2045,23 +1880,22 @@ def q205(spark: SparkSession, sf: str) -> DataFrame:
     the text analog of q165's streaming perceptual dedup and the
     missing production shape next to batch q26b: every arriving
     document's MinHash signature bands into 16 bucket keys (the SAME
-    `minhash_bands` home the batch equi-join uses), each (band, bsig)
-    bucket's GroupState holds the doc ids seen so far, and a new
-    arrival emits a candidate pair against every earlier member of its
-    bucket THE MOMENT it lands — plus pairs among same-trigger
-    arrivals, emitted once by the larger id. Cross-band duplicate
-    emissions collapse in the final distinct, so the emitted pair SET
-    equals batch `_lsh_candidate_pairs` EXACTLY regardless of arrival
-    grouping (set semantics: bucket membership is arrival-order-free) —
-    the hard equality APPROX_EVIDENCE records at both SFs and pytest
+    `minhash_bands` home the batch equi-join uses), and a stream-stream
+    self-join on (band, bsig) emits a candidate pair against every
+    earlier member of its bucket THE MOMENT it lands, and each pair
+    among same-trigger arrivals once. Cross-band duplicate emissions
+    collapse in the final distinct, so the emitted pair SET equals
+    batch `_lsh_candidate_pairs` EXACTLY regardless of arrival grouping
+    — the hard equality APPROX_EVIDENCE records at both SFs and pytest
     pins across micro-batch schedules.
 
     Scale shape: signatures and banding are scan projections on the
-    unbounded frame; state per bucket is its member-id list — the SAME
-    Sum(bucket^2) candidate bill the batch join pays, bounded by band
-    selectivity (16 of 64 perms per key); the emission exchange
-    carries only (d1, d2) longs. Rows-only by design (the q26b
-    category: Spark-hash-based banding has no SQL restatement)."""
+    unbounded frame; join state holds one (doc, band) row per side —
+    the SAME Sum(bucket^2) candidate bill the batch join pays, bounded
+    by band selectivity (16 of 64 perms per key); both join sides read
+    one exchange of the (doc_id, band, bsig) rows. Rows-only by design
+    (the q26b category: Spark-hash-based banding has no SQL
+    restatement)."""
     sdf = stream_table(spark, sf, "documents")
     pairs = minhash_candidate_stream(sdf)
     sink = run_to_memory(pairs, "q205", output_mode="append")
@@ -2080,7 +1914,7 @@ def minhash_verified_stream(
     """END-TO-END streaming near-dup dedup: q205's candidate emission
     extended with IN-STREAM exact-Jaccard verification and a keep/drop
     decision, all inside the one streaming plan. Candidates from the
-    stateful banded index (`minhash_candidate_stream`, one code home)
+    banded self-join (`minhash_candidate_stream`, one code home)
     stream-static join back to the corpus store's per-doc shingle
     arrays (two equi-joins on the doc id — the q63 enrichment shape),
     true n-gram Jaccard is intersected expression-side, sub-threshold
@@ -2165,13 +1999,13 @@ def q205b(spark: SparkSession, sf: str) -> DataFrame:
     3-gram Jaccard via stream-static shingle join) and DECIDES
     (drop_id = larger member, the q110 min-id-keeper policy) before
     anything reaches the sink. Because streamed candidates equal batch
-    `_lsh_candidate_pairs` for any schedule (set-semantics state,
-    pinned in pytest) and the verify expressions are the SAME ones
-    `minhash_verified_pairs` uses, the streamed verified set equals
-    the batch q26d result exactly — which on this corpus equals the
-    full unblocked pairwise exact-Jaccard >= 0.5 set (100% recall at
-    the operating point), so this entry is HASH-checked against the
-    same closed-form SQL oracle as q26d, not rows-only."""
+    `_lsh_candidate_pairs` for any schedule (the join emits every
+    bucket pair once, pinned in pytest) and the verify expressions are
+    the SAME ones `minhash_verified_pairs` uses, the streamed verified
+    set equals the batch q26d result exactly — which on this corpus
+    equals the full unblocked pairwise exact-Jaccard >= 0.5 set (100%
+    recall at the operating point), so this entry is HASH-checked
+    against the same closed-form SQL oracle as q26d, not rows-only."""
     sdf = stream_table(spark, sf, "documents")
     (corpus,) = load(spark, sf, "documents")
     verified = minhash_verified_stream(sdf, corpus)
@@ -3741,6 +3575,48 @@ def q213d(spark: SparkSession, sf: str) -> DataFrame:
 
 
 # ------ Q214b STREAMING embedding near-dup — verify + decide at ingest
+def cosine_verified_stream(
+    sdf: DataFrame, vectors: DataFrame, threshold: float
+) -> DataFrame:
+    """Embedding near-dup pairs among the arriving (vec_id, embedding)
+    rows of ``sdf``, verified and decided in-stream: SRP band
+    collisions (`srp_banded_buckets` into `bucket_pair_stream`)
+    stream-static join back to the vector store ``vectors``, TRUE
+    cosine >= ``threshold`` keeps a pair, and each kept pair carries
+    drop_id = its larger id. The streaming twin of batch
+    `cosine_neardup_pairs_lsh`; callers collapse cross-band duplicate
+    emissions with a final distinct."""
+    from ..operators.dedup import spread
+    from ..operators.similarity import as_double, cosine, srp_banded_buckets
+    from ..plans import materialize_once
+
+    banded = srp_banded_buckets(
+        sdf, caller="q214b_stream_cosine_neardup"
+    ).withColumnRenamed("vec_id", "doc_id")
+    cand = bucket_pair_stream(banded).select(
+        F.col("d1").alias("v1"), F.col("d2").alias("v2")
+    )
+    # q205b's rationale: the static vector store feeds BOTH verify-join
+    # sides and a stream-static join replays its static subtree every
+    # micro-batch — cast + scan once, checkpoint, derive both sides
+    # (guide §3.3 duplicated subtrees).
+    e = materialize_once(
+        spread(vectors, "vec_id").select(
+            "vec_id", as_double(F.col("embedding")).alias("v")
+        ),
+        eager=False,
+    )
+    s1 = e.select(F.col("vec_id").alias("v1"), F.col("v").alias("va"))
+    s2 = e.select(F.col("vec_id").alias("v2"), F.col("v").alias("vb"))
+    score = F.round(cosine(F.col("va"), F.col("vb")), 6)
+    return (
+        cand.join(s1, "v1").join(s2, "v2")
+        .withColumn("score", score)
+        .filter(F.col("score") >= threshold)
+        .select("v1", "v2", "score", F.col("v2").alias("drop_id"))
+    )
+
+
 @query(
     "q214b_stream_embedding_neardup",
     oracle=None,  # q214's category; hard streaming==batch equality
@@ -3754,51 +3630,19 @@ def q214b(spark: SparkSession, sf: str) -> DataFrame:
     matrix (text candidates+verified, perceptual image+audio, now
     semantic): every arriving vector's banded SRP signature (the ONE
     `srp_banded_buckets` home the batch pair join uses) keys the
-    generic `bucket_pair_stream` state, collision pairs stream-static
+    generic `bucket_pair_stream` self-join, collision pairs stream-static
     join back to the vector store, TRUE cosine verifies in-stream, and
     survivors carry the drop decision (larger id — the q110 keeper
-    policy). Set-semantics state makes the emitted pair set equal the
+    policy). The join makes the emitted pair set equal the
     batch equi-join for ANY arrival schedule, so the verified output
     equals batch `cosine_neardup_pairs_lsh` exactly — the hard
     equality APPROX_EVIDENCE records at both SFs and pytest pins
     across schedules including descending ids."""
-    from ..operators.similarity import (
-        as_double,
-        cosine,
-        srp_banded_buckets,
-    )
     from .llm import _Q214_THRESHOLD
 
     (emb,) = load(spark, sf, "embeddings")
     sdf = stream_table(spark, sf, "embeddings")
-    banded = srp_banded_buckets(
-        sdf, caller="q214b_stream_cosine_neardup"
-    ).withColumnRenamed("vec_id", "doc_id")
-    cand = bucket_pair_stream(banded).select(
-        F.col("d1").alias("v1"), F.col("d2").alias("v2")
-    )
-    # q205b's rationale: the static vector store feeds BOTH verify-join
-    # sides and a stream-static join replays its static subtree every
-    # micro-batch — cast + scan once, checkpoint, derive both sides
-    # (guide §3.3 duplicated subtrees).
-    from ..operators.dedup import spread
-    from ..plans import materialize_once
-
-    e = materialize_once(
-        spread(emb, "vec_id").select(
-            "vec_id", as_double(F.col("embedding")).alias("v")
-        ),
-        eager=False,
-    )
-    s1 = e.select(F.col("vec_id").alias("v1"), F.col("v").alias("va"))
-    s2 = e.select(F.col("vec_id").alias("v2"), F.col("v").alias("vb"))
-    joined = cand.join(s1, "v1").join(s2, "v2")
-    score = F.round(cosine(F.col("va"), F.col("vb")), 6)
-    verified = (
-        joined.withColumn("score", score)
-        .filter(F.col("score") >= _Q214_THRESHOLD)
-        .select("v1", "v2", "score", F.col("v2").alias("drop_id"))
-    )
+    verified = cosine_verified_stream(sdf, emb, _Q214_THRESHOLD)
     sink = run_to_memory(verified, "q214b", output_mode="append")
     return sink.distinct().orderBy("v1", "v2")
 
@@ -4499,8 +4343,8 @@ def q232b(spark: SparkSession, sf: str) -> DataFrame:
     projects its ICWS band signatures scan-side
     (`cws_banded_projection` — the one home shared with batch q232;
     per-row (token, tf) entries from the row's own array, no shuffle,
-    streaming-safe), the shared stateful bucket emitter
-    (`bucket_pair_stream`, the bounded-state-key operator) turns
+    streaming-safe), the shared bucket emitter
+    (`bucket_pair_stream`, a stream-stream self-join) turns
     band collisions into candidate pairs the moment the second
     member lands, and a batch post-pass EXACT-verifies the collected
     candidates with q231's `_wjac_pairs` arithmetic restricted to

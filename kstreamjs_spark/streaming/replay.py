@@ -23,6 +23,9 @@ from pyspark.sql import DataFrame, SparkSession
 from ..session import configure_runtime
 from ..tables import fix_event_time
 
+#: Seconds an AvailableNow drain may run before it is stopped.
+DRAIN_TIMEOUT_S = 600
+
 
 def stream_table(
     spark: SparkSession,
@@ -49,9 +52,25 @@ def stream_table(
     return fix_event_time(reader.parquet(sf_dir))
 
 
+def _drain(writer, name: str) -> str:
+    """Start ``writer`` as an AvailableNow query named
+    ``<name>_<8 hex digits>`` and wait for it to finish; returns the
+    query name. A query still running after ``DRAIN_TIMEOUT_S`` is
+    stopped and raises TimeoutError: a wedged micro-batch otherwise
+    hangs the caller (and any correctness harness above it) forever."""
+    qname = f"{name}_{uuid.uuid4().hex[:8]}"
+    q = writer.queryName(qname).trigger(availableNow=True).start()
+    if not q.awaitTermination(DRAIN_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {qname!r} did not finish within"
+            f" {DRAIN_TIMEOUT_S}s"
+        )
+    return qname
+
+
 def run_to_memory(
-    sdf: DataFrame, name: str, output_mode: str = "append",
-    timeout_s: int = 600,
+    sdf: DataFrame, name: str, output_mode: str = "append"
 ) -> DataFrame:
     """Execute a streaming DataFrame to completion (AvailableNow) into a
     memory sink; returns the sink's rows as a batch DataFrame.
@@ -59,29 +78,17 @@ def run_to_memory(
     Memory sink is a test/driver harness device — production sinks are the
     kafka/parquet writers in sources/. Complete mode is used for open-ended
     aggregations (the stream ends, so append-mode watermark semantics would
-    hold back the final windows). ``timeout_s`` bounds the wait: a wedged
-    micro-batch otherwise hangs the caller (and any correctness harness
-    above it) forever — on expiry the query is stopped and the failure is
-    a clear TimeoutError, not a silent stall.
+    hold back the final windows). A drain longer than
+    ``DRAIN_TIMEOUT_S`` stops the query and raises TimeoutError.
 
     The sink is registered as the temp view ``<name>_<8 hex digits>``.
     The returned frame is analysed before the view is dropped, so it
     reads the sink itself, and the sink's rows live only as long as the
     frame does."""
     spark = sdf.sparkSession
-    qname = f"{name}_{uuid.uuid4().hex[:8]}"
-    q = (
-        sdf.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+    qname = _drain(
+        sdf.writeStream.format("memory").outputMode(output_mode), name
     )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"streaming query {qname!r} did not finish within {timeout_s}s"
-        )
     rows = spark.table(qname)
     spark.catalog.dropTempView(qname)
     return rows
@@ -139,23 +146,10 @@ def keyed_fold(sdf: DataFrame, key: str, init, step, name: str) -> DataFrame:
     )
 
 
-def run_foreach_batch(
-    sdf: DataFrame, fn, name: str, timeout_s: int = 600,
-) -> None:
+def run_foreach_batch(sdf: DataFrame, fn, name: str) -> None:
     """Execute a streaming DataFrame to completion (AvailableNow)
     through a ``foreachBatch`` sink — the production shape for sinks
     the streaming writer cannot express natively (partitioned lakehouse
     writes, MERGE upserts, multi-table fan-out). Same timeout contract
     as :func:`run_to_memory`."""
-    qname = f"{name}_{uuid.uuid4().hex[:8]}"
-    q = (
-        sdf.writeStream.foreachBatch(fn)
-        .queryName(qname)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"streaming query {qname!r} did not finish within {timeout_s}s"
-        )
+    _drain(sdf.writeStream.foreachBatch(fn), name)

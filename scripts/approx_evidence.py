@@ -2,8 +2,8 @@
 queries — the ones the driver's oracle gate cannot hash-match (q24b,
 q26b, q26c, q27b, q42, q50, q159, q180, q180b, q181, q181b, q191,
 q191b, q192, q192b, q194, q195, q205, q212, q212b, q214, q214b, and
-q163 — whose ratio bands + byte accounting are recorded here since
-round 15, closing the one pytest-only asymmetry — plus graph-recall
+q163 — whose ratio bands + byte accounting are recorded here so that
+no rows-only query's evidence lives only in pytest — plus graph-recall
 rows for the hash-matched q218/q219: their COMPUTATION is exact, the
 graph/walk they produce is the approximation). Each is measured
 against its EXACT
@@ -110,10 +110,10 @@ def main() -> int:
         }
     out["q26b_minhash_neardup"]["banding_curve"] = banding
 
-    # ---- q26c: simhash recall vs the exact Jaccard pair set. Round 11:
-    # the 2-of-8-chunk combination pigeonhole (radius 6) replaced the
-    # radius-3 geometry whose 0.6 recall was the family's floor — the
-    # fixture's true pairs reach SimHash distance 5. The surplus pairs
+    # ---- q26c: simhash recall vs the exact Jaccard pair set. The
+    # 2-of-8-chunk combination pigeonhole reaches radius 6; a radius-3
+    # geometry recalls only 0.6, since the fixture's true pairs reach
+    # SimHash distance 5. The surplus pairs
     # are TRUE hamming<=6 pairs (the operator is exact for its own
     # metric, brute-force-pinned in pytest); like q26b's candidates
     # they feed an exact-Jaccard verify when the downstream needs the
@@ -170,7 +170,7 @@ def main() -> int:
         "pair_recall_vs_exact_sf0.1": _knn_overlap("/root/testdata/sf0.1"),
     }
 
-    # ---- q159 on a CLUSTERED corpus (r9 verdict #7): the synthetic
+    # ---- q159 on a CLUSTERED corpus: the synthetic
     # embeddings are near-uniform — sign-LSH's honest WORST case, where
     # the ~0.5 candidate fraction tracks the decade exponent. A real
     # embedding corpus is clustered and duplicate-heavy, the geometry
@@ -229,7 +229,7 @@ def main() -> int:
         ],
     }
 
-    # the recall bar holds at BOTH scales (r8 verdict #3): repeat the
+    # the recall bar holds at BOTH scales: repeat the
     # overlap + pruning measurement at sf0.1 regardless of the main sf
     (emb1,) = load(spark, "/root/testdata/sf0.1", "embeddings")
     qv1 = emb1.filter(F.col("vec_id") == 0).select(
@@ -315,7 +315,7 @@ def main() -> int:
     mg_out = {}
     for mg_sf in (sf, "/root/testdata/sf0.1"):
         (docs_mg,) = load(spark, mg_sf, "documents")
-        # (doc_id, pos) total order — mirrors q180 (round-11 ADVICE fix)
+        # (doc_id, pos) total order — mirrors q180
         toks = dedup.spread(docs_mg, "doc_id").select(
             "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "token")
         )
@@ -525,8 +525,8 @@ def main() -> int:
         }
     out["q192b_stream_kmv_distinct"] = kmvb_out
 
-    # ---- q205: the STREAMING banded-minhash candidate index — set
-    # semantics make streaming == batch a HARD equality (the q192b
+    # ---- q205: the STREAMING banded-minhash candidate index — the
+    # bucket self-join makes streaming == batch a HARD equality (the q192b
     # category): the streamed pair set must equal _lsh_candidate_pairs
     # exactly at both SFs, independent of micro-batch schedule
     mhs_out = {}
@@ -737,7 +737,7 @@ def main() -> int:
     out["q214_embedding_neardup_lsh"] = emb_out
     out["q214b_stream_embedding_neardup"] = emb_out
 
-    # ---- q214 PRODUCTION REGIME (r13 verdict ask): the b=16 /
+    # ---- q214 PRODUCTION REGIME: the b=16 /
     # 0.9-threshold recall claim was analytic — measure it on planted
     # exact-cosine near-dup pairs (fixture home: tests/test_llm_ops),
     # and record the candidate fraction the banding actually admits.
@@ -805,22 +805,21 @@ def main() -> int:
         }
     out["q214_production_regime_b16"] = prod_out
 
-    # ---- q163: compressibility bands at BOTH scale factors (the r14
-    # verdict's asymmetry fix: the only rows-only query whose evidence
-    # lived exclusively in pytest). DEFLATE has no SQL restatement, so
-    # the recorded contract is (a) exact byte accounting — every
-    # n_compressed equals python zlib level-6 on the exact text bytes,
-    # re-verified here over the full corpus, (b) the measured ratio
-    # BANDS: natural-prose corpora sit strictly inside the keep gate
-    # [0.2, 0.8], and (c) the keep decision follows the gate row for
-    # row. The repetition < prose < noise ordering is the pytest's
-    # synthetic-regime pin; here the real corpus lands in the middle
-    # band, which is the operating claim.
+    # ---- q163: compressibility bands at BOTH scale factors, so its
+    # evidence does not live only in pytest. DEFLATE has no SQL
+    # restatement, so the recorded contract is (a) exact byte
+    # accounting — every n_compressed equals python zlib level-6 on the
+    # exact text bytes, re-verified here over the full corpus, (b) the
+    # measured ratio BANDS: natural-prose corpora sit strictly inside
+    # the keep gate [0.2, 0.8], and (c) the keep decision follows the
+    # gate row for row. The repetition < prose < noise ordering is the
+    # pytest's synthetic-regime pin; here the real corpus lands in the
+    # middle band, which is the operating claim.
     import zlib as _zlib
 
     # measure each scale factor ONCE even when the script is invoked
-    # with sf0.1 as its argument (round-15 review: the two-element
-    # tuple silently ran the same sf twice and dropped the sf0.01 row)
+    # with sf0.1 as its argument (a plain two-element tuple would run
+    # the same sf twice and drop the sf0.01 row)
     both_sfs = tuple(dict.fromkeys((sf, "/root/testdata/sf0.1")))
     q163_out = {}
     for cz_sf in both_sfs:
@@ -938,7 +937,7 @@ def main() -> int:
         vv = vectors.select(
             F.col("vec_id").alias("node"), F.col("embedding").alias("vec")
         )
-        # exclude_self (round-16 ADVICE): queries ARE corpus nodes, so
+        # exclude_self: queries ARE corpus nodes, so
         # without it the walk's guaranteed self-hit at score 1.0 would
         # inflate recall by up to 1/k per query — the exact side
         # (knn_join) already excludes self
@@ -1054,9 +1053,8 @@ def main() -> int:
     # here — HALF the corpus arrives in ONE trigger — is far harsher
     # than production's trigger<<index regime). At the shipped
     # rounds=2 the maintained index matches the batch-built q218
-    # graph's recall at the same SF; after the round-15 review fixes
-    # (both-lists refinement edges, beam >= k clamp) it BEATS it
-    # (0.949 vs 0.903 at sf0.1).
+    # graph's recall at the same SF; with both-lists refinement edges
+    # and the beam >= k clamp it BEATS it (0.949 vs 0.903 at sf0.1).
     from kstreamjs_spark.queries.streaming_q import (
         _Q219B_REFINE,
         knn_graph_insert_stream,

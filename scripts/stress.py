@@ -910,18 +910,18 @@ def main() -> int:
         "ttr": _ttr_count,
         "lm_score": _lm_score_count,
         "entropy": _entropy_count,
-        # round-6 additions (q104b/q106b/q110/q112/q122/q123 shapes)
+        # fuzzy-dedup and leakage family (q104b/q106b/q110/q112/q122/q123 shapes)
         "fuzzy_blocked": _fuzzy_blocked_count,
         "leakage_maxdf": _leakage_maxdf_count,
         "keepers": _keepers_count,
         "repeated_chunks": _repeated_chunks_count,
         "coverage": _coverage_count,
         "chunk_neardup": _chunk_neardup_count,
-        # round-8 additions (q40f/q40g media-decode + q157 retrieval shapes)
+        # media-decode (q40f/q40g) and retrieval (q157) shapes
         "jpeg_decode": _jpeg_decode_count,
         "mp4_frames": _mp4_frames_count,
         "bm25": _bm25_count,
-        # round-9 additions (q157b/q158/q159/q160 shapes)
+        # retrieval and perceptual-hash family (q157b/q158/q159/q160 shapes)
         "bm25_batch": _bm25_batch_count,
         "phash": _phash_count,
         "afp": _afp_count,
@@ -933,7 +933,7 @@ def main() -> int:
         "retention": _retention_count,
         "streak": _streak_count,
         "value_pct": _value_pct_count,
-        # round-7 additions (q121/q125/q135/q143 shapes)
+        # dimension and attribution family (q121/q125/q135/q143 shapes)
         "scd2": _scd2_count,
         "cooccur": _cooccur_count,
         "growth": _growth_count,
@@ -949,7 +949,7 @@ def main() -> int:
         "large_volume": _large_volume_count,
         "cheapest": _cheapest_count,
         "backlog": _backlog_count,
-        # round-7 additions (q139/q133/q136 shapes)
+        # data-quality and customer-value family (q139/q133/q136 shapes)
         "dq_gate": _dq_gate_count,
         "rfm": _rfm_count,
         "hhi": _hhi_count,

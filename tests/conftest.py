@@ -108,6 +108,18 @@ def stage_triggers(spark, path, triggers, schema=None):
 
 WINDOW_FORMS = ("aggs", "collect")
 
+# (doc_id, text) rows with three near-dup pairs the MinHash bands catch:
+# docs 0 and 3 are identical, 1 differs from 0 in its last word, and
+# 5 from 2 in its last word.
+NEARDUP_DOCS = list(enumerate([
+    "the quick brown fox jumps over the lazy dog",
+    "the quick brown fox jumps over the lazy cat",
+    "completely different words entirely here now",
+    "the quick brown fox jumps over the lazy dog",
+    "another unrelated sentence about spark engines",
+    "completely different words entirely here today",
+]))
+
 
 def count_sum(form):
     """``Stream.window`` arguments for a row count ``n`` and a sum ``s``

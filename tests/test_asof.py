@@ -121,8 +121,8 @@ def test_asof_nearest(spark):
 
 def test_asof_nearest_timestamp_ntz(spark):
     """The parquet testdata carries TIMESTAMP_NTZ, not TIMESTAMP — the
-    nearest-distance comparison must resolve on both flavors (round-3
-    regression: unix_micros rejects NTZ with DATATYPE_MISMATCH; the
+    nearest-distance comparison must resolve on both flavors
+    (unix_micros rejects NTZ with DATATYPE_MISMATCH; the
     interval-subtraction form accepts both)."""
     left = spark.createDataFrame(
         [(1, "u", ts(12)), (2, "u", ts(13))],

@@ -18,7 +18,7 @@ import pytest
 from kstreamjs_spark.session import get_spark
 from kstreamjs_spark.stream import Stream
 
-from .conftest import WINDOW_FORMS, count_sum, exchange_widths
+from .conftest import NEARDUP_DOCS, WINDOW_FORMS, count_sum, exchange_widths
 
 MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
 SHUFFLE_KEY = "spark.sql.shuffle.partitions"
@@ -50,20 +50,24 @@ def manager_class(spark, path) -> str:
     )
 
 
-def write_part(src: str, i: int, rows: list[tuple[int, str, int]]) -> None:
-    """One input file of (event minute, key, value) rows. Its mtime is
-    pinned to ``i`` seconds past a fixed base, so the file source reads
-    the parts in index order whenever they land."""
+def write_table(src: str, i: int, table: pa.Table) -> None:
+    """Input part ``i`` under ``src``. Its mtime is pinned to ``i``
+    seconds past a fixed base, so the file source reads the parts in
+    index order whenever they land."""
     os.makedirs(src, exist_ok=True)
-    pdf = pd.DataFrame(rows, columns=["m", "k", "v"])
-    table = pa.table({
-        "ts": pa.array(pdf["m"] * MINUTE_MS * 1000, pa.timestamp("us", tz="UTC")),
-        "k": pa.array(pdf["k"], pa.string()),
-        "v": pa.array(pdf["v"], pa.int64()),
-    })
     path = os.path.join(src, f"part{i:02d}.parquet")
     pq.write_table(table, path)
     os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+
+
+def write_part(src: str, i: int, rows: list[tuple[int, str, int]]) -> None:
+    """Input part ``i`` of (event minute, key, value) rows."""
+    pdf = pd.DataFrame(rows, columns=["m", "k", "v"])
+    write_table(src, i, pa.table({
+        "ts": pa.array(pdf["m"] * MINUTE_MS * 1000, pa.timestamp("us", tz="UTC")),
+        "k": pa.array(pdf["k"], pa.string()),
+        "v": pa.array(pdf["v"], pa.int64()),
+    }))
 
 
 def parts() -> list[list[tuple[int, str, int]]]:
@@ -243,3 +247,58 @@ def test_checkpoint_keeps_its_state_partition_count(spark, tmp_path):
     drain(spark, src, whole_ckpt, whole_out)
     assert state_partitions(whole_ckpt) == default
     pd.testing.assert_frame_equal(sink(spark, out), sink(spark, whole_out))
+
+
+def test_stream_static_dedup_restart_equals_uninterrupted_run(spark, tmp_path):
+    """Stop ``minhash_verified_stream`` (a stream-stream bucket join
+    feeding a stream-static verify join) after two of its three files
+    land in descending id order, while the bucket join's state holds
+    the later docs' partners, and restart it from the same checkpoint:
+    the sink's distinct rows equal batch ``minhash_verified_pairs`` and
+    one uninterrupted drain's."""
+    from kstreamjs_spark.operators.dedup import minhash_verified_pairs
+    from kstreamjs_spark.queries.streaming_q import minhash_verified_stream
+
+    corpus = spark.createDataFrame(NEARDUP_DOCS, "doc_id long, text string")
+    src, ckpt, out = (str(tmp_path / d) for d in ("src", "ckpt", "out"))
+
+    def drain(src: str, ckpt: str, out: str) -> None:
+        sdf = (
+            spark.readStream.schema("doc_id long, text string")
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src)
+        )
+        q = (
+            minhash_verified_stream(sdf, corpus)
+            .writeStream.format("parquet")
+            .option("checkpointLocation", ckpt)
+            .start(out)
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    def write_docs(i: int, docs: list[tuple[int, str]]) -> None:
+        ids, texts = zip(*docs)
+        write_table(src, i, pa.table({"doc_id": ids, "text": texts}))
+
+    def pairs(out: str) -> set[tuple]:
+        cols = ["d1", "d2", "jaccard", "drop_id"]
+        return {tuple(r) for r in spark.read.parquet(out).select(*cols).collect()}
+
+    # descending ids: the third part's docs pair with docs in state
+    write_docs(0, NEARDUP_DOCS[4:6])
+    write_docs(1, NEARDUP_DOCS[2:4])
+    drain(src, ckpt, out)
+    n_first = len(pairs(out))
+    write_docs(2, NEARDUP_DOCS[0:2])
+    drain(src, ckpt, out)
+    restarted = pairs(out)
+    assert n_first < len(restarted)
+    batch = minhash_verified_pairs(corpus, threshold=0.5).collect()
+    assert restarted == {(*r, r["d2"]) for r in batch}
+
+    whole_ckpt, whole_out = str(tmp_path / "ckpt2"), str(tmp_path / "out2")
+    drain(src, whole_ckpt, whole_out)
+    assert restarted == pairs(whole_out)

@@ -1,4 +1,4 @@
-"""Round-4 corpus-curation operators: golden semantics on constructed
+"""Corpus-curation operators: golden semantics on constructed
 frames, group-atomicity and convergence properties, and scan-side plan
 shape for the per-row metrics."""
 

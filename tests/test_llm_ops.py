@@ -34,7 +34,7 @@ def test_minhash_candidates_cover_exact_neardups(spark, sf_smoke):
 
 
 def test_minhash_signature_frame_bit_identical(spark, sf_smoke):
-    """Round-16 kernel swap: minhash_signature_frame (Arrow-batched
+    """minhash_signature_frame (Arrow-batched
     numpy permutation fold) must be BIT-IDENTICAL to the
     minhash_signature expression fold for every document — the
     equality the kernel's int64 overflow-safety argument promises.
@@ -55,7 +55,7 @@ def test_minhash_signature_frame_bit_identical(spark, sf_smoke):
 
 
 def test_lit_doubles_bit_identical(spark):
-    """Round-16 plan-construction swap: lit_doubles builds the
+    """lit_doubles builds the
     array<double> literal via one parsed expression (repr + 'D'
     suffix) instead of per-element F.lit py4j calls — it must produce
     BIT-IDENTICAL doubles (repr is the shortest round-trip decimal and
@@ -92,7 +92,7 @@ def test_lit_doubles_bit_identical(spark):
 
 
 def test_lit_longs_bit_identical(spark):
-    """Round-17 sweep (r16 verdict #6): lit_longs builds the
+    """lit_longs builds the
     array<bigint> literal via one parsed expression — it must produce
     the exact same longs as the per-element F.lit path, the same
     array<bigint> type, and handle Long.MIN_VALUE (unrepresentable as
@@ -1054,7 +1054,7 @@ def test_decode_kernels_reject_crafted_allocation_bombs():
     HEADER choose the allocation: a ~150-byte JPEG declaring 65535x65535
     and a PNG whose tiny IDAT inflates far past its declared dims must
     both return None quickly (MemoryError is not a ValueError and would
-    kill the task) — the round-8 review findings."""
+    kill the task)."""
     import zlib
 
     # JPEG: take a valid fixture and patch SOF dims to 65535x65535
@@ -1325,7 +1325,7 @@ def test_knn_join_lsh_banded_recall(spark, sf_smoke):
 
 @pytest.mark.slow
 def test_knn_lsh_band_widening_on_clustered_corpus(spark):
-    """The SCALE.md round-10 claim: on a clustered corpus (the geometry
+    """The SCALE.md band-widening claim: on a clustered corpus (the geometry
     real embedding corpora have) AND-widening the bands to 8 bits
     prunes the candidate join several-fold while keeping recall perfect
     — same-cluster neighbors still collide with near-certainty, while
@@ -1422,8 +1422,8 @@ def test_compressibility_separates_quality_regimes(spark):
     the middle, and high-entropy noise barely compresses — and the
     byte accounting must be exact and deterministic. The measured
     ratio bands + full-corpus byte accounting at sf0.01 AND sf0.1 are
-    recorded in APPROX_EVIDENCE.json under q163_compressibility
-    (round 15 — the checked-in counterpart of this synthetic pin)."""
+    recorded in APPROX_EVIDENCE.json under q163_compressibility (the
+    checked-in counterpart of this synthetic pin)."""
     import random
     import zlib
 
@@ -1994,8 +1994,8 @@ def test_bpe_train_matches_python_mirror(spark):
         w: (wc[w], len(syms), " ".join(syms)) for w, syms in seq.items()
     }
     assert got == exp
-    # round 1 is the run pair (16 occurrences); the classic 'e s'
-    # tiebreak (count 9, over 's t') still happens in a later round
+    # the first merge is the run pair (16 occurrences); the classic
+    # 'e s' tiebreak (count 9, over 's t') still happens in a later one
     assert merges[0] == "a a"
     assert "e s" in merges
     # the self-overlapping run pairs two-at-a-time, leftmost first
@@ -2260,13 +2260,12 @@ def test_kll_quantiles_bound_mergeability_determinism(spark):
 
 
 def test_hamming_pairs_combination_scheme_exact_vs_bruteforce(spark):
-    """Round-11 radius-6 pigeonhole: pairs planted at every distance
+    """Radius-6 pigeonhole: pairs planted at every distance
     0..8 over a random hash population — the operator must return
     EXACTLY the brute-force hamming<=6 pair set (the 2-of-8-chunk
     combination keys guarantee every such pair is a candidate; the
     verify step drops everything else, including the planted 7s/8s),
-    and the radius-3 path must be byte-identical to before (the 4x16
-    single-chunk geometry is untouched)."""
+    and the radius-3 path keeps the 4x16 single-chunk geometry."""
     import numpy as np
 
     rng = np.random.RandomState(29)
@@ -2303,9 +2302,8 @@ def test_hamming_pairs_combination_scheme_exact_vs_bruteforce(spark):
 
 
 def test_simhash_radius6_recalls_all_fixture_neardups(spark, sf_smoke):
-    """q26c's recall floor, closed (the r9/r10 verdicts' 0.6-recall
-    watch item): every exact-Jaccard>=0.5 pair whose SimHash distance
-    is ACTUALLY within the radius must be recalled — the operator may
+    """q26c's recall floor: every exact-Jaccard>=0.5 pair whose SimHash
+    distance is ACTUALLY within the radius must be recalled — the operator may
     only miss pairs SimHash itself places far apart (the smoke corpus
     has two such: distances 31 and 53, short docs where token-set
     overlap does not imply angular similarity — the proxy's honest
@@ -2338,7 +2336,7 @@ def test_simhash_radius6_recalls_all_fixture_neardups(spark, sf_smoke):
 
 
 def test_gif_anim_roundtrip_frame_table_and_middle_frame():
-    """Animated-GIF surface (round 11): the frame table reports every
+    """Animated-GIF surface: the frame table reports every
     frame's geometry/delay without decoding; sequential composition
     reproduces each full-screen frame exactly; out-of-range indices are
     None."""
@@ -2443,7 +2441,7 @@ def test_gif_anim_phash_separates_groups_and_middle_frame_matters(spark):
 
 
 def test_gif_truncated_extension_returns_none():
-    """Review-pass regression (round 11): a graphic-control extension
+    """A graphic-control extension
     whose declared sub-block length runs past the end of the buffer
     must decode to None on every GIF surface — the GCE parse indexes
     up to 4 bytes into the sub-block, so a missing bounds check was an
@@ -2459,7 +2457,7 @@ def test_gif_truncated_extension_returns_none():
 
 
 def test_apng_roundtrip_frame_table_and_middle_frame():
-    """APNG surface (round 11): frame table from the strict chunk walk;
+    """APNG surface: frame table from the strict chunk walk;
     full-screen frames reproduce exactly through per-frame DEFLATE +
     the shared five-filter reconstruction; the default image (IDAT) is
     frame 0, so the STILL kernel on the same blob returns it."""
@@ -2941,7 +2939,7 @@ def test_cdc_chunks_resynchronize_after_insertion():
 
 
 def test_gopher_repetition_short_docs_no_crash(spark):
-    """Regression (round-12 review find): Spark's sequence(1, 0) is the
+    """Spark's sequence(1, 0) is the
     DESCENDING [1, 0], so a document with fewer tokens than the max
     gram order n=10 used to explode position 0 (slice-start crash) and
     a partial gram at i=1. Short docs must contribute ZERO grams for
@@ -2991,7 +2989,7 @@ def test_lakehouse_zorder_write_skips_files_on_y_band(
     spark, sf_smoke, tmp_path
 ):
     """The WRITE path's data-skipping contract, measured on real
-    parquet footers (round 13, q211): write the z-partitioned layout
+    parquet footers (q211): write the z-partitioned layout
     and an x-sorted layout at comparable file counts with the
     clustering keys materialized, then count the files whose footer
     min/max intersect a narrow y band — the skipping decision a
@@ -3069,8 +3067,8 @@ def test_lakehouse_zorder_write_skips_files_on_y_band(
 
 @pytest.mark.slow
 def test_q94_manifest_matches_written_shard_files(spark, sf_smoke, tmp_path):
-    """q94's manifest is the plan for `write.partitionBy(shard)`; round
-    13 closes the loop: actually write the sharded layout, recompute
+    """q94's manifest is the plan for `write.partitionBy(shard)`, so
+    close the loop: actually write the sharded layout, recompute
     the manifest FROM THE WRITTEN FILES (per-directory row/char totals
     and id extrema), and require it to equal q94's answer row for row."""
     from kstreamjs_spark.operators import sampling
@@ -3265,7 +3263,7 @@ def _planted_neardup_fixture(
 ):
     """The SF's embeddings plus planted near-dup copies at EXACT target
     cosines — ground truth for the production-regime (threshold 0.9,
-    band_bits=16) recall measurement the r13 verdict asked for.
+    band_bits=16) recall measurement.
 
     Each planted vector is built at an exact angle to its base: take a
     random direction ``g`` orthogonalized against the base ``v``, then
@@ -3313,11 +3311,11 @@ def _planted_neardup_fixture(
 
 
 def test_cosine_neardup_lsh_production_regime_recall(spark, sf_smoke):
-    """The r13 verdict's ask: the docstring's band_bits=16 /
-    0.9-threshold operating point claimed ~0.99 recall ANALYTICALLY —
-    measure it. Planted pairs at exact cosines 0.92-0.99 (the regime a
-    production near-dup threshold of 0.9 actually targets: re-encodes
-    and mirrors cluster at 0.95+) must be recalled at >= 0.95 overall
+    """The docstring's band_bits=16 / 0.9-threshold operating point
+    claims ~0.99 recall ANALYTICALLY — measure it. Planted pairs at
+    exact cosines 0.92-0.99 (the regime a production near-dup threshold
+    of 0.9 actually targets: re-encodes and mirrors cluster at 0.95+)
+    must be recalled at >= 0.95 overall
     by cosine_neardup_pairs_lsh(threshold=0.9, band_bits=16), with
     zero false positives (exact verify) as always."""
     from kstreamjs_spark.operators.similarity import (
@@ -3407,7 +3405,7 @@ def test_compact_partitions_prunes_and_preserves(spark, tmp_path):
 def test_compact_partitions_recovers_crash_between_swap_renames(
     spark, tmp_path
 ):
-    """Round-15 crash-window fix: a process dying between
+    """Crash window: a process dying between
     rename(old -> trash) and rename(staged -> old) used to leave the
     partition missing from the table AND a 'p=1__old' dir under the
     table root that the next census parsed as a ghost partition
@@ -3503,7 +3501,7 @@ def test_greedy_pieces_matches_python_reference(spark):
 
 
 def test_wpt_score_decimal_exact_past_int64_overflow(spark):
-    """Round-15 ADVICE fix: q216c's argmax score (n_ab * 1e12) DIV
+    """q216c's argmax score (n_ab * 1e12) DIV
     (n_a * n_b) runs in DECIMAL (_WPT_SCORE_SQL). The old long*long
     form wrapped silently past n_ab ~9.2e6 under non-ANSI Spark while
     the DuckDB oracle's HUGEINT kept going — a wrong-argmax divergence
@@ -3598,7 +3596,7 @@ def test_nn_descent_rejects_sparse_ids(spark):
     )
     with _pytest.raises(ValueError, match="dense unique ids"):
         similarity.nn_descent(df, k=1, iters=1)
-    # round-15 review: max==n-1 alone admitted duplicate ids — pinned
+    # max==n-1 alone would admit duplicate ids
     dup = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (1, [0.5, 0.5]),
          (3, [0.1, 0.9])],
@@ -3609,7 +3607,7 @@ def test_nn_descent_rejects_sparse_ids(spark):
 
 
 def test_nn_descent_shipped_config_recall_gate(spark, sf_smoke):
-    """The r14 verdict's q218 'Done' gate: graph recall vs the exact
+    """q218's recall gate: graph recall vs the exact
     all-pairs k-NN graph >= 0.9 with the SHIPPED q218 configuration
     (k=20, iters=8 — k=5 measured 0.16, the starved regime the
     evidence sweep documents). Runs on the smoke corpus (500 vectors,
@@ -3870,7 +3868,7 @@ def test_perceptron_train_separates_planted_corpus(spark, tmp_path):
 
 
 def test_perceptron_nonseparable_corpus_oscillates_bounded(spark, tmp_path):
-    """q223 on a NON-separable corpus (round-16 verdict ask): every
+    """q223 on a NON-separable corpus: every
     doc has IDENTICAL text, labels 3 'en' vs 2 'de' — no weight
     vector separates them, the classic perceptron-cycling regime.
     Full-batch updates are deterministic, so the 5-round trajectory
@@ -4263,7 +4261,7 @@ def test_weighted_minhash_recall_gate(spark, sf_smoke):
 
 
 def test_heaps_tiny_corpus_matches_oracle(spark, tmp_path):
-    """Round-15 review finding, pinned: corpora smaller than the
+    """Corpora smaller than the
     checkpoint grid (7 docs) and 1-based doc ids (an empty cp=1
     prefix) used to diverge between the engines — the oracle kept
     duplicate/empty checkpoints the Spark groupBy collapsed. Both

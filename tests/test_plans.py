@@ -173,8 +173,8 @@ def test_hypertable_rollup_scans_raw_once(q):
 def test_sessionize_single_data_shuffle(q):
     """q55: one user_id hash shuffle serves both window passes AND the
     session rollup (user_id clustering satisfies the (user_id,
-    session_seq) distribution) — and since the round-5 removal of the
-    presentation ORDER BY it is the ONLY exchange in the plan."""
+    session_seq) distribution) — and with no presentation ORDER BY it
+    is the ONLY exchange in the plan."""
     plan = q("q55_sessionize")._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert plan.count("Exchange") == 1, plan
@@ -372,8 +372,8 @@ def test_gap_percentiles_single_window_no_joins(q):
 def test_fuzzy_pairs_no_cartesian(q):
     """q104 (exact oracle variant): the all-pairs-within-source join is an
     equi-join on source, never a cartesian, and no longer forces a
-    broadcast hint (ADVICE r5: a forced F.broadcast of the full corpus
-    side OOMs past the 8 GB limit instead of degrading to shuffle)."""
+    broadcast hint (a forced F.broadcast of the full corpus side OOMs
+    past the 8 GB limit instead of degrading to shuffle)."""
     from kstreamjs_spark.plans import explain_str
 
     df = q("q104_fuzzy_prefix_pairs")
@@ -387,8 +387,8 @@ def test_fuzzy_blocked_pairs_shuffle_equi_join(q, spark):
     EQUI-join on (source, chunk_id, chunk_text) — with size-based
     broadcast disabled it plans SortMergeJoin (proving no broadcast of
     either corpus side is required), and nothing may plan cartesian or
-    nested-loop. This is the scale-shape assertion the r5 verdict ordered
-    for the fuzzy-dedup family."""
+    nested-loop. This is the scale-shape assertion of the fuzzy-dedup
+    family."""
     from kstreamjs_spark.plans import explain_str
 
     df = q("q104b_fuzzy_blocked_pairs")
@@ -617,7 +617,7 @@ def test_temperature_mix_reuses_lang_aggregate(q):
 
 
 def _assert_no_blob_exchange(df):
-    """Refined multimodal shuffle invariant (round 16): the KB-scale
+    """Multimodal shuffle invariant: the KB-scale
     fixture scan is widened BELOW the synth stage (a round-robin
     exchange of the id/len parameter columns only — the codec chain
     previously ran as ONE task on one core), so the pinned contract is
@@ -654,7 +654,7 @@ def test_audio_decode_pipeline_no_blob_shuffle(q):
 
 
 def test_fuzzy_blocked_prefix_derived_before_spread(q):
-    """Round 8: fuzzy_prefix_pairs derives the normalized 40-char prefix
+    """fuzzy_prefix_pairs derives the normalized 40-char prefix
     BELOW the fan-out exchange, so the shuffle carries (id, source, 40
     chars) instead of full document text (A/B: 0.999 s -> 0.681 s at
     sf0.1). Pinned by node order: the normalize expression (lower(text))
@@ -880,7 +880,7 @@ def test_materialize_once_prefers_reliable_checkpoint(spark, tmp_path):
 
 
 def test_semdedup_pairwise_is_cell_equi_join(q):
-    """q170's plan contract (round-11 kernel rework): the SemDeDup
+    """q170's plan contract: the SemDeDup
     pairwise search is ONE Arrow-batched grouped kernel on the k-means
     cell key (FlatMapGroupsInPandas over one hash exchange — pair work
     = sum of n_c^2 over cells, never N^2, scored as a numpy matmul
@@ -906,7 +906,7 @@ def test_phash_neardup_bucket_join_is_equi_not_cross(q):
     for name in ("q158_phash_image_neardup", "q158c_phash_cross_codec",
                  "q158d_phash_quad_codec", "q182_gif_anim_phash_dedup",
                  "q26c_simhash_neardup"):
-        # q158d/q182 add the round-11 GIF legs; q26c runs the radius-6
+        # q158d/q182 add the GIF legs; q26c runs the radius-6
         # 2-of-8-chunk COMBINATION keys — same contract: candidates from
         # the (cid, cval) equi-join, never a cross join
         plan = explain_str(q(name), "simple")
@@ -921,7 +921,7 @@ def test_phash_neardup_bucket_join_is_equi_not_cross(q):
 
 
 def test_member_semijoin_auto_picks_regime_from_size(spark):
-    """The r8-verdict decontamination rule, encoded and pinned: ONE
+    """The decontamination rule, encoded and pinned: ONE
     entry point (bloom.member_semijoin) plans the broadcast regime when
     Catalyst's size estimate of the member side fits the budget and the
     bloom-prefilter regime when it does not — chosen from sizes alone,
@@ -1119,7 +1119,7 @@ def test_ivfpq_partitioned_codes_serve_with_pruning(spark, sf_smoke, tmp_path):
 
 
 def test_ccnet_bands_no_corpus_global_sort(q):
-    """q197 (round-12 fix): NTILE's single-task corpus sort is gone.
+    """q197: no NTILE single-task corpus sort.
     Banding is histogram offsets + a score-partitioned tie window, so
     the only global sort left is the 3-row output ORDER BY band; the
     row_number tie-break sorts locally within hashpartitioning(score)."""
@@ -1195,8 +1195,8 @@ def test_round14_q216_wordpiece_pure_codegen(q):
     """q216's application half must stay a pure Catalyst expression:
     no Python evaluation nodes anywhere in the plan (the no-UDF claim
     that distinguishes this tokenizer family), and the vocabulary
-    rides as an expression literal, never a join. Post-round-16 plan
-    shape (ADVICE r16 docstring fix): the word-count aggregate is
+    rides as an expression literal, never a join. The word-count
+    aggregate is
     checkpointed once and SHARED with the vocab trainer, so the final
     plan applies the greedy fold over a `Scan ExistingRDD` and the
     only exchange left is the output sort's — the aggregate's own
@@ -1211,7 +1211,7 @@ def test_round14_q216_wordpiece_pure_codegen(q):
 
 
 def test_round14_minhash_banding_single_fold(spark, sf_smoke):
-    """Regression pin for the round-14 q205b finding: the banded
+    """The banded
     projection must evaluate the minhash fold ONCE per document.
     Nesting the signature inside minhash_bands inlines the O(shingles
     x perms) aggregate into every element_at reference — the executed

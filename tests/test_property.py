@@ -734,7 +734,7 @@ def test_jpeg_progressive_total_on_mutations():
 @given(blob=raw_bytes)
 @settings(max_examples=300, deadline=None)
 def test_decode_gif_pixels_total_on_arbitrary_bytes(blob):
-    # round-11 GIF kernel: same totality bar — None or a well-shaped
+    # GIF kernel: same totality bar — None or a well-shaped
     # RGB array, never an exception, including with correct magic in
     # front of garbage (the LZW/structure gates must reject, not raise)
     for b in (blob, b"GIF89a" + blob, b"GIF87a" + blob):
@@ -803,8 +803,8 @@ def test_apng_surface_total_on_arbitrary_bytes(blob):
 
 def test_gif_lzw_roundtrip_forces_table_overflow_reset():
     """The 48x48 property cap (2304 px) never fills the 4096-entry LZW
-    table, so the encoder's clear-code reset branch was suite-uncovered
-    (round-11 advisor). Two >=20k-px payloads force it: high-entropy
+    table, so the property tests never reach the encoder's clear-code
+    reset branch. Two >=20k-px payloads force it: high-entropy
     bytes (table fills fastest: mostly 2-byte strings) and a long-run
     payload (table fills with ever-longer runs, exercising deep prefix
     chains at reset time). Both must roundtrip exactly."""
@@ -826,7 +826,7 @@ def test_gif_lzw_roundtrip_forces_table_overflow_reset():
         assert bytes(px[:, :, 0].ravel()) == gray
 
 
-# ------------------------------------------------------------ FLAC (round 12)
+# ------------------------------------------------------------------- FLAC
 @given(
     n=st.integers(min_value=1, max_value=3000),
     nch=st.integers(min_value=1, max_value=2),

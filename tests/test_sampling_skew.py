@@ -308,12 +308,12 @@ def test_sample_hash_matches_duckdb_on_adversarial_keys(spark):
 
 
 def test_hash_bucket_full_int64_domain(spark):
-    """Round 8: the documented |key+seed| domain constraint is now
-    enforced by construction (pmod residue before the LCG), so the WHOLE
-    int64 range — including raw xxhash64-style keys AT the edges, where
-    the old form wrapped in Spark but trapped in DuckDB — hashes
-    identically in both engines. Also pins value-stability: for in-domain
-    keys the new form returns the exact values the old form did."""
+    """The documented |key+seed| domain constraint is enforced by
+    construction (pmod residue before the LCG), so the WHOLE int64
+    range — including raw xxhash64-style keys AT the edges, where a
+    plain (key+seed) wraps in Spark but traps in DuckDB — hashes
+    identically in both engines. Also pins value-stability for
+    in-domain keys."""
     import random
 
     import duckdb

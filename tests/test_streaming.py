@@ -17,7 +17,13 @@ from kstreamjs_spark.stream import Stream
 from kstreamjs_spark.streaming.replay import run_to_memory, stream_table
 from kstreamjs_spark.streaming.stats import StatisticsListener
 
-from .conftest import WINDOW_FORMS, count_sum, stage_stream, stage_triggers
+from .conftest import (
+    NEARDUP_DOCS,
+    WINDOW_FORMS,
+    count_sum,
+    stage_stream,
+    stage_triggers,
+)
 
 
 def test_stream_replay_equals_batch(spark, sf_smoke):
@@ -130,6 +136,20 @@ def test_run_to_memory_leaves_no_view(spark, tmp_path):
     assert [t.name for t in spark.catalog.listTables() if t.name.startswith("t_noview")] == []
     for k, df in enumerate(frames):
         assert sorted(r["id"] for r in df.collect()) == list(range(k, 30, 3))
+
+
+def test_drain_past_its_timeout_stops_and_raises(spark, tmp_path, monkeypatch):
+    """A drain still running after DRAIN_TIMEOUT_S raises TimeoutError
+    and leaves its query stopped, not running on behind the caller."""
+    from kstreamjs_spark.streaming import replay
+
+    monkeypatch.setattr(replay, "DRAIN_TIMEOUT_S", 1)
+    read = stage_stream(spark.range(3), str(tmp_path / "src"), "id", parts=1)
+    with pytest.raises(TimeoutError, match="did not finish within 1s"):
+        replay.run_foreach_batch(
+            read(), lambda df, epoch: time.sleep(5), "t_timeout"
+        )
+    assert not [q for q in spark.streams.active if q.name.startswith("t_timeout")]
 
 
 def test_statistics_listener(spark, sf_smoke):
@@ -1129,23 +1149,16 @@ def test_window_collect_from_origin_alignment(spark, tmp_path):
 @pytest.mark.slow
 def test_stream_minhash_candidates_equal_batch_any_schedule(spark, tmp_path):
     """q205's contract: the streamed candidate-pair SET equals batch
-    _lsh_candidate_pairs exactly, for any micro-batch schedule —
-    bucket membership is arrival-order-free set semantics, old-new
-    pairs emit as the new doc lands, new-new pairs emit once. Drives
-    the SHIPPED pipeline (queries.streaming_q.minhash_candidate_stream
-    — one code home), not a private copy."""
+    _lsh_candidate_pairs exactly, for any micro-batch schedule — the
+    bucket self-join emits each pair once whichever member lands
+    first, and a re-delivered doc only repeats pairs the final
+    distinct collapses. Drives the SHIPPED pipeline
+    (queries.streaming_q.minhash_candidate_stream — one code home),
+    not a private copy."""
     from kstreamjs_spark.operators.dedup import _lsh_candidate_pairs
     from kstreamjs_spark.queries.streaming_q import minhash_candidate_stream
 
-    texts = [
-        "the quick brown fox jumps over the lazy dog",
-        "the quick brown fox jumps over the lazy cat",   # near-dup of 0
-        "completely different words entirely here now",
-        "the quick brown fox jumps over the lazy dog",   # exact dup of 0
-        "another unrelated sentence about spark engines",
-        "completely different words entirely here today",  # near-dup of 2
-    ]
-    rows = [(i, t) for i, t in enumerate(texts)]
+    rows = NEARDUP_DOCS
     bdf = spark.createDataFrame(rows, "doc_id long, text string")
     expected = {
         (r["d1"], r["d2"])
@@ -1164,6 +1177,7 @@ def test_stream_minhash_candidates_equal_batch_any_schedule(spark, tmp_path):
         ("a", [rows[0:2], rows[2:4], rows[4:6]]),
         ("b", [rows]),
         ("c", [rows[4:6], rows[2:4], rows[0:2]]),
+        ("r", [rows[0:2], rows[0:2], rows[2:6]]),  # docs 0-1 re-delivered
     ):
         sdf = stage_triggers(spark, f"{d}/{tag}", chunks, "doc_id long, text string")
         pairs = minhash_candidate_stream(sdf)
@@ -1176,6 +1190,34 @@ def test_stream_minhash_candidates_equal_batch_any_schedule(spark, tmp_path):
         assert got == expected, (tag, got, expected)
 
 
+def test_minhash_candidate_stream_runs_kernel_once_per_trigger(
+    spark, tmp_path, capsys
+):
+    """Both sides of the bucket self-join read ONE exchange of the
+    banded projection, so the Python MinHash kernel runs once per
+    trigger: the micro-batch plan holds one MapInPandas, a
+    ReusedExchange and the symmetric hash join, and no GroupState
+    operator. Projecting the two sides differently would plan the
+    kernel twice."""
+    from kstreamjs_spark.queries.streaming_q import minhash_candidate_stream
+
+    sdf = stage_triggers(
+        spark, str(tmp_path / "src"), [NEARDUP_DOCS], "doc_id long, text string"
+    )
+    q = minhash_candidate_stream(sdf).writeStream.format("noop").start()
+    try:
+        q.processAllAvailable()
+        capsys.readouterr()
+        q.explain()
+        plan = capsys.readouterr().out
+    finally:
+        q.stop()
+    assert plan.count("MapInPandas") == 1, plan
+    assert "ReusedExchange" in plan, plan
+    assert "StreamingSymmetricHashJoin" in plan, plan
+    assert "FlatMapGroupsInPandasWithState" not in plan, plan
+
+
 @pytest.mark.slow
 def test_stream_minhash_verified_equal_batch_any_schedule(spark, tmp_path):
     """q205b's contract: the streamed VERIFIED pair set (in-stream
@@ -1186,15 +1228,7 @@ def test_stream_minhash_verified_equal_batch_any_schedule(spark, tmp_path):
     from kstreamjs_spark.operators.dedup import minhash_verified_pairs
     from kstreamjs_spark.queries.streaming_q import minhash_verified_stream
 
-    texts = [
-        "the quick brown fox jumps over the lazy dog",
-        "the quick brown fox jumps over the lazy cat",   # near-dup of 0
-        "completely different words entirely here now",
-        "the quick brown fox jumps over the lazy dog",   # exact dup of 0
-        "another unrelated sentence about spark engines",
-        "completely different words entirely here today",  # near-dup of 2
-    ]
-    rows = [(i, t) for i, t in enumerate(texts)]
+    rows = NEARDUP_DOCS
     bdf = spark.createDataFrame(rows, "doc_id long, text string")
     expected = {
         (r["d1"], r["d2"], r["jaccard"])
@@ -1616,32 +1650,23 @@ def test_stream_scd1_empty_source_raises(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_bucket_pair_stream_bounded_keys_collision_semantics(
-    spark, tmp_path
-):
-    """Bounded state-key space, pinned at its hardest point:
-    60 distinct (band, bsig) buckets forced into n_state_keys=4 slots
-    (heavy collisions — ~15 co-resident buckets per slot), delivered
-    across two interleaved triggers with ids in descending order.
-    The emitted pair set must equal the per-bucket batch expectation
-    EXACTLY (slot co-residency is storage, never pairing semantics)
-    and the state operator's numRowsTotal must be bounded by the slot
-    count, not the bucket count (~77k Python groups x ~55 us/group
-    made 4.2 s of q205b's 10.6 s without the bound)."""
+def test_bucket_pair_stream_pairs_only_within_buckets(spark, tmp_path):
+    """60 distinct (band, bsig) buckets, delivered across two
+    interleaved triggers with ids in descending order: the emitted pair
+    set equals the per-bucket batch expectation EXACTLY, so pairs form
+    only within one bucket, never across buckets that share a band or
+    a bsig."""
     import itertools
 
     from kstreamjs_spark.queries.streaming_q import bucket_pair_stream
 
     # 60 buckets: bucket j holds ids {j*10 .. j*10 + (j % 4)} — sizes
     # 1..4 so some buckets emit nothing, some emit many
-    rows = []
-    for j in range(60):
-        for m in range(j % 4 + 1):
-            rows.append((j * 10 + m, j % 5, f"s{j}"))
-    want = set()
+    rows, want = [], set()
     for j in range(60):
         ids = [j * 10 + m for m in range(j % 4 + 1)]
-        want |= {(a, b) for a, b in itertools.combinations(ids, 2)}
+        rows += [(i, j % 5, f"s{j}") for i in ids]
+        want |= set(itertools.combinations(ids, 2))
     # two triggers, descending-id interleave: odd-index rows first
     rows_desc = sorted(rows, reverse=True)
     batches = [rows_desc[0::2], rows_desc[1::2]]
@@ -1650,150 +1675,13 @@ def test_bucket_pair_stream_bounded_keys_collision_semantics(
         spark, str(tmp_path / "src"), batches,
         "doc_id long, band int, bsig string",
     )
-    q = (
-        bucket_pair_stream(sdf, n_state_keys=4)
-        .writeStream.format("memory").queryName("bounded_keys")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck_bounded"))
-        .start()
-    )
-    q.processAllAvailable()
-    state_totals = [
-        sum(
-            op.get("numRowsTotal", 0) or 0
-            for op in p.get("stateOperators", [])
-        )
-        for p in q.recentProgress
-    ]
-    q.stop()
     got = {
         (r["d1"], r["d2"])
-        for r in spark.table("bounded_keys").collect()
+        for r in run_to_memory(
+            bucket_pair_stream(sdf), "bucket_pairs", output_mode="append"
+        ).collect()
     }
-    assert got == want  # collision-proof: pairs only within buckets
-    assert state_totals and max(state_totals) <= 4  # slots, not buckets
-
-
-@pytest.mark.slow
-def test_bucket_pair_stream_ttl_evicts_and_loses_late_pairs(
-    spark, tmp_path
-):
-    """The opt-in TTL mode, pinned adversarially (the q167b
-    pattern): bucket A is seeded in trigger 0, sits idle through
-    trigger 1 (only bucket B arrives) so its TTL expires and the state
-    evicts (numRowsRemoved > 0), then a LATE member of A arrives in
-    trigger 2 — the cross-eviction pair must be LOST (the documented
-    recall trade), while same-trigger pairs still emit. The default
-    (ttl_ms=None) on the IDENTICAL schedule emits the full pair set —
-    the exactness contract q205/q205b/q214b ship with is untouched.
-
-    Bucket C is DUPLICATE-FED (seeded in trigger 0, receives
-    only an already-seen id in trigger 1). Spark clears a group's
-    timeout every time the update function runs, so without a re-arm
-    the duplicate-only path would cancel C's eviction timer forever and
-    C would sit in state unbounded. Pinned by requiring the
-    TTL run's state to drain COMPLETELY (numRowsTotal -> 0): with the
-    bug C never evicts and the drain never completes."""
-    from kstreamjs_spark.queries.streaming_q import bucket_pair_stream
-
-    batches = [
-        # trigger 0: bucket A gets ids 1, 2 -> emits (1,2); bucket C
-        # gets ids 20, 21 -> emits (20,21)
-        [(1, 0, "A"), (2, 0, "A"), (20, 0, "C"), (21, 0, "C")],
-        # trigger 1: bucket B arrives; A idles past its TTL and
-        # evicts; C receives a DUPLICATE (id 20, already a member) —
-        # the re-arm path: its timer must be reset, not cancelled
-        [(10, 0, "B"), (20, 0, "C")],
-        # trigger 2: late id 3 for bucket A -> TTL mode re-seeds and
-        # loses (1,3)/(2,3); a same-trigger partner 4 still pairs
-        [(3, 0, "A"), (4, 0, "A")],
-    ]
-    sdf = stage_triggers(
-        spark, str(tmp_path / "src"), batches,
-        "doc_id long, band int, bsig string",
-    )
-
-    def run(ttl_ms):
-        qname = f"ttl_{'off' if ttl_ms is None else ttl_ms}"
-        q = (
-            bucket_pair_stream(sdf, ttl_ms=ttl_ms)
-            .writeStream.format("memory").queryName(qname)
-            .outputMode("append")
-            .option(
-                "checkpointLocation",
-                str(tmp_path / f"ck_{qname}"),
-            )
-            .start()
-        )
-        removed_by_batch: dict[int, int] = {}
-        total_by_batch: dict[int, int] = {}
-
-        def drain_removed():
-            for p in q.recentProgress:
-                removed_by_batch[p["batchId"]] = sum(
-                    op.get("numRowsRemoved", 0) or 0
-                    for op in p.get("stateOperators", [])
-                )
-                total_by_batch[p["batchId"]] = sum(
-                    op.get("numRowsTotal", 0) or 0
-                    for op in p.get("stateOperators", [])
-                )
-
-        if ttl_ms is None:
-            # NoTimeout: the engine idles once the files drain, so
-            # processAllAvailable terminates
-            q.processAllAvailable()
-            drain_removed()
-        else:
-            # ProcessingTimeTimeout keeps the no-data batch loop
-            # spinning to poll timers (documented in the operator), so
-            # processAllAvailable never returns — poll until the
-            # eviction and the post-eviction re-seed are both visible
-            deadline = time.time() + 180
-            while time.time() < deadline:
-                drain_removed()
-                done_pairs = {
-                    (r["d1"], r["d2"])
-                    for r in spark.table(qname).collect()
-                }
-                if (
-                    sum(removed_by_batch.values()) > 0
-                    and {(1, 2), (3, 4), (20, 21)} <= done_pairs
-                    and total_by_batch
-                    and total_by_batch[max(total_by_batch)] == 0
-                ):
-                    break
-                time.sleep(0.5)
-        pairs = {
-            (r["d1"], r["d2"])
-            for r in spark.table(qname).collect()
-        }
-        q.stop()
-        final_total = (
-            total_by_batch[max(total_by_batch)] if total_by_batch else -1
-        )
-        return pairs, sum(removed_by_batch.values()), final_total
-
-    exact_pairs, exact_removed, exact_total = run(None)
-    assert exact_pairs == {
-        (1, 2), (1, 3), (2, 3), (1, 4), (2, 4), (3, 4), (20, 21)
-    }
-    assert exact_removed == 0  # NoTimeout never evicts
-    assert exact_total == 3  # buckets A, B, C all retained
-
-    # 1 ms: expires between triggers
-    ttl_pairs, ttl_removed, ttl_total = run(1)
-    assert ttl_removed > 0  # eviction really happened
-    # pre-eviction pairs emitted; cross-eviction pairs LOST; the
-    # re-seeded bucket still pairs its post-eviction members
-    assert (1, 2) in ttl_pairs
-    assert (20, 21) in ttl_pairs
-    assert (3, 4) in ttl_pairs
-    assert not {(1, 3), (2, 3), (1, 4), (2, 4)} & ttl_pairs
-    assert ttl_pairs < exact_pairs  # strict subset: the stated trade
-    # the duplicate-fed bucket C must ALSO evict once its (re-armed)
-    # TTL lapses: every bucket leaves state, nothing leaks forever
-    assert ttl_total == 0
+    assert got == want
 
 
 @pytest.mark.slow
@@ -1854,17 +1742,12 @@ def test_stream_embedding_neardup_equals_batch_any_schedule(spark, tmp_path):
     """q214b's contract: the streamed VERIFIED embedding pair set
     (bucket_pair_stream over SRP bands + in-stream exact cosine)
     equals batch cosine_neardup_pairs_lsh exactly for any micro-batch
-    schedule, including descending-id delivery (the generic state
-    machine inherits q205's out-of-order fix)."""
+    schedule, including descending-id delivery. Drives the SHIPPED
+    cosine_verified_stream."""
     import numpy as np
 
-    from kstreamjs_spark.operators.similarity import (
-        as_double,
-        cosine,
-        cosine_neardup_pairs_lsh,
-        srp_banded_buckets,
-    )
-    from kstreamjs_spark.queries.streaming_q import bucket_pair_stream
+    from kstreamjs_spark.operators.similarity import cosine_neardup_pairs_lsh
+    from kstreamjs_spark.queries.streaming_q import cosine_verified_stream
 
     rng = np.random.RandomState(3)
     base = rng.standard_normal(64)
@@ -1893,23 +1776,7 @@ def test_stream_embedding_neardup_equals_batch_any_schedule(spark, tmp_path):
         sdf = stage_triggers(
             spark, f"{d}/{tag}", chunks, "vec_id long, embedding array<float>"
         )
-        banded = srp_banded_buckets(sdf).withColumnRenamed(
-            "vec_id", "doc_id"
-        )
-        cand = bucket_pair_stream(banded).select(
-            F.col("d1").alias("v1"), F.col("d2").alias("v2")
-        )
-        e = bdf.select("vec_id", as_double(F.col("embedding")).alias("v"))
-        s1 = e.select(F.col("vec_id").alias("v1"), F.col("v").alias("va"))
-        s2 = e.select(F.col("vec_id").alias("v2"), F.col("v").alias("vb"))
-        verified = (
-            cand.join(s1, "v1").join(s2, "v2")
-            .withColumn(
-                "score", F.round(cosine(F.col("va"), F.col("vb")), 6)
-            )
-            .filter(F.col("score") >= 0.4)
-            .select("v1", "v2", "score")
-        )
+        verified = cosine_verified_stream(sdf, bdf, threshold=0.4)
         got = {
             (r["v1"], r["v2"], r["score"])
             for r in run_to_memory(

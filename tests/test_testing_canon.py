@@ -1,10 +1,9 @@
 """The local mirror must be driver-faithful: the driver materializes both
 result sets through pandas and hashes dtype-sensitively, so DuckDB's
 ``SUM(INTEGER)`` (HUGEINT -> pandas float64) must NOT compare equal to
-Spark's LONG (int64) even when every value is numerically identical.
-Round 2 shipped four driver-red queries (q53/q55/q59/q62) because the old
-mirror compared raw Python values and was blind to this class — these
-tests pin the strict behavior so it can never regress."""
+Spark's LONG (int64) even when every value is numerically identical. A
+mirror that compares raw Python values is blind to this class — these
+tests pin the strict behavior."""
 
 from __future__ import annotations
 
