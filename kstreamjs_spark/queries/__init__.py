@@ -76,18 +76,25 @@ _WINDOW_SIZE = 50
 # under an unchanged oracle, after its latest driver row. Empty the list
 # once the driver's CORRECTNESS rows come back green for the pins.
 _WINDOW_PRIORITY: list[str] = [
-    # stateful bucket emitter re-planned onto a bounded state-key space
-    # (pmod(xxhash64(band, bsig), 4096) slots, per-slot bucket dicts)
+    # bucket-collision pairs now come from a stream-stream self-join of
+    # the banded stream on (band, bsig)
     "q205_stream_minhash_candidates",
     "q205b_stream_minhash_verify",
     "q214b_stream_embedding_neardup",
     # oracle text changed: argmax score in DECIMAL/HUGEINT arithmetic
     "q216c_wordpiece_likelihood_train",
-    # bucket reads go through mergeSchema, and manifests carry
-    # delete_files/n_buckets: the commit protocol under the same oracles
+    # every commit to the bucketed manifest table (the streaming writer's
+    # included) goes through snapshot -> prepare -> publish, and
+    # retention is derived from the manifests: the commit protocol under
+    # the same oracles
     "q213_stream_scd1_upsert",
     "q213b_scd1_changelog",
     "q213c_scd1_time_travel",
+    "q213d_scd1_schema_evolution",
+    "q220_scd1_delete_vectors",
+    "q225_scd1_bucket_evolution",
+    "q219b_stream_knn_graph_insert",
+    "q229b_stream_ann_serve_persisted",
 ]
 
 

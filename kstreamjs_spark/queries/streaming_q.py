@@ -2445,39 +2445,41 @@ def scd1_upsert_stream(
 
     Commit protocol (the Delta/Iceberg MERGE shape without the
     format dependency, instead of a whole-snapshot rewrite): the
-    dimension table is hash-bucketed by key
-    (``pmod(xxhash64(user_id), n_buckets)``) and each commit rewrites
-    ONLY the buckets containing batch keys, copy-on-write at bucket
-    granularity:
+    dimension table is hash-bucketed by key (`_scd1_bucket`) and each
+    commit rewrites ONLY the buckets containing batch keys,
+    copy-on-write at bucket granularity. Every micro-batch commits
+    through the same snapshot -> `_scd1_prepare` -> `_scd1_publish`
+    path as every other writer of the table:
 
     - layout: ``root/commit_v{n}/pbucket={b}`` holds bucket ``b`` as
-      written by commit ``n``; a bucket's CURRENT copy is the one from
-      the latest commit that touched it (the in-driver manifest tracks
-      bucket -> commit, and each commit persists it to
-      ``root/_manifest/v{n}.json`` so the swap is table-atomic:
-      readers resolve the newest manifest, never a half-written dir);
+      written by commit ``n``; a bucket's CURRENT copy is the one the
+      newest manifest ``root/_manifest/v{n}.json`` names. The
+      manifests are the only table state (no driver-side map), and the
+      swap is table-atomic: readers resolve the newest manifest, never
+      a half-written dir;
     - per-commit cost is O(touched buckets + batch), not O(table):
       a batch touching k of B buckets reads and rewrites ~k/B of the
       table (at 100 TB, B scales with the table so a trickle of CDC
       keys rewrites a sliver — the exact partition-pruning contract
       MERGE gives; untouched bucket files are NOT opened, copied, or
       rewritten, which the byte-identity pytest pins);
-    - retention: once commit ``n`` rewrites bucket ``b``, the
-      superseded ``commit_v{old}/pbucket={b}`` directory is garbage
-      FOR THE LATEST VIEW and is pruned after the commit lands (the
-      unbounded-snapshot growth otherwise); emptied commit dirs
-      are removed too, so steady-state storage is exactly one live
-      copy per bucket plus manifests. ``retain_commits``
-      is the VACUUM horizon: a superseded copy survives until the
-      table is ``retain_commits`` commits past the version that
-      superseded it, which keeps every manifest within the horizon
-      fully readable — TIME TRAVEL (`scd1_read_as_of`) works AS OF
-      any retained version and degrades exactly like Delta's VACUUM:
-      reads past the horizon fail because their files are gone, by
-      design, not by accident. Default 0 = prune immediately (only
-      the latest view readable);
+    - retention: after each commit `_scd1_vacuum` prunes the bucket
+      copies that only manifests older than the VACUUM horizon
+      ``retain_commits`` reference (and the commit dirs they empty),
+      so steady-state storage is one live copy per bucket plus the
+      horizon. A copy superseded at version s survives until the table
+      reaches s + ``retain_commits``, which keeps every manifest within
+      the horizon fully readable — TIME TRAVEL (`scd1_read_as_of`)
+      works AS OF any retained version and degrades exactly like
+      Delta's VACUUM: reads past the horizon fail because their files
+      are gone, by design, not by accident. Default 0 = prune
+      immediately (only the latest view readable);
     - an empty source (zero micro-batches) raises a clear error
       instead of a confusing path-not-found on a ``v-1`` read.
+
+    The writer assumes it is the table's sole writer: its data dirs
+    take the dense ``commit_v{n}`` names, and it does not coordinate
+    with `scd1_commit_batch` committers on the same root.
 
     Merge arithmetic is pure aggregation — counts ADD across commits,
     the (ts, value) struct MAXes — so the final table equals the batch
@@ -2493,7 +2495,8 @@ def scd1_upsert_stream(
     whose batch contains such an event. Commits before that boundary
     write the v1 schema (the column physically absent from their
     parquet footers, real evolution, not a pre-created NULL column);
-    from the boundary on, every rewritten bucket carries v2.
+    from the boundary on, every rewritten bucket carries v2, and every
+    manifest records that the table has evolved.
     Reconciliation rule, applied identically at merge time (a v2
     commit reading a v1 bucket copy) and at read time (a manifest
     spanning the boundary, read with mergeSchema): a row from a v1
@@ -2507,160 +2510,45 @@ def scd1_upsert_stream(
     mixed-manifest mechanics (v1 files really lack the column,
     time-travel reads before the boundary default-fill, spanning
     reads reconcile) are pinned by the 3-trigger pytest."""
-    import json
-    import os
     import shutil
 
     from ..streaming.replay import run_foreach_batch
 
     shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(os.path.join(root, "_manifest"), exist_ok=True)
-    # tombstones: (superseded_at_version, old_commit, bucket) — a copy
-    # superseded at version s serves AS OF < s reads; VACUUM drops it
-    # once the table reaches version s + retain_commits.
-    state: dict = {
-        "version": -1,
-        "bucket_commit": {},
-        "tombstones": [],
-        "evolved": False,
-    }
-    bucket_of = F.pmod(F.xxhash64("user_id"), F.lit(n_buckets)).cast(
-        "int"
-    )
-    evolve_ts = (
-        F.lit(evolve_sum_from).cast("timestamp")
-        if evolve_sum_from is not None
-        else None
-    )
-
-    def bucket_path(commit: int, b: int) -> str:
-        return f"{root}/commit_v{commit}/pbucket={b}"
 
     def commit(batch_df: DataFrame, _bid: int) -> None:
-        n = state["version"] + 1
-        # "last" rides as a struct ordered (ts, value): struct MAX is
-        # lexicographic, and (user_id, ts) is unique in the source
-        # (asserted by the pytest), so the latest VALUE merges exactly
-        aggs = [
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.max(
-                F.struct(F.col("ts").alias("ts"),
-                         F.col("value").alias("value"))
-            ).alias("last"),
-        ]
-        if evolve_ts is not None:
-            aggs.append(
-                F.sum(
-                    F.when(F.col("ts") >= evolve_ts, F.col("value"))
-                    .otherwise(F.lit(0.0))
-                ).alias("sum_value")
-            )
-        delta = (
-            batch_df.groupBy("user_id").agg(*aggs)
-            .withColumn("bucket", bucket_of)
+        spark = batch_df.sparkSession
+        snap = _scd1_snapshot(root)
+        n = snap["version"] + 1
+        pending = _scd1_prepare(
+            spark, root, snap, batch_df, n_buckets,
+            evolve_sum_from=evolve_sum_from, dirname=f"commit_v{n}",
         )
-        # Touched-bucket discovery: a <= n_buckets-row collect (bounded
-        # by the bucket count, never by data). The evolution-boundary
-        # probe rides in the SAME aggregate (any event at/after T iff
-        # max per-user last.ts crosses it) — the earlier separate
-        # batch_df.agg paid one extra full-batch scan per pre-boundary
-        # commit.
-        if evolve_ts is not None and not state["evolved"]:
-            probe = delta.agg(
-                F.sort_array(F.collect_set("bucket")).alias("tb"),
-                F.max(F.col("last.ts") >= evolve_ts).alias("crossed"),
-            ).first()
-            touched = [int(b) for b in probe["tb"]]
-            state["evolved"] = bool(probe["crossed"])
-        else:
-            touched = sorted(
-                r["bucket"]
-                for r in delta.select("bucket").distinct().collect()
-            )
-        if evolve_ts is not None and not state["evolved"]:
-            # pre-boundary commits write the v1 schema: the column is
-            # PHYSICALLY absent, not a pre-created default (Catalyst
-            # prunes the unused aggregate expression with it)
-            delta = delta.drop("sum_value")
-        prev_paths = [
-            bucket_path(state["bucket_commit"][b], b)
-            for b in touched
-            if b in state["bucket_commit"]
-        ]
-        if prev_paths:
-            # Read ONLY the touched buckets' current copies; the
-            # bucket column is re-derived from the key (reading the
-            # partition dirs directly drops the partition column).
-            prev = batch_df.sparkSession.read.option(
-                "mergeSchema", "true"
-            ).parquet(*prev_paths)
-            cols = ["user_id", "n_events", "last"]
-            m_aggs = [
-                F.sum("n_events").cast("long").alias("n_events"),
-                F.max("last").alias("last"),
-            ]
-            if "sum_value" in delta.columns:
-                # schema-evolution reconciliation at MERGE time: a v1
-                # bucket copy lacks the column — its rows carry the
-                # documented default 0.0 (pre-T events contribute 0 to
-                # the since-T sum by definition)
-                if "sum_value" not in prev.columns:
-                    prev = prev.withColumn("sum_value", F.lit(0.0))
-                prev = prev.withColumn(
-                    "sum_value",
-                    F.coalesce(F.col("sum_value"), F.lit(0.0)),
-                )
-                cols.append("sum_value")
-                m_aggs.append(F.sum("sum_value").alias("sum_value"))
-            merged = (
-                prev.select(*cols)
-                .unionByName(delta.drop("bucket"))
-                .groupBy("user_id")
-                .agg(*m_aggs)
-                .withColumn("bucket", bucket_of)
-            )
-        else:
-            merged = delta
-        # One job writes every touched bucket, partitioned at bucket
-        # granularity; untouched buckets' files are never opened.
-        merged.withColumn("pbucket", F.col("bucket")).write.mode(
-            "overwrite"
-        ).partitionBy("pbucket").parquet(f"{root}/commit_v{n}")
         if changelog:
-            # CDC OUT (q213b): per commit, one change row per
-            # BATCH key — old state from the still-live previous bucket
-            # copies (n_before=0 for first appearances), new state from
-            # the just-written commit. Written BEFORE retention prunes
-            # the superseded copies; consumers subscribe to
-            # root/_changelog instead of re-diffing snapshots.
-            new_state = batch_df.sparkSession.read.parquet(
-                f"{root}/commit_v{n}"
-            )
-            keys = delta.select("user_id")
-            after = keys.join(new_state, "user_id").select(
+            # CDC OUT (q213b): one change row per BATCH key — old
+            # state from the snapshot's copies of the touched buckets
+            # (n_before=0 for first appearances), new state from the
+            # just-written dir. Written before the publish, so before
+            # the vacuum prunes the superseded copies; consumers
+            # subscribe to root/_changelog instead of re-diffing
+            # snapshots.
+            keys = batch_df.select("user_id").distinct()
+            after = keys.join(
+                spark.read.parquet(f"{root}/{pending['dir']}"), "user_id"
+            ).select(
                 "user_id",
                 F.col("n_events").alias("n_after"),
                 F.col("last.ts").alias("last_ts_after"),
                 F.col("last.value").alias("last_value_after"),
             )
-            if prev_paths:
-                before = (
-                    keys.join(
-                        batch_df.sparkSession.read.parquet(*prev_paths),
-                        "user_id",
-                        "left",
-                    )
-                    .select(
-                        "user_id",
-                        F.coalesce(F.col("n_events"), F.lit(0))
-                        .cast("long")
-                        .alias("n_before"),
-                    )
-                )
-            else:
-                before = keys.select(
+            prev = _scd1_live(spark, root, snap, pending["buckets"])
+            before = keys.withColumn("n_before", F.lit(0).cast("long"))
+            if prev is not None:
+                before = keys.join(prev, "user_id", "left").select(
                     "user_id",
-                    F.lit(0).cast("long").alias("n_before"),
+                    F.coalesce(F.col("n_events"), F.lit(0))
+                    .cast("long")
+                    .alias("n_before"),
                 )
             (
                 after.join(before, "user_id")
@@ -2668,100 +2556,26 @@ def scd1_upsert_stream(
                 .write.mode("overwrite")
                 .parquet(f"{root}/_changelog/c{n}")
             )
-        superseded = [
-            (state["bucket_commit"][b], b)
-            for b in touched
-            if b in state["bucket_commit"]
-        ]
-        state["version"] = n
-        for b in touched:
-            state["bucket_commit"][b] = n
-        # Manifest AFTER the data lands: the table flips to commit n
-        # atomically at manifest write, bucket map included.
-        # write-temp-then-rename so a cross-process reader (the
-        # scd1_read_as_of contract) can never observe a torn manifest
-        # — the same atomicity the concurrent publisher gets from
-        # os.link
-        mtmp = f"{root}/_manifest/v{n}.json.tmp"
-        with open(mtmp, "w") as fh:
-            json.dump(
-                {
-                    "version": n,
-                    "bucket_commit": {
-                        str(b): c
-                        for b, c in state["bucket_commit"].items()
-                    },
-                    # bucket -> data dir, explicit: the
-                    # concurrent-writer path publishes uniquely-named
-                    # dirs that are not dense commit_v{n} ids, so
-                    # readers resolve dirs from the manifest instead
-                    # of deriving them from commit numbers
-                    "bucket_dir": {
-                        str(b): f"commit_v{c}"
-                        for b, c in state["bucket_commit"].items()
-                    },
-                    "n_buckets": n_buckets,
-                },
-                fh,
-            )
-        os.replace(mtmp, f"{root}/_manifest/v{n}.json")
-        # Retention / VACUUM: a copy superseded at version n serves
-        # AS OF < n; it survives until the table is retain_commits
-        # past n, then prunes (with any commit dir it emptied) —
-        # storage stays one live copy per bucket plus the retained
-        # time-travel horizon, not one snapshot per micro-batch.
-        state["tombstones"].extend(
-            (n, old_commit, b) for old_commit, b in superseded
-        )
-        due = [
-            t for t in state["tombstones"]
-            if t[0] + retain_commits <= n
-        ]
-        state["tombstones"] = [
-            t for t in state["tombstones"]
-            if t[0] + retain_commits > n
-        ]
-        for _s, old_commit, b in due:
-            shutil.rmtree(bucket_path(old_commit, b),
-                          ignore_errors=True)
-        for old_commit in {c for _s, c, _b in due}:
-            d = f"{root}/commit_v{old_commit}"
-            if os.path.isdir(d) and not any(
-                name.startswith("pbucket=") for name in os.listdir(d)
-            ):
-                shutil.rmtree(d, ignore_errors=True)
+        _scd1_publish(root, pending)
+        _scd1_vacuum(root, retain_commits)
 
     run_foreach_batch(sdf, commit, "scd1")
-    if state["version"] < 0:
+    if _scd1_snapshot(root)["version"] < 0:
         raise ValueError(
             "scd1_upsert_stream: source stream produced zero "
             "micro-batches — no dimension table was committed under "
             f"{root!r} (nothing to read back)"
         )
-    live = [
-        bucket_path(c, b)
-        for b, c in sorted(state["bucket_commit"].items())
-    ]
-    back = sdf.sparkSession.read.option("mergeSchema", "true").parquet(
-        *live
+    return scd1_read_as_of(
+        sdf.sparkSession, root,
+        extra_cols=None if evolve_sum_from is None else {"sum_value": 0.0},
     )
-    out_cols = [
-        F.col("user_id"),
-        F.col("n_events"),
-        F.col("last.ts").alias("last_ts"),
-        F.col("last.value").alias("last_value"),
-    ]
-    if evolve_sum_from is not None:
-        # read-time reconciliation across the evolution boundary:
-        # rows from v1 files (or a table that never evolved) carry
-        # the documented default 0.0
-        sum_col = (
-            F.coalesce(F.col("sum_value"), F.lit(0.0))
-            if "sum_value" in back.columns
-            else F.lit(0.0)
-        )
-        out_cols.append(sum_col.alias("sum_value"))
-    return back.select(*out_cols)
+
+
+def _scd1_bucket(n_buckets: int, key: str = "user_id"):
+    """Key -> bucket of every bucketed table under the manifest
+    protocol: ``pmod(xxhash64(key), n_buckets)``."""
+    return F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")
 
 
 def _manifest_bucket_dir(man: dict) -> dict:
@@ -2811,64 +2625,35 @@ def scd1_read_as_of(
     BEFORE the delete reads a manifest with no delete entries and
     sees the deleted rows — DELETE commits prune nothing, so the
     time-travel horizon is unaffected."""
-    import json
-    import os
-
-    mdir = os.path.join(root, "_manifest")
-    if version is None:
-        versions = sorted(
-            int(f[1:-5])
-            for f in os.listdir(mdir)
-            if f.startswith("v") and f.endswith(".json")
+    snap = _scd1_snapshot(root, version)
+    if snap["version"] < 0:
+        raise ValueError(f"scd1_read_as_of: no manifest under {root!r}")
+    back = _scd1_live(spark, root, snap)
+    if back is None:
+        # fully-deleted table (every bucket dropped and purged): the
+        # manifest is valid and the table is EMPTY
+        back = spark.createDataFrame(
+            [], "user_id long, n_events long, "
+            "last struct<ts: timestamp, value: double>",
         )
-        if not versions:
-            raise ValueError(
-                f"scd1_read_as_of: no manifest under {mdir!r}"
-            )
-        version = versions[-1]
-    with open(os.path.join(mdir, f"v{version}.json")) as fh:
-        man = json.load(fh)
-    bdir = _manifest_bucket_dir(man)
-    paths = [
-        f"{root}/{d}/pbucket={b}" for b, d in sorted(bdir.items())
-    ]
-    if not paths:
-        # fully-deleted table (every bucket dropped and purged):
-        # the manifest is valid and the table is
-        # EMPTY — return the empty table with its logical schema
-        # instead of letting spark.read.parquet() fail on zero paths
-        cols = [
-            F.lit(None).cast("long").alias("user_id"),
-            F.lit(None).cast("long").alias("n_events"),
-            F.lit(None).cast("timestamp").alias("last_ts"),
-            F.lit(None).cast("double").alias("last_value"),
-        ]
-        for name, default in (extra_cols or {}).items():
-            cols.append(F.lit(default).alias(name))
-        return spark.range(0).select(*cols)
-    back = spark.read.option("mergeSchema", "true").parquet(*paths)
-    dpaths = [
-        f"{root}/{d}/pbucket={b}"
-        for b, ds in sorted(man.get("delete_files", {}).items())
-        for d in ds
-    ]
-    if dpaths:
-        dkeys = spark.read.parquet(*dpaths).select("user_id").distinct()
-        back = back.join(dkeys, "user_id", "anti")
-    cols = [
-        F.col("user_id"),
-        F.col("n_events"),
+    return back.select(
+        "user_id",
+        "n_events",
         F.col("last.ts").alias("last_ts"),
         F.col("last.value").alias("last_value"),
-    ]
-    for name, default in (extra_cols or {}).items():
-        filled = (
-            F.coalesce(F.col(name), F.lit(default))
-            if name in back.columns
-            else F.lit(default)
-        )
-        cols.append(filled.alias(name))
-    return back.select(*cols)
+        *(
+            _scd1_filled(back, name, default).alias(name)
+            for name, default in (extra_cols or {}).items()
+        ),
+    )
+
+
+def _scd1_filled(df: DataFrame, name: str, default: float):
+    """Column ``name`` of ``df`` with its documented ``default`` where
+    a pre-evolution file lacks it (or for every row when none has it)."""
+    if name not in df.columns:
+        return F.lit(default)
+    return F.coalesce(F.col(name), F.lit(default))
 
 
 class ConcurrentWriteConflict(RuntimeError):
@@ -2880,45 +2665,74 @@ class ConcurrentWriteConflict(RuntimeError):
     (`scd1_commit_batch` does this automatically up to max_retries)."""
 
 
-def _scd1_snapshot(root: str) -> dict:
-    """Latest committed table view — (version, bucket -> data dir,
-    bucket -> applicable equality-delete dirs) — read from the manifest
-    dir alone: the optimistic reader's side of the protocol, no writer
-    state, any process. ``delete_files`` is absent from pre-DV
-    manifests (the streaming writer's, and every round-<=15 table) —
-    `.get` compatibility, same policy as `_manifest_bucket_dir`."""
-    import json
+def _scd1_versions(root: str) -> list[int]:
+    """Committed manifest versions under ``root``, ascending."""
     import os
 
     mdir = os.path.join(root, "_manifest")
-    versions = (
-        sorted(
-            int(f[1:-5])
-            for f in os.listdir(mdir)
-            if f.startswith("v") and f.endswith(".json")
-        )
-        if os.path.isdir(mdir)
-        else []
+    if not os.path.isdir(mdir):
+        return []
+    return sorted(
+        int(f[1:-5])
+        for f in os.listdir(mdir)
+        if f.startswith("v") and f.endswith(".json")
     )
-    if not versions:
-        return {
-            "version": -1,
-            "bucket_dir": {},
-            "delete_files": {},
-            "n_buckets": None,
-        }
-    with open(os.path.join(mdir, f"v{versions[-1]}.json")) as fh:
-        man = json.load(fh)
-    return {
-        "version": man["version"],
-        "bucket_dir": _manifest_bucket_dir(man),
-        "delete_files": {
-            b: list(v) for b, v in man.get("delete_files", {}).items()
-        },
-        # bucket SPEC (q225): absent from older manifests —
-        # writers can only validate against tables that record it
-        "n_buckets": man.get("n_buckets"),
+
+
+def _scd1_snapshot(root: str, version: int | None = None) -> dict:
+    """Table view AS OF manifest ``version`` (default: the newest) —
+    (version, bucket -> data dir, bucket -> applicable equality-delete
+    dirs, bucket spec, evolved flag) — read from the manifest dir
+    alone: the optimistic reader's side of the protocol, no writer
+    state, any process. A root with no manifest reads as version -1,
+    an empty table with no spec. Keys a manifest lacks (written before
+    ``delete_files``, ``n_buckets`` or ``evolved`` were recorded) keep
+    these empty defaults, the same policy as `_manifest_bucket_dir`."""
+    import json
+
+    snap = {
+        "version": -1,
+        "bucket_dir": {},
+        "delete_files": {},
+        "n_buckets": None,
+        "evolved": False,
     }
+    if version is None:
+        versions = _scd1_versions(root)
+        if not versions:
+            return snap
+        version = versions[-1]
+    with open(f"{root}/_manifest/v{version}.json") as fh:
+        man = json.load(fh)
+    snap.update(man, bucket_dir=_manifest_bucket_dir(man))
+    return snap
+
+
+def _scd1_live(
+    spark: SparkSession, root: str, snap: dict, buckets=None
+) -> DataFrame | None:
+    """Rows of the snapshot's current copies of ``buckets`` (default:
+    every bucket) minus the keys of their pending equality deletes;
+    None when the snapshot holds none of them. One reader for every
+    writer and reader of the table."""
+    bdir = snap["bucket_dir"]
+    picked = sorted(
+        bdir if buckets is None else {str(b) for b in buckets} & set(bdir)
+    )
+    if not picked:
+        return None
+    live = spark.read.option("mergeSchema", "true").parquet(
+        *[f"{root}/{bdir[b]}/pbucket={b}" for b in picked]
+    )
+    dpaths = [
+        f"{root}/{d}/pbucket={b}"
+        for b in picked
+        for d in snap["delete_files"].get(b, [])
+    ]
+    if dpaths:
+        dkeys = spark.read.parquet(*dpaths).select("user_id").distinct()
+        live = live.join(dkeys, "user_id", "anti")
+    return live
 
 
 def _scd1_check_spec(snap: dict, n_buckets: int, who: str) -> None:
@@ -2937,115 +2751,140 @@ def _scd1_check_spec(snap: dict, n_buckets: int, who: str) -> None:
         )
 
 
+def _scd1_pending(
+    snap: dict, dirname: str, buckets, n_buckets: int, **extra
+) -> dict:
+    """A commit that wrote ``dirname`` for ``buckets`` against ``snap``,
+    ready for `_scd1_publish`; ``extra`` overrides the defaults
+    (``kind="merge"``, the snapshot's evolved flag)."""
+    return {
+        "dir": dirname,
+        "buckets": sorted(buckets),
+        "read_version": snap["version"],
+        "read_map": dict(snap["bucket_dir"]),
+        "read_deletes": snap["delete_files"],
+        "kind": "merge",
+        "n_buckets": n_buckets,
+        "evolved": snap["evolved"],
+        **extra,
+    }
+
+
 def _scd1_prepare(
     spark: SparkSession,
     root: str,
     snap: dict,
     batch_df: DataFrame,
     n_buckets: int = 16,
+    *,
+    evolve_sum_from: str | None = None,
+    dirname: str | None = None,
 ) -> dict:
-    """OPTIMISTIC-phase compute: merge the batch into the touched
-    buckets' copies AS OF ``snap`` and write the results under a
-    writer-UNIQUE data dir (commit_w{uuid} — never a dense version
-    name, so two concurrent preparers cannot collide on a path). No
-    table metadata is touched; the table does not change until
-    `_scd1_publish`. Merge arithmetic mirrors the streaming writer's
-    commit() (count ADDs, the (ts, value) struct MAXes — kept inline
-    there because of its schema-evolution branch)."""
+    """OPTIMISTIC-phase compute, the one MERGE of the table: merge the
+    batch into the touched buckets' copies AS OF ``snap`` (count ADDs,
+    the (ts, value) struct MAXes) and write the results under
+    ``dirname`` — by default a writer-UNIQUE commit_w{uuid}, so two
+    concurrent preparers cannot collide on a path; the sole streaming
+    writer passes its dense commit_v{n}. No table metadata is touched;
+    the table does not change until `_scd1_publish`.
+
+    ``evolve_sum_from`` is the streaming writer's schema evolution
+    (`scd1_upsert_stream`): the batch aggregate adds ``sum_value``,
+    which a commit writes only once the table has evolved (the snapshot
+    says so, or this batch crosses the boundary); a v1 copy's rows merge
+    with the default 0.0. Without it, a table whose manifest records
+    evolution is refused: this merge carries the base schema only."""
     import uuid
 
     _scd1_check_spec(snap, n_buckets, "scd1_commit_batch")
-    bucket_of = F.pmod(F.xxhash64("user_id"), F.lit(n_buckets)).cast(
-        "int"
-    )
-    delta = (
-        batch_df.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.max(
-                F.struct(F.col("ts").alias("ts"),
-                         F.col("value").alias("value"))
-            ).alias("last"),
+    if snap["evolved"] and evolve_sum_from is None:
+        raise ValueError(
+            "scd1_commit_batch: table is schema-evolved (its manifest "
+            "records the since-T sum_value column) and this committer "
+            "merges the base schema only — committing would lose that "
+            "sum for the batch's keys; use the evolution-aware "
+            "streaming writer for this table"
         )
-        .withColumn("bucket", bucket_of)
-    )
-    touched = sorted(
-        r["bucket"] for r in delta.select("bucket").distinct().collect()
-    )
-    prev_paths = [
-        f"{root}/{snap['bucket_dir'][str(b)]}/pbucket={b}"
-        for b in touched
-        if str(b) in snap["bucket_dir"]
+    bucket = _scd1_bucket(n_buckets)
+    # "last" rides as a struct ordered (ts, value): struct MAX is
+    # lexicographic, and (user_id, ts) is unique in the source
+    # (asserted by the pytest), so the latest VALUE merges exactly
+    aggs = [
+        F.count(F.lit(1)).cast("long").alias("n_events"),
+        F.max(
+            F.struct(F.col("ts").alias("ts"),
+                     F.col("value").alias("value"))
+        ).alias("last"),
     ]
-    if prev_paths:
-        prev = spark.read.option("mergeSchema", "true").parquet(
-            *prev_paths
+    probe = [F.sort_array(F.collect_set("bucket")).alias("touched")]
+    if evolve_sum_from is not None:
+        evolve_ts = F.lit(evolve_sum_from).cast("timestamp")
+        aggs.append(
+            F.sum(
+                F.when(F.col("ts") >= evolve_ts, F.col("value"))
+                .otherwise(F.lit(0.0))
+            ).alias("sum_value")
         )
-        # refuse schema-evolved tables LOUDLY: this committer merges
-        # the base (user_id, n_events, last) schema only — rewriting
-        # an evolved bucket with a base-schema copy would silently
-        # reset the evolved column to its read-time default for every
-        # key in the bucket
-        extra = set(prev.columns) - {"user_id", "n_events", "last",
-                                     "pbucket", "bucket"}
-        if extra:
-            raise ValueError(
-                f"scd1_commit_batch: table carries schema-evolved "
-                f"column(s) {sorted(extra)} this committer does not "
-                "merge — committing would erase them; use the "
-                "evolution-aware streaming writer for this table"
-            )
-        # apply the snapshot's pending equality-deletes for the
-        # touched buckets BEFORE merging (q220): the rewrite
-        # materializes them, and `_scd1_publish` drops their manifest
-        # entries for exactly these buckets. Without this a deleted
-        # key would resurrect with its FULL pre-delete history from
-        # the prev copy; with it, a batch re-inserting a deleted key
-        # re-creates it from the new events alone (DELETE erases
-        # history — the documented resurrection semantics).
-        dpaths = [
-            f"{root}/{d}/pbucket={b}"
-            for b in touched
-            for d in snap.get("delete_files", {}).get(str(b), [])
+        probe.append(F.max(F.col("last.ts") >= evolve_ts).alias("crossed"))
+    delta = batch_df.groupBy("user_id").agg(*aggs).withColumn("bucket", bucket)
+    # One <= n_buckets-row aggregate (bounded by the bucket count,
+    # never by data) finds the touched buckets and, while evolving,
+    # whether the batch crosses the boundary (any event at/after T iff
+    # some per-user max last.ts does).
+    found = delta.agg(*probe).first()
+    evolved = snap["evolved"] or bool(
+        evolve_sum_from is not None and found["crossed"]
+    )
+    if evolve_sum_from is not None and not evolved:
+        # pre-boundary commits write the v1 schema: the column is
+        # PHYSICALLY absent, not a pre-created default (Catalyst
+        # prunes the unused aggregate expression with it)
+        delta = delta.drop("sum_value")
+    # The snapshot's pending equality-deletes for the touched buckets
+    # apply BEFORE merging (q220): the rewrite materializes them, and
+    # `_scd1_publish` drops their manifest entries for exactly these
+    # buckets. Without this a deleted key would resurrect with its
+    # FULL pre-delete history; with it, a batch re-inserting a deleted
+    # key re-creates it from the new events alone (DELETE erases
+    # history — the documented resurrection semantics).
+    prev = _scd1_live(spark, root, snap, found["touched"])
+    merged = delta
+    if prev is not None:
+        cols = ["user_id", "n_events", "last"]
+        m_aggs = [
+            F.sum("n_events").cast("long").alias("n_events"),
+            F.max("last").alias("last"),
         ]
-        if dpaths:
-            dkeys = spark.read.parquet(*dpaths).select(
-                "user_id"
-            ).distinct()
-            prev = prev.join(dkeys, "user_id", "anti")
+        if "sum_value" in delta.columns:
+            # schema-evolution reconciliation at MERGE time: rows of a
+            # v1 bucket copy carry the documented default 0.0
+            prev = prev.withColumn(
+                "sum_value", _scd1_filled(prev, "sum_value", 0.0)
+            )
+            cols.append("sum_value")
+            m_aggs.append(F.sum("sum_value").alias("sum_value"))
         merged = (
-            prev.select("user_id", "n_events", "last")
+            prev.select(*cols)
             .unionByName(delta.drop("bucket"))
             .groupBy("user_id")
-            .agg(
-                F.sum("n_events").cast("long").alias("n_events"),
-                F.max("last").alias("last"),
-            )
-            .withColumn("bucket", bucket_of)
+            .agg(*m_aggs)
+            .withColumn("bucket", bucket)
         )
-    else:
-        merged = delta
-    dirname = f"commit_w{uuid.uuid4().hex[:12]}"
+    dirname = dirname or f"commit_w{uuid.uuid4().hex[:12]}"
+    # One job writes every touched bucket, partitioned at bucket
+    # granularity; untouched buckets' files are never opened.
     merged.withColumn("pbucket", F.col("bucket")).write.mode(
         "overwrite"
     ).partitionBy("pbucket").parquet(f"{root}/{dirname}")
-    return {
-        "dir": dirname,
-        "buckets": touched,
-        "read_version": snap["version"],
-        "read_map": dict(snap["bucket_dir"]),
-        "read_deletes": {
-            b: list(v)
-            for b, v in snap.get("delete_files", {}).items()
-        },
-        "kind": "merge",
-        "n_buckets": n_buckets,
-    }
+    return _scd1_pending(
+        snap, dirname, found["touched"], n_buckets, evolved=evolved
+    )
 
 
 def _scd1_publish(root: str, pending: dict) -> int:
     """OPTIMISTIC publish (the Delta commit-protocol shape at bucket
-    granularity): attempt versions read_version+1, +2, ... — each
+    granularity), the only writer of the manifest dir: attempt versions
+    read_version+1, +2, ... — each
     attempt atomically LINKS a fully-written manifest into place
     (os.link of a temp file: create-with-content is atomic, so a
     concurrent reader can never observe a half-written manifest).
@@ -3067,11 +2906,16 @@ def _scd1_publish(root: str, pending: dict) -> int:
     leaves the data map untouched and APPENDS ``pending["dir"]`` to
     the touched buckets' delete lists; "rebucket" (q225) REPLACES the
     whole map with the new-spec dirs — it touches every bucket, so
-    ANY intervening commit conflicts (no rebase is possible).
+    ANY intervening commit conflicts (no rebase is possible). A
+    touched bucket the rewrite left EMPTY (every key deleted — the q220
+    purge case) wrote no partition dir: it leaves the map instead of
+    pointing at a nonexistent path.
 
     Every manifest records the table's bucket spec
     (``pending["n_buckets"]``) so later writers can validate theirs
-    (`_scd1_check_spec`)."""
+    (`_scd1_check_spec`), and whether the table has schema-evolved
+    (``pending["evolved"]``, kept once set), so `_scd1_prepare` can
+    refuse a base-schema merge."""
     import json
     import os
     import uuid
@@ -3080,6 +2924,11 @@ def _scd1_publish(root: str, pending: dict) -> int:
     os.makedirs(mdir, exist_ok=True)
     mine = {str(b) for b in pending["buckets"]}
     kind = pending.get("kind", "merge")
+    written = {
+        b for b in mine
+        if os.path.isdir(f"{root}/{pending['dir']}/pbucket={b}")
+    }
+    evolved = bool(pending.get("evolved"))
     prev_map = dict(pending["read_map"])
     prev_del = {
         b: list(v) for b, v in pending.get("read_deletes", {}).items()
@@ -3096,18 +2945,11 @@ def _scd1_publish(root: str, pending: dict) -> int:
         elif kind == "rebucket":
             # whole-map replacement under the NEW spec; deletes were
             # applied during the rewrite
-            new_map = {b: pending["dir"] for b in mine}
+            new_map = {b: pending["dir"] for b in written}
             new_del = {}
         else:
-            # a touched bucket the rewrite left EMPTY (every key
-            # deleted — the q220 purge case) wrote no partition dir:
-            # it leaves the map entirely instead of pointing at a
-            # nonexistent path
-            dropped = {str(b) for b in pending.get("drop_buckets", ())}
-            new_map.update(
-                {b: pending["dir"] for b in mine - dropped}
-            )
-            for b in dropped:
+            new_map.update({b: pending["dir"] for b in written})
+            for b in mine - written:
                 new_map.pop(b, None)
             for b in mine:
                 new_del.pop(b, None)
@@ -3120,6 +2962,7 @@ def _scd1_publish(root: str, pending: dict) -> int:
                     "bucket_dir": new_map,
                     "delete_files": new_del,
                     "n_buckets": pending.get("n_buckets"),
+                    "evolved": evolved,
                 },
                 fh,
             )
@@ -3159,9 +3002,66 @@ def _scd1_publish(root: str, pending: dict) -> int:
                     "prepared merge is stale, recompute"
                 )
             prev_map, prev_del = their_map, their_del
+            evolved = evolved or bool(theirs.get("evolved"))
             continue
         os.unlink(tmp)
         return n
+
+
+def _scd1_commit(root: str, max_retries: int, prepare) -> int:
+    """Snapshot -> ``prepare(snap)`` -> `_scd1_publish`, the optimistic
+    loop of every maintenance writer. ``prepare`` writes the commit's
+    data and returns its pending record, or None when there is nothing
+    to commit (the snapshot's version is returned). A
+    ConcurrentWriteConflict drops the abandoned data dir (if the
+    commit wrote one) and recomputes from a fresh snapshot, up to
+    ``max_retries`` times."""
+    import shutil
+
+    last: ConcurrentWriteConflict | None = None
+    for _ in range(max_retries + 1):
+        snap = _scd1_snapshot(root)
+        pending = prepare(snap)
+        if pending is None:
+            return snap["version"]
+        try:
+            return _scd1_publish(root, pending)
+        except ConcurrentWriteConflict as e:
+            if pending["dir"]:
+                shutil.rmtree(f"{root}/{pending['dir']}",
+                              ignore_errors=True)
+            last = e
+    raise last  # type: ignore[misc]
+
+
+def _scd1_vacuum(root: str, retain_commits: int) -> None:
+    """VACUUM from the manifests alone: at version n, delete every
+    (dir, bucket) copy that a manifest older than n - ``retain_commits``
+    references and no manifest from n - ``retain_commits`` on does,
+    then every such dir left with no ``pbucket=`` child. A copy
+    superseded at version s is referenced by v(s-1) but not by v(s),
+    so it goes once the table reaches s + ``retain_commits``; a dir no
+    manifest references (a concurrent preparer's unpublished commit)
+    is never touched."""
+    import os
+    import shutil
+
+    versions = _scd1_versions(root)
+    horizon = versions[-1] - retain_commits
+    kept: set = set()
+    old: set = set()
+    for v in versions:
+        refs = _scd1_snapshot(root, v)["bucket_dir"].items()
+        (kept if v >= horizon else old).update(refs)
+    gone = old - kept
+    for b, d in gone:
+        shutil.rmtree(f"{root}/{d}/pbucket={b}", ignore_errors=True)
+    for d in {d for _b, d in gone}:
+        path = f"{root}/{d}"
+        if os.path.isdir(path) and not any(
+            name.startswith("pbucket=") for name in os.listdir(path)
+        ):
+            shutil.rmtree(path, ignore_errors=True)
 
 
 def scd1_commit_batch(
@@ -3193,25 +3093,17 @@ def scd1_commit_batch(
 
     Scope, stated plainly: coordinates optimistic committers with each
     other (and readers — `scd1_read_as_of` sees only fully-linked
-    manifests). The long-running streaming writer keeps its in-driver
-    state and assumes it is the sole writer of its table; pointing
-    both at one root is not supported. Superseded copies from external
-    commits are left for a maintenance VACUUM (manifest-diff prune),
-    not reclaimed inline. Returns the committed version."""
-    import shutil
-
-    last: ConcurrentWriteConflict | None = None
-    for _ in range(max_retries + 1):
-        snap = _scd1_snapshot(root)
-        pending = _scd1_prepare(spark, root, snap, batch_df, n_buckets)
-        try:
-            return _scd1_publish(root, pending)
-        except ConcurrentWriteConflict as e:
-            # abandoned attempt: drop the orphaned data dir, recompute
-            shutil.rmtree(f"{root}/{pending['dir']}",
-                          ignore_errors=True)
-            last = e
-    raise last  # type: ignore[misc]
+    manifests). The streaming writer commits through the same three
+    steps but assumes it is the sole writer of its table; pointing
+    both at one root is not supported. A schema-evolved table (its
+    manifest says so) is refused. Superseded copies from these commits
+    are left for a maintenance VACUUM (`_scd1_vacuum`, which the
+    streaming writer runs after each of its commits), not reclaimed
+    here. Returns the committed version."""
+    return _scd1_commit(
+        root, max_retries,
+        lambda snap: _scd1_prepare(spark, root, snap, batch_df, n_buckets),
+    )
 
 
 def scd1_delete_where(
@@ -3255,67 +3147,36 @@ def scd1_delete_where(
       recompute (up to ``max_retries``), disjoint ones rebase.
 
     ``n_buckets`` must match the writer's (key -> bucket is
-    ``pmod(xxhash64(user_id), n_buckets)``). Returns the committed
-    version (the snapshot's, unchanged, when nothing matches)."""
-    import shutil
+    `_scd1_bucket`). Returns the committed version (the snapshot's,
+    unchanged, when nothing matches)."""
     import uuid
 
-    last: ConcurrentWriteConflict | None = None
-    for _ in range(max_retries + 1):
-        snap = _scd1_snapshot(root)
+    def prepare(snap: dict) -> dict | None:
         if snap["version"] < 0:
             raise ValueError(
                 f"scd1_delete_where: no committed table under {root!r}"
             )
         _scd1_check_spec(snap, n_buckets, "scd1_delete_where")
-        bmap = snap["bucket_dir"]
-        paths = [
-            f"{root}/{d}/pbucket={b}" for b, d in sorted(bmap.items())
-        ]
-        live = spark.read.option("mergeSchema", "true").parquet(*paths)
-        old_dpaths = [
-            f"{root}/{d}/pbucket={b}"
-            for b, ds in snap["delete_files"].items()
-            for d in ds
-        ]
-        if old_dpaths:
-            prior = spark.read.parquet(*old_dpaths).select(
-                "user_id"
-            ).distinct()
-            live = live.join(prior, "user_id", "anti")
-        bucket_of = F.pmod(
-            F.xxhash64("user_id"), F.lit(n_buckets)
-        ).cast("int")
+        live = _scd1_live(spark, root, snap)
+        if live is None:
+            return None
         matched = (
             live.filter(predicate)
             .select("user_id")
-            .withColumn("pbucket", bucket_of)
+            .withColumn("pbucket", _scd1_bucket(n_buckets))
         )
-        touched = sorted(
+        touched = [
             r["pbucket"]
             for r in matched.select("pbucket").distinct().collect()
-        )
+        ]
         if not touched:
-            return snap["version"]
+            return None
         dirname = f"delete_d{uuid.uuid4().hex[:12]}"
-        matched.write.partitionBy("pbucket").parquet(
-            f"{root}/{dirname}"
-        )
-        pending = {
-            "dir": dirname,
-            "buckets": touched,
-            "read_version": snap["version"],
-            "read_map": dict(bmap),
-            "read_deletes": snap["delete_files"],
-            "kind": "delete",
-            "n_buckets": n_buckets,
-        }
-        try:
-            return _scd1_publish(root, pending)
-        except ConcurrentWriteConflict as e:
-            shutil.rmtree(f"{root}/{dirname}", ignore_errors=True)
-            last = e
-    raise last  # type: ignore[misc]
+        matched.write.partitionBy("pbucket").parquet(f"{root}/{dirname}")
+        return _scd1_pending(snap, dirname, touched, n_buckets,
+                             kind="delete")
+
+    return _scd1_commit(root, max_retries, prepare)
 
 
 def scd1_purge_deletes(
@@ -3338,58 +3199,20 @@ def scd1_purge_deletes(
     from a fresh snapshot); superseded copies are left for the
     maintenance VACUUM, the `scd1_commit_batch` scope rule. No-op
     (returns the current version) when no delete files are pending."""
-    import shutil
     import uuid
 
-    last: ConcurrentWriteConflict | None = None
-    for _ in range(max_retries + 1):
-        snap = _scd1_snapshot(root)
+    def prepare(snap: dict) -> dict | None:
         _scd1_check_spec(snap, n_buckets, "scd1_purge_deletes")
-        dels = snap["delete_files"]
-        if not dels:
-            return snap["version"]
-        touched = sorted(int(b) for b in dels)
-        prev = spark.read.option("mergeSchema", "true").parquet(
-            *[
-                f"{root}/{snap['bucket_dir'][str(b)]}/pbucket={b}"
-                for b in touched
-            ]
-        )
-        dkeys = spark.read.parquet(
-            *[
-                f"{root}/{d}/pbucket={b}"
-                for b, ds in dels.items()
-                for d in ds
-            ]
-        ).select("user_id").distinct()
-        bucket_of = F.pmod(
-            F.xxhash64("user_id"), F.lit(n_buckets)
-        ).cast("int")
-        clean = prev.join(dkeys, "user_id", "anti").withColumn(
-            "pbucket", bucket_of
-        )
+        touched = snap["delete_files"]
+        if not touched:
+            return None
         dirname = f"commit_w{uuid.uuid4().hex[:12]}"
-        clean.write.partitionBy("pbucket").parquet(f"{root}/{dirname}")
-        survivors = {
-            r["pbucket"]
-            for r in clean.select("pbucket").distinct().collect()
-        }
-        pending = {
-            "dir": dirname,
-            "buckets": touched,
-            "drop_buckets": [b for b in touched if b not in survivors],
-            "read_version": snap["version"],
-            "read_map": dict(snap["bucket_dir"]),
-            "read_deletes": dels,
-            "kind": "merge",
-            "n_buckets": n_buckets,
-        }
-        try:
-            return _scd1_publish(root, pending)
-        except ConcurrentWriteConflict as e:
-            shutil.rmtree(f"{root}/{dirname}", ignore_errors=True)
-            last = e
-    raise last  # type: ignore[misc]
+        _scd1_live(spark, root, snap, touched).withColumn(
+            "pbucket", _scd1_bucket(n_buckets)
+        ).write.partitionBy("pbucket").parquet(f"{root}/{dirname}")
+        return _scd1_pending(snap, dirname, touched, n_buckets)
+
+    return _scd1_commit(root, max_retries, prepare)
 
 
 # ------- Q213c SCD1 time travel — manifest AS-OF reads within VACUUM
@@ -3733,79 +3556,30 @@ def scd1_rebucket(
     this wrapper recomputes from a fresh snapshot, up to
     ``max_retries``); AS-OF reads before the rebucket resolve the old
     manifests untouched."""
-    import shutil
     import uuid
 
-    last: ConcurrentWriteConflict | None = None
-    for _ in range(max_retries + 1):
-        snap = _scd1_snapshot(root)
+    def prepare(snap: dict) -> dict:
         if snap["version"] < 0:
             raise ValueError(
                 f"scd1_rebucket: no committed table under {root!r}"
             )
-        bmap = snap["bucket_dir"]
-        if not bmap:
-            # fully-deleted table: nothing to
-            # rewrite — publish a manifest recording the NEW spec
-            # with an empty bucket map (spec evolution on an empty
-            # table is legitimate; the next MERGE writes under it)
-            pending = {
-                "dir": "",  # unreferenced: no buckets survive
-                "buckets": [],
-                "read_version": snap["version"],
-                "read_map": {},
-                "read_deletes": snap["delete_files"],
-                "kind": "rebucket",
-                "n_buckets": new_n_buckets,
-            }
-            try:
-                return _scd1_publish(root, pending)
-            except ConcurrentWriteConflict as e:
-                last = e
-                continue
-        prev = spark.read.option("mergeSchema", "true").parquet(
-            *[
-                f"{root}/{d}/pbucket={b}"
-                for b, d in sorted(bmap.items())
-            ]
+        live = _scd1_live(spark, root, snap)
+        # a fully-deleted table has nothing to rewrite: the manifest
+        # records the NEW spec with an empty bucket map (spec evolution
+        # on an empty table is legitimate; the next MERGE writes under
+        # it)
+        dirname = ""
+        if live is not None:
+            dirname = f"commit_w{uuid.uuid4().hex[:12]}"
+            live.withColumn(
+                "pbucket", _scd1_bucket(new_n_buckets)
+            ).write.partitionBy("pbucket").parquet(f"{root}/{dirname}")
+        return _scd1_pending(
+            snap, dirname, range(new_n_buckets), new_n_buckets,
+            kind="rebucket",
         )
-        dpaths = [
-            f"{root}/{d}/pbucket={b}"
-            for b, ds in snap["delete_files"].items()
-            for d in ds
-        ]
-        if dpaths:
-            dkeys = spark.read.parquet(*dpaths).select(
-                "user_id"
-            ).distinct()
-            prev = prev.join(dkeys, "user_id", "anti")
-        moved = prev.withColumn(
-            "pbucket",
-            F.pmod(F.xxhash64("user_id"), F.lit(new_n_buckets)).cast(
-                "int"
-            ),
-        )
-        dirname = f"commit_w{uuid.uuid4().hex[:12]}"
-        moved.write.partitionBy("pbucket").parquet(f"{root}/{dirname}")
-        survivors = sorted(
-            r["pbucket"]
-            for r in moved.select("pbucket").distinct().collect()
-        )
-        pending = {
-            "dir": dirname,
-            "buckets": survivors,
-            "read_version": snap["version"],
-            "read_map": dict(bmap),
-            "read_deletes": snap["delete_files"],
-            "kind": "rebucket",
-            "n_buckets": new_n_buckets,
-        }
-        try:
-            return _scd1_publish(root, pending)
-        except ConcurrentWriteConflict as e:
-            shutil.rmtree(f"{root}/{dirname}", ignore_errors=True)
-            last = e
-    raise last  # type: ignore[misc]
+
+    return _scd1_commit(root, max_retries, prepare)
 
 
 # ------- Q219b streaming kNN-graph maintenance: search-then-link insert
@@ -4521,38 +4295,21 @@ def chunk_dedup_stream(sdf: DataFrame) -> DataFrame:
 _ANN_IDX_BUCKETS = 16
 
 
-def _ann_bucket_of(n_buckets: int):
-    return F.pmod(F.xxhash64("src"), F.lit(n_buckets)).cast("int")
-
-
 def ann_index_write(graph: DataFrame, root: str,
                     n_buckets: int = _ANN_IDX_BUCKETS) -> int:
     """Initial commit: the full (src, dst, score) edge frame written
     bucketed by src. Bucketing by src co-locates each node's whole
     adjacency list in one file — the beam walk's hop join reads and
     the insert path's per-src rewrites both key on src."""
-    import os
     import shutil
 
     shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(os.path.join(root, "_manifest"), exist_ok=True)
-    rows = graph.select("src", "dst", "score").withColumn(
-        "pbucket", _ann_bucket_of(n_buckets)
-    )
-    dirname = "commit_v0"
-    rows.write.partitionBy("pbucket").parquet(f"{root}/{dirname}")
-    survivors = sorted(
-        r["pbucket"] for r in rows.select("pbucket").distinct().collect()
-    )
-    return _scd1_publish(root, {
-        "dir": dirname,
-        "buckets": survivors,
-        "read_version": -1,
-        "read_map": {},
-        "read_deletes": {},
-        "kind": "merge",
-        "n_buckets": n_buckets,
-    })
+    graph.select("src", "dst", "score").withColumn(
+        "pbucket", _scd1_bucket(n_buckets, "src")
+    ).write.partitionBy("pbucket").parquet(f"{root}/commit_v0")
+    return _scd1_publish(root, _scd1_pending(
+        _scd1_snapshot(root), "commit_v0", range(n_buckets), n_buckets
+    ))
 
 
 def ann_index_commit(
@@ -4568,54 +4325,27 @@ def ann_index_commit(
     untouched srcs in those buckets survive via an anti-join), the
     partition-pruned MERGE bill q213 pays — O(touched buckets), not
     O(index)."""
-    import shutil
     import uuid
 
+    bucket = _scd1_bucket(n_buckets, "src")
     delta = delta.select("src", "dst", "score").localCheckpoint()
-    last: ConcurrentWriteConflict | None = None
-    for _ in range(max_retries + 1):
-        snap = _scd1_snapshot(root)
+    d = delta.withColumn("pbucket", bucket)
+    touched = [
+        r["pbucket"] for r in d.select("pbucket").distinct().collect()
+    ]
+
+    def prepare(snap: dict) -> dict:
         _scd1_check_spec(snap, n_buckets, "ann_index_commit")
-        d = delta.withColumn("pbucket", _ann_bucket_of(n_buckets))
-        touched = sorted(
-            r["pbucket"]
-            for r in d.select("pbucket").distinct().collect()
-        )
-        prev_paths = [
-            f"{root}/{snap['bucket_dir'][str(b)]}/pbucket={b}"
-            for b in touched
-            if str(b) in snap["bucket_dir"]
-        ]
         out = d
-        if prev_paths:
-            keep = (
-                spark.read.parquet(*prev_paths)
-                .join(delta.select("src").distinct(), "src", "anti")
-                .withColumn("pbucket", _ann_bucket_of(n_buckets))
-            )
-            out = keep.unionByName(out)
+        prev = _scd1_live(spark, root, snap, touched)
+        if prev is not None:
+            keep = prev.join(delta.select("src").distinct(), "src", "anti")
+            out = keep.withColumn("pbucket", bucket).unionByName(d)
         dirname = f"commit_w{uuid.uuid4().hex[:12]}"
         out.write.partitionBy("pbucket").parquet(f"{root}/{dirname}")
-        survivors = {
-            r["pbucket"]
-            for r in out.select("pbucket").distinct().collect()
-        }
-        pending = {
-            "dir": dirname,
-            "buckets": touched,
-            "drop_buckets": [b for b in touched if b not in survivors],
-            "read_version": snap["version"],
-            "read_map": dict(snap["bucket_dir"]),
-            "read_deletes": {},
-            "kind": "merge",
-            "n_buckets": n_buckets,
-        }
-        try:
-            return _scd1_publish(root, pending)
-        except ConcurrentWriteConflict as e:
-            shutil.rmtree(f"{root}/{dirname}", ignore_errors=True)
-            last = e
-    raise last  # type: ignore[misc]
+        return _scd1_pending(snap, dirname, touched, n_buckets)
+
+    return _scd1_commit(root, max_retries, prepare)
 
 
 def ann_index_read(
@@ -4625,32 +4355,13 @@ def ann_index_read(
     one bucketed parquet scan, the serving restart's whole bill. The
     manifest-then-paths resolution is snapshot-isolated exactly like
     `scd1_read_as_of` (immutable manifests, writer-unique dirs)."""
-    import json
-    import os
-
-    mdir = os.path.join(root, "_manifest")
-    if version is None:
-        versions = sorted(
-            int(f[1:-5])
-            for f in os.listdir(mdir)
-            if f.startswith("v") and f.endswith(".json")
-        )
-        if not versions:
-            raise ValueError(f"ann_index_read: no manifest under {root!r}")
-        version = versions[-1]
-    with open(os.path.join(mdir, f"v{version}.json")) as fh:
-        man = json.load(fh)
-    bdir = _manifest_bucket_dir(man)
-    paths = [
-        f"{root}/{d}/pbucket={b}" for b, d in sorted(bdir.items())
-    ]
-    if not paths:
-        return spark.range(0).select(
-            F.lit(None).cast("long").alias("src"),
-            F.lit(None).cast("long").alias("dst"),
-            F.lit(None).cast("double").alias("score"),
-        )
-    return spark.read.parquet(*paths).select("src", "dst", "score")
+    snap = _scd1_snapshot(root, version)
+    if snap["version"] < 0:
+        raise ValueError(f"ann_index_read: no manifest under {root!r}")
+    live = _scd1_live(spark, root, snap)
+    if live is None:
+        return spark.createDataFrame([], "src long, dst long, score double")
+    return live.select("src", "dst", "score")
 
 
 # ---- Q229b streaming graph-ANN serving FROM THE PERSISTED INDEX

@@ -1360,10 +1360,9 @@ def test_stream_scd1_upsert_multibatch_equals_batch(spark, sf_smoke, tmp_path):
         man = json.load(fh)
     assert man["version"] == 2
     live_bucket_dirs = sorted(glob.glob(table_root + "/commit_v*/pbucket=*"))
-    assert len(live_bucket_dirs) == len(man["bucket_commit"])
+    assert len(live_bucket_dirs) == len(man["bucket_dir"])
 
 
-@pytest.mark.slow
 def test_stream_scd1_schema_evolution_mixed_manifest(spark, tmp_path):
     """q213d's mechanics, pinned on a hand-built 3-trigger schedule
     that straddles the evolution boundary (T = Jan 15):
@@ -1437,8 +1436,8 @@ def test_stream_scd1_schema_evolution_mixed_manifest(spark, tmp_path):
 
     with open(root_t + "/_manifest/v2.json") as fh:
         man = _json.load(fh)
-    live_commits = set(man["bucket_commit"].values())
-    assert 0 in live_commits and 2 in live_commits
+    live_commits = set(man["bucket_dir"].values())
+    assert "commit_v0" in live_commits and "commit_v2" in live_commits
 
     # AS-OF the pre-evolution version: latest schema, default-filled
     as_of0 = scd1_read_as_of(
@@ -1449,7 +1448,6 @@ def test_stream_scd1_schema_evolution_mixed_manifest(spark, tmp_path):
     assert all(r["n_events"] == 2 for r in as_of0)
 
 
-@pytest.mark.slow
 def test_stream_scd1_merge_prunes_untouched_buckets(spark, tmp_path):
     """The MERGE contract: a commit whose batch touches ONE
     key must rewrite only that key's bucket — every other bucket's
@@ -1493,11 +1491,11 @@ def test_stream_scd1_merge_prunes_untouched_buckets(spark, tmp_path):
     # commit 1 touched exactly ONE bucket (user 7's); every other
     # bucket still points at its commit-0 copy
     moved = {
-        b for b in man1["bucket_commit"]
-        if man1["bucket_commit"][b] != man0["bucket_commit"].get(b)
+        b for b in man1["bucket_dir"]
+        if man1["bucket_dir"][b] != man0["bucket_dir"].get(b)
     }
     assert len(moved) == 1
-    untouched = set(man0["bucket_commit"]) - moved
+    untouched = set(man0["bucket_dir"]) - moved
     assert untouched  # the spread populated >1 bucket
     # commit_v1 wrote ONLY the moved bucket's partition dir
     v1_dirs = {
@@ -1524,7 +1522,6 @@ def test_stream_scd1_merge_prunes_untouched_buckets(spark, tmp_path):
         assert not os.path.exists(table_root + f"/commit_v0/pbucket={b}")
 
 
-@pytest.mark.slow
 def test_stream_scd1_changelog_ledger_across_commits(
     spark, sf_smoke, tmp_path
 ):
@@ -1577,7 +1574,6 @@ def test_stream_scd1_changelog_ledger_across_commits(
         assert (rows[-1][3], rows[-1][4]) == (dim[u][1], dim[u][2])
 
 
-@pytest.mark.slow
 def test_stream_scd1_time_travel_within_vacuum_horizon(
     spark, sf_smoke, tmp_path
 ):
@@ -1786,7 +1782,6 @@ def test_stream_embedding_neardup_equals_batch_any_schedule(spark, tmp_path):
         assert got == expected, (tag, got, expected)
 
 
-@pytest.mark.slow
 def test_scd1_concurrent_writers_optimistic_commit(spark, tmp_path):
     """The multi-writer story: two INDEPENDENT writers against one SCD1 table root,
     coordinated only through the manifest dir. Pins, by hand-built
@@ -1896,12 +1891,14 @@ def test_scd1_concurrent_writers_optimistic_commit(spark, tmp_path):
         assert scd1_read_as_of(spark, root, version=v).count() > 0
 
 
-@pytest.mark.slow
 def test_scd1_concurrent_committer_refuses_evolved_tables(spark, tmp_path):
     """The concurrent batch committer merges
     the BASE schema only — rewriting an evolved bucket with a base
     copy would silently reset sum_value to the read-time default for
-    every key in the bucket. It must refuse LOUDLY instead. Also pins
+    every key in the bucket. It must refuse LOUDLY, whenever the
+    table's manifest records evolution, even for a key whose bucket
+    copy predates the boundary (merging it would drop the batch's
+    since-T sum). Also pins
     _manifest_bucket_dir's key-presence semantics (an empty-but-
     present bucket_dir is an empty TABLE, not a missing key — the
     falsy-or form raised KeyError on concurrent-writer manifests)."""
@@ -1917,32 +1914,42 @@ def test_scd1_concurrent_committer_refuses_evolved_tables(spark, tmp_path):
         {"version": 0, "bucket_commit": {"3": 1}}
     ) == {"3": "commit_v1"}
 
-    # build an EVOLVED table with the streaming writer
-    rows = [(1, "2024-01-10 00:00:00", 1.0), (1, "2024-01-20 00:00:00", 2.0)]
-    src = str(tmp_path / "evo_src")
-    os.makedirs(src, exist_ok=True)
-    df = spark.createDataFrame(
-        rows, "user_id long, ts_s string, value double"
-    ).select("user_id", F.col("ts_s").cast("timestamp").alias("ts"),
-             "value")
-    df.coalesce(1).write.parquet(f"{src}/f0.parquet")
-    sdf = (
-        spark.readStream.schema(
-            spark.read.parquet(f"{src}/f0.parquet").schema
-        ).parquet(src + "/*")
-    )
-    root = str(tmp_path / "dim")
-    scd1_upsert_stream(
-        sdf, root, evolve_sum_from="2024-01-15 00:00:00"
-    ).collect()
+    def events(rows):
+        return spark.createDataFrame(
+            rows, "user_id long, ts_s string, value double"
+        ).select("user_id", F.col("ts_s").cast("timestamp").alias("ts"),
+                 "value")
 
-    batch = spark.createDataFrame(
-        [(1, "2024-01-25 00:00:00", 9.0)],
-        "user_id long, ts_s string, value double",
-    ).select("user_id", F.col("ts_s").cast("timestamp").alias("ts"),
-             "value")
-    with pytest.raises(ValueError, match="schema-evolved"):
-        scd1_commit_batch(spark, root, batch)
+    # user 0 and user 1 live in different buckets of the 16-bucket table
+    bucket = {
+        r["id"]: r["b"]
+        for r in spark.range(2).select(
+            "id", F.pmod(F.xxhash64("id"), F.lit(16)).alias("b")
+        ).collect()
+    }
+    assert bucket[0] != bucket[1]
+    # (triggers, key of the batch commit). One trigger crossing T: the
+    # key's bucket copy carries sum_value. Two triggers, user 0 pre-T
+    # then user 1 post-T: the table has evolved, but user 0's bucket
+    # copy is still v1, so only the manifest can say so.
+    cases = [
+        ([[(1, "2024-01-10 00:00:00", 1.0),
+           (1, "2024-01-20 00:00:00", 2.0)]], 1),
+        ([[(0, "2024-01-10 00:00:00", 1.0)],
+          [(1, "2024-01-20 00:00:00", 2.0)]], 0),
+    ]
+    for i, (triggers, user) in enumerate(cases):
+        # build an EVOLVED table with the streaming writer
+        sdf = stage_triggers(
+            spark, str(tmp_path / f"evo_src{i}"), map(events, triggers)
+        )
+        root = str(tmp_path / f"dim{i}")
+        scd1_upsert_stream(
+            sdf, root, evolve_sum_from="2024-01-15 00:00:00"
+        ).collect()
+        batch = events([(user, "2024-01-25 00:00:00", 9.0)])
+        with pytest.raises(ValueError, match="schema-evolved"):
+            scd1_commit_batch(spark, root, batch)
 
 
 def _scd1_batch(spark, rows):
@@ -1990,7 +1997,6 @@ def _data_file_stats(root):
     return out
 
 
-@pytest.mark.slow
 def test_scd1_delete_vectors_merge_on_read(spark, tmp_path):
     """q220's core merge-on-read contract. Pins:
     (a) DELETE rewrites NO data file (every parquet byte-identical by
@@ -2050,7 +2056,6 @@ def test_scd1_delete_vectors_merge_on_read(spark, tmp_path):
     assert _data_file_stats(root) == before
 
 
-@pytest.mark.slow
 def test_scd1_delete_then_writer_applies_and_resurrects(spark, tmp_path):
     """q220's MERGE interplay. After a DELETE, a batch commit touching
     a deleted bucket (1) applies the pending delete during its rewrite
@@ -2147,7 +2152,6 @@ def test_scd1_purge_deletes_materializes(spark, tmp_path):
     assert scd1_purge_deletes(spark, root, n_buckets=n_buckets) == v
 
 
-@pytest.mark.slow
 def test_scd1_delete_concurrent_overlap_conflicts(spark, tmp_path):
     """q220's concurrency rule, both directions: a MERGE prepared
     before a DELETE landed on the same bucket must conflict at publish
@@ -2339,16 +2343,23 @@ def test_scd1_spec_mismatch_raises(spark, tmp_path):
         scd1_purge_deletes(spark, root, n_buckets=8)
 
 
-def test_scd1_rebucket_conflicts_with_any_commit(spark, tmp_path):
+def test_scd1_rebucket_conflicts_with_any_commit(
+    spark, tmp_path, monkeypatch
+):
     """q225's concurrency rule: a rebucket touches EVERY bucket, so a
     publish against a stale snapshot conflicts on ANY intervening
     commit (no disjoint rebase exists)."""
 
+    from kstreamjs_spark.queries import streaming_q
     from kstreamjs_spark.queries.streaming_q import (
         ConcurrentWriteConflict,
         _scd1_publish,
         _scd1_snapshot,
         scd1_commit_batch,
+        scd1_delete_where,
+        scd1_purge_deletes,
+        scd1_read_as_of,
+        scd1_rebucket,
     )
 
     root = str(tmp_path / "dim_rbc")
@@ -2369,6 +2380,89 @@ def test_scd1_rebucket_conflicts_with_any_commit(spark, tmp_path):
             "kind": "rebucket",
             "n_buckets": 8,
         })
+    # a rebucket of a fully deleted table that loses its race writes
+    # no data dir, so its retry must remove nothing
+    root_e = str(tmp_path / "dim_rbe")
+    scd1_commit_batch(
+        spark, root_e, _scd1_batch(spark, [(1, 1, 1.0)]), n_buckets=4
+    )
+    scd1_delete_where(spark, root_e, "user_id >= 0", n_buckets=4)
+    scd1_purge_deletes(spark, root_e, n_buckets=4)
+    stale = streaming_q._scd1_snapshot(root_e)
+    assert stale["bucket_dir"] == {}
+    scd1_commit_batch(
+        spark, root_e, _scd1_batch(spark, [(2, 1, 2.0)]), n_buckets=4
+    )
+    monkeypatch.setattr(
+        streaming_q, "_scd1_snapshot", lambda root, version=None: stale
+    )
+    with pytest.raises(ConcurrentWriteConflict):
+        scd1_rebucket(spark, root_e, 8, max_retries=0)
+    monkeypatch.undo()
+    assert sorted(os.listdir(os.path.join(root_e, "_manifest"))) == [
+        f"v{v}.json" for v in range(4)
+    ]
+    assert [
+        (r["user_id"], r["n_events"])
+        for r in scd1_read_as_of(spark, root_e).collect()
+    ] == [(2, 1)]
+
+
+def test_scd1_vacuum_spares_unpublished_dirs_and_horizon(spark, tmp_path):
+    """`_scd1_vacuum` derives retention from the manifests alone. A
+    streaming-writer commit (dense commit_v{n} dir, publish, vacuum)
+    lands while another writer's prepared commit_w* dir is still
+    unpublished: the vacuum leaves that dir alone, keeps every copy a
+    manifest inside the horizon references (each retained version
+    reads back its prefix rollup), and prunes the copies only older
+    manifests reference."""
+    from kstreamjs_spark.queries.streaming_q import (
+        _scd1_prepare,
+        _scd1_publish,
+        _scd1_snapshot,
+        _scd1_vacuum,
+        scd1_read_as_of,
+    )
+
+    n_buckets = 4
+    u0, u1, u2, u3 = _scd1_bucket_users(spark, n_buckets)
+    root = str(tmp_path / "dim_vac")
+
+    def stream_commit(rows):
+        snap = _scd1_snapshot(root)
+        pending = _scd1_prepare(
+            spark, root, snap, _scd1_batch(spark, rows),
+            n_buckets=n_buckets,
+            dirname=f"commit_v{snap['version'] + 1}",
+        )
+        v = _scd1_publish(root, pending)
+        _scd1_vacuum(root, 1)
+        return v
+
+    def read(version):
+        return {
+            r["user_id"]: (r["n_events"], r["last_value"])
+            for r in scd1_read_as_of(spark, root, version).collect()
+        }
+
+    assert stream_commit([(u0, 1, 1.0), (u1, 1, 2.0),
+                          (u2, 1, 3.0), (u3, 1, 4.0)]) == 0
+    assert stream_commit([(u0, 2, 5.0)]) == 1
+    unpublished = _scd1_prepare(
+        spark, root, _scd1_snapshot(root),
+        _scd1_batch(spark, [(u1, 3, 6.0)]), n_buckets=n_buckets,
+    )
+    assert unpublished["dir"].startswith("commit_w")
+    assert stream_commit([(u0, 3, 7.0), (u2, 3, 8.0)]) == 2
+
+    assert os.path.isdir(f"{root}/{unpublished['dir']}/pbucket=1")
+    assert read(1) == {u0: (2, 5.0), u1: (1, 2.0),
+                       u2: (1, 3.0), u3: (1, 4.0)}
+    assert read(2) == {u0: (3, 7.0), u1: (1, 2.0),
+                       u2: (2, 8.0), u3: (1, 4.0)}
+    # v0's copy of u0's bucket (superseded at v1) is past the horizon
+    assert not os.path.exists(f"{root}/commit_v0/pbucket=0")
+    assert os.path.isdir(f"{root}/commit_v0/pbucket=2")
 
 
 def test_scd1_reader_snapshot_isolated_across_rebucket(spark, tmp_path):
